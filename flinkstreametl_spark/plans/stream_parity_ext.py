@@ -2,19 +2,35 @@
 Streaming engine in the loop, graded against batch-SQL oracles.
 
 The reference's centerpiece is a stream join (``JoinedSQLQuery.java:6-10``
-joins two Kafka-backed stream tables); rounds 1-9 proved the repo's
-stream-stream interval join at the unit/plan level
+joins two Kafka-backed stream tables). The unit and plan tests prove
+the repo's stream-stream interval join
 (``streaming/pipeline.py stream_stream_interval_join``,
-``tests/test_streaming.py``) but no driver-graded query ever put the
-actual micro-batch engine — file source, watermark propagation, join
-state eviction, exactly-once file sink — in the execution path the
-DuckDB oracle checks. These queries do: the fixture tables are
-re-chunked into event-time-ordered micro-batch files, drained with
-``Trigger.AvailableNow``, and the STREAMING output (not a batch
-re-statement of it) is aggregated and hash-compared against the
-one-shot batch SQL.
+``tests/test_streaming.py``); these queries put the actual micro-batch
+engine — file source, watermark propagation, join state eviction,
+exactly-once file sink — in the execution path the DuckDB oracle
+checks. The fixture tables are re-chunked into event-time-ordered
+micro-batch files, drained with ``Trigger.AvailableNow``, and the
+STREAMING output (not a batch re-statement of it) is aggregated and
+hash-compared against the one-shot batch SQL.
 
-Why the parity is exact and not luck:
+Harness contract. Every replay runs through ``_replay`` and the
+helpers it calls, which guarantee:
+
+* one file per trigger: the input is staged as chunk files and the
+  reader admits one file per micro-batch (``maxFilesPerTrigger=1``);
+* pinned, strictly increasing file mtimes, so the file source admits
+  the chunks in order;
+* pinned state partitions: ``spark.sql.shuffle.partitions`` (and, for
+  the RocksDB twin, the state-store provider) is set to
+  ``_STATE_PARTITIONS`` for the query start and restored on every exit
+  path;
+* an AvailableNow drain: the query stops once the staged files are
+  consumed;
+* an eager pin before cleanup: the result is read from the scratch
+  directory, so it is materialised (``localCheckpoint``) before that
+  directory is removed, which happens on every exit path.
+
+Why the interval-join parity is exact and not luck:
 
 * Chunks are event-time tertiles with pinned, strictly increasing
   file mtimes, so the file source processes them in event-time order
@@ -50,19 +66,28 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from flinkstreametl_spark.functions.exact import dsum, sql_dsum
 from flinkstreametl_spark.operators import text as X
 from flinkstreametl_spark.operators.ranks import with_ntile
 from flinkstreametl_spark.plans.registry import register
 from flinkstreametl_spark.sources.parquet import load_table
+from flinkstreametl_spark.streaming.bloom_ingest import BLOOM_M
 from flinkstreametl_spark.streaming.bloom_ingest import _h as bloom_h
 from flinkstreametl_spark.streaming.pipeline import stream_stream_interval_join
 
 _SSJ_CHUNKS = 3
 _SSJ_SCHEMA = "event_id LONG, ts TIMESTAMP, user_id LONG"
+# Partitions of every replay's state stores, fixed at the query's first
+# checkpoint; the store-layout oracles below state this count.
+_STATE_PARTITIONS = 8
+_BASE_MTIME = 1_600_000_000
+_ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
 
 
 @contextlib.contextmanager
@@ -92,11 +117,20 @@ def _state_partitions(spark: SparkSession, n: int):
     return _pinned_conf(spark, "spark.sql.shuffle.partitions", str(n))
 
 
+def _state_store_provider(spark: SparkSession, provider_class: str):
+    """Pin ``spark.sql.streaming.stateStore.providerClass`` for a
+    streaming query start. Like state partitioning, the store provider
+    is fixed at the query's first checkpoint — on a real cluster this
+    is the HDFS-backed vs RocksDB deployment decision."""
+    return _pinned_conf(
+        spark, "spark.sql.streaming.stateStore.providerClass", provider_class
+    )
+
+
 def _ntile_chunks(df: DataFrame, n: int, order_cols: list[str]) -> DataFrame:
     """Exact NTILE(``n``) over the total order ``order_cols`` WITHOUT
-    the single-partition global-sort Window (VERDICT r10 item 3 — the
-    old ``Window.orderBy(...)`` funneled the whole table through one
-    task: 6M rows on one core at sf1).
+    a single-partition global-sort Window, which would funnel the whole
+    table through one task.
 
     Two-phase global rank: range-repartition on the order key, rank
     locally per range partition (a PARTITIONED window — every task
@@ -116,30 +150,9 @@ def _ntile_chunks(df: DataFrame, n: int, order_cols: list[str]) -> DataFrame:
     return with_ntile(df, n, order_cols, "_b")
 
 
-def _require_span(lo: datetime.datetime, hi: datetime.datetime, what: str) -> None:
-    """Late-poison precondition (ADVICE r10): the poison file
-    redelivers the stream's first hour, and dropping it requires the
-    30-minute watermark to have advanced past every first-hour
-    window/session end before the poison batch runs — i.e. the fixture
-    must span comfortably more than 1h (poisoned prefix) + 1h
-    (window/gap rounding) + 30min (watermark). Below ~2.5h the replay
-    silently flips to "late rows accepted" and diverges from the
-    oracle; fail loudly instead of diverging (the shipped fixtures
-    span ~30 days at every SF)."""
-    if lo is None or hi is None:
-        raise ValueError(f"{what}: events fixture is empty — nothing to replay")
-    if hi - lo < datetime.timedelta(hours=3):
-        raise ValueError(
-            f"{what}: events fixture spans only {hi - lo}; the late-poison "
-            "replay construction requires >= 3h of event time"
-        )
-
-
 def _one_file(df: DataFrame, dst: str, mtime: int, fmt: str = "parquet") -> None:
     """Write ``df`` as exactly ONE data file at ``dst`` with a pinned
-    mtime — the micro-batch fixture-prep dance every replay uses
-    (stage dir -> coalesce(1) -> promote the part file -> utime).
-    Single-sourced (round 11 review: it was copy-pasted 8 times)."""
+    mtime (stage dir -> coalesce(1) -> promote the part file -> utime)."""
     stage = dst + "._stage"
     getattr(df.coalesce(1).write.mode("overwrite"), fmt)(stage)
     suffix = ".txt" if fmt == "text" else f".{fmt}"
@@ -147,6 +160,111 @@ def _one_file(df: DataFrame, dst: str, mtime: int, fmt: str = "parquet") -> None
     os.replace(os.path.join(stage, part), dst)
     shutil.rmtree(stage)
     os.utime(dst, (mtime, mtime))
+
+
+def _write_chunks(
+    df: DataFrame,
+    out_dir: str,
+    order_cols: list[str],
+    fmt: str = "parquet",
+    redeliver: int | str | None = None,
+) -> None:
+    """Stage ``df`` as ``_SSJ_CHUNKS`` micro-batch files ``b1..bn`` in
+    ``out_dir`` with strictly increasing pinned mtimes, so the file
+    source replays them in order. File i holds tile i of the exact
+    NTILE over ``order_cols`` (deterministic under any input
+    partitioning, see ``_ntile_chunks``). ``redeliver`` adds an
+    at-least-once upstream: each file i > 1 also carries rows of tile
+    i-1 — ``"all"`` of them, or those within ``redeliver`` seconds of
+    that tile's last event time. A text file stores only ``value``.
+
+    One hash-partitioned ``partitionBy`` write lands each file's rows
+    in one task, so each partition directory holds exactly one part
+    file, promoted to its chunk name. Row order inside a file is not
+    fixed; a micro-batch is a set."""
+    n = _SSJ_CHUNKS
+    tiles = _ntile_chunks(df, n, order_cols)
+    if redeliver is not None:
+        tiles = tiles.localCheckpoint()  # read by both union sides and the tile bounds
+        prev = tiles.filter(F.col("_b") < n)
+        if redeliver != "all":
+            mx = tiles.groupBy("_b").agg(F.max("ts").alias("_mx"))
+            prev = (
+                prev.join(F.broadcast(mx), "_b")
+                .filter(F.col("ts") >= F.col("_mx") - F.make_interval(secs=F.lit(redeliver)))
+                .drop("_mx")
+            )
+        tiles = tiles.unionByName(prev.withColumn("_b", F.col("_b") + 1))
+    cols = ["value"] if fmt == "text" else df.columns
+    stage = out_dir + "._stage"
+    (
+        tiles.select("_b", *cols)
+        .repartition(n, "_b")
+        .write.partitionBy("_b")
+        .mode("overwrite")
+        .format(fmt)
+        .save(stage)
+    )
+    os.makedirs(out_dir, exist_ok=True)
+    suffix = ".txt" if fmt == "text" else f".{fmt}"
+    for i in range(1, n + 1):
+        dst, mtime = os.path.join(out_dir, f"b{i}{suffix}"), _BASE_MTIME + 10 * i
+        d = os.path.join(stage, f"_b={i}")
+        if not os.path.isdir(d):
+            # an empty tile (only on sub-n-row fixtures) still gets its
+            # file, so the replay sees exactly n micro-batches
+            _one_file(df.select(cols).filter(F.lit(False)), dst, mtime, fmt)
+            continue
+        parts = sorted(f for f in os.listdir(d) if f.endswith(suffix))
+        if len(parts) != 1:
+            # >1 part file means a writer-config change (e.g.
+            # maxRecordsPerFile); promoting only parts[0] would
+            # silently drop rows from the replay fixture
+            raise RuntimeError(
+                f"expected exactly one part file in {d}, found "
+                f"{len(parts)}: {parts} — the single-task-per-tile "
+                "write invariant broke"
+            )
+        os.replace(os.path.join(d, parts[0]), dst)
+        os.utime(dst, (mtime, mtime))
+    shutil.rmtree(stage)
+
+
+def _write_sentinels(ev: DataFrame, out_dir: str, fill: tuple, poison: bool = False) -> None:
+    """Append files n+1 and n+2 to a chunk directory of ``ev``
+    (columns event_id, ts, then the ones ``fill`` gives values for).
+    Each holds one sentinel row, event_id -1 then -2, 1 then 2 days
+    after the last event: the first advances the watermark past every
+    real window end, and the second's batch runs with that watermark,
+    so append mode flushes every real window and an outer join emits
+    every unmatched row whether or not the engine schedules a trailing
+    no-data batch. Callers filter the sentinel rows out of the output.
+
+    With ``poison``, file n+1 also redelivers the stream's first hour,
+    late by then, which the engine must drop. That needs the watermark
+    past every first-hour window/session end before the poison batch
+    runs, i.e. a fixture spanning comfortably more than 1h (poisoned
+    prefix) + 1h (window/gap rounding) + 30min (watermark). Below that
+    the replay silently flips to "late rows accepted" and diverges from
+    the oracle, so it fails loudly instead (the shipped fixtures span
+    ~30 days at every SF)."""
+    lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
+    if hi is None:
+        raise ValueError("events fixture is empty — nothing to replay")
+    if poison and hi - lo < datetime.timedelta(hours=3):
+        raise ValueError(
+            f"events fixture spans only {hi - lo}; the late-poison "
+            "replay construction requires >= 3h of event time"
+        )
+    for k in (1, 2):
+        rows = ev.sparkSession.createDataFrame(
+            [(-k, hi + datetime.timedelta(days=k), *fill)], schema=ev.schema
+        )
+        if poison and k == 1:
+            late = ev.filter(F.col("ts") < F.lit(lo) + F.expr("INTERVAL 1 HOUR"))
+            rows = late.unionByName(rows)
+        i = _SSJ_CHUNKS + k
+        _one_file(rows, os.path.join(out_dir, f"b{i}.parquet"), _BASE_MTIME + 10 * i)
 
 
 def _copy_chunk_dir(src_dir: str, dst_dir: str) -> None:
@@ -166,63 +284,84 @@ def _not_sentinel(col: str, sentinel) -> Column:
     return ~F.col(col).eqNullSafe(F.lit(sentinel))
 
 
-def _promote_partitioned_chunks(
-    stage: str, out_dir: str, n: int, part_col: str, schema_df: DataFrame
-) -> None:
-    """Promote a ``partitionBy(part_col)`` staging directory into the
-    replay layout: ``out_dir/b{i}.parquet`` with strictly increasing
-    pinned mtimes. A tile with no rows (possible only on degenerate
-    sub-``n``-row fixtures) falls back to an explicit empty-file write
-    so the replay still sees exactly ``n`` micro-batch files."""
-    base_mtime = 1_600_000_000
-    for i in range(1, n + 1):
-        dst = os.path.join(out_dir, f"b{i}.parquet")
-        d = os.path.join(stage, f"{part_col}={i}")
-        if os.path.isdir(d):
-            parts = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
-            if len(parts) != 1:
-                # Fail loud (ADVICE r14): each tile is written by one
-                # task, so >1 part file means a writer-config change
-                # (e.g. maxRecordsPerFile) — silently promoting only
-                # parts[0] would drop rows from the replay fixture.
-                raise RuntimeError(
-                    f"expected exactly one part file in {d}, found "
-                    f"{len(parts)}: {parts} — the single-task-per-tile "
-                    "write invariant broke"
-                )
-            os.replace(os.path.join(d, parts[0]), dst)
-            os.utime(dst, (base_mtime + 10 * i, base_mtime + 10 * i))
-        else:
-            _one_file(
-                schema_df.filter(F.lit(False)), dst, base_mtime + 10 * i
+def _read(spark: SparkSession, path: str, schema: str, fmt: str = "parquet") -> DataFrame:
+    """Stream the chunk files under ``path``, one file per micro-batch.
+    ``maxFilesPerTrigger`` is a SOURCE option: set on the writer it is
+    silently ignored and the directory drains as ONE batch, collapsing
+    the replay's batch structure."""
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).format(fmt).load(path)
+
+
+def _drain(spark: SparkSession, tmp: str, job, provider: str | None = None):
+    """Run one replay query to completion with the state-partition
+    count (and ``provider``, if given) pinned for its start. ``job`` is
+    a streaming DataFrame, drained into a parquet file sink under
+    ``tmp`` whose files are the returned output; a foreachBatch
+    ``DataStreamWriter``; or a function that starts its own AvailableNow
+    query (the production ingest loops). Returns ``(output or None,
+    progress entries sorted by batchId)``."""
+    out = os.path.join(tmp, "out")
+    file_sink = isinstance(job, DataFrame)
+    with contextlib.ExitStack() as stack:
+        stack.enter_context(_state_partitions(spark, _STATE_PARTITIONS))
+        if provider is not None:
+            stack.enter_context(_state_store_provider(spark, provider))
+        if file_sink:
+            job = job.writeStream.format("parquet").option("path", out)
+        if isinstance(job, DataStreamWriter):
+            job = (
+                job.option("checkpointLocation", os.path.join(tmp, "_ckpt"))
+                .trigger(availableNow=True)
+                .start
             )
-    shutil.rmtree(stage)
+        q = job()
+        q.awaitTermination()
+    progress = sorted(q.recentProgress, key=lambda p: p["batchId"])
+    return (spark.read.parquet(out) if file_sink else None), progress
 
 
-def _write_ts_chunks(df: DataFrame, out_dir: str, n: int) -> None:
-    """Split ``df`` into ``n`` event-time-ordered chunk files with
-    strictly increasing mtimes, so the streaming file source replays
-    them as in-order micro-batches (the Kafka-partition time-order
-    analogue). The split is the exact NTILE(n) over the total order
-    (ts, event_id) — deterministic under any input partitioning —
-    computed scalably by ``_ntile_chunks``.
+def _replay(body) -> DataFrame:
+    """Run ``body(tmp)`` in a fresh scratch directory and pin the frame
+    it returns eagerly, since that frame reads files the directory
+    holds; the directory is removed on every exit path."""
+    tmp = tempfile.mkdtemp(prefix="replay_")
+    try:
+        return body(tmp).localCheckpoint()
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
-    r14 opt: ONE hash-repartitioned ``partitionBy(_b)`` write replaces
-    the former pin + n per-tile coalesce(1) write jobs — each tile
-    lands in exactly one task (single file per directory), and the part
-    files are promoted to the pinned-mtime chunk names. Chunk contents
-    are unchanged (same NTILE membership; row order within a chunk
-    never mattered — a micro-batch is a set)."""
-    os.makedirs(out_dir, exist_ok=True)
-    staged = _ntile_chunks(df, n, ["ts", "event_id"])
-    stage = out_dir + "._stage"
-    (
-        staged.repartition(n, "_b")
-        .write.partitionBy("_b")
-        .mode("overwrite")
-        .parquet(stage)
-    )
-    _promote_partitioned_chunks(stage, out_dir, n, "_b", df)
+
+def _interval_join_replay(spark: SparkSession, sf_dir: str, result, provider: str | None = None):
+    """The production interval-join replay: the events table as
+    ``_SSJ_CHUNKS`` in-order chunk files on BOTH sides of
+    ``stream_stream_interval_join`` (same-user pairs within (0, 1h],
+    30-minute watermarks bounding join state), drained into the
+    exactly-once parquet file sink. Returns ``result(pairs, progress)``.
+    Shared by stream_stream_join_replay and its three state-metric
+    twins, so the replay cannot drift between them. Raises unless the
+    drain ran ``_SSJ_CHUNKS`` data batches + 1 eviction batch."""
+    ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
+
+    def body(tmp: str) -> DataFrame:
+        left, right = os.path.join(tmp, "left"), os.path.join(tmp, "right")
+        _write_chunks(ev, left, ["ts", "event_id"])
+        _copy_chunk_dir(left, right)
+        joined = stream_stream_interval_join(
+            _read(spark, left, _SSJ_SCHEMA),
+            _read(spark, right, _SSJ_SCHEMA),
+            watermark="30 minutes",
+            max_delay_expr="INTERVAL 1 HOUR",
+        )
+        pairs, progress = _drain(spark, tmp, joined, provider)
+        if len(progress) != _SSJ_CHUNKS + 1:
+            raise ValueError(
+                f"expected {_SSJ_CHUNKS} data batches + 1 eviction batch, "
+                f"got {len(progress)} progress entries — chunking or "
+                "trigger semantics changed"
+            )
+        return result(pairs, progress)
+
+    return _replay(body)
 
 
 _SSJ_ORACLE = """
@@ -248,9 +387,9 @@ GROUP BY user_id
 
 @register(
     "stream_stream_join_replay",
-    # "bench": VERDICT r10 item 6 — the bench set had no stream-parity
-    # entry, so a state-store or watermark regression was invisible to
-    # BENCH. AvailableNow-bounded, so it times deterministically.
+    # "bench": the bench set's stream-parity entry, so a state-store or
+    # watermark regression shows in BENCH. AvailableNow-bounded, so it
+    # times deterministically.
     tags=("ext", "streaming", "join", "parity", "bench"),
     oracle=_SSJ_ORACLE,
 )
@@ -266,44 +405,9 @@ def stream_stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's centerpiece join shape (JoinedSQLQuery.java:6-10),
     with watermark state-eviction actually firing between batches (the
     module docstring carries the eviction-is-output-safe proof)."""
-    ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    tmp = tempfile.mkdtemp(prefix="ssj_replay_")
-    try:
-        # the split is deterministic over the total order, so stage
-        # once and hard-copy for the second side (mtimes preserved)
-        # instead of running the two-phase split + writes twice
-        # (round-11 review: halves the fixture-prep cost).
-        _write_ts_chunks(ev, os.path.join(tmp, "left"), _SSJ_CHUNKS)
-        _copy_chunk_dir(os.path.join(tmp, "left"), os.path.join(tmp, "right"))
 
-        left = (
-            spark.readStream.schema(_SSJ_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(tmp, "left"))
-        )
-        right = (
-            spark.readStream.schema(_SSJ_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(tmp, "right"))
-        )
-        joined = stream_stream_interval_join(
-            left, right, watermark="30 minutes", max_delay_expr="INTERVAL 1 HOUR"
-        )
-        out_dir = os.path.join(tmp, "out")
-        with _state_partitions(spark, 8):
-            q = (
-                joined.writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", os.path.join(tmp, "_ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        pairs = spark.read.parquet(out_dir)
+    def result(pairs: DataFrame, progress: list) -> DataFrame:
         delta = F.unix_micros(F.col("right_ts")) - F.unix_micros(F.col("left_ts"))
-        # localCheckpoint pins the (<= |users|)-row result so the
-        # fixture tempdir can be deleted before the caller collects.
         return (
             pairs.withColumn("delta_us", delta)
             .groupBy("user_id")
@@ -313,20 +417,19 @@ def stream_stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("delta_us").cast("long").alias("sum_delta_us"),
                 F.max("delta_us").cast("long").alias("max_delta_us"),
             )
-            .localCheckpoint()
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    return _interval_join_replay(spark, sf_dir, result)
 
 
 # --- bloom saturation audit --------------------------------------------------
 # The ingest loop's filter-health signal (streaming/bloom_ingest.py
-# returns bloom_fill_ppm per batch — ADVICE r8 closure) as a driver-
-# graded query: replay the history growing in 4 cumulative stages and
-# report the saturation curve an operator would watch to schedule the
-# rebuild-from-history resize. Audit width is 2^12 (vs the loop's
-# 2^20) so the curve is VISIBLE at fixture scale — the hash
-# construction is the loop's own `_h`, parameterized, not a copy.
+# returns bloom_fill_ppm per batch) as an oracle-graded query: replay
+# the history growing in 4 cumulative stages and report the saturation
+# curve an operator would watch to schedule the rebuild-from-history
+# resize. Audit width is 2^12 (vs the loop's 2^20) so the curve is
+# VISIBLE at fixture scale — the hash construction is the loop's own
+# `_h`, parameterized, not a copy.
 _SAT_M = 1 << 12
 _SAT_STAGES = 4
 
@@ -480,60 +583,22 @@ def stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("ts"),
         )
     )
-    tmp = tempfile.mkdtemp(prefix="sdd_replay_")
-    try:
-        src_dir = os.path.join(tmp, "in")
-        os.makedirs(src_dir, exist_ok=True)
-        staged = _ntile_chunks(keyed, _SSJ_CHUNKS, ["ts", "fp"])
-        staged = staged.localCheckpoint()  # pin the chunk split across the per-chunk writes
-        # chunk-boundary max event times — a 3-row parameter table
-        bounds = {
-            r["_b"]: r["mx"]
-            for r in staged.groupBy("_b").agg(F.max("ts").alias("mx")).collect()
-        }
-        base_mtime = 1_600_000_000
-        for i in range(1, _SSJ_CHUNKS + 1):
-            chunk = staged.filter(F.col("_b") == i)
-            if i > 1:
-                tail_lo = F.lit(bounds[i - 1]) - F.make_interval(secs=F.lit(_SDD_TAIL_S))
-                chunk = chunk.unionByName(
-                    staged.filter((F.col("_b") == i - 1) & (F.col("ts") >= tail_lo))
-                )
-            _one_file(
-                chunk.drop("_b"),
-                os.path.join(src_dir, f"b{i}.parquet"),
-                base_mtime + 10 * i,
-            )
 
+    def body(tmp: str) -> DataFrame:
+        src = os.path.join(tmp, "in")
+        _write_chunks(keyed, src, ["ts", "fp"], redeliver=_SDD_TAIL_S)
         deduped = (
-            spark.readStream.schema(_SDD_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+            _read(spark, src, _SDD_SCHEMA)
             .withWatermark("ts", _SDD_WM)
             .dropDuplicatesWithinWatermark(["source", "fp"])
         )
-        out_dir = os.path.join(tmp, "out")
-        with _state_partitions(spark, 8):
-            q = (
-                deduped.writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", os.path.join(tmp, "_ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        out = spark.read.parquet(out_dir)
-        return (
-            out.groupBy("source")
-            .agg(
-                F.countDistinct("fp").cast("long").alias("n_unique"),
-                F.count(F.lit(1)).cast("long").alias("n_rows_out"),
-            )
-            .localCheckpoint()
+        out, _ = _drain(spark, tmp, deduped)
+        return out.groupBy("source").agg(
+            F.countDistinct("fp").cast("long").alias("n_unique"),
+            F.count(F.lit(1)).cast("long").alias("n_rows_out"),
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    return _replay(body)
 
 
 # --- streaming windowed aggregation replay ------------------------------------
@@ -546,13 +611,10 @@ def stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a duplicate (window_start, event_type) key reaches the output and the
 # hash breaks — and (b) two far-future sentinel files that advance the
 # watermark past every real window end so append mode FLUSHES all real
-# windows before the drain terminates (emission needs a batch running
-# AFTER the watermark update; sentinel #2's batch is that batch for
-# sentinel #1's update, making the flush independent of whether the
-# engine schedules a trailing no-data batch). Sentinel rows aggregate
-# into their own far-future windows which the post-drain event_type
-# filter removes if they ever emit, so the oracle is the PLAIN batch
-# tumbling group-by — no closure predicate needed.
+# windows before the drain terminates (``_write_sentinels``). Sentinel
+# rows aggregate into their own far-future windows which the post-drain
+# event_type filter removes if they ever emit, so the oracle is the
+# PLAIN batch tumbling group-by — no closure predicate needed.
 _SWA_WM = "30 minutes"
 _SWA_SCHEMA = "event_id LONG, ts TIMESTAMP, event_type STRING, value DOUBLE"
 
@@ -591,28 +653,13 @@ def stream_window_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the flush discipline is exactly how a production drain hands
     off to a downstream batch consumer."""
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
-    tmp = tempfile.mkdtemp(prefix="swa_replay_")
-    try:
-        src_dir = os.path.join(tmp, "in")
-        lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
-        _require_span(lo, hi, "stream_window_agg_replay")
-        _write_ts_chunks(ev, src_dir, _SSJ_CHUNKS)
 
-        base_mtime = 1_600_000_000
-        poison = ev.filter(F.col("ts") < F.lit(lo) + F.expr("INTERVAL 1 HOUR"))
-        s1 = spark.createDataFrame(
-            [(-1, hi + datetime.timedelta(days=1), "__sentinel__", 0.0)], schema=ev.schema
-        )
-        s2 = spark.createDataFrame(
-            [(-2, hi + datetime.timedelta(days=2), "__sentinel__", 0.0)], schema=ev.schema
-        )
-        _one_file(poison.unionByName(s1), os.path.join(src_dir, "b4.parquet"), base_mtime + 40)
-        _one_file(s2, os.path.join(src_dir, "b5.parquet"), base_mtime + 50)
-
+    def body(tmp: str) -> DataFrame:
+        src = os.path.join(tmp, "in")
+        _write_chunks(ev, src, ["ts", "event_id"])
+        _write_sentinels(ev, src, ("__sentinel__", 0.0), poison=True)
         agg = (
-            spark.readStream.schema(_SWA_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+            _read(spark, src, _SWA_SCHEMA)
             .withWatermark("ts", _SWA_WM)
             .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
             .agg(F.count(F.lit(1)).alias("n"), dsum("value", 18, 6).alias("sum_value"))
@@ -630,23 +677,10 @@ def stream_window_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         # window whether or not the engine schedules the trailing
         # no-data batch that emits it, keeping the result set
         # deterministic across engine versions.
-        out_dir = os.path.join(tmp, "out")
-        with _state_partitions(spark, 8):
-            q = (
-                agg.writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", os.path.join(tmp, "_ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        return (
-            spark.read.parquet(out_dir)
-            .filter(_not_sentinel("event_type", "__sentinel__"))
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        out, _ = _drain(spark, tmp, agg)
+        return out.filter(_not_sentinel("event_type", "__sentinel__"))
+
+    return _replay(body)
 
 
 # --- streaming CDC upsert replay ----------------------------------------------
@@ -709,68 +743,23 @@ def stream_cdc_upsert_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="scu_replay_")
-    try:
-        src_dir = os.path.join(tmp, "in")
-        os.makedirs(src_dir, exist_ok=True)
-        staged = _ntile_chunks(ev, _SSJ_CHUNKS, ["ts", "event_id"])
-        staged = staged.localCheckpoint()  # pin the chunk split: bounds + the file-assignment scans
-        bounds = {
-            r["_b"]: r["mx"]
-            for r in staged.groupBy("_b").agg(F.max("ts").alias("mx")).collect()
-        }
-        # r14 opt: ONE partitioned write replaces the former per-chunk
-        # coalesce(1) write jobs. File i's rows = tile i plus (for
-        # i > 1) tile i-1's redelivered 6h tail — expressed as a file-
-        # assignment column with the tail rows duplicated, identical
-        # file contents to the old loop.
-        assigned = staged.withColumn("_f", F.col("_b"))
-        for i in range(2, _SSJ_CHUNKS + 1):
-            tail_lo = F.lit(bounds[i - 1]) - F.make_interval(secs=F.lit(_SCU_TAIL_S))
-            assigned = assigned.unionByName(
-                staged.filter((F.col("_b") == i - 1) & (F.col("ts") >= tail_lo))
-                .withColumn("_f", F.lit(i))
-            )
-        stage = src_dir + "._stage"
-        (
-            assigned.drop("_b")
-            .repartition(_SSJ_CHUNKS, "_f")
-            .write.partitionBy("_f")
-            .mode("overwrite")
-            .parquet(stage)
-        )
-        _promote_partitioned_chunks(stage, src_dir, _SSJ_CHUNKS, "_f", ev)
 
-        changelog = (
-            spark.readStream.schema(
-                "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .withColumn(
-                "_op",
-                F.when(F.col("event_type") == "error", F.lit("DELETE")).otherwise(
-                    F.lit("UPSERT")
-                ),
-            )
+    def body(tmp: str) -> DataFrame:
+        src = os.path.join(tmp, "in")
+        _write_chunks(ev, src, ["ts", "event_id"], redeliver=_SCU_TAIL_S)
+        changelog = _read(
+            spark, src, "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE"
+        ).withColumn(
+            "_op",
+            F.when(F.col("event_type") == "error", F.lit("DELETE")).otherwise(F.lit("UPSERT")),
         )
         sink = KeyedParquetUpsertSink(
             os.path.join(tmp, "table"), ["user_id"], ["ts", "event_id"]
         )
-        with _state_partitions(spark, 8):
-            q = (
-                changelog.writeStream.foreachBatch(sink.process_batch)
-                .option("checkpointLocation", os.path.join(tmp, "_ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        final = sink.read(spark)
-        return final.select(
-            "event_id", "user_id", "event_type", "value", "ts"
-        ).localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        _drain(spark, tmp, changelog.writeStream.foreachBatch(sink.process_batch))
+        return sink.read(spark).select("event_id", "user_id", "event_type", "value", "ts")
+
+    return _replay(body)
 
 
 # --- streaming session window replay ------------------------------------------
@@ -836,28 +825,13 @@ def stream_session_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     the watermark horizon — the merging-window law that makes
     sessionization viable on unbounded streams."""
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "user_id", "value")
-    tmp = tempfile.mkdtemp(prefix="ssw_replay_")
-    try:
-        src_dir = os.path.join(tmp, "in")
-        lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
-        _require_span(lo, hi, "stream_session_window_replay")
-        _write_ts_chunks(ev, src_dir, _SSJ_CHUNKS)
 
-        base_mtime = 1_600_000_000
-        poison = ev.filter(F.col("ts") < F.lit(lo) + F.expr("INTERVAL 1 HOUR"))
-        s1 = spark.createDataFrame(
-            [(-1, hi + datetime.timedelta(days=1), -1, 0.0)], schema=ev.schema
-        )
-        s2 = spark.createDataFrame(
-            [(-2, hi + datetime.timedelta(days=2), -1, 0.0)], schema=ev.schema
-        )
-        _one_file(poison.unionByName(s1), os.path.join(src_dir, "b4.parquet"), base_mtime + 40)
-        _one_file(s2, os.path.join(src_dir, "b5.parquet"), base_mtime + 50)
-
+    def body(tmp: str) -> DataFrame:
+        src = os.path.join(tmp, "in")
+        _write_chunks(ev, src, ["ts", "event_id"])
+        _write_sentinels(ev, src, (-1, 0.0), poison=True)
         agg = (
-            spark.readStream.schema("event_id LONG, ts TIMESTAMP, user_id LONG, value DOUBLE")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+            _read(spark, src, "event_id LONG, ts TIMESTAMP, user_id LONG, value DOUBLE")
             .withWatermark("ts", _SSW_GAP)
             .groupBy(F.session_window("ts", _SSW_GAP).alias("win"), "user_id")
             .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", 18, 6).alias("sum_value"))
@@ -869,23 +843,10 @@ def stream_session_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sum_value",
             )
         )
-        out_dir = os.path.join(tmp, "out")
-        with _state_partitions(spark, 8):
-            q = (
-                agg.writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", os.path.join(tmp, "_ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        return (
-            spark.read.parquet(out_dir)
-            .filter(_not_sentinel("user_id", -1))
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        out, _ = _drain(spark, tmp, agg)
+        return out.filter(_not_sentinel("user_id", -1))
+
+    return _replay(body)
 
 
 # --- custom stateful operator replay ------------------------------------------
@@ -900,8 +861,8 @@ def stream_session_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per user equals the prefix sums of that user's per-chunk row counts.
 # A key emitting without data, state lost between batches, or a batch
 # boundary drifting by one row all change the set and break the hash.
-# NTILE tile count interpolated from _SSJ_CHUNKS (ADVICE r10: a
-# hardcoded 3 silently decoupled the oracle from the plan's split).
+# NTILE tile count interpolated from _SSJ_CHUNKS so the oracle cannot
+# drift from the plan's split.
 _SCS_ORACLE = f"""
 WITH b AS (
     SELECT user_id, NTILE({_SSJ_CHUNKS}) OVER (ORDER BY ts, event_id) AS bk FROM events
@@ -938,41 +899,26 @@ def stream_custom_state_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkstreametl_spark.streaming.stateful import streaming_running_counts
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    tmp = tempfile.mkdtemp(prefix="scs_replay_")
-    try:
-        src_dir = os.path.join(tmp, "in")
-        _write_ts_chunks(ev, src_dir, _SSJ_CHUNKS)
-        stream = (
-            spark.readStream.schema(_SSJ_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        counted = streaming_running_counts(stream, "user_id")
-        out_dir = os.path.join(tmp, "out")
+
+    def body(tmp: str) -> DataFrame:
+        src, snaps = os.path.join(tmp, "in"), os.path.join(tmp, "snapshots")
+        _write_chunks(ev, src, ["ts", "event_id"])
 
         def sink(batch_df: DataFrame, batch_id: int) -> None:
             # per-batch subdirectory overwrite: replay-idempotent the
-            # same way the HLL timeline is (ADVICE r9 closure)
+            # same way the HLL timeline is
             batch_df.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"batch_id={int(batch_id)}")
+                os.path.join(snaps, f"batch_id={int(batch_id)}")
             )
 
-        with _state_partitions(spark, 8):
-            q = (
-                counted.writeStream.foreachBatch(sink)
-                .outputMode("update")
-                .option("checkpointLocation", os.path.join(tmp, "_ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        out = spark.read.option("recursiveFileLookup", "true").parquet(out_dir)
-        return out.select(
+        counted = streaming_running_counts(_read(spark, src, _SSJ_SCHEMA), "user_id")
+        _drain(spark, tmp, counted.writeStream.foreachBatch(sink).outputMode("update"))
+        return spark.read.option("recursiveFileLookup", "true").parquet(snaps).select(
             F.col("key").cast("long").alias("user_id"),
             F.col("n_total").alias("running_n"),
-        ).localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        )
+
+    return _replay(body)
 
 
 # --- streaming LEFT-OUTER interval join replay --------------------------------
@@ -1036,57 +982,27 @@ def stream_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-interval condition is what makes outer stream-stream joins
     expressible at all."""
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    tmp = tempfile.mkdtemp(prefix="soj_replay_")
-    try:
-        lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
-        _write_ts_chunks(ev, os.path.join(tmp, "left"), _SSJ_CHUNKS)
-        for k, (eid, days) in enumerate([(-1, 1), (-2, 2)], start=4):
-            s = spark.createDataFrame(
-                [(eid, hi + datetime.timedelta(days=days), -1)], schema=ev.schema
-            )
-            _one_file(
-                s,
-                os.path.join(tmp, "left", f"b{k}.parquet"),
-                1_600_000_000 + 10 * k,
-            )
-        # stage-once-copy, as in the inner-join replay above
-        _copy_chunk_dir(os.path.join(tmp, "left"), os.path.join(tmp, "right"))
 
-        left = (
-            spark.readStream.schema(_SSJ_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(tmp, "left"))
-        )
-        right = (
-            spark.readStream.schema(_SSJ_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(tmp, "right"))
-        )
+    def body(tmp: str) -> DataFrame:
+        left, right = os.path.join(tmp, "left"), os.path.join(tmp, "right")
+        _write_chunks(ev, left, ["ts", "event_id"])
+        _write_sentinels(ev, left, (-1,))
+        _copy_chunk_dir(left, right)
         joined = stream_stream_interval_join(
-            left,
-            right,
+            _read(spark, left, _SSJ_SCHEMA),
+            _read(spark, right, _SSJ_SCHEMA),
             watermark="30 minutes",
             max_delay_expr="INTERVAL 1 HOUR",
             how="left_outer",
         )
-        out_dir = os.path.join(tmp, "out")
-        with _state_partitions(spark, 8):
-            q = (
-                joined.writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", os.path.join(tmp, "_ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        pairs = spark.read.parquet(out_dir).filter(_not_sentinel("user_id", -1))
+        out, _ = _drain(spark, tmp, joined)
         delta = F.when(
             F.col("right_event_id").isNotNull(),
             F.unix_micros(F.col("right_ts")) - F.unix_micros(F.col("left_ts")),
         ).otherwise(F.lit(0))
         return (
-            pairs.groupBy("user_id")
+            out.filter(_not_sentinel("user_id", -1))
+            .groupBy("user_id")
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_rows"),
                 F.count("right_event_id").cast("long").alias("n_matched"),
@@ -1095,10 +1011,9 @@ def stream_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).cast("long").alias("n_unmatched"),
                 F.sum(delta).cast("long").alias("sum_delta_us"),
             )
-            .localCheckpoint()
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    return _replay(body)
 
 
 # --- streaming HLL maintenance replay -----------------------------------------
@@ -1142,29 +1057,12 @@ def stream_hll_maintenance_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     from flinkstreametl_spark.streaming.versioned import current_version, version_dir
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
-    tmp = tempfile.mkdtemp(prefix="shm_replay_")
-    try:
-        src_dir = os.path.join(tmp, "in")
-        os.makedirs(src_dir, exist_ok=True)
-        staged = _ntile_chunks(ev, _SSJ_CHUNKS, ["event_id"]).localCheckpoint()
-        base_mtime = 1_600_000_000
-        for i in range(1, _SSJ_CHUNKS + 1):
-            chunk = staged.filter(F.col("_b") == i)
-            if i > 1:
-                chunk = chunk.unionByName(staged.filter(F.col("_b") == i - 1))
-            _one_file(
-                chunk.drop("_b"),
-                os.path.join(src_dir, f"b{i}.json"),
-                base_mtime + 10 * i,
-                fmt="json",
-            )
 
-        state_dir = os.path.join(tmp, "state")
-        with _state_partitions(spark, 8):
-            q = run_hll_stream(spark, src_dir, state_dir, available_now=True)
-            q.awaitTermination()
-
-        reg_root = os.path.join(state_dir, REGISTERS_SUBDIR)
+    def body(tmp: str) -> DataFrame:
+        src, state = os.path.join(tmp, "in"), os.path.join(tmp, "state")
+        _write_chunks(ev, src, ["event_id"], fmt="json", redeliver="all")
+        _drain(spark, tmp, lambda: run_hll_stream(spark, src, state))
+        reg_root = os.path.join(state, REGISTERS_SUBDIR)
         ver = current_version(reg_root)
         if ver is None:
             raise ValueError(
@@ -1174,8 +1072,7 @@ def stream_hll_maintenance_replay(spark: SparkSession, sf_dir: str) -> DataFrame
         regs = spark.read.schema(_REG_SCHEMA).parquet(version_dir(reg_root, ver))
         s = hll_summarize(regs).withColumnRenamed("grp", "event_type")
         ex = ev.groupBy("event_type").agg(F.countDistinct("user_id").alias("n_exact"))
-        est = hll_estimate_cols(s.join(ex, "event_type"))
-        return est.select(
+        return hll_estimate_cols(s.join(ex, "event_type")).select(
             "event_type",
             "n_buckets",
             "s_scaled",
@@ -1185,9 +1082,9 @@ def stream_hll_maintenance_replay(spark: SparkSession, sf_dir: str) -> DataFrame
             F.round(
                 (F.col("hll_est") - F.col("n_exact")) / F.col("n_exact") * 10000, 1
             ).alias("err_bp"),
-        ).localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        )
+
+    return _replay(body)
 
 
 def _install_shm_oracle() -> None:
@@ -1216,13 +1113,10 @@ _install_shm_oracle()
 # the persisted bit table must be exactly the salted-md5 positions of
 # that history (the no-false-negative invariant, stated as equality
 # because no crash occurred in the clean drain).
-# BLOOM_M interpolated from the production module (round-11 review:
-# a hardcoded 1 << 20 would silently decouple the oracle from the
-# loop the day the filter is re-sized — the _SSJ_CHUNKS lesson).
-from flinkstreametl_spark.streaming.bloom_ingest import BLOOM_M as _SBD_M  # noqa: E402
-
+# BLOOM_M is interpolated from the production module, so the oracle
+# cannot drift from the loop when the filter is re-sized.
 _SBD_H_SQL = {
-    salt: f"CAST(concat('0x', substr(md5('{salt}' || fp), 1, 8)) AS BIGINT) % {_SBD_M}"
+    salt: f"CAST(concat('0x', substr(md5('{salt}' || fp), 1, 8)) AS BIGINT) % {BLOOM_M}"
     for salt in ("a", "b")
 }
 
@@ -1236,7 +1130,7 @@ pos AS (
 SELECT CAST((SELECT COUNT(*) FROM d) AS BIGINT) AS n_history_rows,
        CAST((SELECT COUNT(*) FROM d) AS BIGINT) AS n_unique_fp,
        CAST(COUNT(DISTINCT b) AS BIGINT) AS n_bits_set,
-       CAST(COUNT(DISTINCT b) * 1000000 // {_SBD_M} AS BIGINT) AS fill_ppm
+       CAST(COUNT(DISTINCT b) * 1000000 // {BLOOM_M} AS BIGINT) AS fill_ppm
 FROM pos
 """
 
@@ -1264,38 +1158,18 @@ def stream_bloom_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast."""
     from flinkstreametl_spark.streaming.bloom_ingest import (
         BITS_SUBDIR,
-        BLOOM_M,
         HISTORY_SUBDIR,
         run_bloom_stream,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="sbd_replay_")
-    try:
-        src_dir = os.path.join(tmp, "in")
-        os.makedirs(src_dir, exist_ok=True)
-        staged = _ntile_chunks(docs, _SSJ_CHUNKS, ["doc_id"]).localCheckpoint()
-        base_mtime = 1_600_000_000
-        for i in range(1, _SSJ_CHUNKS + 1):
-            chunk = staged.filter(F.col("_b") == i)
-            if i > 1:
-                chunk = chunk.unionByName(staged.filter(F.col("_b") == i - 1))
-            _one_file(
-                chunk.drop("_b"),
-                os.path.join(src_dir, f"b{i}.json"),
-                base_mtime + 10 * i,
-                fmt="json",
-            )
 
-        state_dir = os.path.join(tmp, "state")
-        with _state_partitions(spark, 8):
-            q = run_bloom_stream(spark, src_dir, state_dir, available_now=True)
-            q.awaitTermination()
-
-        history = spark.read.schema("fp STRING").parquet(
-            os.path.join(state_dir, HISTORY_SUBDIR)
-        )
-        bits = spark.read.schema("b LONG").parquet(os.path.join(state_dir, BITS_SUBDIR))
+    def body(tmp: str) -> DataFrame:
+        src, state = os.path.join(tmp, "in"), os.path.join(tmp, "state")
+        _write_chunks(docs, src, ["doc_id"], fmt="json", redeliver="all")
+        _drain(spark, tmp, lambda: run_bloom_stream(spark, src, state))
+        history = spark.read.schema("fp STRING").parquet(os.path.join(state, HISTORY_SUBDIR))
+        bits = spark.read.schema("b LONG").parquet(os.path.join(state, BITS_SUBDIR))
         return (
             history.agg(
                 F.count(F.lit(1)).cast("long").alias("n_history_rows"),
@@ -1314,29 +1188,26 @@ def stream_bloom_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "fill_ppm"
                 ),
             )
-            .localCheckpoint()
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    return _replay(body)
 
 
 # --- streaming dead-letter (quarantine) observability replay ------------------
-# The missing observability family (VERDICT r10 item 8): the batch
-# split_dead_letters operator (operators/cdc.py — the hardening the
-# reference omits: its unguarded fastjson parse, JsonFilter.java:24,
-# crash-loops on one bad Kafka record) has carried unit tests since
-# round 3, but no driver-graded query ever ran the QUARANTINE path
-# through the real micro-batch engine and graded the resulting
-# drop-rate ledger. This replay does: a mixed-validity Canal line
-# stream is synthesized from the events table under a closed-form
-# corruption law (event_id mod 7 == 3 -> payload truncated mid-token,
-# syntactically broken; == 5 -> well-formed JSON missing every Canal
-# required field; else a parseable envelope), replayed as at-least-once
-# micro-batches (each batch redelivers its predecessor), routed by the
-# PRODUCTION splitter inside foreachBatch into separate good/quarantine
-# ledgers, and the final observability readout — per-class distinct
-# record counts and ppm drop rates — is hash-compared against the
-# closed form stated directly on events.
+# The batch split_dead_letters operator (operators/cdc.py — the
+# hardening the reference omits: its unguarded fastjson parse,
+# JsonFilter.java:24, crash-loops on one bad Kafka record) run through
+# the real micro-batch engine, with the resulting drop-rate ledger
+# oracle-graded: a mixed-validity Canal line stream is synthesized from
+# the events table under a closed-form corruption law (event_id mod 7
+# == 3 -> payload truncated mid-token, syntactically broken; == 5 ->
+# well-formed JSON missing every Canal required field; else a parseable
+# envelope), replayed as at-least-once micro-batches (each batch
+# redelivers its predecessor), routed by the PRODUCTION splitter inside
+# foreachBatch into separate good/quarantine ledgers, and the final
+# observability readout — per-class distinct record counts and ppm drop
+# rates — is hash-compared against the closed form stated directly on
+# events.
 #
 # The quarantine ledger is keyed by record identity (raw line for dead
 # rows, envelope id for good rows), so redelivered corruption doesn't
@@ -1398,27 +1269,13 @@ def stream_dead_letter_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(payload)
         .alias("value"),
     )
-    tmp = tempfile.mkdtemp(prefix="sdl_replay_")
-    try:
-        src_dir = os.path.join(tmp, "in")
-        os.makedirs(src_dir, exist_ok=True)
-        staged = _ntile_chunks(lines, _SSJ_CHUNKS, ["event_id"]).localCheckpoint()
-        base_mtime = 1_600_000_000
-        for i in range(1, _SSJ_CHUNKS + 1):
-            chunk = staged.filter(F.col("_b") == i)
-            if i > 1:  # at-least-once upstream: redeliver batch i-1
-                chunk = chunk.unionByName(staged.filter(F.col("_b") == i - 1))
-            _one_file(
-                chunk.select("value"),
-                os.path.join(src_dir, f"b{i}.txt"),
-                base_mtime + 10 * i,
-                fmt="text",
-            )
 
-        good_dir = os.path.join(tmp, "good")
-        dead_dir = os.path.join(tmp, "quarantine")
+    def body(tmp: str) -> DataFrame:
+        src = os.path.join(tmp, "in")
+        good_dir, dead_dir = os.path.join(tmp, "good"), os.path.join(tmp, "quarantine")
+        _write_chunks(lines, src, ["event_id"], fmt="text", redeliver="all")
 
-        def _route(batch_df: DataFrame, batch_id: int) -> None:
+        def route(batch_df: DataFrame, batch_id: int) -> None:
             # cache: good and dead are two plans over the same parse —
             # pay it once per batch (the split_dead_letters contract).
             batch_df.cache()
@@ -1429,22 +1286,7 @@ def stream_dead_letter_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             finally:
                 batch_df.unpersist()
 
-        with _state_partitions(spark, 8):
-            # maxFilesPerTrigger is a SOURCE option — on the reader, so
-            # each chunk file really is its own micro-batch (set on the
-            # writer it is silently ignored and the directory drains as
-            # ONE batch, collapsing the at-least-once replay structure;
-            # caught by the crash-recovery test in round 11).
-            q = (
-                spark.readStream.option("maxFilesPerTrigger", 1)
-                .text(src_dir)
-                .writeStream.foreachBatch(_route)
-                .option("checkpointLocation", os.path.join(tmp, "_ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
+        _drain(spark, tmp, _read(spark, src, "value STRING", "text").writeStream.foreachBatch(route))
         good = spark.read.schema("id LONG").parquet(good_dir)
         dead = spark.read.schema("raw_value STRING, error STRING").parquet(dead_dir)
         cls = good.agg(F.countDistinct("id").alias("n")).select(
@@ -1455,25 +1297,21 @@ def stream_dead_letter_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         tot = cls.agg(F.sum("n").alias("t"))
-        return (
-            cls.crossJoin(F.broadcast(tot))
-            .select(
-                "klass",
-                F.col("n").cast("long").alias("n"),
-                F.expr("CAST(n * 1000000 DIV t AS BIGINT)").alias("rate_ppm"),
-            )
-            .localCheckpoint()
+        return cls.crossJoin(F.broadcast(tot)).select(
+            "klass",
+            F.col("n").cast("long").alias("n"),
+            F.expr("CAST(n * 1000000 DIV t AS BIGINT)").alias("rate_ppm"),
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    return _replay(body)
 
 
 # --- streaming state-metrics observability -----------------------------------
-# The OPS half of state TTL (VERDICT r11 item 7): rounds graded that
-# watermark eviction produces correct OUTPUT (stream_stream_join_replay);
-# this grades the ENGINE'S OWN state counters — the progress-listener
-# numbers (state rows total/updated/removed, per-batch watermark) an
-# operator alarms on in production — against a closed-form oracle.
+# The OPS half of state TTL: stream_stream_join_replay grades that
+# watermark eviction produces correct OUTPUT; this grades the ENGINE'S
+# OWN state counters — the progress-listener numbers (state rows
+# total/updated/removed, per-batch watermark) an operator alarms on in
+# production — against a closed-form oracle.
 #
 # Why the counters are deterministic and SQL-statable:
 # * Micro-batch k (1..3) admits exactly tile k on each side
@@ -1503,11 +1341,11 @@ def stream_dead_letter_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # states is the capacity-planning model for join state: rows held =
 # interval span + watermark delay worth of BOTH sides, never stream
 # history.
-# Shared CTE prefix for BOTH state-observability oracles (the rows
-# twin below and the memory twin further down): batch admission (e),
-# per-tile stats (tiles), the watermark law (wm), and the
-# interval-strictness state-retention law (st). One spelling, two
-# SELECTs — a change to the law cannot silently reach only one twin.
+# Shared CTE prefix for ALL state-observability oracles (rows, memory
+# and RocksDB twins): batch admission (e), per-tile stats (tiles), the
+# watermark law (wm), and the interval-strictness state-retention law
+# (st). One spelling — a change to the law cannot silently reach only
+# one twin.
 _SSJ_STATE_CTES = f"""
 WITH e AS (
     SELECT epoch_us(ts) AS us,
@@ -1546,75 +1384,6 @@ FROM st
 """
 
 
-def _state_store_provider(spark: SparkSession, provider_class: str):
-    """Pin ``spark.sql.streaming.stateStore.providerClass`` for a
-    streaming query start. Like state partitioning, the store provider
-    is fixed at the query's first checkpoint — on a real cluster this
-    is the HDFS-backed vs RocksDB deployment decision."""
-    return _pinned_conf(
-        spark, "spark.sql.streaming.stateStore.providerClass", provider_class
-    )
-
-
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def _run_ssj_replay(spark: SparkSession, sf_dir: str, provider: str | None = None) -> list:
-    """Run the production interval-join replay (the exact
-    stream_stream_join_replay pipeline: events tiled into _SSJ_CHUNKS
-    in-order files per side, maxFilesPerTrigger=1, 30-minute
-    watermark, 1-hour interval join, 8 pinned state partitions,
-    AvailableNow drain) and return the per-batch progress entries
-    sorted by batchId. Shared by ALL state-observability queries
-    (rows twin + memory twin + RocksDB provider twin) so the replay
-    harness cannot drift between them; ``provider`` optionally pins a
-    non-default state-store provider class for the run. Raises if the
-    batch count is not _SSJ_CHUNKS data batches + 1 eviction batch."""
-    ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    tmp = tempfile.mkdtemp(prefix="ssj_replay_")
-    try:
-        _write_ts_chunks(ev, os.path.join(tmp, "left"), _SSJ_CHUNKS)
-        _copy_chunk_dir(os.path.join(tmp, "left"), os.path.join(tmp, "right"))
-        left = (
-            spark.readStream.schema(_SSJ_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(tmp, "left"))
-        )
-        right = (
-            spark.readStream.schema(_SSJ_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(tmp, "right"))
-        )
-        joined = stream_stream_interval_join(
-            left, right, watermark="30 minutes", max_delay_expr="INTERVAL 1 HOUR"
-        )
-        with contextlib.ExitStack() as stack:
-            stack.enter_context(_state_partitions(spark, 8))
-            if provider is not None:
-                stack.enter_context(_state_store_provider(spark, provider))
-            q = (
-                joined.writeStream.format("parquet")
-                .option("path", os.path.join(tmp, "out"))
-                .option("checkpointLocation", os.path.join(tmp, "_ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        progress = sorted(q.recentProgress, key=lambda p: p["batchId"])
-        if len(progress) != _SSJ_CHUNKS + 1:
-            raise ValueError(
-                f"expected {_SSJ_CHUNKS} data batches + 1 eviction batch, "
-                f"got {len(progress)} progress entries — chunking or "
-                "trigger semantics changed"
-            )
-        return progress
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 @register(
     "stream_state_metrics_replay",
     tags=("ext", "streaming", "observability", "parity"),
@@ -1632,55 +1401,52 @@ def stream_state_metrics_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     (eviction not firing, state leak across batches, watermark stuck)
     breaks the hash even when the join OUTPUT is still correct —
     that's the observability gap this closes."""
-    import datetime as _dt
+    epoch = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+    ms = datetime.timedelta(milliseconds=1)
 
-    progress = _run_ssj_replay(spark, sf_dir)
-    epoch = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
-
-    def _ms(iso: str) -> int:
-        td = _dt.datetime.fromisoformat(iso) - epoch
-        return (td.days * 86400 + td.seconds) * 1000 + td.microseconds // 1000
-
-    rows = []
-    for seq, p in enumerate(progress, start=1):
-        so = p["stateOperators"][0]
-        rows.append(
-            (
-                seq,
-                int(p["numInputRows"]),
-                _ms(p["eventTime"]["watermark"]),
-                int(so["numRowsTotal"]),
-                int(so["numRowsUpdated"]),
-                int(so["numRowsRemoved"]),
+    def result(pairs: DataFrame, progress: list) -> DataFrame:
+        rows = []
+        for seq, p in enumerate(progress, start=1):
+            so = p["stateOperators"][0]
+            wm = datetime.datetime.fromisoformat(p["eventTime"]["watermark"])
+            rows.append(
+                (
+                    seq,
+                    int(p["numInputRows"]),
+                    (wm - epoch) // ms,
+                    int(so["numRowsTotal"]),
+                    int(so["numRowsUpdated"]),
+                    int(so["numRowsRemoved"]),
+                )
             )
+        return spark.createDataFrame(
+            rows,
+            "batch_seq LONG, input_rows LONG, watermark_ms LONG, "
+            "state_rows_total LONG, state_rows_updated LONG, "
+            "state_rows_removed LONG",
         )
-    return spark.createDataFrame(
-        rows,
-        "batch_seq LONG, input_rows LONG, watermark_ms LONG, "
-        "state_rows_total LONG, state_rows_updated LONG, "
-        "state_rows_removed LONG",
-    )
+
+    return _interval_join_replay(spark, sf_dir, result)
 
 
 # --- streaming state-store memory/layout observability -----------------------
-# The MEMORY half of the state-ops story (VERDICT r12 item 5 named it
-# the one family with remaining driver-gate value):
-# stream_state_metrics_replay grades the ROW counters; this grades the
-# store-layout and memory-side counters an operator uses for capacity
-# planning and spill detection on the exact same production replay.
+# The MEMORY half of the state-ops story: stream_state_metrics_replay
+# grades the ROW counters; this grades the store-layout and memory-side
+# counters an operator uses for capacity planning and spill detection
+# on the exact same production replay.
 #
 # What is deterministic and therefore gradable (probed on the real
 # progress payloads, see docs/ROUND13.md):
 # * operator_name — the plan must carry a symmetricHashJoin state
 #   operator (a plan rewrite that silently drops to a different
 #   stateful operator breaks the hash).
-# * n_shuffle_partitions = 8 — `_state_partitions` pins the state
+# * n_shuffle_partitions = _STATE_PARTITIONS — the drain pins the state
 #   store count; the progress payload must echo the configured value
 #   (this is the number an operator multiplies by to size a cluster).
-# * n_store_instances = 32 — the symmetric hash join keeps FOUR stores
-#   per partition (left/right × keyToNumValues/keyWithIndexToValue),
-#   so instances = 4 × partitions. THE capacity-planning law: RocksDB
-#   instance count scales with partitions, not stream length.
+# * n_store_instances = 4 × _STATE_PARTITIONS — the symmetric hash join
+#   keeps FOUR stores per partition (left/right × keyToNumValues/
+#   keyWithIndexToValue). THE capacity-planning law: RocksDB instance
+#   count scales with partitions, not stream length.
 # * state_rows_total — the same closed-form watermark-eviction law
 #   _SMR_ORACLE states (tiles admitted so far filtered by the interval
 #   condition's exact strictness); re-graded here so the memory frame
@@ -1704,11 +1470,11 @@ def stream_state_metrics_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # large the stream; every law above is scale-free (instances = 4 ×
 # partitions holds at 8 or 8000 partitions; miss-count 0 holds until
 # executors churn, which is exactly when an operator wants the alarm).
-_SMEM_ORACLE = _SSJ_STATE_CTES + """
+_SMEM_ORACLE = _SSJ_STATE_CTES + f"""
 SELECT CAST(k AS BIGINT) AS batch_seq,
        'symmetricHashJoin' AS operator_name,
-       CAST(8 AS BIGINT) AS n_shuffle_partitions,
-       CAST(32 AS BIGINT) AS n_store_instances,
+       CAST({_STATE_PARTITIONS} AS BIGINT) AS n_shuffle_partitions,
+       CAST({4 * _STATE_PARTITIONS} AS BIGINT) AS n_store_instances,
        CAST(total AS BIGINT) AS state_rows_total,
        CAST(0 AS BIGINT) AS rows_dropped_late,
        CAST(0 AS BIGINT) AS cache_miss_count,
@@ -1740,48 +1506,51 @@ def stream_state_memory_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     regression (zero/negative memory, current > retained, a cache
     thrash, a store-layout change) breaks the hash even when join
     output and row counters are still correct."""
-    progress = _run_ssj_replay(spark, sf_dir)
-    rows = []
-    for seq, p in enumerate(progress, start=1):
-        so = p["stateOperators"][0]
-        mem_used = int(so["memoryUsedBytes"])
-        mem_current = int(so["customMetrics"]["stateOnCurrentVersionSizeBytes"])
-        rows.append(
-            (
-                seq,
-                str(so["operatorName"]),
-                int(so["numShufflePartitions"]),
-                int(so["numStateStoreInstances"]),
-                int(so["numRowsTotal"]),
-                int(so["numRowsDroppedByWatermark"]),
-                int(so["customMetrics"]["loadedMapCacheMissCount"]),
-                1 if mem_used > 0 else 0,
-                1 if mem_current <= mem_used else 0,
+
+    def result(pairs: DataFrame, progress: list) -> DataFrame:
+        rows = []
+        for seq, p in enumerate(progress, start=1):
+            so = p["stateOperators"][0]
+            mem_used = int(so["memoryUsedBytes"])
+            mem_current = int(so["customMetrics"]["stateOnCurrentVersionSizeBytes"])
+            rows.append(
+                (
+                    seq,
+                    str(so["operatorName"]),
+                    int(so["numShufflePartitions"]),
+                    int(so["numStateStoreInstances"]),
+                    int(so["numRowsTotal"]),
+                    int(so["numRowsDroppedByWatermark"]),
+                    int(so["customMetrics"]["loadedMapCacheMissCount"]),
+                    1 if mem_used > 0 else 0,
+                    1 if mem_current <= mem_used else 0,
+                )
             )
+        return spark.createDataFrame(
+            rows,
+            "batch_seq LONG, operator_name STRING, n_shuffle_partitions LONG, "
+            "n_store_instances LONG, state_rows_total LONG, "
+            "rows_dropped_late LONG, cache_miss_count LONG, "
+            "mem_used_positive LONG, mem_current_le_used LONG",
         )
-    return spark.createDataFrame(
-        rows,
-        "batch_seq LONG, operator_name STRING, n_shuffle_partitions LONG, "
-        "n_store_instances LONG, state_rows_total LONG, "
-        "rows_dropped_late LONG, cache_miss_count LONG, "
-        "mem_used_positive LONG, mem_current_le_used LONG",
-    )
+
+    return _interval_join_replay(spark, sf_dir, result)
 
 
 # --- streaming state-store observability on the RocksDB provider ------------
-# T3's ops story across BOTH production store engines (VERDICT r13
-# item 3): the rows twin and memory twin above grade the default
-# HDFS-backed provider; real deployments at state sizes that don't fit
-# an executor heap run `spark.sql.streaming.stateStore.providerClass =
-# RocksDBStateStoreProvider`. This twin runs the SAME `_run_ssj_replay`
-# production interval-join replay under that provider and grades the
+# The ops story across BOTH production store engines: the rows twin and
+# memory twin above grade the default HDFS-backed provider; real
+# deployments at state sizes that don't fit an executor heap run
+# `spark.sql.streaming.stateStore.providerClass =
+# RocksDBStateStoreProvider`. This twin runs the SAME
+# `_interval_join_replay` under that provider and grades the
 # provider-specific counters against scale-free laws (each probed on
 # real progress payloads, see docs/ROUND14.md):
-# * operator_name / n_shuffle_partitions = 8 / n_store_instances = 32
-#   and the closed-form state_rows_total eviction law — identical to
-#   the HDFS twins. Swapping the store engine may not change join
-#   semantics, row counters, or store layout; grading them again HERE
-#   is the proof.
+# * operator_name / n_shuffle_partitions / n_store_instances and the
+#   closed-form state_rows_total eviction law — identical to the HDFS
+#   twins. Swapping the store engine may not change join semantics,
+#   row counters, or store layout; grading them again HERE is the
+#   proof.
 # * rows_dropped_late = 0 — in-order replay, same as the twins.
 # * changelog_replay_files = 0 — with changelog checkpointing off
 #   (the default) every commit writes a full snapshot, so a healthy
@@ -1799,18 +1568,17 @@ def stream_state_memory_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   bytes (same posture as the memory twin).
 # * snapshot_version_le_commit — every SnapshotLastUploaded.* version
 #   in the payload is ≤ the batch's commit version (an upload can lag
-#   maintenance, never come from the future). This is the
-#   snapshot/upload half the verdict named.
+#   maintenance, never come from the future).
 #
 # 100 TB story: pure observability — a fixed 4-row frame however large
 # the stream; every law is scale-free (instances = 4 × partitions at 8
 # or 8000 partitions; stall/replay zeros hold until backpressure or
 # churn, exactly when the alarm should fire).
-_SROCKS_ORACLE = _SSJ_STATE_CTES + """
+_SROCKS_ORACLE = _SSJ_STATE_CTES + f"""
 SELECT CAST(k AS BIGINT) AS batch_seq,
        'symmetricHashJoin' AS operator_name,
-       CAST(8 AS BIGINT) AS n_shuffle_partitions,
-       CAST(32 AS BIGINT) AS n_store_instances,
+       CAST({_STATE_PARTITIONS} AS BIGINT) AS n_shuffle_partitions,
+       CAST({4 * _STATE_PARTITIONS} AS BIGINT) AS n_store_instances,
        CAST(total AS BIGINT) AS state_rows_total,
        CAST(0 AS BIGINT) AS rows_dropped_late,
        CAST(0 AS BIGINT) AS changelog_replay_files,
@@ -1832,7 +1600,7 @@ def stream_state_rocksdb_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     the production interval-join replay under the RocksDB state-store
     provider (`spark.sql.streaming.stateStore.providerClass`), graded
     row-for-row against the scale-free laws the block comment above
-    states. Completes T3's ops story across both production store
+    states. Completes the ops story across both production store
     engines (ref parity: the state the reference's `Main.java:57`
     bounds with idle-state TTL lives in a pluggable Flink backend —
     heap or RocksDB; Spark's equivalent deployment switch is the
@@ -1845,34 +1613,37 @@ def stream_state_rocksdb_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     a stall, a mid-query lineage rebuild, an upload from a future
     version — breaks the hash even when join output is still
     correct."""
-    progress = _run_ssj_replay(spark, sf_dir, provider=_ROCKSDB_PROVIDER)
-    rows = []
-    for seq, p in enumerate(progress, start=1):
-        so = p["stateOperators"][0]
-        cm = so["customMetrics"]
-        snap_versions = [
-            int(v) for k, v in cm.items() if k.startswith("SnapshotLastUploaded.")
-        ]
-        rows.append(
-            (
-                seq,
-                str(so["operatorName"]),
-                int(so["numShufflePartitions"]),
-                int(so["numStateStoreInstances"]),
-                int(so["numRowsTotal"]),
-                int(so["numRowsDroppedByWatermark"]),
-                int(cm["rocksdbNumReplayChangelogFiles"]),
-                int(cm["rocksdbWriterStallLatencyMs"]),
-                1 if int(so["memoryUsedBytes"]) > 0 else 0,
-                1 if int(cm["rocksdbPinnedBlocksMemoryUsage"]) > 0 else 0,
-                1 if all(v <= seq for v in snap_versions) else 0,
+
+    def result(pairs: DataFrame, progress: list) -> DataFrame:
+        rows = []
+        for seq, p in enumerate(progress, start=1):
+            so = p["stateOperators"][0]
+            cm = so["customMetrics"]
+            snap_versions = [
+                int(v) for k, v in cm.items() if k.startswith("SnapshotLastUploaded.")
+            ]
+            rows.append(
+                (
+                    seq,
+                    str(so["operatorName"]),
+                    int(so["numShufflePartitions"]),
+                    int(so["numStateStoreInstances"]),
+                    int(so["numRowsTotal"]),
+                    int(so["numRowsDroppedByWatermark"]),
+                    int(cm["rocksdbNumReplayChangelogFiles"]),
+                    int(cm["rocksdbWriterStallLatencyMs"]),
+                    1 if int(so["memoryUsedBytes"]) > 0 else 0,
+                    1 if int(cm["rocksdbPinnedBlocksMemoryUsage"]) > 0 else 0,
+                    1 if all(v <= seq for v in snap_versions) else 0,
+                )
             )
+        return spark.createDataFrame(
+            rows,
+            "batch_seq LONG, operator_name STRING, n_shuffle_partitions LONG, "
+            "n_store_instances LONG, state_rows_total LONG, "
+            "rows_dropped_late LONG, changelog_replay_files LONG, "
+            "writer_stall_ms LONG, mem_used_positive LONG, "
+            "pinned_blocks_positive LONG, snapshot_version_le_commit LONG",
         )
-    return spark.createDataFrame(
-        rows,
-        "batch_seq LONG, operator_name STRING, n_shuffle_partitions LONG, "
-        "n_store_instances LONG, state_rows_total LONG, "
-        "rows_dropped_late LONG, changelog_replay_files LONG, "
-        "writer_stall_ms LONG, mem_used_positive LONG, "
-        "pinned_blocks_positive LONG, snapshot_version_le_commit LONG",
-    )
+
+    return _interval_join_replay(spark, sf_dir, result, provider=_ROCKSDB_PROVIDER)

@@ -29,7 +29,7 @@ RAW_SCHEMA = T.StructType([T.StructField("value", T.StringType(), True)])
 
 def read_cdc_file_batch(spark: SparkSession, path: str) -> DataFrame:
     """Batch replay: one envelope JSON per line -> value:string rows."""
-    return spark.read.schema(RAW_SCHEMA).text(path).withColumnRenamed("value", "value")
+    return spark.read.schema(RAW_SCHEMA).text(path)
 
 
 def read_cdc_file_stream(spark: SparkSession, path: str) -> DataFrame:

@@ -20,6 +20,7 @@ JDBC shape, gated since the container has no database.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,7 +28,37 @@ from pyspark.sql import functions as F
 from flinkstreametl_spark.operators.cdc import latest_by_key
 
 
-class KeyedParquetUpsertSink:
+class _SwappedParquetTable:
+    """A parquet table directory that each commit replaces whole: the
+    new version is written beside it and renamed into place, so
+    readers see the old table or the new one, never a mix."""
+
+    path: str
+    # Name of a file recording the committed batch id, for sinks that
+    # keep one; it is written into the new version before the rename,
+    # so data and batch id commit together.
+    _MARKER: str | None = None
+
+    def read(self, spark: SparkSession) -> DataFrame | None:
+        if not os.path.exists(self.path):
+            return None
+        return spark.read.parquet(self.path)
+
+    def _commit(self, merged: DataFrame, batch_id: int) -> None:
+        tmp = self.path + f".tmp-{batch_id}"
+        merged.write.mode("overwrite").parquet(tmp)
+        if self._MARKER is not None:
+            with open(os.path.join(tmp, self._MARKER), "w") as fh:
+                fh.write(str(batch_id))
+        old = self.path + f".old-{batch_id}"
+        if os.path.exists(self.path):
+            os.rename(self.path, old)
+        os.rename(tmp, self.path)
+        if os.path.exists(old):
+            shutil.rmtree(old)
+
+
+class KeyedParquetUpsertSink(_SwappedParquetTable):
     """foreachBatch target with REPLACE-INTO semantics on `key_cols`.
 
     Each batch: (1) last-write-wins dedup within the batch by
@@ -56,11 +87,6 @@ class KeyedParquetUpsertSink:
         self.op_col = op_col
         self.delete_op = delete_op
 
-    def read(self, spark: SparkSession) -> DataFrame | None:
-        if not os.path.exists(self.path):
-            return None
-        return spark.read.parquet(self.path)
-
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """Upsert + tombstone merge (SURVEY.md §7 hard part (2)): the
         newest record per key decides — a DELETE tombstone removes the
@@ -79,16 +105,7 @@ class KeyedParquetUpsertSink:
             merged = keep.unionByName(upserts)
         else:
             merged = upserts
-        tmp = self.path + f".tmp-{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        old = self.path + f".old-{batch_id}"
-        if os.path.exists(self.path):
-            os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        if os.path.exists(old):
-            import shutil
-
-            shutil.rmtree(old)
+        self._commit(merged, batch_id)
 
 
 def jdbc_upsert_writer(url: str, table: str, key_cols: list[str], order_cols: list[str], properties: dict | None = None):
@@ -177,7 +194,7 @@ def kafka_sink(df: DataFrame, brokers: str, topic: str, checkpoint_dir: str):
     )
 
 
-class IncrementalAggSink:
+class IncrementalAggSink(_SwappedParquetTable):
     """Streaming materialized view by DELTA MERGE, not operator state:
     each micro-batch computes its partial (count, sum) per key and
     merges into a stored aggregate table via full-outer coalesce-add.
@@ -213,11 +230,6 @@ class IncrementalAggSink:
         with open(marker) as fh:
             return int(fh.read().strip())
 
-    def read(self, spark: SparkSession) -> DataFrame | None:
-        if not os.path.exists(self.path):
-            return None
-        return spark.read.parquet(self.path)
-
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         applied = self._applied_batch_id()
         if applied is not None and batch_id <= applied:
@@ -242,20 +254,7 @@ class IncrementalAggSink:
                     ),
                 )
             )
-        tmp = self.path + f".tmp-{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        # marker goes into tmp BEFORE the swap: data + batch-id commit
-        # in the same atomic rename
-        with open(os.path.join(tmp, self._MARKER), "w") as fh:
-            fh.write(str(batch_id))
-        old = self.path + f".old-{batch_id}"
-        if os.path.exists(self.path):
-            os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        if os.path.exists(old):
-            import shutil
-
-            shutil.rmtree(old)
+        self._commit(merged, batch_id)
 
 
 class FanoutSink:
