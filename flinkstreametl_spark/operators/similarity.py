@@ -212,14 +212,7 @@ def ivf_topk(emb: DataFrame, n_queries: int = 5, k: int = 5, nprobe: int = 3) ->
         self_norm_fp_col(F.col("embedding")).alias("cc"),
         F.col("label"),
     )
-    # Broadcast the PANEL side explicitly (r15, guide §3.1): probes is
-    # n_queries x nprobe rows — parameter-sized at any corpus scale —
-    # but it hides behind a window over a crossJoin whose size estimate
-    # is corpus-sized, so Catalyst was building (broadcasting!) the
-    # corpus side `c` and streaming the panel through ~1 post-AQE
-    # partition: the whole candidate scoring ran near-serially and the
-    # full embedding table crossed the driver. With the hint the corpus
-    # streams at scan parallelism and nothing corpus-scale broadcasts.
+    # panel is n_queries×nprobe rows; must be the build side; Catalyst misestimates the windowed crossJoin
     cand = F.broadcast(probes).join(c, "label").filter(
         F.col("query_id") != F.col("neighbor_id")
     )

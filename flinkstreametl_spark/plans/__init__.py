@@ -1,6 +1,19 @@
 """Named query registry. Importing this package registers every query
 module; ``__spark_entry__.py``, the tests, and ``bench.py`` all consume
-the same registry."""
+the same registry.
+
+The driver checks the first ``WINDOW`` registry entries against the
+DuckDB oracle each round and commits the verdicts as
+``CORRECTNESS_r{N}.json`` at the repo root. Import orders the registry
+from those artifacts with ``driver_window``, so a new artifact rotates
+the window the next time the package is imported."""
+
+from __future__ import annotations
+
+import json
+import re
+from collections.abc import Mapping, Sequence
+from pathlib import Path
 
 from flinkstreametl_spark.plans.registry import REGISTRY, QuerySpec, oracle_sql_map, queries_map
 
@@ -27,668 +40,77 @@ from flinkstreametl_spark.plans import eval_ext as _eval_ext  # noqa: E402,F401
 from flinkstreametl_spark.plans import sketch_ext as _sketch_ext  # noqa: E402,F401
 from flinkstreametl_spark.plans import stream_parity_ext as _stream_parity_ext  # noqa: E402,F401
 
-# The driver's correctness gate verifies the FIRST 50 registered queries
-# (registration order == dict order), so ordering decides what gets a
-# driver verdict each round. CORRECTNESS_r08 came back 50/50 green
-# (round-8 window: the 10 _NEW_R8 additions + the 40 r4-era names), so
-# entering round 9 every ever-driver-checked registered query holds a
-# green latest verdict (distribution r8=50, r7=50, r6=50, r5=49) and
-# the 40 late-round-8 additions in _NEW_R9 below are the only
-# never-driver-checked names. Two further names appear in the
-# CORRECTNESS_r01 artifact only — approx_distinct_users and
-# stats_builtin_moments, checked once with err=no_oracle — and live
-# OUTSIDE the driver registry (AUDIT_REGISTRY sketches), so artifact
-# reconciliations count 2 more distinct historical names than the
-# registry (ADVICE r7).
-#
-# Round 11 executes the rotation the round-10 judge prescribed
-# (VERDICT r10 item 1). CORRECTNESS_r10 came back 50/50 green, so the
-# r10 window names all hold fresh verdicts and rotate behind the
-# window; the latest-verdict distribution entering round 11 is
-# r10=50, r9=50, r8=50, r7=50, r6=50 over the 250 ever-checked names.
-# The round-11 window:
-#   1. _NEW_R11 — ALL 45 never-driver-checked names (round-9/10
-#      additions + the two round-8 orphans). After this window every
-#      registry entry has a driver verdict for the first time in the
-#      project's history. They lead so a failure can't be hidden by
-#      the [:50] cut.
-#   2. _PRIORITY_R11 — the first 5 r6-era stale-evidence names in
-#      their CORRECTNESS_r06 window order (oldest evidence in the
-#      registry), filling the window to exactly 50. The remaining 45
-#      r6-era names are the round-12 refresh tier.
-#   3. _NEW_R12 — round-11 additions queue there the day each lands
-#      (capped at 15), never evicting a committed window slot.
-# Verified queries move behind the window (their recorded evidence
-# stands). The 3 sketch queries (HLL/KLL/moments) live in
-# AUDIT_REGISTRY — queries() stays 100% oracle-backed. If any r11
-# window name fails, it jumps the queue after repair.
-#
-# EVIDENCE-STALENESS HORIZON (explicit, per VERDICT r9 item 4): with
-# Q registered queries, 50 driver slots per round, and A additions
-# per round, every addition consumes a future slot, so the steady-
-# state full-refresh period is Q / (50 - A) rounds. At Q=281 and the
-# historical A≈30 that is ~14 rounds — too stale. Round 10 therefore
-# CAPS additions at 15/round (asserted below): horizon ≈ 281/35 ≈ 8
-# rounds, i.e. every registered query's driver verdict is at most ~8
-# rounds old once the never-checked backlog (_NEW_R11) drains THIS
-# round. Completeness — set(REGISTRY) == ever-driver-checked
-# ∪ queued, the invariant whose violation orphaned the two round-8
-# names — is asserted from the CORRECTNESS_r*.json artifacts in
-# tests/test_rotation.py (the artifacts live at the repo root, out of
-# reach of this package at import time).
-_ROUND11_ADDITION_CAP = 15
-_NEW_R9: list[str] = [
-    "linkpred_copurchase_scores",
-    "seasonal_decompose_daily",
-    "dsir_importance_topk",
-    "hybrid_rrf_retrieval",
-    "bloom_prune_fpr_audit",
-    "token_gini_diversity",
-    "mutual_knn_pairs",
-    "embedding_centroid_drift",
-    "quality_calibration_audit",
-    "kcore_peeling_profile",
-    "decontaminate_by_embedding",
-    "stratified_kfold_audit",
-    "theil_sen_trend_daily",
-    "join_key_skew_report",
-    "rolling_median_7d",
-    "neardup_source_matrix",
-    "sq8_reconstruction_error",
-    "dedup_funnel_by_source",
-    "nucleus_sample_per_source",
-    "trigram_novelty_curve",
-    "knn_label_disagreement",
-    "multitouch_attribution_daily",
-    "time_weighted_avg_daily",
-    "lsh_band_sweep_audit",
-    "quality_score_drift",
-    "langid_confusion_matrix",
-    "orders_reconciliation_audit",
-    "simhash_hamming_histogram",
-    "label_separation_audit",
-    "error_burn_rate_daily",
-    "value_ks_drift",
-    "neardup_cluster_size_histogram",
-    "prf_expanded_retrieval",
-    "session_gap_sensitivity",
-    "semantic_cosine_histogram",
-    "embedding_dim_stats",
-    "source_vocab_overlap",
-    "revenue_topk_concentration",
-    "mad_anomaly_days",
-    "pagerank_weighted_copurchase",
-]
+WINDOW = 50
+REPO_ROOT = Path(__file__).resolve().parents[2]
 
-_PRIORITY_R9 = [
-    # the first 10 of the 49 r5-era stale-evidence names, in their
-    # CORRECTNESS_r05 window order — all re-verified green in the r9
-    # window (CORRECTNESS_r09 50/50)
-    "dim_3way_join",
-    "replace_upsert_latest",
-    "changelog_op_column",
-    "json_payload_roundtrip",
-    "flagship_enrich_sql",
-    "string_funcs_parts",
-    "anti_join_no_orders",
-    "cube_agg",
-    "full_outer_nation_counts",
-    "group_distinct_agg",
-]
+# Names whose plan changed after their latest verdict -> the round the
+# change landed in. An entry is due while the name's latest verdict is
+# older than that round; delete it once the driver has checked it.
+_RECHECK: dict[str, int] = {
+    # all 13 replays moved onto the one harness in stream_parity_ext
+    "stream_stream_join_replay": 16,
+    "stream_dedup_replay": 16,
+    "stream_window_agg_replay": 16,
+    "stream_cdc_upsert_replay": 16,
+    "stream_session_window_replay": 16,
+    "stream_custom_state_replay": 16,
+    "stream_outer_join_replay": 16,
+    "stream_hll_maintenance_replay": 16,
+    "stream_bloom_dedup_replay": 16,
+    "stream_dead_letter_replay": 16,
+    "stream_state_metrics_replay": 16,
+    "stream_state_memory_replay": 16,
+    "stream_state_rocksdb_replay": 16,
+}
 
-_PRIORITY_R10 = [
-    # The 39 remaining r5-era stale-evidence names (latest verdict
-    # r5, computed from CORRECTNESS_r01–r09 at round-10 start), in
-    # their CORRECTNESS_r05 window order. With _NEW_R10's 11 they
-    # fill the round-10 window exactly and complete the r5-tier
-    # refresh planned in round 8.
-    "grouping_sets_agg",
-    "null_handling_buckets",
-    "pivot_status_qty",
-    "q14_promo_revenue_share",
-    "q18_large_orders",
-    "q4_order_priority",
-    "rollup_agg",
-    "scalar_subquery_above_avg",
-    "semi_join_with_orders",
-    "setop_except_all_keys",
-    "setop_except_nations",
-    "setop_intersect_all_keys",
-    "setop_intersect_nations",
-    "setop_union_all_keys",
-    "setop_union_nations",
-    "sort_events_top50",
-    "topk_orders",
-    "window_rank_top3",
-    "window_running_total",
-    "ivf_recall_curve",
-    "capped_balance_daily",
-    "user_activity_streaks",
-    "cumulative_unique_users",
-    "equidepth_totalprice_bounds",
-    "pareto_frontier_parts",
-    "mode_brand_per_type",
-    "topk_with_ties_orders",
-    "scd2_point_in_time_status",
-    "dau_mau_stickiness",
-    "stats_corr_covar_exact",
-    "redact_documents",
-    "embedding_srp_pairs",
-    "flagship_enrich",
-    "q1_pricing_summary",
-    "sessionize_events",
-    "minhash_lsh_neardup",
-    "simhash_near_pairs",
-    "incremental_minhash_multibatch",
-    "knn_cosine_fast",
-]
 
-_NEW_R10: list[str] = [
-    # Round-9 additions, appended the day each lands (oracle-verified
-    # locally at sf0.001/sf0.01 on landing). The round-9 window is
-    # already full, so these queue for the round-10 window where they
-    # lead ahead of the 39 remaining r5-era names.
-    "cohort_retention_matrix",
-    "funnel_conversion_steps",
-    "benford_first_digit_audit",
-    "mannwhitney_source_lengths",
-    "holt_linear_forecast_daily",
-    "acf_daily_lags",
-    "orders_backlog_daily",
-    "inter_arrival_burstiness",
-    "bm25_mrr_eval",
-    "dedup_cluster_quality_spread",
-    "value_percentile_bands",
-]
+def load_verdicts(root: Path = REPO_ROOT) -> dict[int, list[str]]:
+    """``{round: checked names in artifact order}`` from the
+    ``CORRECTNESS_r{N}.json`` files in ``root``. A file whose name or
+    content is not a driver artifact raises instead of being skipped."""
+    verdicts: dict[int, list[str]] = {}
+    for path in root.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        data = json.loads(path.read_text())
+        if m is None or not isinstance(data, dict) or not all(isinstance(v, dict) for v in data.values()):
+            raise ValueError(f"malformed driver artifact: {path}")
+        verdicts[int(m.group(1))] = list(data)
+    return verdicts
 
-_NEW_R11: list[str] = [
-    # Round-9 additions past _NEW_R10's 11-slot round-10 capacity (the
-    # assert below is the guard that sends them here instead of
-    # evicting a stale-evidence name), the two round-8 rotation
-    # orphans the r9 judge found, and round-10 additions appended the
-    # day each lands. Each oracle-verified locally at sf0.001/sf0.01
-    # on landing; they lead the round-11 window.
-    "dedup_flag_propagation_audit",
-    "holt_winters_seasonal_daily",
-    "hits_order_part_scores",
-    "jl_distortion_audit",
-    "dataset_card_summary",
-    "churn_cohort_survival",
-    "neardup_containment_pairs",
-    "term_burstiness_top50",
-    "time_decay_attribution_daily",
-    "personalized_pagerank_copurchase",
-    "token_pair_lift_top50",
-    "order_priority_transition_matrix",
-    "rbo_rank_agreement",
-    "hll_distinct_audit",
-    "cms_heavy_hitters_audit",
-    "pettitt_changepoint_daily",
-    "degree_assortativity_copurchase",
-    "apriori_triple_itemsets",
-    "cramers_v_lang_source",
-    "k_anonymity_audit",
-    "forecast_naive_backtest",
-    "simplified_silhouette_by_cluster",
-    "mann_kendall_trend_daily",
-    "bfs_hop_profile_copurchase",
-    "funnel_latency_percentiles",
-    "markov_stationary_event_mix",
-    "quality_gates_kappa",
-    "hhi_revenue_by_nation",
-    "bootstrap_mean_doclen_ci",
-    # --- round-8 rotation orphans (VERDICT r9 "What's wrong"):
-    # registered + locally oracle-tested since round 8, but counted
-    # out of _NEW_R9 when it was pinned at 40 names and never queued.
-    "containment_dup_pairs",
-    "forecast_feature_table",
-    # --- round-10 additions land below this line, capped by
-    # _ROUND10_ADDITION_CAP.
-    "stream_stream_join_replay",
-    "bloom_saturation_audit",
-    "audio_fingerprint_neardup",
-    "video_fingerprint_neardup",
-    "stream_dedup_replay",
-    "stream_window_agg_replay",
-    "stream_cdc_upsert_replay",
-    "unigram_surprisal_by_source",
-    "stream_session_window_replay",
-    "stream_custom_state_replay",
-    "stream_outer_join_replay",
-    "quantile_sketch_audit",
-    "stream_hll_maintenance_replay",
-    "stream_bloom_dedup_replay",
-]
 
-_PRIORITY_R11 = [
-    # The 5 oldest-evidence names (latest verdict r6, computed from
-    # CORRECTNESS_r01–r10 at round-11 start), in their
-    # CORRECTNESS_r06 window order. With _NEW_R11's 45 they fill the
-    # round-11 window exactly; the remaining 45 r6-era names are the
-    # committed round-12 refresh tier.
-    "occupancy_rate_by_region",
-    "q2_min_cost_supplier",
-    "q7_nation_trade_volume",
-    "q8_market_share",
-    "q9_profit_by_nation_year",
-]
+def driver_window(
+    names: Sequence[str], verdicts: Mapping[int, list[str]], recheck: Mapping[str, int]
+) -> list[str]:
+    """Order ``names`` for the driver; the first ``WINDOW`` are checked next.
 
-_NEW_R12: list[str] = [
-    # Round-11 additions land here the day each lands (oracle-verified
-    # locally at sf0.001/sf0.01 on landing), capped by
-    # _ROUND11_ADDITION_CAP; they lead the round-12 window ahead of
-    # the 45 remaining r6-era stale-evidence names.
-    "stream_dead_letter_replay",
-]
+    1. never-checked names, in the order given;
+    2. ``recheck`` names whose latest verdict round is older than the
+       round their plan changed in;
+    3. every other name.
 
-_WINDOW_R11 = (*_NEW_R11, *_PRIORITY_R11)[:50]
-
-# Round 12 executes the rotation the round-11 judge prescribed
-# (VERDICT r11 item 2). CORRECTNESS_r11 came back 50/50 green, so the
-# latest-verdict distribution entering round 12 is r11=50, r10=50,
-# r9=50, r8=50, r7=50, r6=45 over the 295 ever-checked names, with
-# exactly one never-checked name (stream_dead_letter_replay, queued in
-# _NEW_R12 the day it landed). The round-12 window:
-#   1. _NEW_R12 — that single queued round-11 addition. It leads so a
-#      failure can't be hidden by the [:50] cut; after this window
-#      every registry entry has a driver verdict again.
-#   2. _REFRESH_R12 — ALL 45 remaining r6-era stale-evidence names
-#      (the committed refresh tier, already sf1-swept 45/45 in
-#      docs/sweep_sf1_r12tier.jsonl), in their CORRECTNESS_r06 window
-#      order. After this window the oldest verdict in the registry is
-#      r7 — the staleness horizon the round-10 cap promised.
-#   3. _PRIORITY_R12 — the first 4 r7-era names in their
-#      CORRECTNESS_r07 window order, filling the window to exactly 50
-#      and starting the r7-tier refresh.
-#   4. _NEW_R13 — round-12 additions queue there the day each lands
-#      (capped at 15), never evicting a committed window slot.
-_REFRESH_R12 = [
-    "q10_returned_items",
-    "q11_important_parts",
-    "q12_priority_shipping_counts",
-    "q13_order_count_distribution",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q17_small_qty_revenue",
-    "q19_disjunctive_predicate",
-    "q20_excess_suppliers",
-    "q21_sole_supplier_orders",
-    "q22_idle_customers",
-    "conditional_aggregates",
-    "histogram_totalprice",
-    "listagg_region_nations",
-    "median_disc_quantity",
-    "percentile_quantities",
-    "resample_ffill_hourly",
-    "rollup_with_grouping_id",
-    "unpivot_part_measures",
-    "window_range_frame",
-    "window_rows_frame_dist",
-    "pandas_udf_quality",
-    "array_functions_embeddings",
-    "bpe_ish_token_count",
-    "chunk_documents",
-    "dedup_keep_first",
-    "doc_fingerprint",
-    "doc_repetition_stats",
-    "embedding_norms",
-    "hash_split_train_test",
-    "label_centroids",
-    "langid_heuristic",
-    "media_meta",
-    "ngram_jaccard_pairs",
-    "simhash_signatures",
-    "stratified_hash_sample",
-    "text_quality_stats",
-    "training_data_pipeline",
-    "copurchase_triangle_stats",
-    "weighted_median_quantity",
-    "image_phash_neardup",
-    "semantic_dedup_pairs",
-    "ivf_kmeans_recall_curve",
-    "mixture_weights_by_lang",
-    "context_length_waste_curve",
-]
-
-_PRIORITY_R12 = [
-    # The 4 oldest-evidence r7-era names (latest verdict r7, computed
-    # from CORRECTNESS_r01–r11 at round-12 start), in their
-    # CORRECTNESS_r07 window order. With _NEW_R12's 1 and
-    # _REFRESH_R12's 45 they fill the round-12 window exactly; the
-    # remaining 46 r7-era names lead the round-13 refresh tier.
-    "pagerank_copurchase",
-    "pq_adc_recall",
-    "token_balanced_shards",
-    "split_leakage_audit",
-]
-
-_ROUND12_ADDITION_CAP = 15
-_NEW_R13: list[str] = [
-    # Round-12 additions land here the day each lands (oracle-verified
-    # locally at sf0.001/sf0.01 on landing), capped by
-    # _ROUND12_ADDITION_CAP; they lead the round-13 window ahead of
-    # the 46 remaining r7-era stale-evidence names.
-    "stream_state_metrics_replay",
-]
-
-_WINDOW_R12 = (*_NEW_R12, *_REFRESH_R12, *_PRIORITY_R12)[:50]
-
-# Round 13 executes the rotation the round-12 judge prescribed
-# (VERDICT r12 item 2). CORRECTNESS_r12 came back 50/50 green, so the
-# latest-verdict distribution entering round 13 is r12=50, r11=50,
-# r10=50, r9=50, r8=50, r7=46 over the 296 ever-checked names, with
-# exactly one never-checked name (stream_state_metrics_replay, queued
-# in _NEW_R13 the day it landed). The round-13 window:
-#   1. _NEW_R13 — that single queued round-12 addition. It leads so a
-#      failure can't be hidden by the [:50] cut; after this window
-#      every registry entry has a driver verdict again.
-#   2. _REFRESH_R13 — ALL 46 remaining r7-era stale-evidence names
-#      (the committed refresh tier, already sf1-swept 46/46 in
-#      docs/sweep_sf1_r13tier.jsonl), in their CORRECTNESS_r07 window
-#      order. After this window the oldest verdict in the registry is
-#      r8 — the ≤5-round staleness horizon holds.
-#   3. _PRIORITY_R13 — the first 3 r8-era names in their
-#      CORRECTNESS_r08 window order, filling the window to exactly 50
-#      and starting the r8-tier refresh.
-#   4. _NEW_R14 — round-13 additions queue there the day each lands
-#      (capped at 15), never evicting a committed window slot.
-_REFRESH_R13 = [
-    "domain_signature_terms",
-    "lsh_precision_recall_audit",
-    "dedup_method_agreement",
-    "cluster_safe_split",
-    "tokenizer_fertility_by_lang",
-    "split_representativeness_audit",
-    "cdc_filter_project",
-    "temporal_active_filter",
-    "timestamp_parse_roundtrip",
-    "q3_shipping_priority",
-    "q5_region_revenue",
-    "q6_forecast_revenue",
-    "asof_latest_order",
-    "range_join_error_context",
-    "session_window_agg",
-    "sliding_window_counts",
-    "window_lag_lead_ntile",
-    "stats_variance_exact",
-    "monthly_revenue_trend",
-    "cohort_retention",
-    "funnel_conversion",
-    "date_arithmetic_orders",
-    "grouped_agg_pandas_udf",
-    "ingest_batch_pipeline",
-    "posexplode_tokens",
-    "props_map_entries",
-    "ann_ivf_topk",
-    "kmeans_cluster_sizes",
-    "neardup_cluster_assign",
-    "dup_span_ladder",
-    "passage_dedup_stats",
-    "fuzzy_dup_parts",
-    "cdc_rolling_hash_chunks",
-    "bpe_pair_counts",
-    "bpe_train_merges",
-    "bigram_familiarity_score",
-    "textrank_keywords",
-    "tfidf_top_terms",
-    "token_frequency_top100",
-    "quality_classifier_score",
-    "quota_sample_per_lang",
-    "temperature_mix_sample",
-    "weighted_sample_topk",
-    "pack_sequences",
-    "audio_features_wav",
-    "video_frame_sample",
-]
-
-_PRIORITY_R13 = [
-    # The 3 oldest-evidence r8-era names (latest verdict r8, computed
-    # from CORRECTNESS_r01–r12 at round-13 start), in their
-    # CORRECTNESS_r08 window order. With _NEW_R13's 1 and
-    # _REFRESH_R13's 46 they fill the round-13 window exactly; the
-    # remaining 47 r8-era names lead the round-14 refresh tier.
-    "bm25_topk_docs",
-    "decontaminate_by_retrieval",
-    "ann_index_staleness_audit",
-]
-
-_ROUND13_ADDITION_CAP = 15
-_NEW_R14: list[str] = [
-    # Round-13 additions land here the day each lands (oracle-verified
-    # locally at sf0.001/sf0.01 on landing), capped by
-    # _ROUND13_ADDITION_CAP; they lead the round-14 window ahead of
-    # the 47 remaining r8-era stale-evidence names.
-    "stream_state_memory_replay",
-]
-
-_WINDOW_R13 = (*_NEW_R13, *_REFRESH_R13, *_PRIORITY_R13)[:50]
-
-# Round 14 executes the rotation the round-13 judge prescribed
-# (VERDICT r13 item 1). CORRECTNESS_r13 came back 50/50 green, so the
-# latest-verdict distribution entering round 14 is r13=50, r12=50,
-# r11=50, r10=50, r9=50, r8=47 over the 297 ever-checked names, with
-# exactly one never-checked name (stream_state_memory_replay, queued
-# in _NEW_R14 the day it landed). The round-14 window:
-#   1. _NEW_R14 — that single queued round-13 addition. It leads so a
-#      failure can't be hidden by the [:50] cut; after this window
-#      every registry entry has a driver verdict again.
-#   2. _REFRESH_R14 — ALL 47 remaining r8-era stale-evidence names
-#      (the committed refresh tier, already sf1-swept 47/47 in
-#      docs/sweep_sf1_r14tier.jsonl), in their CORRECTNESS_r08 window
-#      order. After this window the oldest verdict in the registry is
-#      r9 — the ≤5-round staleness horizon holds.
-#   3. _PRIORITY_R14 — the first 2 r9-era names in their
-#      CORRECTNESS_r09 window order, filling the window to exactly 50
-#      and starting the r9-tier refresh.
-#   4. _NEW_R15 — round-14 additions queue there the day each lands
-#      (capped at 15), never evicting a committed window slot.
-_REFRESH_R14 = [
-    "ngram_repetition_stats",
-    "mrl_truncation_recall",
-    "domain_budget_allocation",
-    "bm25_index_staleness_audit",
-    "profile_documents",
-    "pca_power_topcomp",
-    "hard_negative_mining",
-    "incremental_minhash_replay",
-    "scd2_order_status_history",
-    "coherent_sample_orders",
-    "trend_fit_by_event_type",
-    "null_safe_join_segments",
-    "winsorized_price_stats",
-    "zorder_key_orders",
-    "dq_violation_counts",
-    "bpe_encode_token_counts",
-    "collect_set_sorted",
-    "inverted_index_terms",
-    "gopher_quality_gate",
-    "vocab_coverage_curve",
-    "mad_robust_price",
-    "zscore_tail_events",
-    "asof_tolerance_enrich",
-    "cluster_canonical_docs",
-    "rfm_customer_segments",
-    "daily_moving_avg_7d",
-    "median_cont_quantity",
-    "session_transition_counts",
-    "nation_revenue_contribution",
-    "order_gap_stats",
-    "ewma_daily_value",
-    "cusum_changepoint_daily",
-    "dow_seasonality_profile",
-    "udtf_sentence_spans",
-    "salted_hot_key_agg",
-    "click_purchase_attribution",
-    "basket_lift_top_pairs",
-    "span_dedup_keep_first",
-    "int8_knn_recall",
-    "groupwise_minmax_norm",
-    "peak_concurrent_sessions",
-    "series_correlation_pairs",
-    "knn_pandas_topk",
-    "knn_brute_topk",
-    "exact_dup_groups",
-    "embedding_neardup_pairs",
-    "decontaminate_ngram_hits",
-]
-
-_PRIORITY_R14 = [
-    # The 2 oldest-evidence r9-era names (latest verdict r9, computed
-    # from CORRECTNESS_r01–r13 at round-14 start), in their
-    # CORRECTNESS_r09 window order. With _NEW_R14's 1 and
-    # _REFRESH_R14's 47 they fill the round-14 window exactly; the
-    # remaining r9-era names lead the round-15 refresh tier.
-    "linkpred_copurchase_scores",
-    "seasonal_decompose_daily",
-]
-
-_ROUND14_ADDITION_CAP = 15
-_NEW_R15: list[str] = [
-    # Round-14 additions land here the day each lands (oracle-verified
-    # locally at sf0.001/sf0.01 on landing), capped by
-    # _ROUND14_ADDITION_CAP; they lead the round-15 window ahead of
-    # the remaining r9-era stale-evidence names.
-    "stream_state_rocksdb_replay",
-]
-
-_WINDOW_R14 = (*_NEW_R14, *_REFRESH_R14, *_PRIORITY_R14)[:50]
-
-# The never-driver-checked name in _NEW_R14 AND the 47+2 scheduled
-# stale-evidence names must survive the [:50] truncation; round-14
-# additions must queue in _NEW_R15 rather than evict any of them
-# (the discipline that held for rounds 6-13).
-assert len(_NEW_R14) + len(_REFRESH_R14) + len(_PRIORITY_R14) == 50
-assert all(n in _WINDOW_R14 for n in (*_NEW_R14, *_REFRESH_R14, *_PRIORITY_R14))
-assert len(_NEW_R15) <= _ROUND14_ADDITION_CAP, (
-    "round-14 additions exceed the per-round cap; the staleness "
-    "horizon arithmetic above no longer holds — raise the cap "
-    "deliberately or stop adding"
-)
-assert len(_NEW_R15) == len(set(_NEW_R15)), "duplicate names queued in _NEW_R15"
-
-# Round 15 executes the rotation the round-14 judge prescribed
-# (VERDICT r14 item 6): the optimization rounds restructured 43
-# queries, but the r14 window covered only ~10 of them — the rest
-# rest on the builder's own verify_contract runs. The round-15
-# window therefore prioritizes CHANGED-plan names over the staleness
-# horizon for one round:
-#   1. _NEW_R15 — the single queued round-14 addition (RocksDB twin),
-#      leading so a failure can't be hidden by the [:50] cut.
-#   2. _CHANGED_R15 — every r14-restructured, oracle-backed name NOT
-#      already confirmed by the r14 window (32 names: the 15
-#      plan-changed bench queries minus embedding_neardup_pairs, the
-#      fingerprint twins, and the §2/§7 precompute/pin batch), in
-#      OPTIMIZATION_r14.md section order. Round-15's own rewrites all
-#      fall inside this set or the r14 window.
-#   3. _PRIORITY_R15 — the first 17 r9-era stale-evidence names in
-#      their CORRECTNESS_r09 window order (the committed refresh tier,
-#      already sf1-swept 48/48 in docs/sweep_sf1_r15tier.jsonl),
-#      filling the window to exactly 50. The remaining 31 r9-era
-#      names lead the round-16 refresh tier; the staleness horizon
-#      stretches to 6 rounds for them — the price of driver-confirming
-#      two optimization rounds' rewrites, accepted deliberately.
-_CHANGED_R15 = [
-    # §1 self-join/fan-out pins (bench)
-    "minhash_lsh_neardup",
-    "simhash_near_pairs",
-    "video_fingerprint_neardup",
-    "incremental_minhash_multibatch",
-    "bigram_familiarity_score",
-    "passage_dedup_stats",
-    "hits_order_part_scores",
-    # §2 norm precompute (bench)
-    "knn_cosine_fast",
-    "hybrid_rrf_retrieval",
-    # §3 kmeans fusion, §4 dsir, §5 pagerank, §6 replay fixtures, §8b
-    "ivf_kmeans_recall_curve",
-    "dsir_importance_topk",
-    "pagerank_copurchase",
-    "stream_cdc_upsert_replay",
-    "stream_stream_join_replay",
-    "tfidf_top_terms",
-    "fuzzy_dup_parts",
-    # fingerprint twins of the §1 media pin
-    "audio_fingerprint_neardup",
-    "image_phash_neardup",
-    # §7 audit-pin batch + §2 non-bench consumers
-    "semantic_dedup_pairs",
-    "semantic_cosine_histogram",
-    "pq_adc_recall",
-    "sq8_reconstruction_error",
-    "lsh_precision_recall_audit",
-    "lsh_band_sweep_audit",
-    "containment_dup_pairs",
-    "embedding_srp_pairs",
-    "knn_label_disagreement",
-    "mutual_knn_pairs",
-    "ann_index_staleness_audit",
-    "rbo_rank_agreement",
-    "decontaminate_by_embedding",
-    "ivf_recall_curve",
-]
-
-_PRIORITY_R15 = [
-    # First 17 of the 48 remaining r9-era stale-evidence names, in
-    # their CORRECTNESS_r09 window order (= docs/sweep_sf1_r15tier
-    # .jsonl order, the committed refresh tier).
-    "dim_3way_join",
-    "replace_upsert_latest",
-    "changelog_op_column",
-    "flagship_enrich_sql",
-    "group_distinct_agg",
-    "cube_agg",
-    "anti_join_no_orders",
-    "string_funcs_parts",
-    "json_payload_roundtrip",
-    "full_outer_nation_counts",
-    "multitouch_attribution_daily",
-    "session_gap_sensitivity",
-    "neardup_source_matrix",
-    "dedup_funnel_by_source",
-    "langid_confusion_matrix",
-    "simhash_hamming_histogram",
-    "neardup_cluster_size_histogram",
-]
-
-_ROUND15_ADDITION_CAP = 15
-_NEW_R16: list[str] = [
-    # Round-15 additions land here the day each lands (oracle-verified
-    # locally at sf0.001/sf0.01 on landing), capped by
-    # _ROUND15_ADDITION_CAP; they lead the round-16 window ahead of
-    # the 31 remaining r9-era stale-evidence names.
-]
-
-_WINDOW_R15 = (*_NEW_R15, *_CHANGED_R15, *_PRIORITY_R15)[:50]
-
-assert len(_NEW_R15) + len(_CHANGED_R15) + len(_PRIORITY_R15) == 50
-assert all(n in _WINDOW_R15 for n in (*_NEW_R15, *_CHANGED_R15, *_PRIORITY_R15))
-assert len(_NEW_R16) <= _ROUND15_ADDITION_CAP, (
-    "round-15 additions exceed the per-round cap — raise deliberately"
-)
-assert len(_NEW_R16) == len(set(_NEW_R16)), "duplicate names queued in _NEW_R16"
-
-# Exported for tests/test_rotation.py's completeness check
-# (set(REGISTRY) ⊆ ever-driver-checked ∪ QUEUED — the invariant whose
-# violation orphaned the two round-8 names).
-QUEUED_FOR_DRIVER = (*_WINDOW_R15, *_NEW_R16)
+    Tiers 2 and 3 put the oldest evidence first: they sort by
+    ``(latest verdict round, position in that round's artifact)``.
+    """
+    latest: dict[str, tuple[int, int]] = {}
+    for rnd in sorted(verdicts):
+        for pos, name in enumerate(verdicts[rnd]):
+            latest[name] = (rnd, pos)
+    never = [n for n in names if n not in latest]
+    checked = sorted((n for n in names if n in latest), key=latest.__getitem__)
+    due = {n for n in checked if latest[n][0] < recheck.get(n, 0)}
+    return [*never, *(n for n in checked if n in due), *(n for n in checked if n not in due)]
 
 
 def _reorder() -> None:
-    missing = [n for n in _WINDOW_R15 if n not in REGISTRY]
-    if missing:
-        raise ValueError(f"window names not registered: {missing}")
-    if len(_WINDOW_R15) != len(set(_WINDOW_R15)):
-        raise ValueError("duplicate names in window")
-    no_oracle = [n for n in _WINDOW_R15 if REGISTRY[n].oracle is None]
-    if no_oracle:
-        raise ValueError(f"rows-only queries may not sit in the driver window: {no_oracle}")
-    rest_oracle = [n for n, s in REGISTRY.items() if n not in _WINDOW_R15 and s.oracle is not None]
-    rest_rows_only = [n for n, s in REGISTRY.items() if n not in _WINDOW_R15 and s.oracle is None]
-    ordered = {n: REGISTRY[n] for n in (*_WINDOW_R15, *rest_oracle, *rest_rows_only)}
+    # Only oracle-backed names may sit in the driver window; rows-only go last.
+    oracle = [n for n, s in REGISTRY.items() if s.oracle is not None]
+    rows_only = [n for n, s in REGISTRY.items() if s.oracle is None]
+    order = (*driver_window(oracle, load_verdicts(), _RECHECK), *rows_only)
+    ordered = {n: REGISTRY[n] for n in order}
     REGISTRY.clear()
     REGISTRY.update(ordered)
 
 
 _reorder()
 
-__all__ = ["REGISTRY", "QuerySpec", "queries_map", "oracle_sql_map", "QUEUED_FOR_DRIVER"]
+__all__ = ["REGISTRY", "QuerySpec", "queries_map", "oracle_sql_map", "WINDOW", "driver_window", "load_verdicts"]

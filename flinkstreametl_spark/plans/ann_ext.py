@@ -216,12 +216,7 @@ def ann_index_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r14 opt: per-vector self-norms precomputed once per side (see
     # embedding_neardup_pairs — same integers, bit-identical cosine).
-    # r15: broadcast the PANEL side (2 states x 5 queries x 8 clusters
-    # = 80 rows, parameter-sized at any corpus scale) — without the
-    # hint Catalyst's corpus-sized estimate for the windowed crossJoin
-    # made it build (broadcast) the members side and stream the panel
-    # through ~1 post-AQE partition, serializing the candidate scoring
-    # (see ml_ext.ivf_kmeans_recall_curve, same shape + evidence).
+    # panel is states×queries×clusters rows; must be the build side; Catalyst misestimates the windowed crossJoin
     cscore = (
         F.broadcast(ranks.withColumn("qq", S.self_norm_fp_col(F.col("q_emb"))))
         .join(
@@ -253,8 +248,7 @@ def ann_index_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cosine").desc(), "neighbor_id"
     )
     ivf_top = cand_np.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= _QK)
-    # r15: audit-tail broadcasts — both sides bounded by panel x K and
-    # the nprobe list (see ml_ext.ivf_recall_curve).
+    # audit tail: both sides are bounded by panel×K×|nprobes| rows; broadcast, never SortMergeJoin
     hits = (
         ivf_top.join(F.broadcast(exact), ["query_id", "neighbor_id"], "left_semi")
         .groupBy("index_state", "nprobe")
@@ -398,8 +392,7 @@ def mrl_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()  # truth and every width slice reuse it
     )
     full_top = topd.filter(F.col("dim") == _MRL_DIMS[-1]).select("query_id", "neighbor_id")
-    # r15: audit-tail broadcasts — full_top is panel x K rows, hits is
-    # |dims| rows (see ml_ext.ivf_recall_curve).
+    # audit tail: full_top is panel×K rows; broadcast, never SortMergeJoin
     hits = (
         topd.join(F.broadcast(full_top), ["query_id", "neighbor_id"], "left_semi")
         .groupBy("dim")

@@ -516,7 +516,7 @@ def int8_knn_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     hit = qtop.withColumnRenamed("neighbor_id", "q_neighbor")
     return (
-        # r15: audit-tail broadcast — hit is panel x K rows.
+        # audit tail: hit is panel×K rows; broadcast, never SortMergeJoin
         etop.join(
             F.broadcast(hit),
             (etop.query_id == hit.query_id) & (etop.neighbor_id == hit.q_neighbor),
@@ -732,13 +732,7 @@ def ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         S.self_norm_fp_col(F.col("embedding")).alias("cc"),
         "label",
     )
-    # r15: broadcast the PANEL side (5 queries x 10 labels, parameter-
-    # sized at any corpus scale). Catalyst's estimate for `ranks` is
-    # corpus-sized (a window over a crossJoin of filters), so it was
-    # building the CORPUS side of this join — the whole embedding table
-    # collected and broadcast — and streaming the 50-row panel through
-    # ~1 post-AQE partition, serializing the candidate scoring. See
-    # plans/r15/ivf_recall_curve_unpinned_{before,after}.txt.
+    # panel is queries×labels rows; must be the build side; Catalyst misestimates the windowed crossJoin
     cscore = (
         F.broadcast(ranks).join(c, "label")
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -764,11 +758,7 @@ def ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand_np = cscore.join(F.broadcast(np_df), F.col("prb") <= F.col("nprobe"))
     w = Window.partitionBy("nprobe", "query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
     ivf_top = cand_np.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= _QK)
-    # r15: the audit tail joins move <= |panel|*K rows — broadcast them
-    # (guide §3.1) instead of letting two aggregates SMJ via 4 tiny
-    # exchanges+sorts (pure per-job overhead at every scale: both sides
-    # are bounded by the query panel and the nprobe list, never the
-    # corpus).
+    # audit tail: both sides are bounded by panel×K×|nprobes| rows; broadcast, never SortMergeJoin
     hits = (
         ivf_top.join(F.broadcast(exact), ["query_id", "neighbor_id"], "left_semi")
         .groupBy("nprobe")
@@ -941,14 +931,7 @@ def ivf_kmeans_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cluster",
     )
     q_norm = ranks.withColumn("qq", S.self_norm_fp_col(F.col("q_emb")))
-    # r15: broadcast the PANEL side (5 queries x 8 clusters = 40 rows,
-    # parameter-sized at any corpus scale). Catalyst's estimate for
-    # q_norm is corpus-sized (window over a crossJoin of filters), so
-    # it was building the CORPUS side — every embedding + norm
-    # collected and broadcast — and streaming the 40-row panel through
-    # ~1 post-AQE partition: the 5x|corpus| cosine fold, the heavy
-    # stage of this query, ran near-serially. See
-    # plans/r15/ivf_kmeans_recall_curve_unpinned_{before,after}.txt.
+    # panel is queries×clusters rows; must be the build side; Catalyst misestimates the windowed crossJoin
     cscore = (
         F.broadcast(q_norm).join(members, "cluster")
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -984,8 +967,7 @@ def ivf_kmeans_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand_np = cscore.join(F.broadcast(np_df), F.col("prb") <= F.col("nprobe"))
     w = Window.partitionBy("nprobe", "query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
     ivf_top = cand_np.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= _QK)
-    # r15: audit-tail broadcasts — both sides bounded by panel x K and
-    # the nprobe list (see ivf_recall_curve).
+    # audit tail: both sides are bounded by panel×K×|nprobes| rows; broadcast, never SortMergeJoin
     hits = (
         ivf_top.join(F.broadcast(exact), ["query_id", "neighbor_id"], "left_semi")
         .groupBy("nprobe")
@@ -1315,7 +1297,7 @@ def pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_top = exact.withColumn("rk", F.row_number().over(we)).filter(F.col("rk") <= _QK)
 
     hits = (
-        # r15: audit-tail broadcast — exact_top is panel x K rows.
+        # audit tail: exact_top is panel×K rows; broadcast, never SortMergeJoin
         pq_top.join(
             F.broadcast(exact_top.select("query_id", "vec_id")),
             ["query_id", "vec_id"],

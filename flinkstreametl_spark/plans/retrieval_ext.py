@@ -1,8 +1,8 @@
 """[EXT] Sparse retrieval over the corpus: BM25 ranking and its
-composition with n-gram decontamination (VERDICT r7 item 1 / the
-_NEW_R8 queue). The reference repo has no retrieval operator — this is
-part of the LLM-training-data surface the brief adds on top of the
-reference's ETL core (alongside dedup, ANN, and the quality audits).
+composition with n-gram decontamination (VERDICT r7 item 1). The
+reference repo has no retrieval operator — this is part of the
+LLM-training-data surface the brief adds on top of the reference's ETL
+core (alongside dedup, ANN, and the quality audits).
 
 Exactness convention: BM25 is specified entirely in integer fixed
 point so the DuckDB oracle replays it bit-for-bit. With k1 = 1.2 and

@@ -381,21 +381,49 @@ def test_split_representativeness_single_scan_grain_windows(spark, sf_dir):
     assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 3, plan
 
 
+def _depth(line: str) -> int:
+    return len(line) - len(line.lstrip(" :+-"))
+
+
+def _broadcast_inputs(plan: str) -> list[list[str]]:
+    """Per BroadcastExchange, the plan lines below it that feed rows
+    into it: descendants, minus the inputs of any aggregate (an
+    aggregate's output is bounded by its keys, not by its input)."""
+    lines = plan.splitlines()
+    out = []
+    for i, line in enumerate(lines):
+        if not line.lstrip(" :+-").startswith("BroadcastExchange"):
+            continue
+        fed, folded_at = [], None
+        for below in lines[i + 1 :]:
+            depth = _depth(below)
+            if depth <= _depth(line):
+                break
+            if folded_at is not None and depth > folded_at:
+                continue
+            folded_at = depth if "Aggregate" in below.lstrip(" :+-").split("(")[0] else None
+            fed.append(below)
+        out.append(fed)
+    return out
+
+
 def test_ivf_panel_is_broadcast_build_side(spark, sf_dir):
     """ann_ivf_topk (operators/similarity.ivf_topk): the probe panel —
     n_queries x nprobe rows — must be the BROADCAST side of the
     candidate join, with the corpus embedding scan streaming. Catalyst
     estimates the windowed-crossJoin panel as corpus-sized, so without
-    the r15 hint it built (collected + broadcast) the corpus side and
-    streamed the panel through ~1 partition — a serial scoring stage
-    locally and an impossible corpus broadcast at scale."""
+    the broadcast hint it builds (collects + broadcasts) the corpus.
+    Invariant: no BroadcastExchange is fed by an embeddings scan other
+    than the query-panel scan (vec_id < n_queries); the centroid scan
+    is folded by its aggregate first."""
     plan = _physical(spark, "ann_ivf_topk", sf_dir)
     assert "SortMergeJoin" not in plan, plan
-    m = re.search(r"BroadcastHashJoin \[label[^\]]*\].*?Build(Left|Right)", plan)
-    assert m, plan
-    side = m.group(1)
-    # the panel is written as the left side in ivf_topk
-    assert side == "Left", plan
+    inputs = _broadcast_inputs(plan)
+    assert inputs, plan
+    for fed in inputs:
+        for line in fed:
+            if "embeddings.parquet" in line:
+                assert "LessThan(vec_id," in line, ("corpus embeddings scan under a BroadcastExchange", plan)
 
 
 def test_recall_audit_tails_have_no_smj(spark, sf_dir):
