@@ -3,12 +3,13 @@
 The reference pipeline is: raw JSON string -> filter(isDdl=false ∧
 table=t_meeting_info ∧ type=INSERT) -> flatten data[] to CSV -> positional
 split to Tuple5 (``utils/JsonFilter.java:14-54``, wired
-``Main.java:67-86``). We express the same semantics declaratively:
-``from_json`` against an explicit envelope schema, a conjunctive filter,
-``explode`` of the data array, and a by-name typed projection — letting
-Catalyst push the filter before the payload projection (the reference
-hand-ordered this, ``Main.java:68-86``; Catalyst's PushDownPredicates
-does it automatically).
+``Main.java:67-86``). ``ingest_meeting_stream`` expresses the same
+semantics declaratively with one ``from_json`` per envelope, against
+CANAL_ENVELOPE_SCHEMA trimmed to the fields it reads, and with the F1
+predicate inside the generator: ``explode(when(F1, data))``. A Filter
+on the parsed fields would instead be pushed under the parse by
+Catalyst's PushDownPredicates, which re-parses the envelope once per
+field the predicate references.
 
 All operators work identically on batch and streaming DataFrames — the
 plan is the same; only the source differs.
@@ -18,10 +19,26 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from flinkstreametl_spark.schemas import CANAL_ENVELOPE_SCHEMA
 
 TARGET_TABLE = "t_meeting_info"  # JsonFilter.java:15
+
+# The envelope fields ingest_meeting_stream reads: the F1 fields, the
+# changelog order, and the data[] columns at the reference's CSV
+# ordinals {0,1,7,13,14} (JsonFilter.java:47-54).
+_INGEST_ROW = CANAL_ENVELOPE_SCHEMA["data"].dataType.elementType
+_INGEST_SCHEMA = T.StructType(
+    [T.StructField("data", T.ArrayType(T.StructType(
+        [_INGEST_ROW[c] for c in ("id", "meeting_code", "address_id", "mstart_date", "mend_date")]
+    )))]
+    + [CANAL_ENVELOPE_SCHEMA[c] for c in ("es", "ts", "isDdl", "table", "type")]
+)
+
+
+def _from_json(value_col: str, schema: T.StructType) -> Column:
+    return F.from_json(F.col(value_col).cast("string"), schema)
 
 
 def parse_envelope(raw: DataFrame, value_col: str = "value") -> DataFrame:
@@ -31,9 +48,7 @@ def parse_envelope(raw: DataFrame, value_col: str = "value") -> DataFrame:
     (``JsonFilter.java:24,30`` with Feature.OrderedField) with
     ``from_json`` against CANAL_ENVELOPE_SCHEMA — by-name, type-safe.
     """
-    return raw.select(
-        F.from_json(F.col(value_col).cast("string"), CANAL_ENVELOPE_SCHEMA).alias("env")
-    ).select("env.*")
+    return raw.select(_from_json(value_col, CANAL_ENVELOPE_SCHEMA).alias("env")).select("env.*")
 
 
 def cdc_event_filter(types: tuple[str, ...] = ("INSERT",), table: str = TARGET_TABLE) -> Column:
@@ -44,43 +59,6 @@ def cdc_event_filter(types: tuple[str, ...] = ("INSERT",), table: str = TARGET_T
     both available.
     """
     return (~F.col("isDdl")) & (F.col("table") == table) & F.col("type").isin(*types)
-
-
-def flatten_data(env: DataFrame) -> DataFrame:
-    """F2 — flatten the ``data`` row-array, one output row per changed row.
-
-    The reference concatenates each row-object's values into a CSV string
-    (``JsonFilter.java:28-45``) purely to move them between operators; the
-    string round-trip is an implementation artifact, not a semantic — we
-    explode the array and keep named struct fields.
-    Envelope metadata (es/ts/type) is carried for changelog ordering.
-    """
-    return env.select(
-        F.explode("data").alias("row"),
-        F.col("es").alias("_es"),
-        F.col("ts").alias("_ts"),
-        F.col("type").alias("_op"),
-    )
-
-
-def project_meeting_info(flat: DataFrame) -> DataFrame:
-    """F3 — typed projection to the stream-table schema.
-
-    The reference projects CSV ordinals {0,1,7,13,14} with string->int
-    casts (``JsonFilter.java:47-54``); we select the same five columns by
-    NAME with explicit casts (ordinal 0=id, 1=meeting_code, 7=address_id,
-    13=mstart_date, 14=mend_date per README.md:668-678).
-    """
-    return flat.select(
-        F.col("row.id").cast("int").alias("meeting_id"),
-        F.col("row.meeting_code").alias("meeting_code"),
-        F.col("row.address_id").cast("int").alias("address_id"),
-        F.col("row.mstart_date").alias("mstart_date"),
-        F.col("row.mend_date").alias("mend_date"),
-        F.col("_es"),
-        F.col("_ts"),
-        F.col("_op"),
-    )
 
 
 def before_image(env: DataFrame) -> DataFrame:
@@ -122,9 +100,32 @@ def with_proctime(df: DataFrame) -> DataFrame:
 
 def ingest_meeting_stream(raw: DataFrame, *, types: tuple[str, ...] = ("INSERT",)) -> DataFrame:
     """The full reference ingest chain (Main.java:67-86) as one plan:
-    parse -> filter -> flatten -> typed projection."""
-    env = parse_envelope(raw)
-    return project_meeting_info(flatten_data(env.filter(cdc_event_filter(types=types))))
+    parse -> F1 filter -> flatten -> typed projection.
+
+    F2: the reference concatenates each ``data`` row-object into a CSV
+    string (``JsonFilter.java:28-45``) only to move it between
+    operators; we explode the array, gated by F1, so a rejected event
+    yields no rows. F3: the reference's CSV ordinals {0,1,7,13,14} with
+    string->int casts (``JsonFilter.java:47-54``) are selected by NAME
+    (README.md:668-678). es/ts/type are carried as ``_es``/``_ts``/
+    ``_op`` for changelog ordering."""
+    env = raw.select(_from_json("value", _INGEST_SCHEMA).alias("env")).select("env.*")
+    flat = env.select(
+        F.explode(F.when(cdc_event_filter(types=types), F.col("data"))).alias("row"),
+        F.col("es").alias("_es"),
+        F.col("ts").alias("_ts"),
+        F.col("type").alias("_op"),
+    )
+    return flat.select(
+        F.col("row.id").cast("int").alias("meeting_id"),
+        F.col("row.meeting_code").alias("meeting_code"),
+        F.col("row.address_id").cast("int").alias("address_id"),
+        F.col("row.mstart_date").alias("mstart_date"),
+        F.col("row.mend_date").alias("mend_date"),
+        F.col("_es"),
+        F.col("_ts"),
+        F.col("_op"),
+    )
 
 
 def latest_by_key(df: DataFrame, key_cols: list[str], order_cols: list[str]) -> DataFrame:
@@ -173,7 +174,7 @@ def split_dead_letters(raw: DataFrame, value_col: str = "value") -> tuple[DataFr
     the parse once."""
     parsed = raw.select(
         F.col(value_col).cast("string").alias("_raw"),
-        F.from_json(F.col(value_col).cast("string"), CANAL_ENVELOPE_SCHEMA).alias("env"),
+        _from_json(value_col, CANAL_ENVELOPE_SCHEMA).alias("env"),
     )
     # PERMISSIVE from_json returns an all-NULL struct (not NULL) for
     # malformed input, so structural validity is checked on a required

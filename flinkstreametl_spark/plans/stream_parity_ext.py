@@ -726,10 +726,11 @@ def stream_cdc_upsert_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     retract law of changelog_op_column; everything else upserts)
     arrives as 3 event-time-ordered chunks where each chunk k>1
     REDELIVERS chunk k-1's 6-hour tail (at-least-once upstream), and
-    foreachBatch drives the PRODUCTION KeyedParquetUpsertSink —
-    in-batch last-write-wins dedup, tombstone withholding, anti-join
-    merge, atomic directory swap (streaming/sinks.py, the Spark
-    re-expression of SinkToMySQL.java:31-65's REPLACE INTO). The final
+    foreachBatch drives the PRODUCTION KeyedParquetUpsertSink — one
+    newest-row-per-key pass over the stored table ∪ the batch (batch
+    rows first, winning tombstones dropped), atomic directory swap
+    (streaming/sinks.py, the Spark re-expression of
+    SinkToMySQL.java:31-65's REPLACE INTO). The final
     keyed table must hash-match the batch latest-row-per-key oracle
     with tombstoned keys absent — every column exact, so a redelivered
     row regressing a key, a tombstone leak, or a lost upsert all break

@@ -1,10 +1,12 @@
 """The reference job, end-to-end, as Structured Streaming
 (Main.java:44-150 reshaped; SURVEY.md §3).
 
-    CDC source (file replay / Kafka) ──▶ parse_envelope ──▶ F1 filter
-        ──▶ flatten data[] ──▶ typed projection (meeting_info)
+    CDC source (file replay / Kafka)
+        ──▶ ingest_meeting_stream: one from_json of the fields read,
+            explode(when(F1, data[])), typed projection (meeting_info)
         ──▶ LEFT JOIN broadcast dim (meeting_address, J1 over J2)
-        ──▶ foreachBatch upsert, REPLACE-INTO semantics (S3)
+        ──▶ foreachBatch upsert, REPLACE-INTO semantics (S3): newest
+            row per key over stored ∪ batch, one shuffle
 
 The same builder runs in batch (oracle-checkable, golden tests) and
 streaming (availableNow drains in tests; continuous in production) —

@@ -7,13 +7,13 @@ set-oriented writes:
 
 - exactly-once = checkpointed offsets + idempotent upsert per batch
   (T1: ``Main.java:49-51`` checkpoint/EXACTLY_ONCE);
-- REPLACE INTO semantics (``SinkToMySQL.java:35``) = last-write-wins
-  dedup inside the batch, then key-merge into the target (SURVEY.md §7
-  hard parts (2)(3)).
+- REPLACE INTO semantics (``SinkToMySQL.java:35``) = the newest row per
+  key over the stored table and the batch, batch rows first (SURVEY.md
+  §7 hard parts (2)(3)).
 
 The parquet-backed keyed table below is the container-friendly stand-in
-for a JDBC/Delta target: the merge pattern (anti-join old ∪ new) is the
-same one a real MERGE INTO executes. `jdbc_upsert_writer` shows the real
+for a JDBC/Delta target: one union and one window on the key leave
+the table a real MERGE INTO would. `jdbc_upsert_writer` shows the real
 JDBC shape, gated since the container has no database.
 """
 
@@ -61,15 +61,17 @@ class _SwappedParquetTable:
 class KeyedParquetUpsertSink(_SwappedParquetTable):
     """foreachBatch target with REPLACE-INTO semantics on `key_cols`.
 
-    Each batch: (1) last-write-wins dedup within the batch by
-    `order_cols` — exactly-once under micro-batch retry since replays
-    produce the same post-dedup set; (2) merge = existing rows
-    anti-joined on new keys, union new rows, atomic directory swap.
+    Each batch is one pass: the stored rows (``_new``=0) and the batch
+    rows (``_new``=1) are unioned, the newest row per key by
+    ``(_new, *order_cols)`` wins, so a batch row always replaces the
+    stored one, and a winning DELETE tombstone is dropped; then an
+    atomic directory swap. Exactly-once under micro-batch retry: a
+    replayed batch wins over its own first delivery with the same rows.
 
     Scale note: on a cluster this is MERGE INTO on a keyed table
-    (Delta/Iceberg); the anti-join+union here is the same logical plan
-    without the transaction log. The swap is atomic at directory level
-    (write tmp, rename).
+    (Delta/Iceberg). Here it costs one shuffle on the key, and the
+    micro-batch and the stored table are each read once. The swap is
+    atomic at directory level (write tmp, rename).
     """
 
     def __init__(
@@ -89,23 +91,17 @@ class KeyedParquetUpsertSink(_SwappedParquetTable):
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """Upsert + tombstone merge (SURVEY.md §7 hard part (2)): the
-        newest record per key decides — a DELETE tombstone removes the
-        key (its row is withheld from the union but its key still
-        anti-joins away the stored row); anything else upserts. Retry-
-        idempotent: replays re-derive the same post-dedup decisions."""
-        spark = batch_df.sparkSession
-        fresh = latest_by_key(batch_df, self.key_cols, self.order_cols)
-        if self.op_col in batch_df.columns:
-            upserts = fresh.filter(F.col(self.op_col) != self.delete_op)
-        else:
-            upserts = fresh
-        existing = self.read(spark)
+        newest record per key decides. A DELETE removes the key, and so
+        does a NULL op (``op != delete_op`` is not true for it);
+        anything else upserts."""
+        rows = batch_df.withColumn("_new", F.lit(1))
+        existing = self.read(batch_df.sparkSession)
         if existing is not None:
-            keep = existing.join(fresh.select(*self.key_cols), self.key_cols, "left_anti")
-            merged = keep.unionByName(upserts)
-        else:
-            merged = upserts
-        self._commit(merged, batch_id)
+            rows = existing.withColumn("_new", F.lit(0)).unionByName(rows)
+        merged = latest_by_key(rows, self.key_cols, ["_new", *self.order_cols])
+        if self.op_col in batch_df.columns:
+            merged = merged.filter((F.col("_new") == 0) | (F.col(self.op_col) != self.delete_op))
+        self._commit(merged.drop("_new"), batch_id)
 
 
 def jdbc_upsert_writer(url: str, table: str, key_cols: list[str], order_cols: list[str], properties: dict | None = None):

@@ -122,6 +122,43 @@ def test_malformed_envelope_lines_dropped(spark, golden_path, tmp_path):
     assert sorted(map(tuple, got)) == sorted(map(tuple, clean))
 
 
+def test_ingest_ignores_unread_envelope_fields(spark):
+    """The ingest reads only the fields it uses: wrong-typed unread
+    fields (sqlType values as strings, `old` as a scalar, mysqlType as
+    an array) change nothing, and an envelope with no `data` yields no
+    rows. Expected rows are the output of the full-schema parse, whose
+    partial results null the bad field and keep the rest."""
+    import json
+
+    def envelope(i, op="INSERT", **fields):
+        row = {"id": str(i), "meeting_code": f"M{i}", "address_id": str(i % 3), "msite": "x",
+               "mstart_date": "2020-01-01 09:00:00", "mend_date": "2020-01-01 10:00:00"}
+        env = {"data": [row], "database": "meeting", "es": 1000 + i, "id": i, "isDdl": False,
+               "mysqlType": {"id": "int"}, "old": None, "pkNames": ["id"], "sql": "",
+               "sqlType": {"id": 4}, "table": "t_meeting_info", "ts": 2000 + i, "type": op}
+        env.update(fields)
+        return json.dumps({k: v for k, v in env.items() if v is not ...})
+
+    lines = [
+        envelope(1),
+        envelope(2, sqlType={"id": "int", "meeting_code": "varchar"}),
+        envelope(3, "UPDATE", old="scalar"),
+        envelope(4, mysqlType=["int", "varchar"]),
+        envelope(5, data=...),  # ... drops the field
+        envelope(6, sqlType={"id": "int"}, old=7, mysqlType=[1]),
+    ]
+    raw = spark.createDataFrame([(line,) for line in lines], "value STRING")
+    got = sorted(map(tuple, ingest_meeting_stream(raw, types=("INSERT", "UPDATE")).collect()))
+    start, end = "2020-01-01 09:00:00", "2020-01-01 10:00:00"
+    assert got == [
+        (1, "M1", 1, start, end, 1001, 2001, "INSERT"),
+        (2, "M2", 2, start, end, 1002, 2002, "INSERT"),
+        (3, "M3", 0, start, end, 1003, 2003, "UPDATE"),
+        (4, "M4", 1, start, end, 1004, 2004, "INSERT"),
+        (6, "M6", 0, start, end, 1006, 2006, "INSERT"),
+    ]
+
+
 def test_jdbc_pushdown_option_wiring():
     """S2 wiring without a database (CreateJDBCInputFormat.java:22-35
     parity): the pushed-down dim-join SQL plus reader options; the

@@ -440,3 +440,63 @@ def test_recall_audit_tails_have_no_smj(spark, sf_dir):
     ):
         plan = _physical(spark, name, sf_dir)
         assert "SortMergeJoin" not in plan, (name, plan)
+
+
+def test_cdc_ingest_parses_each_envelope_once(spark, tmp_path):
+    """ingest_meeting_stream: one from_json per envelope, in a batch
+    plan and in a streaming micro-batch. A Filter on the parsed fields
+    is pushed under the parse, and each pushed field reference becomes
+    its own from_json (six in all)."""
+    from flinkstreametl_spark.operators.cdc import ingest_meeting_stream
+    from flinkstreametl_spark.sources.cdc import read_cdc_file_batch, read_cdc_file_stream, write_golden_jsonl
+
+    src = tmp_path / "in"
+    src.mkdir()
+    write_golden_jsonl(str(src / "canal.jsonl"))
+    batch = ingest_meeting_stream(read_cdc_file_batch(spark, str(src)))
+    plan = batch._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("from_json(") == 1, plan
+    query = (
+        ingest_meeting_stream(read_cdc_file_stream(spark, str(src)))
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        query.processAllAvailable()
+        plan = query._jsq.explainInternal(False)
+    finally:
+        query.stop()
+    assert plan.count("from_json(") == 1, plan
+
+
+def test_upsert_merge_reads_each_input_once(spark, tmp_path):
+    """KeyedParquetUpsertSink merging a micro-batch into a stored table:
+    one scan of the micro-batch (its upstream parse and enrich run
+    once), one scan of the stored table, one Exchange."""
+    from flinkstreametl_spark.sources.cdc import write_golden_jsonl
+    from flinkstreametl_spark.streaming.pipeline import run_cdc_stream
+    from flinkstreametl_spark.streaming.sinks import KeyedParquetUpsertSink
+
+    plans = []
+
+    class Recorded(KeyedParquetUpsertSink):
+        def _commit(self, merged, batch_id):
+            plans.append(merged._jdf.queryExecution().executedPlan().toString())
+            super()._commit(merged, batch_id)
+
+    src = tmp_path / "in"
+    src.mkdir()
+    sink = Recorded(str(tmp_path / "t"), ["meeting_id"], ["_es", "_ts"])
+    for name in ("a.jsonl", "b.jsonl"):  # b's micro-batch merges into the table a's made
+        write_golden_jsonl(str(src / name))
+        query = run_cdc_stream(spark, str(src), sink, str(tmp_path / "ckpt"), available_now=False)
+        try:
+            query.processAllAvailable()
+        finally:
+            query.stop()
+    assert len(plans) == 2, plans
+    plan = plans[-1]
+    assert plan.count("Scan ExistingRDD") == 1, plan
+    assert plan.count("FileScan parquet") == 1, plan
+    assert plan.count("Exchange") == 1, plan
