@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flinkstreametl_spark.streaming.versioned import replace_dir
+
 
 def write_partitioned(
     df: DataFrame,
@@ -63,12 +65,12 @@ def compact_partitioned(
     (the maintenance job every long-lived ingest needs: micro-batch
     appends accrete small files; compaction restores scan efficiency).
     Reads the whole layout and rewrites it — run per-partition-predicate
-    in production to bound the working set."""
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + ".compact-tmp"
-    write_partitioned(df, tmp, partition_cols, files_per_partition=files_per_partition)
-    # atomic-ish local swap; object stores would write to a new prefix
-    import shutil
-
-    shutil.rmtree(path)
-    shutil.move(tmp, path)
+    in production to bound the working set. The rewrite is swapped in by
+    ``streaming/versioned.replace_dir``, whose crash contract holds."""
+    path = path.rstrip("/")
+    replace_dir(
+        path,
+        lambda tmp: write_partitioned(
+            spark.read.parquet(path), tmp, partition_cols, files_per_partition=files_per_partition
+        ),
+    )

@@ -34,6 +34,7 @@ Crash contract — write order is accepted -> bits -> history:
   replayed batch re-emit the same accepted rows (at-least-once,
   dedupable downstream by fp — the streaming/sinks.py upsert story);
   a crash after it makes the replay a no-op.
+* compaction swaps and state reads follow ``streaming/versioned.py``.
 
 Reference anchor: the reference's pipeline has no dedup at all
 (Main.java enrich-and-upsert); this module is part of the
@@ -50,10 +51,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkstreametl_spark.operators import text as X
-from flinkstreametl_spark.streaming.neardup_ingest import (
-    _compact_parquet,
-    _recover_compaction,
-)
+from flinkstreametl_spark.streaming.neardup_ingest import compact_parquet
+from flinkstreametl_spark.streaming.versioned import read_or_empty, start_foreach_batch
 
 BITS_SUBDIR = "bits"
 HISTORY_SUBDIR = "history"
@@ -61,9 +60,8 @@ ACCEPTED_SUBDIR = "accepted"
 
 #: Compact the probed state every N micro-batches (the neardup_ingest
 #: rationale: append-only state costs one file set per batch, and at a
-#: deep horizon the per-batch cost is FILE COUNT, not rows). Both
-#: rewrites use the crash-recoverable ._old swap shared with the
-#: near-dup loop, run AFTER the batch's commit point.
+#: deep horizon the per-batch cost is FILE COUNT, not rows), AFTER the
+#: batch's commit point.
 DEFAULT_COMPACT_EVERY = 10
 
 #: Filter width in bits. 2^20 bits = 20 bits/key at the sf1 corpus
@@ -99,22 +97,13 @@ def bloom_positions(fps: DataFrame, m: int = BLOOM_M) -> DataFrame:
     )
 
 
-def _load_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    # Pre-batch recovery: a crash mid-compaction must restore, never
-    # silently read as empty (neardup_ingest._recover_compaction).
-    _recover_compaction(path)
-    if os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path)):
-        return spark.read.schema(schema).parquet(path)
-    return spark.createDataFrame([], schema)
-
-
 def compact_state(spark: SparkSession, state_dir: str, *, n_files: int = 8) -> None:
     """Compact the two probed state tables: bits (<= BLOOM_M rows —
     one file is plenty) and the history fingerprints (clustered on fp
     so the anti-join's hash layout survives the rewrite). The accepted
     output is a SINK — downstream's file count, not this loop's."""
-    _compact_parquet(spark, os.path.join(state_dir, BITS_SUBDIR), "b LONG", 1)
-    _compact_parquet(
+    compact_parquet(spark, os.path.join(state_dir, BITS_SUBDIR), "b LONG", 1)
+    compact_parquet(
         spark, os.path.join(state_dir, HISTORY_SUBDIR), "fp STRING", n_files, "fp"
     )
 
@@ -145,8 +134,8 @@ def process_batch(
     history_path = os.path.join(state_dir, HISTORY_SUBDIR)
     accepted_path = os.path.join(state_dir, ACCEPTED_SUBDIR)
 
-    bits = _load_or_empty(spark, bits_path, "b LONG")
-    history = _load_or_empty(spark, history_path, "fp STRING")
+    bits = read_or_empty(spark, bits_path, "b LONG")
+    history = read_or_empty(spark, history_path, "fp STRING")
 
     flagged = (
         batch.withColumn("h1", _h("a", F.col("fp")))
@@ -207,9 +196,9 @@ def run_bloom_stream(
         .option("maxFilesPerTrigger", 1)
         .json(source_path)
     )
-    writer = stream.writeStream.foreachBatch(
-        lambda df, bid: process_batch(df.sparkSession, df, state_dir, batch_id=bid)
-    ).option("checkpointLocation", os.path.join(state_dir, "_checkpoint"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(
+        stream,
+        lambda df, bid: process_batch(df.sparkSession, df, state_dir, batch_id=bid),
+        os.path.join(state_dir, "_checkpoint"),
+        available_now=available_now,
+    )

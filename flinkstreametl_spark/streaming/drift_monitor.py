@@ -33,6 +33,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flinkstreametl_spark.streaming.versioned import start_foreach_batch
+
 BASELINE_SUBDIR = "baseline"
 LOG_SUBDIR = "drift_log"
 
@@ -131,9 +133,9 @@ def run_drift_monitor(
         .option("maxFilesPerTrigger", 1)
         .json(source_path)
     )
-    writer = stream.writeStream.foreachBatch(
-        lambda df, bid: process_batch(df.sparkSession, df, state_dir, batch_id=bid)
-    ).option("checkpointLocation", os.path.join(state_dir, "_checkpoint"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(
+        stream,
+        lambda df, bid: process_batch(df.sparkSession, df, state_dir, batch_id=bid),
+        os.path.join(state_dir, "_checkpoint"),
+        available_now=available_now,
+    )

@@ -21,33 +21,18 @@ of micro-batches is bit-identical to the batch sketch over the union
 of those batches (``tests/test_hll_ingest.py`` pins register-level
 equality, not approximate agreement).
 
-Crash contract — registers are the single source of truth and flip
-atomically:
-
-* The merged register table is written as a complete new ``v{n+1}``
-  directory, then a one-line CURRENT pointer flips via ``os.replace``
-  (``streaming/versioned.py``). A crash before the flip leaves v{n}
-  fully live; the replayed batch re-merges to the identical v{n+1}
-  (idempotence) and flips. There is no torn-state window.
-* The per-batch estimate TIMELINE (one row per group per batch — the
-  growth curve dashboards plot) is written AFTER the flip as an
-  OVERWRITE of its own ``batch_id=N`` partition directory: a crash
-  between flip and write loses only that batch's timeline rows, and
-  an at-least-once replay of the batch overwrites the same partition
-  with the identical rows — duplicates are impossible in the raw
-  files themselves, so direct readers of the timeline directory need
-  no keyed dedup (ADVICE r9: the previous append-mode write deferred
-  that to a downstream MERGE nothing performed).
-
-SINGLE-WRITER CONTRACT: the versioned-state ops here are plain local/
-DFS filesystem calls with no writer lock — correctness relies on
-Structured Streaming's ``foreachBatch`` guarantee that at most one
-maintenance job owns a ``state_dir`` at a time (one query, one
-checkpoint). Pointing two concurrent jobs at the same ``state_dir``
-can lose an update between the CURRENT read and the flip. Fan-in
-belongs UPSTREAM (union the sources into one stream); registers are
-max-mergeable, so a later offline merge of two state dirs is also
-safe — concurrent in-place maintenance is the only unsupported shape.
+Crash contract (``streaming/versioned.py``): the merged register table
+is a complete new ``v{n+1}`` directory behind a CURRENT pointer flip; a
+replayed batch re-merges to the identical ``v{n+1}`` (idempotence) and
+flips. The per-batch estimate TIMELINE (one row per group per batch —
+the growth curve dashboards plot) is written AFTER the flip as an
+OVERWRITE of its own ``batch_id=N`` partition directory: a crash
+between flip and write loses only that batch's timeline rows, and a
+replay overwrites the same partition with the identical rows, so direct
+readers of the timeline directory need no keyed dedup. Two jobs must
+not share a ``state_dir``; fan-in belongs UPSTREAM (union the sources
+into one stream), and since registers are max-mergeable, a later
+offline merge of two state dirs is also safe.
 """
 
 from __future__ import annotations
@@ -66,6 +51,7 @@ from flinkstreametl_spark.streaming.versioned import (
     current_version,
     flip_current,
     gc_orphans,
+    start_foreach_batch,
     version_dir,
 )
 
@@ -152,9 +138,9 @@ def run_hll_stream(
         .option("maxFilesPerTrigger", 1)
         .json(source_path)
     )
-    writer = stream.writeStream.foreachBatch(
-        lambda df, bid: process_batch(df.sparkSession, df, state_dir, batch_id=bid)
-    ).option("checkpointLocation", os.path.join(state_dir, "_checkpoint"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(
+        stream,
+        lambda df, bid: process_batch(df.sparkSession, df, state_dir, batch_id=bid),
+        os.path.join(state_dir, "_checkpoint"),
+        available_now=available_now,
+    )

@@ -50,6 +50,7 @@ from flinkstreametl_spark.streaming.versioned import (
     current_version as _current_version,
     flip_current as _flip_current,
     gc_orphans as _gc_orphans,
+    start_foreach_batch,
     version_dir as _version_dir,
 )
 
@@ -226,11 +227,9 @@ def run_index_stream(
         .option("maxFilesPerTrigger", 1)
         .json(source_path)
     )
-    writer = stream.writeStream.foreachBatch(
-        lambda df, bid: process_batch(
-            df.sparkSession, df, index_dir, refit_growth=refit_growth
-        )
-    ).option("checkpointLocation", os.path.join(index_dir, "_checkpoint"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(
+        stream,
+        lambda df, bid: process_batch(df.sparkSession, df, index_dir, refit_growth=refit_growth),
+        os.path.join(index_dir, "_checkpoint"),
+        available_now=available_now,
+    )

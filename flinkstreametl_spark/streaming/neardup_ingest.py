@@ -16,7 +16,8 @@ This is the production deployment of the incremental dedup operator
        redelivery dedup.
 
 State lives in STORAGE, not executor memory: the index is a table, the
-checkpoint tracks source offsets, and a restart resumes from both. Per
+checkpoint tracks source offsets, and a restart resumes from both (crash
+contract: ``streaming/versioned.py``). Per
 batch the work is proportional to the batch (measured:
 docs/INCREMENTAL.md), which is the only shape that survives a corpus
 that never stops growing.
@@ -29,11 +30,16 @@ that read is pruned to the candidate doc_ids by the join itself.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
 from flinkstreametl_spark.operators.dedup import incremental_lsh_pairs, lsh_band_keys
+from flinkstreametl_spark.streaming.versioned import (
+    read_or_empty,
+    recover,
+    replace_dir,
+    start_foreach_batch,
+)
 
 PAIRS_SUBDIR = "pairs"
 INDEX_SUBDIR = "band_index"
@@ -47,77 +53,19 @@ DOCS_SUBDIR = "docs"
 DEFAULT_COMPACT_EVERY = 10
 
 
-def _recover_compaction(path: str) -> None:
-    """Repair a compaction swap interrupted by a crash (ADVICE r5).
-
-    The swap in ``_compact_parquet`` is rename(path, old) then
-    rename(tmp, path); a crash between the two leaves ``path`` missing
-    with the ORIGINAL intact at ``path + '._old'``. Without this step
-    ``_load_or_empty`` would silently treat the missing dir as empty —
-    the dedup index resets, duplicate pairs re-emit, and the document
-    store is lost. Recovery is deterministic:
-
-    - ``._old`` present, ``path`` missing  -> crash mid-swap: restore
-      the original (content-equal to the compacted ``._compact``;
-      restoring the known-complete original is the conservative pick).
-    - ``._old`` present, ``path`` present AND carrying its ``_SUCCESS``
-      marker -> crash after a verified swap: only housekeeping remains.
-    - ``._old`` present, ``path`` present WITHOUT ``_SUCCESS`` -> the
-      swap landed an unverified write (the RuntimeError path below, or
-      a crash straddling the renames): discard it and restore the
-      original — ``._old`` is the only verified copy and must never be
-      deleted in favor of an unverified directory.
-    - a stale ``._compact`` is always discarded (the next compaction
-      rewrites it from live state).
-    """
-    tmp, old = path + "._compact", path + "._old"
-    if os.path.isdir(old):
-        if os.path.isdir(path) and os.path.exists(os.path.join(path, "_SUCCESS")):
-            shutil.rmtree(old)
-        else:
-            if os.path.isdir(path):
-                shutil.rmtree(path)
-            os.rename(old, path)
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
-
-
-def _compact_parquet(
+def compact_parquet(
     spark: SparkSession, path: str, schema, n_files: int, cluster_col: str | None = None
 ) -> None:
     """Rewrite an append-only parquet directory into ``n_files`` files
     (hash-clustered on ``cluster_col`` when given, so the candidate
-    join's band pruning keeps working on the compacted layout).
-
-    Swap is rename-based and CRASH-RECOVERABLE: the original directory
-    survives at ``path + '._old'`` until the new one is verified in
-    place (its ``_SUCCESS`` marker — written by the committer before
-    the swap began — is checked after the final rename), and every
-    state load runs ``_recover_compaction`` first, so a crash at any
-    point costs only deferred housekeeping, never state. Correct for
-    the single-writer foreachBatch loop this module runs (Structured
-    Streaming serializes batches); a multi-writer deployment at
-    cluster scale would put the state in a transactional table format
-    instead and compact via its rewrite API — the read/compute shape
-    here is unchanged by that swap."""
-    _recover_compaction(path)
+    join's band pruning keeps working on the compacted layout), swapped
+    in by ``versioned.replace_dir``."""
+    recover(path)
     if not os.path.isdir(path):
         return
     df = spark.read.schema(schema).parquet(path)
-    if cluster_col is not None:
-        df = df.repartition(n_files, cluster_col)
-    else:
-        df = df.repartition(n_files)
-    tmp, old = path + "._compact", path + "._old"
-    df.write.mode("overwrite").parquet(tmp)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        # The committed write lost its marker — keep ._old (recovery
-        # restores it on the next load) rather than deleting the only
-        # known-good copy.
-        raise RuntimeError(f"compacted state at {path} missing _SUCCESS; original kept at ._old")
-    shutil.rmtree(old)
+    cols = [cluster_col] if cluster_col is not None else []
+    replace_dir(path, lambda tmp: df.repartition(n_files, *cols).write.parquet(tmp))
 
 
 def compact_state(spark: SparkSession, state_dir: str, *, n_files: int = 16) -> None:
@@ -125,14 +73,14 @@ def compact_state(spark: SparkSession, state_dir: str, *, n_files: int = 16) -> 
     store (clustered by doc_id). Pairs are a SINK, not probed state —
     their file count never enters the per-batch critical path, so they
     are left to the downstream consumer."""
-    _compact_parquet(
+    compact_parquet(
         spark,
         os.path.join(state_dir, INDEX_SUBDIR),
         _empty_index(spark).schema,
         n_files,
         "band",
     )
-    _compact_parquet(
+    compact_parquet(
         spark,
         os.path.join(state_dir, DOCS_SUBDIR),
         "doc_id LONG, text STRING",
@@ -145,15 +93,6 @@ def _empty_index(spark: SparkSession) -> DataFrame:
     return lsh_band_keys(
         spark.createDataFrame([], "doc_id LONG, text STRING")
     )
-
-
-def _load_or_empty(spark: SparkSession, path: str, empty: DataFrame) -> DataFrame:
-    # Pre-batch recovery: a crash mid-compaction must restore, never
-    # silently read as empty (see _recover_compaction).
-    _recover_compaction(path)
-    if os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path)):
-        return spark.read.schema(empty.schema).parquet(path)
-    return empty
 
 
 def process_batch(
@@ -189,10 +128,10 @@ def process_batch(
     docs_path = os.path.join(state_dir, DOCS_SUBDIR)
     pairs_path = os.path.join(state_dir, PAIRS_SUBDIR)
 
-    old_index = _load_or_empty(spark, index_path, _empty_index(spark))
-    corpus = _load_or_empty(
-        spark, docs_path, spark.createDataFrame([], "doc_id LONG, text STRING")
-    ).unionByName(batch_df.select("doc_id", "text"))
+    old_index = read_or_empty(spark, index_path, _empty_index(spark).schema)
+    corpus = read_or_empty(spark, docs_path, "doc_id LONG, text STRING").unionByName(
+        batch_df.select("doc_id", "text")
+    )
 
     pairs, _updated = incremental_lsh_pairs(old_index, batch_df, corpus, threshold=threshold)
     # Appended rows are derived from the BATCH only (anti-join away
@@ -228,14 +167,9 @@ def run_neardup_stream(
         .option("maxFilesPerTrigger", 1)  # bounded micro-batches; availableNow drains them in sequence
         .json(source_path)
     )
-    writer = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: process_batch(
-                df.sparkSession, df, state_dir, threshold, batch_id=bid
-            )
-        )
-        .option("checkpointLocation", os.path.join(state_dir, "_checkpoint"))
+    return start_foreach_batch(
+        stream,
+        lambda df, bid: process_batch(df.sparkSession, df, state_dir, threshold, batch_id=bid),
+        os.path.join(state_dir, "_checkpoint"),
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -27,6 +27,7 @@ from flinkstreametl_spark.sources.cdc import (
     read_cdc_file_stream,
 )
 from flinkstreametl_spark.streaming.sinks import KeyedParquetUpsertSink
+from flinkstreametl_spark.streaming.versioned import start_foreach_batch
 
 
 # model/Meeting.java:13-18 — the enriched-output projection, shared by
@@ -94,10 +95,7 @@ def run_cdc_stream(
     """
     raw = read_cdc_file_stream(spark, source_path)
     enriched = enriched_meetings(raw, meeting_address_dim(spark), types=types)
-    writer = enriched.writeStream.foreachBatch(sink.process_batch).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(enriched, sink.process_batch, checkpoint_dir, available_now=available_now)
 
 
 def run_cdc_stream_fresh_dim(
@@ -129,10 +127,7 @@ def run_cdc_stream_fresh_dim(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         sink.process_batch(_enrich_project(batch_df, dim_fn(batch_df.sparkSession)), batch_id)
 
-    writer = meeting_info.writeStream.foreachBatch(process).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(meeting_info, process, checkpoint_dir, available_now=available_now)
 
 
 def windowed_event_counts(events: DataFrame, *, window: str = "10 minutes", watermark: str = "20 minutes") -> DataFrame:

@@ -65,6 +65,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flinkstreametl_spark.streaming.versioned import read_or_empty, start_foreach_batch
+
 ASSIGN_SUBDIR = "assignments"
 TOTALS_SUBDIR = "totals"
 
@@ -76,12 +78,6 @@ _N_BUCKETS = 64  # parallel units of the in-batch two-phase prefix sum
 
 _ASSIGN_SCHEMA = "doc_id LONG, n_tokens LONG, shard LONG, batch_key STRING"
 _TOTALS_SCHEMA = "batch_key STRING, batch_tokens LONG, batch_docs LONG"
-
-
-def _load_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    if os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path)):
-        return spark.read.schema(schema).parquet(path)
-    return spark.createDataFrame([], schema)
 
 
 def _batch_key(batch_df: DataFrame) -> str:
@@ -166,7 +162,7 @@ def process_batch(
     totals_path = os.path.join(state_dir, TOTALS_SUBDIR)
 
     key = _batch_key(batch_df)
-    totals = _load_or_empty(spark, totals_path, _TOTALS_SCHEMA)
+    totals = read_or_empty(spark, totals_path, _TOTALS_SCHEMA)
     if totals.filter(F.col("batch_key") == key).limit(1).count() > 0:
         return  # whole-batch redelivery: already committed, full no-op
 
@@ -182,7 +178,7 @@ def process_batch(
     # same start offset, so it reproduces the crashed attempt's
     # placement exactly — and the already-written subset is anti-joined
     # away just before the append.
-    assigned = _load_or_empty(spark, assign_path, _ASSIGN_SCHEMA)
+    assigned = read_or_empty(spark, assign_path, _ASSIGN_SCHEMA)
     fresh = batch_df.join(
         assigned.filter(F.col("batch_key") != key).select("doc_id"), "doc_id", "left_anti"
     )
@@ -198,7 +194,7 @@ def process_batch(
     # tokens never reached the total; a doc a LATER batch redelivers
     # keeps its original key, so nothing is ever counted twice.
     on_disk = (
-        _load_or_empty(spark, assign_path, _ASSIGN_SCHEMA)
+        read_or_empty(spark, assign_path, _ASSIGN_SCHEMA)
         .filter(F.col("batch_key") == key)
         .agg(
             F.coalesce(F.sum("n_tokens"), F.lit(0).cast("long")).alias("t"),
@@ -225,9 +221,9 @@ def run_shard_stream(
         .option("maxFilesPerTrigger", 1)
         .json(source_path)
     )
-    writer = stream.writeStream.foreachBatch(
-        lambda df, bid: process_batch(df.sparkSession, df, state_dir, capacity=capacity)
-    ).option("checkpointLocation", os.path.join(state_dir, "_checkpoint"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(
+        stream,
+        lambda df, bid: process_batch(df.sparkSession, df, state_dir, capacity=capacity),
+        os.path.join(state_dir, "_checkpoint"),
+        available_now=available_now,
+    )

@@ -14,24 +14,25 @@ set-oriented writes:
 The parquet-backed keyed table below is the container-friendly stand-in
 for a JDBC/Delta target: one union and one window on the key leave
 the table a real MERGE INTO would. `jdbc_upsert_writer` shows the real
-JDBC shape, gated since the container has no database.
+JDBC shape, gated since the container has no database. How the tables
+reach disk, and what a crash leaves, is ``streaming/versioned.py``.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkstreametl_spark.operators.cdc import latest_by_key
+from flinkstreametl_spark.streaming.versioned import recover, replace_dir
 
 
 class _SwappedParquetTable:
-    """A parquet table directory that each commit replaces whole: the
-    new version is written beside it and renamed into place, so
-    readers see the old table or the new one, never a mix."""
+    """A parquet table directory that each commit replaces whole
+    (``versioned.replace_dir``), so readers see the old table or the
+    new one, never a mix."""
 
     path: str
     # Name of a file recording the committed batch id, for sinks that
@@ -40,22 +41,19 @@ class _SwappedParquetTable:
     _MARKER: str | None = None
 
     def read(self, spark: SparkSession) -> DataFrame | None:
+        recover(self.path)
         if not os.path.exists(self.path):
             return None
         return spark.read.parquet(self.path)
 
     def _commit(self, merged: DataFrame, batch_id: int) -> None:
-        tmp = self.path + f".tmp-{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        if self._MARKER is not None:
-            with open(os.path.join(tmp, self._MARKER), "w") as fh:
-                fh.write(str(batch_id))
-        old = self.path + f".old-{batch_id}"
-        if os.path.exists(self.path):
-            os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+        def write(tmp: str) -> None:
+            merged.write.mode("overwrite").parquet(tmp)
+            if self._MARKER is not None:
+                with open(os.path.join(tmp, self._MARKER), "w") as fh:
+                    fh.write(str(batch_id))
+
+        replace_dir(self.path, write)
 
 
 class KeyedParquetUpsertSink(_SwappedParquetTable):
@@ -70,8 +68,7 @@ class KeyedParquetUpsertSink(_SwappedParquetTable):
 
     Scale note: on a cluster this is MERGE INTO on a keyed table
     (Delta/Iceberg). Here it costs one shuffle on the key, and the
-    micro-batch and the stored table are each read once. The swap is
-    atomic at directory level (write tmp, rename).
+    micro-batch and the stored table are each read once.
     """
 
     def __init__(
@@ -139,8 +136,6 @@ def with_observed_metrics(df: DataFrame, name: str = "pipeline_metrics") -> Data
     Observation/listener in batch. This is the monitoring story that
     replaces the reference's per-record System.out.println
     (Tuple2ToMeeting.java:13-28, SinkToGreenplum.java:63) at scale."""
-    from pyspark.sql import functions as F
-
     first = df.columns[0]
     return df.observe(
         name,
@@ -204,12 +199,10 @@ class IncrementalAggSink(_SwappedParquetTable):
     Exactly-once under foreachBatch retry: the merge is NOT naturally
     idempotent (adding a delta twice double-counts), so the last applied
     batch_id is stored INSIDE the table directory (an `_applied_batch_id`
-    metadata file, invisible to the parquet reader like `_SUCCESS`) and
-    written into the tmp directory BEFORE the rename — data and marker
-    commit atomically in the same directory swap, so a crash between
-    write and swap leaves the old table + old marker, and a crash after
-    the swap leaves the new table + new marker; there is no window where
-    a replayed batch re-merges its delta.
+    metadata file, invisible to the parquet reader like `_SUCCESS`),
+    where it commits with the data in one swap: a replayed batch finds
+    either the old table and old marker, and merges, or the new table
+    and new marker, and skips.
     """
 
     def __init__(self, path: str, key_cols: list[str], value_col: str):
@@ -227,14 +220,13 @@ class IncrementalAggSink(_SwappedParquetTable):
             return int(fh.read().strip())
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        existing = self.read(batch_df.sparkSession)  # recovers before the marker is read
         applied = self._applied_batch_id()
         if applied is not None and batch_id <= applied:
             return  # replayed batch: already merged
-        spark = batch_df.sparkSession
         partial = batch_df.groupBy(*self.key_cols).agg(
             F.count(F.lit(1)).alias("_dn"), F.sum(self.value_col).alias("_ds")
         )
-        existing = self.read(spark)
         if existing is None:
             merged = partial.select(
                 *self.key_cols, F.col("_dn").alias("n"), F.col("_ds").alias("total")

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -8,6 +9,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from flinkstreametl_spark.session import get_spark
+from flinkstreametl_spark.streaming import versioned
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -21,3 +23,28 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def torn_swap(monkeypatch):
+    """``with torn_swap(path): <commit>`` crashes the commit between the
+    two renames of its directory swap: ``os.rename`` in the swap module
+    raises on the rename onto ``path`` (the swap's second call), after
+    the stored version has been moved aside."""
+
+    @contextlib.contextmanager
+    def torn(path: str):
+        real = versioned.os.rename
+
+        def rename(src, dst):
+            if os.fspath(dst) == path:
+                raise RuntimeError("crash mid-swap")
+            real(src, dst)
+
+        with monkeypatch.context() as m:
+            m.setattr(versioned.os, "rename", rename)
+            with pytest.raises(RuntimeError, match="crash mid-swap"):
+                yield
+        assert not os.path.exists(path), "the crash did not fall between the renames"
+
+    return torn

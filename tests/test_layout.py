@@ -78,3 +78,19 @@ def test_compaction_preserves_content(spark, sf_dir, tmp_path):
         tuple(r) for r in spark.read.parquet(path).select("doc_id", "lang", "n_chars").collect()
     )
     assert before == after
+
+
+def test_compaction_crash_after_original_parked_recovers(spark, sf_dir, tmp_path, torn_swap):
+    """A crash after compaction has moved the original aside leaves the
+    layout readable and complete on the next call."""
+    docs = load_table(spark, sf_dir, "documents")
+    path = str(tmp_path / "docs_frag")
+    docs.repartition(4).write.partitionBy("lang").parquet(path)
+    before = sorted(tuple(r) for r in spark.read.parquet(path).select("doc_id", "lang").collect())
+
+    with torn_swap(path):
+        compact_partitioned(spark, path, ["lang"])
+    compact_partitioned(spark, path, ["lang"])
+    after = sorted(tuple(r) for r in spark.read.parquet(path).select("doc_id", "lang").collect())
+    assert after == before
+    assert sorted(os.listdir(tmp_path)) == ["docs_frag"]

@@ -40,12 +40,23 @@ def test_failed_replay_removes_scratch_and_restores_confs(spark, tmp_path, monke
     assert {k: spark.conf.get(k) for k in (_PARTITIONS, _PROVIDER)} == before
 
 
-def test_replay_sequence_is_written_once():
-    with open(SP.__file__) as fh:
-        calls = [n for n in ast.walk(ast.parse(fh.read())) if isinstance(n, ast.Call)]
+def _calls(path: str) -> list[ast.Call]:
+    with open(path) as fh:
+        return [n for n in ast.walk(ast.parse(fh.read())) if isinstance(n, ast.Call)]
 
-    def method_calls(name: str) -> int:
-        return sum(isinstance(c.func, ast.Attribute) and c.func.attr == name for c in calls)
+
+def _count_calls(calls: list[ast.Call], name: str) -> int:
+    """Calls of ``name``: a dotted name (``os.rename``) must match the
+    whole callee, a bare one (``mkdtemp``) any receiver's method."""
+    return sum(
+        isinstance(c.func, ast.Attribute)
+        and (ast.unparse(c.func) == name if "." in name else c.func.attr == name)
+        for c in calls
+    )
+
+
+def test_replay_sequence_is_written_once():
+    calls = _calls(SP.__file__)
 
     def keyword_true(name: str) -> int:
         return sum(
@@ -54,6 +65,23 @@ def test_replay_sequence_is_written_once():
             for kw in c.keywords
         )
 
-    assert method_calls("mkdtemp") == 1, "one scratch-directory site (_replay)"
+    assert _count_calls(calls, "mkdtemp") == 1, "one scratch-directory site (_replay)"
     assert keyword_true("availableNow") == 1, "one AvailableNow trigger (_drain)"
-    assert method_calls("awaitTermination") == 1, "one drain site (_drain)"
+    assert _count_calls(calls, "awaitTermination") == 1, "one drain site (_drain)"
+
+
+def test_state_reaches_disk_through_versioned_only():
+    """Directory swaps and foreachBatch launches live in
+    streaming/versioned.py; the replay harness's writers already go
+    through its own ``_drain``."""
+    pkg = os.path.dirname(os.path.dirname(SP.__file__))
+    owner = os.path.join(pkg, "streaming", "versioned.py")
+    exempt = {"foreachBatch": {SP.__file__}}
+    files = [
+        os.path.join(root, f) for root, _dirs, names in os.walk(pkg) for f in names if f.endswith(".py")
+    ]
+    calls = {path: _calls(path) for path in files}
+    for name in ("os.rename", "shutil.move", "foreachBatch"):
+        sites = {path for path in files if _count_calls(calls[path], name)}
+        assert sites <= {owner} | exempt.get(name, set()), (name, sorted(sites))
+    assert _count_calls(calls[owner], "foreachBatch") == 1, "one launcher (start_foreach_batch)"

@@ -17,11 +17,11 @@ from flinkstreametl_spark.streaming.shard_ingest import (
     TOTALS_SUBDIR,
     _ASSIGN_SCHEMA,
     _batch_key,
-    _load_or_empty,
     _placed,
     process_batch,
     run_shard_stream,
 )
+from flinkstreametl_spark.streaming.versioned import read_or_empty
 
 CAP = 500
 
@@ -42,8 +42,8 @@ def _write_jsonl(path, rows):
 
 
 def _state(spark, state_dir):
-    a = _load_or_empty(spark, os.path.join(state_dir, ASSIGN_SUBDIR), _ASSIGN_SCHEMA)
-    t = _load_or_empty(
+    a = read_or_empty(spark, os.path.join(state_dir, ASSIGN_SUBDIR), _ASSIGN_SCHEMA)
+    t = read_or_empty(
         spark, os.path.join(state_dir, TOTALS_SUBDIR), "batch_key STRING, batch_tokens LONG, batch_docs LONG"
     )
     return a, t

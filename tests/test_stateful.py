@@ -139,6 +139,31 @@ def test_incremental_agg_sink_replay_is_noop(spark, sf_dir, tmp_path):
     assert {r.user_id: r.n for r in sink.read(spark).collect()} == {k: v[0] * 2 for k, v in first.items()}
 
 
+def test_incremental_agg_replay_after_torn_swap(spark, tmp_path, torn_swap):
+    """A crash between the swap's renames parks the stored aggregate and
+    its batch-id marker together; the replayed batch must merge once
+    into the parked table and commit its marker."""
+    from pyspark.sql import functions as F
+
+    from flinkstreametl_spark.streaming.sinks import IncrementalAggSink
+
+    schema = "k STRING, v DOUBLE"
+    batches = [[("a", 1.0), ("b", 5.0)], [("a", 2.0)]]
+    sink = IncrementalAggSink(str(tmp_path / "mv"), ["k"], "v")
+    sink.process_batch(spark.createDataFrame(batches[0], schema), 0)
+    with torn_swap(sink.path):
+        sink.process_batch(spark.createDataFrame(batches[1], schema), 1)
+    sink.process_batch(spark.createDataFrame(batches[1], schema), 1)  # the replay
+
+    want = (
+        spark.createDataFrame(batches[0] + batches[1], schema)
+        .groupBy("k")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("total"))
+    )
+    assert sorted(map(tuple, sink.read(spark).collect())) == sorted(map(tuple, want.collect()))
+    assert sink._applied_batch_id() == 1
+
+
 def test_dedup_within_watermark_bounded_state(spark, tmp_path):
     """Built-in dropDuplicatesWithinWatermark: duplicates inside the
     watermark horizon are suppressed across micro-batches."""

@@ -83,3 +83,15 @@ def test_merge_without_op_column_upserts_everything(spark, tmp_path):
     model = _apply(spark, sink, {}, [(1, "a0", 10, 1), (2, "b0", 10, 1)], 0, schema)
     model = _apply(spark, sink, model, [(1, "a1", 1, 1), (1, "a2", 2, 1), (3, "c1", 1, 1)], 1, schema)
     assert model == {1: (1, "a2", 2, 1), 2: (2, "b0", 10, 1), 3: (3, "c1", 1, 1)}
+
+
+def test_replay_after_torn_swap_matches_replace_into_model(spark, tmp_path, torn_swap):
+    """A crash between the swap's renames parks the stored table; the
+    replayed batch must merge into it, not into an empty table."""
+    sink = KeyedParquetUpsertSink(str(tmp_path / "t"), KEY, ORDER)
+    model = _apply(spark, sink, {}, [(1, "a0", 1, 1, "INSERT"), (2, "b0", 1, 1, "INSERT")], 0)
+    batch = [(3, "c0", 1, 1, "INSERT")]
+    with torn_swap(sink.path):
+        sink.process_batch(spark.createDataFrame(batch, SCHEMA), 1)
+    model = _apply(spark, sink, model, batch, 1)
+    assert set(model) == {1, 2, 3}

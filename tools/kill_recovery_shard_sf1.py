@@ -42,10 +42,10 @@ from flinkstreametl_spark.streaming.shard_ingest import (  # noqa: E402
     _ASSIGN_SCHEMA,
     _TOTALS_SCHEMA,
     _batch_key,
-    _load_or_empty,
     _placed,
     process_batch,
 )
+from flinkstreametl_spark.streaming.versioned import read_or_empty  # noqa: E402
 
 WORK = "/tmp/kill_recovery_shard_sf1"
 N_BATCHES = 10
@@ -57,8 +57,8 @@ OUT = os.path.join(
 
 
 def _state(spark, state_dir):
-    a = _load_or_empty(spark, os.path.join(state_dir, ASSIGN_SUBDIR), _ASSIGN_SCHEMA)
-    t = _load_or_empty(spark, os.path.join(state_dir, TOTALS_SUBDIR), _TOTALS_SCHEMA)
+    a = read_or_empty(spark, os.path.join(state_dir, ASSIGN_SUBDIR), _ASSIGN_SCHEMA)
+    t = read_or_empty(spark, os.path.join(state_dir, TOTALS_SUBDIR), _TOTALS_SCHEMA)
     return a, t
 
 

@@ -24,9 +24,9 @@ from flinkstreametl_spark.sources.parquet import load_table  # noqa: E402
 from flinkstreametl_spark.streaming.shard_ingest import (  # noqa: E402
     ASSIGN_SUBDIR,
     _ASSIGN_SCHEMA,
-    _load_or_empty,
     process_batch,
 )
+from flinkstreametl_spark.streaming.versioned import read_or_empty  # noqa: E402
 
 WORK = "/tmp/throughput_shard_sf1"
 N_BATCHES = 10
@@ -53,7 +53,7 @@ def main() -> None:
         process_batch(spark, batch, state, capacity=CAPACITY)
         times.append(time.time() - t0)
         print(f"# batch {b}: {times[-1]:.1f}s")
-    a = _load_or_empty(spark, os.path.join(state, ASSIGN_SUBDIR), _ASSIGN_SCHEMA)
+    a = read_or_empty(spark, os.path.join(state, ASSIGN_SUBDIR), _ASSIGN_SCHEMA)
     n_assigned = a.count()
     n_shards = a.select("shard").distinct().count()
     first, second = sum(times[:5]) / 5, sum(times[5:]) / 5
