@@ -91,22 +91,6 @@ def _sig_array(num_hashes: int):
     )
 
 
-def minhash_signatures(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", num_hashes: int = NUM_HASHES
-) -> DataFrame:
-    """Per-document MinHash signature rows (doc, hash-index j, min md5).
-
-    Row-oriented view of ``_sig_array`` (posexplode of the per-row
-    signature) — kept for API parity with sketch-table consumers; the
-    LSH path uses the array form directly and never shuffles here.
-    Empty documents (no tokens) carry no signature rows.
-    """
-    toks = token_sets(docs, id_col, text_col).filter(F.size("toks") > 0)
-    return toks.select(
-        F.col(id_col), F.posexplode(_sig_array(num_hashes)).alias("j", "mh")
-    )
-
-
 def lsh_band_keys(
     docs_or_sigs: DataFrame,
     id_col: str = "doc_id",

@@ -189,19 +189,6 @@ def default_decoder(payload: bytes) -> tuple[int, int, list[float]]:
     return feature_map(*decode_image(payload))
 
 
-def decode_image_batch(payloads: pd.Series) -> pd.DataFrame:
-    """Vectorized decode of a payload Series -> DataFrame(width, height,
-    pixels) via the pure-Python PPM/BMP path."""
-    decoded = [decode_image(bytes(p)) for p in payloads]
-    return pd.DataFrame(
-        {
-            "width": [d[0] for d in decoded],
-            "height": [d[1] for d in decoded],
-            "pixels": [d[2] for d in decoded],
-        }
-    )
-
-
 def fake_decoder(payload: bytes) -> tuple[int, int, list[float]]:
     """Deterministic fake decode used by tests: 'pixels' derived from the
     byte histogram — stable shape (4 floats), no codec needed."""

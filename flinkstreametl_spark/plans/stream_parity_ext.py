@@ -17,7 +17,7 @@ Harness contract. Every replay runs through ``_replay`` and the
 helpers it calls, which guarantee:
 
 * one file per trigger: the input is staged as chunk files and the
-  reader admits one file per micro-batch (``maxFilesPerTrigger=1``);
+  reader admits one file per micro-batch (``versioned.file_stream``);
 * pinned, strictly increasing file mtimes, so the file source admits
   the chunks in order;
 * pinned state partitions: ``spark.sql.shuffle.partitions`` (and, for
@@ -78,6 +78,7 @@ from flinkstreametl_spark.sources.parquet import load_table
 from flinkstreametl_spark.streaming.bloom_ingest import BLOOM_M
 from flinkstreametl_spark.streaming.bloom_ingest import _h as bloom_h
 from flinkstreametl_spark.streaming.pipeline import stream_stream_interval_join
+from flinkstreametl_spark.streaming.versioned import file_stream, live_path
 
 _SSJ_CHUNKS = 3
 _SSJ_SCHEMA = "event_id LONG, ts TIMESTAMP, user_id LONG"
@@ -285,11 +286,8 @@ def _not_sentinel(col: str, sentinel) -> Column:
 
 
 def _read(spark: SparkSession, path: str, schema: str, fmt: str = "parquet") -> DataFrame:
-    """Stream the chunk files under ``path``, one file per micro-batch.
-    ``maxFilesPerTrigger`` is a SOURCE option: set on the writer it is
-    silently ignored and the directory drains as ONE batch, collapsing
-    the replay's batch structure."""
-    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).format(fmt).load(path)
+    """Stream the chunk files under ``path``, one file per micro-batch."""
+    return file_stream(spark, path, schema, fmt)
 
 
 def _drain(spark: SparkSession, tmp: str, job, provider: str | None = None):
@@ -1055,7 +1053,6 @@ def stream_hll_maintenance_replay(spark: SparkSession, sf_dir: str) -> DataFrame
         _REG_SCHEMA,
         run_hll_stream,
     )
-    from flinkstreametl_spark.streaming.versioned import current_version, version_dir
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
 
@@ -1064,13 +1061,7 @@ def stream_hll_maintenance_replay(spark: SparkSession, sf_dir: str) -> DataFrame
         _write_chunks(ev, src, ["event_id"], fmt="json", redeliver="all")
         _drain(spark, tmp, lambda: run_hll_stream(spark, src, state))
         reg_root = os.path.join(state, REGISTERS_SUBDIR)
-        ver = current_version(reg_root)
-        if ver is None:
-            raise ValueError(
-                "stream_hll_maintenance_replay: the drain committed no "
-                "register version — empty or missing events fixture"
-            )
-        regs = spark.read.schema(_REG_SCHEMA).parquet(version_dir(reg_root, ver))
+        regs = spark.read.schema(_REG_SCHEMA).parquet(live_path(reg_root))
         s = hll_summarize(regs).withColumnRenamed("grp", "event_type")
         ex = ev.groupBy("event_type").agg(F.countDistinct("user_id").alias("n_exact"))
         return hll_estimate_cols(s.join(ex, "event_type")).select(
@@ -1316,7 +1307,7 @@ def stream_dead_letter_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Why the counters are deterministic and SQL-statable:
 # * Micro-batch k (1..3) admits exactly tile k on each side
-#   (maxFilesPerTrigger=1 per source, in-order mtimes), so
+#   (one file per trigger per source, in-order mtimes), so
 #   input_rows(k) = 2 * |tile k|; a final no-data batch 4 runs the
 #   last eviction after the watermark's final advance.
 # * The watermark USED in batch k is the one computed after batch k-1:

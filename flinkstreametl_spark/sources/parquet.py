@@ -68,11 +68,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view for spark.sql use."""
     for name, df in load_tables(spark, sf_dir).items():
         df.createOrReplaceTempView(name)
-
-
-def run_sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
-    """SQL entry point over the fixture tables (the reference's
-    tEnv.sqlQuery surface, Main.java:99-100): registers every table as a
-    temp view, then runs the statement through Catalyst."""
-    register_views(spark, sf_dir)
-    return spark.sql(query)

@@ -25,16 +25,11 @@ Per micro-batch the job
        — the append is the COMMIT POINT: a crash before it replays the
        whole batch, a crash after it makes the replay a no-op.
 
-Re-fit (``refit_index``/``maybe_refit``) is crash-recoverable by
-VERSIONING, not in-place swap: a new ``v{n+1}`` directory is written
-completely (centroids + fully re-assigned postings), then the
-``CURRENT`` pointer is flipped with an atomic ``os.replace``. A crash
-anywhere before the flip leaves ``v{n}`` live and ``v{n+1}`` as an
-orphan the next writer removes; there is no window in which centroids
-and postings disagree (the hazard an in-place two-directory swap would
-have). At cluster scale the pointer file becomes a catalog entry /
-transactional-table snapshot — the read and compute shapes are
-unchanged by that swap.
+Re-fit (``refit_index``/``maybe_refit``) writes centroids and fully
+re-assigned postings as one new version through
+``streaming/versioned.commit_version``, which owns the crash story:
+centroids and postings never disagree (the hazard an in-place
+two-directory swap would have).
 
 State lives in storage, not executor memory: centroids are a k-row
 parquet (a parameter table — collected and broadcast per batch),
@@ -46,7 +41,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -57,12 +51,12 @@ from flinkstreametl_spark.operators.clustering import (
     kmeans_fit,
 )
 from flinkstreametl_spark.streaming.versioned import (
-    CURRENT_FILE,
-    current_version as _current_version,
-    flip_current as _flip_current,
-    gc_orphans as _gc_orphans,
-    start_foreach_batch,
-    version_dir as _version_dir,
+    commit_version,
+    current_version,
+    live_path,
+    live_version,
+    recover,
+    start_state_loop,
 )
 
 CENTROIDS_SUBDIR = "centroids"
@@ -78,20 +72,10 @@ CENTROIDS_SCHEMA = "cluster LONG, centroid ARRAY<DOUBLE>"
 DEFAULT_REFIT_GROWTH = 0.5
 
 
-def _write_version(
-    spark: SparkSession,
-    emb: DataFrame,
-    index_dir: str,
-    version: int,
-    k: int,
-    n_iters: int,
-) -> None:
+def _write_version(spark: SparkSession, emb: DataFrame, vdir: str, k: int, n_iters: int) -> None:
     """Fit centroids on ``emb`` and materialize a complete version
-    directory (centroids + postings + meta). Does NOT flip CURRENT —
-    the caller owns the commit."""
-    vdir = _version_dir(index_dir, version)
-    if os.path.isdir(vdir):  # stale orphan from a crashed attempt
-        shutil.rmtree(vdir)
+    directory (centroids + postings + meta): the ``commit_version``
+    callback."""
     cents_mat, assign_df = kmeans_fit(emb, k=k, n_iters=n_iters)
     cents = spark.createDataFrame(
         [(i, [float(x) for x in cents_mat[i]]) for i in range(len(cents_mat))],
@@ -123,38 +107,24 @@ def build_index(
     """Offline bootstrap: fit the coarse quantizer on the base corpus
     and commit it as v0 (or the next version if the dir already holds
     one — rebuild semantics)."""
-    os.makedirs(index_dir, exist_ok=True)
-    prev = _current_version(index_dir)
-    version = 0 if prev is None else prev + 1
-    _write_version(spark, emb, index_dir, version, k, n_iters)
-    _flip_current(index_dir, version)
-    _gc_orphans(index_dir)
+    commit_version(
+        index_dir,
+        current_version(index_dir),
+        lambda vdir: _write_version(spark, emb, vdir, k, n_iters),
+    )
 
 
 def load_meta(index_dir: str) -> dict:
-    v = _current_version(index_dir)
-    if v is None:
-        raise FileNotFoundError(f"no ANN index at {index_dir} (missing {CURRENT_FILE})")
-    with open(os.path.join(_version_dir(index_dir, v), META_FILE)) as f:
+    with open(live_path(index_dir, META_FILE)) as f:
         return json.load(f)
 
 
 def load_centroids(spark: SparkSession, index_dir: str) -> DataFrame:
-    v = _current_version(index_dir)
-    if v is None:
-        raise FileNotFoundError(f"no ANN index at {index_dir} (missing {CURRENT_FILE})")
-    return spark.read.schema(CENTROIDS_SCHEMA).parquet(
-        os.path.join(_version_dir(index_dir, v), CENTROIDS_SUBDIR)
-    )
+    return spark.read.schema(CENTROIDS_SCHEMA).parquet(live_path(index_dir, CENTROIDS_SUBDIR))
 
 
 def load_postings(spark: SparkSession, index_dir: str) -> DataFrame:
-    v = _current_version(index_dir)
-    if v is None:
-        raise FileNotFoundError(f"no ANN index at {index_dir} (missing {CURRENT_FILE})")
-    return spark.read.schema(POSTINGS_SCHEMA).parquet(
-        os.path.join(_version_dir(index_dir, v), POSTINGS_SUBDIR)
-    )
+    return spark.read.schema(POSTINGS_SCHEMA).parquet(live_path(index_dir, POSTINGS_SUBDIR))
 
 
 def _centroid_matrix(spark: SparkSession, index_dir: str):
@@ -183,12 +153,9 @@ def process_batch(
     gets a new vec_id), so the anti-join on vec_id is a complete
     redelivery dedup — the content-blind-batch-key hazard the shard
     writer had does not exist here."""
-    _gc_orphans(index_dir)
+    recover(index_dir)
     batch_df = batch_df.dropDuplicates(["vec_id"]).localCheckpoint()
-    v = _current_version(index_dir)
-    if v is None:
-        raise FileNotFoundError(f"no ANN index at {index_dir}; run build_index first")
-    postings_path = os.path.join(_version_dir(index_dir, v), POSTINGS_SUBDIR)
+    postings_path = live_path(index_dir, POSTINGS_SUBDIR)
     indexed = spark.read.schema(POSTINGS_SCHEMA).parquet(postings_path).select("vec_id")
     fresh = batch_df.select("vec_id", "embedding").join(indexed, "vec_id", "left_anti")
     assigned = assign_to_centroids(fresh, _centroid_matrix(spark, index_dir)).select(
@@ -202,16 +169,14 @@ def process_batch(
 
 def refit_index(spark: SparkSession, index_dir: str) -> None:
     """Re-fit the quantizer on everything indexed so far and commit it
-    as the next version (write-complete-then-flip; see module doc for
-    the crash story). Fit parameters carry over from the live meta."""
-    v = _current_version(index_dir)
-    if v is None:
-        raise FileNotFoundError(f"no ANN index at {index_dir}; run build_index first")
+    as the next version by ``commit_version``. Fit parameters carry
+    over from the live meta."""
+    live = live_version(index_dir)
     meta = load_meta(index_dir)
     emb = load_postings(spark, index_dir).select("vec_id", "embedding").localCheckpoint()
-    _write_version(spark, emb, index_dir, v + 1, meta["k"], meta["n_iters"])
-    _flip_current(index_dir, v + 1)
-    _gc_orphans(index_dir)
+    commit_version(
+        index_dir, live, lambda vdir: _write_version(spark, emb, vdir, meta["k"], meta["n_iters"])
+    )
 
 
 def staleness(spark: SparkSession, index_dir: str) -> float:
@@ -246,14 +211,11 @@ def run_ann_stream(
     (``{"vec_id": ..., "embedding": [...]}``). ``available_now=True``
     drains existing files and stops (test/batch replay); ``False`` runs
     continuously (production)."""
-    stream = (
-        spark.readStream.schema("vec_id LONG, embedding ARRAY<DOUBLE>")
-        .option("maxFilesPerTrigger", 1)
-        .json(source_path)
-    )
-    return start_foreach_batch(
-        stream,
+    return start_state_loop(
+        spark,
+        source_path,
+        "vec_id LONG, embedding ARRAY<DOUBLE>",
+        index_dir,
         lambda df, bid: process_batch(df.sparkSession, df, index_dir, refit_growth=refit_growth),
-        os.path.join(index_dir, "_checkpoint"),
         available_now=available_now,
     )

@@ -51,8 +51,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkstreametl_spark.operators import text as X
-from flinkstreametl_spark.streaming.neardup_ingest import compact_parquet
-from flinkstreametl_spark.streaming.versioned import read_or_empty, start_foreach_batch
+from flinkstreametl_spark.streaming.versioned import (
+    compact_parquet,
+    read_or_empty,
+    start_state_loop,
+)
 
 BITS_SUBDIR = "bits"
 HISTORY_SUBDIR = "history"
@@ -191,14 +194,11 @@ def run_bloom_stream(
     """Continuous bloom-fronted dedup over a JSONL document stream
     (``available_now=True`` drains existing files and stops — the test
     / batch-replay mode)."""
-    stream = (
-        spark.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .json(source_path)
-    )
-    return start_foreach_batch(
-        stream,
+    return start_state_loop(
+        spark,
+        source_path,
+        "doc_id LONG, text STRING",
+        state_dir,
         lambda df, bid: process_batch(df.sparkSession, df, state_dir, batch_id=bid),
-        os.path.join(state_dir, "_checkpoint"),
         available_now=available_now,
     )

@@ -33,7 +33,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flinkstreametl_spark.streaming.versioned import start_foreach_batch
+from flinkstreametl_spark.streaming.versioned import recover, replace_dir, start_state_loop
 
 BASELINE_SUBDIR = "baseline"
 LOG_SUBDIR = "drift_log"
@@ -95,12 +95,14 @@ def process_batch(
     log_path = os.path.join(state_dir, LOG_SUBDIR)
     hist = score_histogram(batch_df).localCheckpoint()
     # A seeded baseline is one whose write JOB committed — Spark's
-    # _SUCCESS marker, written atomically after all part-files. Part
-    # files without it are debris from a crashed seed/rebaseline
-    # overwrite; accepting them would freeze drift measurement against
-    # a torn histogram (ADVICE r8), so they are overwritten instead.
+    # _SUCCESS marker, written atomically after all part-files. The
+    # seed and every rebaseline are swapped in whole by ``replace_dir``;
+    # part files without the marker are debris of an in-place write, and
+    # accepting them would freeze drift measurement against a torn
+    # histogram (ADVICE r8), so they are replaced instead.
+    recover(base_path)
     if not os.path.isfile(os.path.join(base_path, "_SUCCESS")):
-        hist.write.mode("overwrite").parquet(base_path)
+        replace_dir(base_path, hist.write.parquet)
     base = spark.read.schema("bucket LONG, cnt LONG").parquet(base_path)
     d_fp = l2_drift_fp(hist, base)
     n_docs = batch_df.count()
@@ -114,10 +116,9 @@ def process_batch(
 
 def rebaseline(spark: SparkSession, docs: DataFrame, state_dir: str) -> None:
     """Explicitly reset the baseline to ``docs``' histogram (after a
-    deliberate distribution change: new feed onboarded, new gate)."""
-    score_histogram(docs).write.mode("overwrite").parquet(
-        os.path.join(state_dir, BASELINE_SUBDIR)
-    )
+    deliberate distribution change: new feed onboarded, new gate). The
+    swap leaves the previous baseline in force if the write fails."""
+    replace_dir(os.path.join(state_dir, BASELINE_SUBDIR), score_histogram(docs).write.parquet)
 
 
 def run_drift_monitor(
@@ -128,14 +129,11 @@ def run_drift_monitor(
     available_now: bool = True,
 ):
     """Continuous drift monitoring over a JSONL document stream."""
-    stream = (
-        spark.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .json(source_path)
-    )
-    return start_foreach_batch(
-        stream,
+    return start_state_loop(
+        spark,
+        source_path,
+        "doc_id LONG, text STRING",
+        state_dir,
         lambda df, bid: process_batch(df.sparkSession, df, state_dir, batch_id=bid),
-        os.path.join(state_dir, "_checkpoint"),
         available_now=available_now,
     )

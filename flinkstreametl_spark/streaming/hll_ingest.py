@@ -21,18 +21,19 @@ of micro-batches is bit-identical to the batch sketch over the union
 of those batches (``tests/test_hll_ingest.py`` pins register-level
 equality, not approximate agreement).
 
-Crash contract (``streaming/versioned.py``): the merged register table
-is a complete new ``v{n+1}`` directory behind a CURRENT pointer flip; a
-replayed batch re-merges to the identical ``v{n+1}`` (idempotence) and
-flips. The per-batch estimate TIMELINE (one row per group per batch —
-the growth curve dashboards plot) is written AFTER the flip as an
-OVERWRITE of its own ``batch_id=N`` partition directory: a crash
-between flip and write loses only that batch's timeline rows, and a
-replay overwrites the same partition with the identical rows, so direct
-readers of the timeline directory need no keyed dedup. Two jobs must
-not share a ``state_dir``; fan-in belongs UPSTREAM (union the sources
-into one stream), and since registers are max-mergeable, a later
-offline merge of two state dirs is also safe.
+Crash contract: the merged register table is committed as one new
+version by ``streaming/versioned.commit_version``, which owns the crash
+story; a replayed batch re-merges to the identical registers
+(idempotence) and commits them again. The per-batch estimate TIMELINE
+(one row per group per batch — the growth curve dashboards plot) is
+written AFTER the commit as an OVERWRITE of its own ``batch_id=N``
+partition directory: a crash between commit and write loses only that
+batch's timeline rows, and a replay overwrites the same partition with
+the identical rows, so direct readers of the timeline directory need no
+keyed dedup. Two jobs must not share a ``state_dir`` (the single-writer
+rule); fan-in belongs UPSTREAM (union the sources into one stream), and
+since registers are max-mergeable, a later offline merge of two state
+dirs is also safe.
 """
 
 from __future__ import annotations
@@ -48,10 +49,10 @@ from flinkstreametl_spark.plans.sketch_ext import (
     hll_summarize,
 )
 from flinkstreametl_spark.streaming.versioned import (
+    commit_version,
     current_version,
-    flip_current,
-    gc_orphans,
-    start_foreach_batch,
+    recover,
+    start_state_loop,
     version_dir,
 )
 
@@ -79,11 +80,7 @@ def process_batch(
     against a state table of the same bounded size — no corpus-sized
     frame exists at any point, and nothing rescans history."""
     reg_root = os.path.join(state_dir, REGISTERS_SUBDIR)
-    os.makedirs(reg_root, exist_ok=True)
-    # Sweep a pre-flip orphan from a crashed predecessor before
-    # building on CURRENT.
-    gc_orphans(reg_root)
-
+    recover(reg_root)
     # Read CURRENT exactly once; both the load path and the successor
     # version derive from the same observation (ADVICE r9 — two reads
     # widened the lost-update window if the single-writer contract in
@@ -101,9 +98,7 @@ def process_batch(
         .localCheckpoint()
     )
 
-    next_ver = (ver or 0) + 1
-    merged.write.mode("overwrite").parquet(version_dir(reg_root, next_ver))
-    flip_current(reg_root, next_ver)  # commit point
+    next_ver = commit_version(reg_root, ver, merged.write.parquet)
 
     # Timeline row(s): the estimate AFTER this batch, OVERWRITING this
     # batch's own partition directory so at-least-once replay is a
@@ -133,14 +128,11 @@ def run_hll_stream(
     """Continuous HLL maintenance over a JSONL event stream
     (``available_now=True`` drains existing files and stops — the
     test / batch-replay mode)."""
-    stream = (
-        spark.readStream.schema("event_id LONG, user_id LONG, event_type STRING")
-        .option("maxFilesPerTrigger", 1)
-        .json(source_path)
-    )
-    return start_foreach_batch(
-        stream,
+    return start_state_loop(
+        spark,
+        source_path,
+        "event_id LONG, user_id LONG, event_type STRING",
+        state_dir,
         lambda df, bid: process_batch(df.sparkSession, df, state_dir, batch_id=bid),
-        os.path.join(state_dir, "_checkpoint"),
         available_now=available_now,
     )

@@ -15,8 +15,7 @@ re-fit, triggered at a growth threshold (amortized O(1) per document).
 
 Per micro-batch the job
 
-    1. reads the live index version (``CURRENT`` pointer —
-       streaming/versioned.py);
+    1. reads the live index version (``CURRENT`` pointer);
     2. anti-joins the batch against already-indexed doc_ids
        (at-least-once redelivery dedup; document text is immutable per
        doc_id by the corpus contract — a revision is a new doc_id);
@@ -25,9 +24,10 @@ Per micro-batch the job
        POINT: a crash before it replays the whole batch, a crash after
        it makes the replay a no-op;
     4. re-fits the stats snapshot when arrivals exceed the growth
-       threshold (write-complete-then-flip; the postings table is
-       re-clustered by term in the same pass, restoring posting-list
-       locality).
+       threshold, committed as one new version by
+       ``streaming/versioned.commit_version``, which owns the crash
+       story (the postings table is re-clustered by term in the same
+       pass, restoring posting-list locality).
 
 State lives in storage, not executor memory: postings are the parquet
 table the posting-list join probes (hash-clustered by term on re-fit
@@ -39,19 +39,18 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkstreametl_spark.operators import text as X
 from flinkstreametl_spark.streaming.versioned import (
-    CURRENT_FILE,
-    current_version as _current_version,
-    flip_current as _flip_current,
-    gc_orphans as _gc_orphans,
-    start_foreach_batch,
-    version_dir as _version_dir,
+    commit_version,
+    current_version,
+    live_path,
+    live_version,
+    recover,
+    start_state_loop,
 )
 
 POSTINGS_SUBDIR = "postings"
@@ -94,15 +93,9 @@ def _stats_of(postings: DataFrame):
     return dfq, tot
 
 
-def _write_version(
-    spark: SparkSession, postings: DataFrame, index_dir: str, version: int
-) -> None:
+def _write_version(spark: SparkSession, postings: DataFrame, vdir: str) -> None:
     """Materialize a complete version directory (postings re-clustered
-    by term + df + totals + meta). Does NOT flip CURRENT — the caller
-    owns the commit."""
-    vdir = _version_dir(index_dir, version)
-    if os.path.isdir(vdir):  # stale orphan from a crashed attempt
-        shutil.rmtree(vdir)
+    by term + df + totals + meta): the ``commit_version`` callback."""
     postings.repartition(_N_POSTING_FILES, "term").write.mode("overwrite").parquet(
         os.path.join(vdir, POSTINGS_SUBDIR)
     )
@@ -120,35 +113,26 @@ def _write_version(
 def build_index(spark: SparkSession, docs: DataFrame, index_dir: str) -> None:
     """Offline bootstrap: index the base corpus and commit it as v0
     (or the next version if the dir already holds one)."""
-    os.makedirs(index_dir, exist_ok=True)
-    prev = _current_version(index_dir)
-    version = 0 if prev is None else prev + 1
-    _write_version(spark, postings_of(docs.select("doc_id", "text")), index_dir, version)
-    _flip_current(index_dir, version)
-    _gc_orphans(index_dir)
-
-
-def _live_path(index_dir: str, sub: str) -> str:
-    v = _current_version(index_dir)
-    if v is None:
-        raise FileNotFoundError(f"no index at {index_dir} (missing {CURRENT_FILE})")
-    return os.path.join(_version_dir(index_dir, v), sub)
+    postings = postings_of(docs.select("doc_id", "text"))
+    commit_version(
+        index_dir, current_version(index_dir), lambda vdir: _write_version(spark, postings, vdir)
+    )
 
 
 def load_postings(spark: SparkSession, index_dir: str) -> DataFrame:
-    return spark.read.schema(POSTINGS_SCHEMA).parquet(_live_path(index_dir, POSTINGS_SUBDIR))
+    return spark.read.schema(POSTINGS_SCHEMA).parquet(live_path(index_dir, POSTINGS_SUBDIR))
 
 
 def load_stats(spark: SparkSession, index_dir: str):
     """The FROZEN ranking statistics (df, totals) of the live version —
     what makes the index stale as postings grow past them."""
-    dfq = spark.read.schema(DF_SCHEMA).parquet(_live_path(index_dir, DF_SUBDIR))
-    tot = spark.read.schema(TOT_SCHEMA).parquet(_live_path(index_dir, TOT_SUBDIR))
+    dfq = spark.read.schema(DF_SCHEMA).parquet(live_path(index_dir, DF_SUBDIR))
+    tot = spark.read.schema(TOT_SCHEMA).parquet(live_path(index_dir, TOT_SUBDIR))
     return dfq, tot
 
 
 def load_meta(index_dir: str) -> dict:
-    with open(_live_path(index_dir, META_FILE)) as f:
+    with open(live_path(index_dir, META_FILE)) as f:
         return json.load(f)
 
 
@@ -163,9 +147,9 @@ def process_batch(
     postings (the commit point), re-fit stats past the growth
     threshold. Called from ``foreachBatch`` (or directly, for batch
     replay tests)."""
-    _gc_orphans(index_dir)
+    recover(index_dir)
     batch_df = batch_df.dropDuplicates(["doc_id"]).localCheckpoint()
-    postings_path = _live_path(index_dir, POSTINGS_SUBDIR)
+    postings_path = live_path(index_dir, POSTINGS_SUBDIR)
     indexed = (
         spark.read.schema(POSTINGS_SCHEMA)
         .parquet(postings_path)
@@ -181,15 +165,10 @@ def process_batch(
 
 def refit_stats(spark: SparkSession, index_dir: str) -> None:
     """Recompute df/totals over everything indexed so far and commit
-    postings + fresh stats as the next version (write-complete-then-
-    flip; streaming/versioned.py owns the crash story)."""
-    v = _current_version(index_dir)
-    if v is None:
-        raise FileNotFoundError(f"no index at {index_dir}; run build_index first")
+    postings + fresh stats as the next version by ``commit_version``."""
+    live = live_version(index_dir)
     postings = load_postings(spark, index_dir).localCheckpoint()
-    _write_version(spark, postings, index_dir, v + 1)
-    _flip_current(index_dir, v + 1)
-    _gc_orphans(index_dir)
+    commit_version(index_dir, live, lambda vdir: _write_version(spark, postings, vdir))
 
 
 def staleness(spark: SparkSession, index_dir: str) -> float:
@@ -222,14 +201,11 @@ def run_index_stream(
     (``{"doc_id": ..., "text": ...}``). ``available_now=True`` drains
     existing files and stops (test/batch replay); ``False`` runs
     continuously (production)."""
-    stream = (
-        spark.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .json(source_path)
-    )
-    return start_foreach_batch(
-        stream,
+    return start_state_loop(
+        spark,
+        source_path,
+        "doc_id LONG, text STRING",
+        index_dir,
         lambda df, bid: process_batch(df.sparkSession, df, index_dir, refit_growth=refit_growth),
-        os.path.join(index_dir, "_checkpoint"),
         available_now=available_now,
     )

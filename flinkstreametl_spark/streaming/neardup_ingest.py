@@ -35,10 +35,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from flinkstreametl_spark.operators.dedup import incremental_lsh_pairs, lsh_band_keys
 from flinkstreametl_spark.streaming.versioned import (
+    compact_parquet,
     read_or_empty,
-    recover,
-    replace_dir,
-    start_foreach_batch,
+    start_state_loop,
 )
 
 PAIRS_SUBDIR = "pairs"
@@ -53,24 +52,10 @@ DOCS_SUBDIR = "docs"
 DEFAULT_COMPACT_EVERY = 10
 
 
-def compact_parquet(
-    spark: SparkSession, path: str, schema, n_files: int, cluster_col: str | None = None
-) -> None:
-    """Rewrite an append-only parquet directory into ``n_files`` files
-    (hash-clustered on ``cluster_col`` when given, so the candidate
-    join's band pruning keeps working on the compacted layout), swapped
-    in by ``versioned.replace_dir``."""
-    recover(path)
-    if not os.path.isdir(path):
-        return
-    df = spark.read.schema(schema).parquet(path)
-    cols = [cluster_col] if cluster_col is not None else []
-    replace_dir(path, lambda tmp: df.repartition(n_files, *cols).write.parquet(tmp))
-
-
 def compact_state(spark: SparkSession, state_dir: str, *, n_files: int = 16) -> None:
-    """Compact the band index (clustered by band) and the document
-    store (clustered by doc_id). Pairs are a SINK, not probed state —
+    """Compact the band index (clustered by band, so the candidate
+    join's band pruning survives the rewrite) and the document store
+    (clustered by doc_id). Pairs are a SINK, not probed state —
     their file count never enters the per-batch critical path, so they
     are left to the downstream consumer."""
     compact_parquet(
@@ -162,14 +147,11 @@ def run_neardup_stream(
     """Continuous near-dup maintenance over a JSONL document stream.
     ``available_now=True`` drains existing files and stops (test/batch
     replay); ``False`` runs continuously (production)."""
-    stream = (
-        spark.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", 1)  # bounded micro-batches; availableNow drains them in sequence
-        .json(source_path)
-    )
-    return start_foreach_batch(
-        stream,
+    return start_state_loop(
+        spark,
+        source_path,
+        "doc_id LONG, text STRING",
+        state_dir,
         lambda df, bid: process_batch(df.sparkSession, df, state_dir, threshold, batch_id=bid),
-        os.path.join(state_dir, "_checkpoint"),
         available_now=available_now,
     )

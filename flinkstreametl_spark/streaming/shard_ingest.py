@@ -65,7 +65,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flinkstreametl_spark.streaming.versioned import read_or_empty, start_foreach_batch
+from flinkstreametl_spark.streaming.versioned import read_or_empty, start_state_loop
 
 ASSIGN_SUBDIR = "assignments"
 TOTALS_SUBDIR = "totals"
@@ -216,14 +216,11 @@ def run_shard_stream(
     available_now: bool = True,
 ):
     """Continuous shard assignment over a JSONL document stream."""
-    stream = (
-        spark.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .json(source_path)
-    )
-    return start_foreach_batch(
-        stream,
+    return start_state_loop(
+        spark,
+        source_path,
+        "doc_id LONG, text STRING",
+        state_dir,
         lambda df, bid: process_batch(df.sparkSession, df, state_dir, capacity=capacity),
-        os.path.join(state_dir, "_checkpoint"),
         available_now=available_now,
     )

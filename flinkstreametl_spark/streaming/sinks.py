@@ -123,11 +123,6 @@ def jdbc_upsert_writer(url: str, table: str, key_cols: list[str], order_cols: li
     return write
 
 
-def console_sink(df: DataFrame, n: int = 20) -> None:
-    """S5 — debug print (Main.java:134,146)."""
-    df.show(n, truncate=False)
-
-
 def with_observed_metrics(df: DataFrame, name: str = "pipeline_metrics") -> DataFrame:
     """S5 done the production way: instead of print() sinks, attach
     ``observe`` metrics (row count, null-enrichment count) that the
@@ -143,13 +138,6 @@ def with_observed_metrics(df: DataFrame, name: str = "pipeline_metrics") -> Data
         F.sum(F.when(F.col(df.columns[-1]).isNull(), 1).otherwise(0)).alias("n_null_last_col"),
         F.count(F.col(first)).alias("n_nonnull_first_col"),
     )
-
-
-def changelog_with_op(df: DataFrame, op: str = "+I") -> DataFrame:
-    """T2 — surface a retract-stream style op column (+I/-U/+U/-D);
-    append-only inputs are all +I, as in the reference where the retract
-    channel never fires for its insert-only flow."""
-    return df.withColumn("op", F.lit(op))
 
 
 def kafka_sink_options(brokers: str, topic: str, checkpoint_dir: str) -> dict[str, str]:

@@ -48,3 +48,28 @@ def torn_swap(monkeypatch):
         assert not os.path.exists(path), "the crash did not fall between the renames"
 
     return torn
+
+
+@pytest.fixture
+def torn_flip(monkeypatch):
+    """``with torn_flip(state_dir): <commit>`` crashes a version commit
+    at its ``CURRENT`` flip: ``os.replace`` in the swap module raises on
+    the rename onto ``state_dir/CURRENT``, after the new version has
+    been written."""
+
+    @contextlib.contextmanager
+    def torn(state_dir: str):
+        current = os.path.join(state_dir, versioned.CURRENT_FILE)
+        real = versioned.os.replace
+
+        def replace(src, dst):
+            if os.fspath(dst) == current:
+                raise RuntimeError("crash at flip")
+            real(src, dst)
+
+        with monkeypatch.context() as m:
+            m.setattr(versioned.os, "replace", replace)
+            with pytest.raises(RuntimeError, match="crash at flip"):
+                yield
+
+    return torn

@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from flinkstreametl_spark.operators.clustering import assign_to_centroids, kmeans_fit
 from flinkstreametl_spark.sources.parquet import load_table
 from flinkstreametl_spark.streaming.ann_ingest import (
-    CURRENT_FILE,
     build_index,
     load_centroids,
     load_meta,
@@ -24,8 +23,11 @@ from flinkstreametl_spark.streaming.ann_ingest import (
     refit_index,
     run_ann_stream,
     staleness,
-    _current_version,
-    _version_dir,
+)
+from flinkstreametl_spark.streaming.versioned import (
+    CURRENT_FILE,
+    current_version,
+    version_dir,
 )
 
 K, ITERS = 4, 2  # small fit so the whole suite stays in seconds
@@ -130,7 +132,7 @@ def test_refit_versions_and_growth_trigger(spark, sf_dir, tmp_path):
     arrivals = emb.filter(F.col("vec_id") >= cut)
     idx = str(tmp_path / "ann")
     build_index(spark, base, idx, k=K, n_iters=ITERS)
-    assert _current_version(idx) == 0
+    assert current_version(idx) == 0
     assert staleness(spark, idx) == 0.0
     assert not maybe_refit(spark, idx, growth=0.5)  # nothing arrived yet
 
@@ -138,10 +140,10 @@ def test_refit_versions_and_growth_trigger(spark, sf_dir, tmp_path):
     st = staleness(spark, idx)
     assert abs(st - (n - cut) / cut) < 1e-9
     assert not maybe_refit(spark, idx, growth=st + 0.1)  # under threshold
-    assert _current_version(idx) == 0
+    assert current_version(idx) == 0
 
     assert maybe_refit(spark, idx, growth=st - 0.1)
-    assert _current_version(idx) == 1
+    assert current_version(idx) == 1
     assert load_postings(spark, idx).count() == n
     assert load_meta(idx)["fit_n"] == n  # staleness resets against the new fit
     assert staleness(spark, idx) == 0.0
@@ -155,7 +157,7 @@ def test_refit_versions_and_growth_trigger(spark, sf_dir, tmp_path):
     assert _assignments(load_postings(spark, idx)) == _assignments(assign_df(emb))
 
 
-def test_crash_before_flip_keeps_old_version_live(spark, sf_dir, tmp_path):
+def test_crash_before_flip_keeps_old_version_live(spark, sf_dir, tmp_path, torn_flip):
     """A refit that dies after writing v1 but BEFORE the CURRENT flip
     must leave v0 fully live; the orphan v1 is swept by the next batch
     and a later refit lands cleanly as v2... (version numbers advance,
@@ -166,21 +168,20 @@ def test_crash_before_flip_keeps_old_version_live(spark, sf_dir, tmp_path):
     build_index(spark, base, idx, k=K, n_iters=ITERS)
     before = _assignments(load_postings(spark, idx))
 
-    # simulate the pre-flip crash: materialize v1 without flipping
-    from flinkstreametl_spark.streaming import ann_ingest as A
-
-    A._write_version(spark, load_postings(spark, idx).select("vec_id", "embedding"), idx, 1, K, ITERS)
-    assert os.path.isdir(_version_dir(idx, 1))
-    assert _current_version(idx) == 0  # pointer untouched -> v0 still live
+    # crash the refit at the flip: v1 is written, CURRENT never moves
+    with torn_flip(idx):
+        refit_index(spark, idx)
+    assert os.path.isdir(version_dir(idx, 1))
+    assert current_version(idx) == 0  # pointer untouched -> v0 still live
     assert _assignments(load_postings(spark, idx)) == before
 
     # next micro-batch sweeps the orphan and appends normally
     arrivals = emb.filter(F.col("vec_id") % 2 == 1)
     process_batch(spark, arrivals, idx, refit_growth=None)
-    assert not os.path.isdir(_version_dir(idx, 1))
+    assert not os.path.isdir(version_dir(idx, 1))
     assert load_postings(spark, idx).count() == emb.count()
 
     # a clean refit now commits (version bumps, pointer flips atomically)
     refit_index(spark, idx)
-    assert _current_version(idx) == 1
+    assert current_version(idx) == 1
     assert os.path.exists(os.path.join(idx, CURRENT_FILE))

@@ -8,6 +8,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from flinkstreametl_spark.sources.parquet import load_table
@@ -57,6 +58,27 @@ def test_rebaseline_accepts_the_new_normal(spark, sf_dir, tmp_path):
     rebaseline(spark, flood, state)
     r = process_batch(spark, _boilerplate(spark, 80), state, batch_id=2)
     assert not r["alert"], "after rebaseline the flood distribution is the norm"
+
+
+def test_failed_rebaseline_keeps_the_previous_baseline(spark, sf_dir, tmp_path):
+    """A rebaseline whose write job fails leaves the baseline it was
+    replacing in force: the next flood still alerts instead of being
+    silently reseeded as the new normal."""
+    state = str(tmp_path / "state")
+    process_batch(spark, _docs(spark, sf_dir, 0, 150), state, batch_id=0)
+
+    @F.udf("string")
+    def crash(text):
+        raise RuntimeError("scorer crashed")
+
+    # coalesce(1) keeps the histogram in one stage, so the UDF fails
+    # inside the write job itself, after an overwrite would have cleared
+    # the old baseline (a shuffle map stage fails before that).
+    failing = _boilerplate(spark).withColumn("text", crash("text")).coalesce(1)
+    with pytest.raises(Exception, match="scorer crashed"):
+        rebaseline(spark, failing, state)
+    r = process_batch(spark, _boilerplate(spark, 80), state, batch_id=1)
+    assert r["d_fp"] > 0 and r["alert"], "the failed rebaseline dropped the committed baseline"
 
 
 def test_drift_monitor_stream_end_to_end(spark, sf_dir, tmp_path):

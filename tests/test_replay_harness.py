@@ -70,10 +70,30 @@ def test_replay_sequence_is_written_once():
     assert _count_calls(calls, "awaitTermination") == 1, "one drain site (_drain)"
 
 
+def _uses(path: str, name: str) -> bool:
+    """``name`` is imported or called in ``path``, by any receiver."""
+    with open(path) as fh:
+        return any(
+            isinstance(n, ast.ImportFrom)
+            and any(a.name == name for a in n.names)
+            or isinstance(n, ast.Call)
+            and ast.unparse(n.func).rsplit(".", 1)[-1] == name
+            for n in ast.walk(ast.parse(fh.read()))
+        )
+
+
+def _sets_option(calls: list[ast.Call], option: str) -> bool:
+    return any(
+        any(isinstance(a, ast.Constant) and a.value == option for a in c.args)
+        or any(kw.arg == option for kw in c.keywords)
+        for c in calls
+    )
+
+
 def test_state_reaches_disk_through_versioned_only():
-    """Directory swaps and foreachBatch launches live in
-    streaming/versioned.py; the replay harness's writers already go
-    through its own ``_drain``."""
+    """Directory swaps, version commits, foreachBatch launches and the
+    one-file-per-batch source option live in streaming/versioned.py;
+    the replay harness's writers already go through its own ``_drain``."""
     pkg = os.path.dirname(os.path.dirname(SP.__file__))
     owner = os.path.join(pkg, "streaming", "versioned.py")
     exempt = {"foreachBatch": {SP.__file__}}
@@ -85,3 +105,8 @@ def test_state_reaches_disk_through_versioned_only():
         sites = {path for path in files if _count_calls(calls[path], name)}
         assert sites <= {owner} | exempt.get(name, set()), (name, sorted(sites))
     assert _count_calls(calls[owner], "foreachBatch") == 1, "one launcher (start_foreach_batch)"
+    for name in ("flip_current", "gc_orphans"):
+        sites = {path for path in files if _uses(path, name)}
+        assert sites <= {owner}, (name, sorted(sites))
+    sites = {path for path in files if _sets_option(calls[path], "maxFilesPerTrigger")}
+    assert sites == {owner}, ("maxFilesPerTrigger", sorted(sites))

@@ -31,6 +31,7 @@ from flinkstreametl_spark.session import get_spark  # noqa: E402
 from flinkstreametl_spark.sources.parquet import load_table  # noqa: E402
 from flinkstreametl_spark.streaming import ann_ingest as A  # noqa: E402
 from flinkstreametl_spark.streaming import index_ingest as I  # noqa: E402
+from flinkstreametl_spark.streaming.versioned import current_version  # noqa: E402
 
 WORK = "/tmp/throughput_index_sf1"
 N_BATCHES = 8
@@ -76,7 +77,7 @@ def main() -> None:
         "vec_id",
         lambda base: A.build_index(spark, base, ann_dir),
         lambda batch: A.process_batch(spark, batch, ann_dir),
-        lambda: A._current_version(ann_dir) or 0,
+        lambda: current_version(ann_dir) or 0,
     )
     n_postings = A.load_postings(spark, ann_dir).count()
 
@@ -88,7 +89,7 @@ def main() -> None:
         "doc_id",
         lambda base: I.build_index(spark, base, idx_dir),
         lambda batch: I.process_batch(spark, batch, idx_dir),
-        lambda: I._current_version(idx_dir) or 0,
+        lambda: current_version(idx_dir) or 0,
     )
     n_terms = I.load_postings(spark, idx_dir).count()
 
