@@ -395,10 +395,10 @@ def incremental_lsh_pairs(
     # 32c (VERDICT r14 item 1). localCheckpoint(eager=False) keeps the
     # single-evaluation guarantee (the checkpoint RDD is persisted
     # MEMORY_AND_DISK at first compute; block-level locking dedupes the
-    # two consumers) while deferring the final stage: measured with
-    # tools/job_count_probe.py, AQE's toRdd still executes the plan's
-    # upstream shuffle stages at construction, so lazy != zero jobs,
-    # but multibatch drops 11 -> 5 construction jobs vs the eager form.
+    # two consumers) while deferring the final stage: by construction-
+    # job count (tools/query_profile.py), AQE's toRdd still executes
+    # the plan's upstream shuffle stages at construction, so lazy !=
+    # zero jobs, but multibatch drops 11 -> 5 jobs vs the eager form.
     # NOT persist(): a persisted plan is matched by Spark's CacheManager
     # across query re-invocations, so a repeated bench run would reuse
     # the previous run's materialization — cross-run caching the bench

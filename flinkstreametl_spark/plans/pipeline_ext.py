@@ -1104,7 +1104,7 @@ def stratified_kfold_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # folds x langs rows — pinned so its four consumers (cell itself,
     # ftot, ltot, gtot) replay one materialization, not four corpus
-    # scans (tools/scan_audit.py flagged 4x documents unpinned).
+    # scans (tools/audit_dup_subtrees.py flagged 4x documents unpinned).
     cell = f.groupBy("fold", "lang").agg(F.count(F.lit(1)).alias("n_docs")).localCheckpoint()
     ftot = cell.groupBy("fold").agg(F.sum("n_docs").alias("fold_docs"))
     ltot = cell.groupBy("lang").agg(F.sum("n_docs").alias("lang_docs"))

@@ -2089,7 +2089,7 @@ def mann_kendall_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily reduction — the Pettitt plan shape exactly. The daily frame
     is pinned: THREE consumers (both pair-join sides + the tie pass)
     would otherwise each replay the events aggregation (caught by
-    tools/scan_audit.py in round 11)."""
+    tools/audit_dup_subtrees.py's repeated-scan count)."""
     daily = _daily(spark, sf_dir).select("event_type", "day", "s_fp").localCheckpoint()
     a, b = daily.alias("a"), daily.alias("b")
     sign = (

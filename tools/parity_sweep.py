@@ -14,38 +14,15 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import datetime
-import decimal
 import json
-import math
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def _norm(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-
-    def c(v):
-        if isinstance(v, decimal.Decimal):
-            return float(v)
-        if isinstance(v, (datetime.datetime, datetime.date)):
-            return str(v)
-        if isinstance(v, float) and math.isnan(v):
-            return "NaN"
-        return v
-
-    return sorted(
-        (tuple(c(r[i]) for i in order) for r in rows),
-        key=lambda r: tuple((x is None, str(type(x)), str(x)) for x in r),
-    )
+from flinkstreametl_spark.schemas import FIXTURE_TABLES  # noqa: E402
+from verify_contract import normalise  # noqa: E402
 
 
 def main() -> int:
@@ -96,7 +73,7 @@ def main() -> int:
     # directory delete each other's files (one cleanup aborts the
     # other's pending spill with a fatal IOException)
     con.sql(f"SET temp_directory='/tmp/duck_spill_{os.getpid()}'")
-    for t in TABLES:
+    for t in FIXTURE_TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf_dir}/{t}.parquet'")
 
     only = set(args.only.split(",")) if args.only else None
@@ -121,7 +98,7 @@ def main() -> int:
             if sorted(sdf.columns) != sorted(dcols):
                 rec["ok"] = False
                 rec["err"] = f"columns {sorted(sdf.columns)} != {sorted(dcols)}"
-            elif _norm(srows, sdf.columns) != _norm(drows, dcols):
+            elif normalise(srows, sdf.columns) != normalise(drows, dcols):
                 rec["ok"] = False
                 rec["err"] = "value mismatch"
             else:

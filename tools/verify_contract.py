@@ -19,13 +19,13 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from flinkstreametl_spark.schemas import FIXTURE_TABLES  # noqa: E402
 
 
-def _norm(rows, cols):
+def normalise(rows, cols):
+    """``rows`` in the form two results are compared in, order-insensitively:
+    columns in name order, decimals as floats, dates and timestamps as
+    text, NaN as a string, rows sorted."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
 
     def c(v):
@@ -73,7 +73,7 @@ def main() -> int:
         print(f"entry rows: {n_entry}")
 
     con = duckdb.connect()
-    for t in TABLES:
+    for t in FIXTURE_TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf_dir}/{t}.parquet'")
 
     fails: list[str] = []
@@ -84,7 +84,7 @@ def main() -> int:
             if name not in oracles:
                 continue
             res = con.sql(oracles[name])
-            # Column NAMES must match (the driver's schema check); _norm
+            # Column NAMES must match (the driver's schema check); normalise
             # only uses names to reorder values, so without this a
             # renamed output column would pass silently.
             if sorted(sdf.columns) != sorted(res.columns):
@@ -94,7 +94,7 @@ def main() -> int:
                     file=sys.stderr,
                 )
                 fails.append(name)
-            elif _norm(srows, sdf.columns) != _norm(res.fetchall(), res.columns):
+            elif normalise(srows, sdf.columns) != normalise(res.fetchall(), res.columns):
                 fails.append(name)
         except Exception as exc:  # a crash is a failure, keep going
             print(f"# {name}: {type(exc).__name__}: {exc}", file=sys.stderr)
