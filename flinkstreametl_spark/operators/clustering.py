@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flinkstreametl_spark.session import pin
+
 #: Fixed-point scale (2^40) — the repo-wide determinism convention for
 #: float folds that must hash-match a DuckDB oracle.
 KM_FP = 1099511627776.0
@@ -84,11 +86,8 @@ def kmeans_fit(emb: DataFrame, k: int = DEFAULT_K, n_iters: int = DEFAULT_ITERS)
     """
     import numpy as np
 
-    # Iterative consumer: pin the input once (Spark's own KMeans caches
-    # its input the same way) — without this every Lloyd iteration
-    # re-reads and re-decodes the embedding parquet (measured: the fit
-    # dominated the recall-curve bench entry 6 scans deep).
-    emb = emb.localCheckpoint()
+    # Every Lloyd iteration reads the input (Spark's KMeans caches it too).
+    emb = pin(emb)
     init_rows = sorted(
         emb.orderBy("vec_id").limit(k).select("vec_id", "embedding").collect(),
         key=lambda r: r.vec_id,

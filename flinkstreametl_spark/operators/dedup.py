@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from flinkstreametl_spark.operators.text import distinct_tokens, fingerprint
+from flinkstreametl_spark.session import pin
 from flinkstreametl_spark.sources.parquet import ensure_parallelism
 
 # 8 hashes in 4 bands of 2: at the 0.6 Jaccard threshold the candidate
@@ -147,15 +148,8 @@ def minhash_lsh_pairs(
             .filter(F.col("_bn") <= max_bucket_size)
             .drop("_bn")
         )
-    # Pin the banded signatures and the token sets before their
-    # self-join fan-out (r14 opt): each is consumed by TWO join sides,
-    # and Spark plans self-joins as two full subtrees — unpinned, the
-    # tokenize + 8-md5s-per-token signature stage ran twice and the
-    # tokenizer twice more under the Jaccard joins (measured in the
-    # r14 before-plan: the band subtree appears verbatim as both build
-    # sides). Both frames are doc-scale (4 band rows / 1 token array
-    # per doc), far cheaper to hold than to recompute at any scale.
-    bands = bands.localCheckpoint()
+    # Both self-join sides read the bands and the token sets (doc-scale).
+    bands = pin(bands)
     b1 = bands.select(F.col(id_col).alias("doc_a"), "band", "band_key")
     b2 = bands.select(F.col(id_col).alias("doc_b"), "band", "band_key")
     cand = (
@@ -164,7 +158,7 @@ def minhash_lsh_pairs(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    sets = token_sets(docs, id_col, text_col).localCheckpoint()
+    sets = pin(token_sets(docs, id_col, text_col))
     sa = sets.select(F.col(id_col).alias("doc_a"), F.col("toks").alias("toks_a"))
     sb = sets.select(F.col(id_col).alias("doc_b"), F.col("toks").alias("toks_b"))
     inter = F.size(F.array_intersect("toks_a", "toks_b"))
@@ -192,31 +186,24 @@ def neardup_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
     pushes labels across edges and takes the per-node min; converges in
     O(graph diameter) rounds (near-dup components are dense, so
     typically 2-4). Each round is one shuffle join + one aggregate;
-    ``localCheckpoint`` cuts lineage so round N's plan doesn't replay
+    ``pin`` cuts lineage so round N's plan doesn't replay
     rounds 1..N-1. This is the simple 100 TB-safe formulation; the
     large-star/small-star variant halves rounds on high-diameter graphs
     but near-dup graphs are not that.
     """
     edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    # Pin the symmetric edge list BEFORE the loop: `pairs` is usually a
-    # lazy pair-generation pipeline (banded LSH join + Jaccard verify),
-    # and without this every propagation round re-executed it from the
-    # scan up — at sf1 that was ~12s of pair generation x rounds x the
-    # two lineage uses, dominating the 167s query (round 6; the fix
-    # cuts the CC consumers to pair-gen + rounds x one cheap join).
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
-    labels = (
+    # Every round reads the edge list; unpinned, each re-runs pair generation.
+    sym = pin(edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))))
+    labels = pin(
         sym.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
-    ).localCheckpoint()
+    )
     for _ in range(max_iterations):
         nbr = sym.join(labels, sym.src == labels.id).select(
             F.col("dst").alias("id"), F.col("label")
         )
-        new_labels = (
+        new_labels = pin(
             nbr.union(labels).groupBy("id").agg(F.min("label").alias("label"))
-        ).localCheckpoint()
+        )
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), "id")
@@ -320,11 +307,8 @@ def simhash_near_pairs(
             .filter(F.col("_bn") <= max_bucket_size)
             .drop("_bn")
         )
-    # Pin before the self-join fan-out (r14 opt): the two join sides
-    # are planned as two full subtrees, so an unpinned banded frame
-    # re-ran the whole per-token-md5 SimHash fold twice (the
-    # minhash_lsh_pairs rationale; banded is n_bands small rows/doc).
-    banded = banded.localCheckpoint()
+    # Both self-join sides read the banded SimHash (n_bands rows/doc).
+    banded = pin(banded)
     a = banded.select(
         F.col(id_col).alias("doc_a"), F.col("simhash").alias("sh_a"), "band", "band_bits"
     )
@@ -386,27 +370,9 @@ def incremental_lsh_pairs(
     if dedupe_redelivered:
         seen_ids = old_bands.select(id_col).distinct()
         new_docs = new_docs.join(seen_ids, id_col, "left_anti")
-    # Shared LAZILY (r15 opt): the new-doc signatures feed BOTH the
-    # probe side of the candidate join and the updated index (whose
-    # capped form is the other join side). r14 pinned this with an
-    # EAGER localCheckpoint, which stacked one fixed-cost job per
-    # replay batch on a query whose whole action is sub-second — the
-    # driver measured incremental_minhash_multibatch 2.70 -> 7.03 s at
-    # 32c (VERDICT r14 item 1). localCheckpoint(eager=False) keeps the
-    # single-evaluation guarantee (the checkpoint RDD is persisted
-    # MEMORY_AND_DISK at first compute; block-level locking dedupes the
-    # two consumers) while deferring the final stage: by construction-
-    # job count (tools/query_profile.py), AQE's toRdd still executes
-    # the plan's upstream shuffle stages at construction, so lazy !=
-    # zero jobs, but multibatch drops 11 -> 5 jobs vs the eager form.
-    # NOT persist(): a persisted plan is matched by Spark's CacheManager
-    # across query re-invocations, so a repeated bench run would reuse
-    # the previous run's materialization — cross-run caching the bench
-    # must not measure. The lazy checkpoint creates a fresh RDD per
-    # invocation: every run recomputes from the parquet inputs.
-    new_bands = lsh_band_keys(
-        new_docs, id_col, rows_per_band, text_col, num_hashes
-    ).localCheckpoint(eager=False)
+    # Both the probe side and the updated index read the new signatures;
+    # lazy, as an eager pin costs one job per replay batch.
+    new_bands = pin(lsh_band_keys(new_docs, id_col, rows_per_band, text_col, num_hashes), eager=False)
     updated = old_bands.unionByName(new_bands)
     capped = updated
     if max_bucket_size is not None:
@@ -427,14 +393,9 @@ def incremental_lsh_pairs(
         )
         .distinct()
     )
-    # Shared lazily for the same reason as new_bands above: the Jaccard
-    # verify consumes token sets on BOTH pair sides. The r14 EAGER
-    # localCheckpoint additionally materialized the FULL seen corpus's
-    # token arrays per replay batch regardless of need — roughly
-    # input-sized state, the §5 hazard VERDICT r14 item 2 flagged. The
-    # lazy checkpoint stores MEMORY_AND_DISK (spillable) and only what
-    # the verify join actually scans, when it scans it.
-    sets = token_sets(all_docs, id_col, text_col).localCheckpoint(eager=False)
+    # Both pair sides read the token sets; lazy, so only the scanned part
+    # of the whole seen corpus is materialized.
+    sets = pin(token_sets(all_docs, id_col, text_col), eager=False)
     sa = sets.select(F.col(id_col).alias("doc_a"), F.col("toks").alias("toks_a"))
     sb = sets.select(F.col(id_col).alias("doc_b"), F.col("toks").alias("toks_b"))
     inter = F.size(F.array_intersect("toks_a", "toks_b"))

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from flinkstreametl_spark.session import pin
+
 DEFAULT_ORD_BASE = 10_000_000
 
 PR_SCALE = 10**9
@@ -104,9 +106,9 @@ def triangle_stats(edges: DataFrame, *, ord_base: int = DEFAULT_ORD_BASE) -> Dat
     hard executor-memory ceiling a 100 TB edge list blows through,
     which is exactly the skew-vs-salting lesson in docs/SCALE.md —
     hint only parameter-sized sides.) The oriented list is
-    localCheckpoint-pinned for its three consumers."""
-    deg = degrees(edges).localCheckpoint()
-    oriented = degree_orient(edges, deg, ord_base=ord_base).localCheckpoint()
+    pinned for its three consumers."""
+    deg = pin(degrees(edges))
+    oriented = pin(degree_orient(edges, deg, ord_base=ord_base))
 
     o1, o2 = oriented.alias("o1"), oriented.alias("o2")
     wedges = o1.join(
@@ -168,11 +170,11 @@ def pagerank(
     sums of the same integer terms, so segmentation cannot change the
     result.
 
-    The grouped adjacency is built ONCE and localCheckpoint-pinned:
+    The grouped adjacency is built ONCE and pinned:
     without the pin every iteration would replay the edge-list
     derivation from the scan up (the lazy-reuse-in-loops trap that
     cost 6x on the connected-components loop — see neardup_clusters).
-    Measured caveat: localCheckpoint does NOT carry outputPartitioning
+    Measured caveat: the pin does NOT carry outputPartitioning
     into the planner, so the pinned adjacency is re-exchanged each
     iteration (now as |V|-scale grouped rows); on a cluster even that
     goes away by writing the grouped adjacency BUCKETED on src (the
@@ -193,13 +195,9 @@ def pagerank(
     out-degree >= 1: no dangling-mass redistribution term is needed
     and the node set is closed under the update.
     """
-    # The EDGE list is pinned (r14 opt — formerly the 2x-wider sym was):
-    # it is the caller's expensive derivation (for pagerank_copurchase
-    # the per-order pair generation + distinct), and every downstream
-    # consumer reads it through the narrow symmetrizing union, so
-    # pinning the half-size frame materializes half the bytes for the
-    # same recompute protection.
-    edges = edges.select("u", "v").localCheckpoint()
+    # Every consumer reads the caller's edge derivation through the
+    # symmetrizing union; pinning the half-size side holds half the bytes.
+    edges = pin(edges.select("u", "v"))
     sym = edges.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
         edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     )
@@ -212,13 +210,12 @@ def pagerank(
     # `first(deg)` is constant within a group.
     wdeg = Window.partitionBy("src")
     n_seg = F.greatest(F.lit(1), F.ceil(F.col("deg") / F.lit(max_seg_width)))
-    adj = (
+    adj = pin(
         sym.withColumn("deg", F.count(F.lit(1)).over(wdeg))
         .withColumn("seg", F.pmod(F.hash("dst"), n_seg))
         .groupBy("src", "seg")
         .agg(F.collect_list("dst").alias("nbrs"), F.first("deg").alias("deg"))
         .select("src", "nbrs", "deg")
-        .localCheckpoint()
     )
     base = scale * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN
     # Initial ranks: every node once (each src holds >= 1 adjacency
@@ -259,18 +256,16 @@ def pagerank_weighted(
     at PR_SCALE 10^9 that holds to |V|·w_max ~ 9×10^9 (e.g. 10^8 nodes
     with weights to ~90); past that drop ``scale`` a decade or widen to
     DECIMAL(38,0), shape unchanged."""
-    sym = (
+    sym = pin(
         edges_w.select(F.col("u").alias("src"), F.col("v").alias("dst"), "w")
         .unionAll(edges_w.select(F.col("v").alias("src"), F.col("u").alias("dst"), "w"))
-        .localCheckpoint()
     )
-    stats = (
+    stats = pin(
         sym.groupBy("src")
         .agg(F.count(F.lit(1)).alias("ndeg"), F.sum("w").alias("sw"))
-        .localCheckpoint()
     )
     n_seg = F.greatest(F.lit(1), F.ceil(F.col("ndeg") / F.lit(max_seg_width)))
-    adj = (
+    adj = pin(
         sym.join(stats, "src")
         .withColumn("seg", F.pmod(F.hash("dst"), n_seg))
         .groupBy("src", "seg")
@@ -279,7 +274,6 @@ def pagerank_weighted(
             F.first("sw").alias("sw"),
         )
         .select("src", "nbrs", "sw")
-        .localCheckpoint()
     )
     base = scale * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN
     ranks = stats.select(F.col("src").alias("node"), F.lit(scale).cast("long").alias("r"))
@@ -322,20 +316,18 @@ def pagerank_personalized(
     pinned adjacency as ``pagerank`` — see that docstring for the
     scale analysis; per-iteration cost is identical.
     """
-    sym = (
+    sym = pin(
         edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
         .unionAll(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint()
     )
-    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).localCheckpoint()
+    deg = pin(sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
     n_seg = F.greatest(F.lit(1), F.ceil(F.col("deg") / F.lit(max_seg_width)))
-    adj = (
+    adj = pin(
         sym.join(deg, "src")
         .withColumn("seg", F.pmod(F.hash("dst"), n_seg))
         .groupBy("src", "seg")
         .agg(F.collect_list("dst").alias("nbrs"), F.first("deg").alias("deg"))
         .select("src", "nbrs", "deg")
-        .localCheckpoint()
     )
     base = scale * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN
     seed_marks = seeds.select(F.col("node").alias("dst"), F.lit(1).alias("is_seed"))

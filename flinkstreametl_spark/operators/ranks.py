@@ -29,6 +29,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from flinkstreametl_spark.session import pin
+
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
 
@@ -38,7 +40,7 @@ def _two_phase(df: DataFrame, order_cols: list, summary: Column):
     partitioning, and collect the per-partition ``summary`` aggregate
     into exclusive prefix offsets.
 
-    The repartitioned input is localCheckpoint-pinned BEFORE the
+    The repartitioned input is pinned BEFORE the
     collect: the range exchange samples boundaries per job, so the
     summary job and downstream consumers must see one frozen
     partitioning, not two independently sampled ones.
@@ -59,10 +61,9 @@ def _two_phase(df: DataFrame, order_cols: list, summary: Column):
         nparts = max(int(spark.conf.get("spark.sql.shuffle.partitions")), 1)
     except (TypeError, ValueError):
         nparts = max(int(spark.sparkContext.defaultParallelism), 1)
-    keyed = (
+    keyed = pin(
         df.repartitionByRange(nparts, *exprs)
         .withColumn("_tp_pid", F.spark_partition_id())
-        .localCheckpoint()
     )
     rows = sorted(
         (r["_tp_pid"], r["s"])
@@ -80,7 +81,7 @@ def _two_phase(df: DataFrame, order_cols: list, summary: Column):
 
 
 def with_global_rank(df: DataFrame, order_cols: list, out_col: str = "_rn") -> DataFrame:
-    """Return ``df`` (localCheckpoint-pinned) plus a 1-based exact
+    """Return ``df`` (pinned) plus a 1-based exact
     global ``row_number`` over ``order_cols`` (names or Column sort
     expressions, e.g. ``F.col("x").desc()``) named ``out_col``,
     computed without an unpartitioned window."""
@@ -185,11 +186,11 @@ def prefix_sum_small(
     ``ValueError``. Under uniqueness the triangle join's RANGE-style
     tie semantics coincide with a ROWS frame and identical rows cannot
     collapse through the groupBy, so the window-equivalence claim
-    holds unconditionally. The input is localCheckpoint-pinned first:
+    holds unconditionally. The input is pinned first:
     the guard aggregate and the join's two branches then all read one
     materialized (parameter-sized) frame instead of recomputing the
     upstream lineage three times."""
-    df = df.localCheckpoint()
+    df = pin(df)
     stats = df.agg(
         F.count(F.lit(1)).alias("n"), F.count_distinct(F.col(order_col)).alias("d")
     ).collect()[0]

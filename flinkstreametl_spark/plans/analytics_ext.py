@@ -13,6 +13,7 @@ from flinkstreametl_spark.functions.exact import dbl, dec, dsum, sql_dbl, sql_ds
 from flinkstreametl_spark.operators.text import tokens
 from flinkstreametl_spark.operators.windows import asof_join, asof_join_forward, epoch_micros, sessionize
 from flinkstreametl_spark.plans.registry import register
+from flinkstreametl_spark.session import pin
 from flinkstreametl_spark.sources.parquet import load_table
 
 _REV_SQL = "CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(6,4)))"
@@ -1380,9 +1381,9 @@ def session_gap_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     ev = events.select("user_id", epoch_micros(events, "ts").alias("us"))
     w = Window.partitionBy("user_id").orderBy("us")
-    gaps = ev.select(
+    gaps = pin(ev.select(
         "user_id", (F.col("us") - F.lag("us").over(w)).alias("gap")
-    ).localCheckpoint()  # one lag pass; all three thresholds reuse it
+    ))  # one lag pass; all three thresholds reuse it
     users = ev.agg(
         F.count_distinct("user_id").alias("n_users"), F.count(F.lit(1)).alias("n_events")
     )
@@ -1586,21 +1587,19 @@ def markov_stationary_event_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("nxt").isNotNull())
     tc = seq.groupBy("cur", "nxt").agg(F.count(F.lit(1)).alias("n"))
     rowsum = tc.groupBy("cur").agg(F.sum("n").alias("rn"))
-    pm = (
+    pm = pin(
         tc.join(rowsum, "cur")
         .select("cur", "nxt", F.expr("n * 1000000 div rn").alias("p_ppm"))
-        .localCheckpoint()
     )
     types = events.select(F.col("event_type").alias("t")).distinct()
     nt = types.agg(F.count(F.lit(1)).alias("k"))
-    pi = types.crossJoin(F.broadcast(nt)).select("t", F.expr("1000000 div k").alias("pi")).localCheckpoint()
+    pi = pin(types.crossJoin(F.broadcast(nt)).select("t", F.expr("1000000 div k").alias("pi")))
     for _ in range(_MARKOV_ITERS):
-        pi = (
+        pi = pin(
             pi.join(pm, pi["t"] == pm["cur"])
             .groupBy(F.col("nxt").alias("t2"))
             .agg(F.expr("CAST(SUM(pi * p_ppm) div 1000000 AS BIGINT)").alias("pi"))
             .withColumnRenamed("t2", "t")
-            .localCheckpoint()
         )
     emp = events.groupBy(F.col("event_type").alias("t")).agg(F.count(F.lit(1)).alias("c"))
     tot = emp.agg(F.sum("c").alias("s"))

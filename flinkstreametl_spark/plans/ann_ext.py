@@ -21,6 +21,7 @@ from flinkstreametl_spark.operators import similarity as S
 from flinkstreametl_spark.operators.clustering import kmeans_fit
 from flinkstreametl_spark.plans.ml_ext import _kmeans_ctes
 from flinkstreametl_spark.plans.registry import register
+from flinkstreametl_spark.session import pin
 from flinkstreametl_spark.sources.parquet import ensure_parallelism, load_table
 
 _K = 8  # coarse clusters (the suite's standing IVF shape)
@@ -176,9 +177,9 @@ def ann_index_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     both fits, the membership union, and the exact truth; centroids are
     two k-row parameter tables (broadcast); candidates are scored once
     per index state with probe ranks attached, and every nprobe slice
-    re-ranks the same localCheckpoint-pinned scored set. Driver traffic
+    re-ranks the same pinned scored set. Driver traffic
     = k centroids per Lloyd iteration, twice."""
-    emb = ensure_parallelism(load_table(spark, sf_dir, "embeddings")).localCheckpoint()
+    emb = pin(ensure_parallelism(load_table(spark, sf_dir, "embeddings")))
     base = emb.filter(~F.expr(_ARRIVALS))
     stale_mat, assign_stale = kmeans_fit(base, k=_K, n_iters=_ITERS)
     refit_mat, assign_refit = kmeans_fit(emb, k=_K, n_iters=_ITERS)
@@ -214,10 +215,11 @@ def ann_index_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("prb", F.row_number().over(probe_w))
         .select("index_state", "query_id", "q_emb", "cluster", "prb")
     )
-    # r14 opt: per-vector self-norms precomputed once per side (see
+    # Per-vector self-norms precomputed once per side (see
     # embedding_neardup_pairs — same integers, bit-identical cosine).
-    # panel is states×queries×clusters rows; must be the build side; Catalyst misestimates the windowed crossJoin
-    cscore = (
+    # panel is states×queries×clusters rows; must be the build side; Catalyst misestimates the windowed crossJoin.
+    # Scored once; every nprobe slice reuses it.
+    cscore = pin(
         F.broadcast(ranks.withColumn("qq", S.self_norm_fp_col(F.col("q_emb"))))
         .join(
             members.select(
@@ -237,7 +239,6 @@ def ann_index_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 S.dot_fp_col(F.col("q_emb"), F.col("c_emb")), F.col("qq"), F.col("cc")
             ).alias("cosine"),
         )
-        .localCheckpoint()  # scored once; every nprobe slice reuses it
     )
     exact = S.knn_fast(emb, n_queries=_NQ, k=_QK).select("query_id", "neighbor_id")
     np_df = spark.range(1).select(
@@ -342,7 +343,7 @@ def mrl_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dim, query) top-k window. Nothing rescans per width; nothing
     leaves fixed point, so the DuckDB oracle (prefix filter on the
     exploded positions) matches bit-for-bit."""
-    emb = ensure_parallelism(load_table(spark, sf_dir, "embeddings")).localCheckpoint()
+    emb = pin(ensure_parallelism(load_table(spark, sf_dir, "embeddings")))
     # r14 opt: per-vector PREFIX self-norms (one per audited width)
     # precomputed once per side; each (pair, width) folds only the
     # sliced dot — same integers, bit-identical cosine.
@@ -385,11 +386,11 @@ def mrl_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("dc"),
     ).select("query_id", "neighbor_id", F.col("dc.dim").alias("dim"), F.col("dc.cosine").alias("cosine"))
     w = Window.partitionBy("dim", "query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    topd = (
+    # Truth and every width slice reuse it.
+    topd = pin(
         stacked.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= _QK)
         .select("dim", "query_id", "neighbor_id")
-        .localCheckpoint()  # truth and every width slice reuse it
     )
     full_top = topd.filter(F.col("dim") == _MRL_DIMS[-1]).select("query_id", "neighbor_id")
     # audit tail: full_top is panel×K rows; broadcast, never SortMergeJoin
@@ -496,10 +497,10 @@ def mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("cosine"),
     )
     w = Window.partitionBy("va").orderBy(F.col("cosine").desc(), "vb")
-    knn = (
+    # Bounded |V| x k edge list; probed twice below.
+    knn = pin(
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= _MKNN_K)
-        .localCheckpoint()  # bounded |V| x k edge list; probed twice below
     )
     rev = knn.select(
         F.col("va").alias("vb"), F.col("vb").alias("va"), F.col("rn").alias("rk_ba")

@@ -55,10 +55,8 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(X.tokens("text")).alias("term"))
-    # Pinned (r14 opt): tf feeds BOTH the df aggregate and the scoring
-    # join — unpinned, the tokenize + tf subtree ran twice (the bm25
-    # inverted-index pin, applied here).
-    tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf")).localCheckpoint()
+    # tf feeds both the df aggregate and the scoring join.
+    tf = pin(tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf")))
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
@@ -173,9 +171,8 @@ def passage_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.sequence(F.lit(0), n_win - 1)).alias("wid"),
     )
     wtext = F.array_join(F.slice(F.col("toks"), F.col("wid") * _WIN + 1, _WIN), " ")
-    h = w.select("doc_id", F.md5(wtext.cast("binary")).alias("wh")).localCheckpoint()
-    # ^ r14 opt: feeds the distinct-doc count AND the join-back side —
-    # unpinned, the window tokenize/md5 map stage ran twice.
+    # h feeds the distinct-doc count and the join-back side.
+    h = pin(w.select("doc_id", F.md5(wtext.cast("binary")).alias("wh")))
     d = h.groupBy("wh").agg(F.count_distinct("doc_id").alias("nd"))
     per_doc = (
         h.join(d, "wh")
@@ -325,9 +322,8 @@ def embedding_srp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         lzero,
         lambda acc, x: acc + x,
     )
-    # Pinned (r14 opt): base feeds the sketch chain AND both verify
-    # sides — unpinned, the quantize/norm folds ran once per consumer.
-    base = emb.select("vec_id", "embedding", vfp.alias("vfp"), sq.alias("sq")).localCheckpoint()
+    # base feeds the sketch chain and both verify sides.
+    base = pin(emb.select("vec_id", "embedding", vfp.alias("vfp"), sq.alias("sq")))
 
     weights = _srp_weight_rows()
     n_bands = _SRP_H // _SRP_BAND_BITS
@@ -345,11 +341,11 @@ def embedding_srp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.explode(F.array(*band_structs)).alias("bb")
     ).select("vec_id", F.col("bb.band").alias("band"), F.col("bb.band_val").alias("band_val"))
     wcap = Window.partitionBy("band", "band_val").orderBy("vec_id")
-    bands = (
+    # Both self-join sides read it.
+    bands = pin(
         bands.withColumn("bidx", F.row_number().over(wcap))
         .filter(F.col("bidx") <= _SRP_BUCKET_CAP)
         .drop("bidx")
-        .localCheckpoint()  # r14 opt: both self-join sides re-ran the 16 sign-dot folds
     )
 
     a, b = bands.alias("a"), bands.alias("b")
@@ -418,10 +414,13 @@ def bigram_familiarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the token array BEFORE the n-gram lambda (the HOF
     # subexpression-duplication pitfall, docs/SCALE.md: inline ngrams
     # re-ran the split per element — measured 10s -> 1s at sf0.1), and
-    # guard the <2-token case (sequence(1, 0) DESCENDS).
-    grams = docs.select("doc_id", X.tokens("text").alias("toks")).select(
-        "doc_id", F.explode(X.ngrams_from_tokens(F.col("toks"), 2)).alias("gram")
-    ).localCheckpoint()  # r14 opt: feeds the count AND the score join — unpinned, tokenize+explode ran twice
+    # guard the <2-token case (sequence(1, 0) DESCENDS). The grams feed
+    # both the count and the score join.
+    grams = pin(
+        docs.select("doc_id", X.tokens("text").alias("toks")).select(
+            "doc_id", F.explode(X.ngrams_from_tokens(F.col("toks"), 2)).alias("gram")
+        )
+    )
     counts = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("c"))
     return (
         grams.join(counts, "gram")
@@ -492,23 +491,14 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("p")
     ).select("p.src", "p.dst")
-    # The weighted edge list and node set are pinned ONCE: both are
-    # consumed inside the iteration loop, and a lazy frame there
-    # replays the document tokenize + pair explode from the scan up
-    # PER CONSUMER PER ITERATION (measured: 22 parquet scans of
-    # documents in the unpinned plan — the lazy-reuse-in-loops trap,
-    # same fix as neardup_clusters / pagerank). Both grains are
-    # vocabulary-bounded, so the pin is parameter-scale, and
-    # document-scale data now truly appears only in the two map-side
-    # stages before the pin.
-    edges = pairs.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w")).localCheckpoint()
+    # Every iteration reads the edge list and node set (vocabulary-scale).
+    edges = pin(pairs.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w")))
     out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
-    ee = edges.join(out_w, "src").localCheckpoint()
-    nodes = (
+    ee = pin(edges.join(out_w, "src"))
+    nodes = pin(
         edges.select(F.col("src").alias("token"))
         .union(edges.select(F.col("dst").alias("token")))
         .distinct()
-        .localCheckpoint()
     )
     rank = nodes.select("token", F.lit(1000000).cast("long").alias("score"))
     for _ in range(5):
@@ -651,7 +641,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Distributed shape: the corpus-sized work (token explode -> word
     counts) happens ONCE; the iteration state is the vocabulary-sized
-    (sequence, count) table, localCheckpoint-ed per step so plan depth
+    (sequence, count) table, pinned per step so plan depth
     stays flat. Symbol sequences are bracket-wrapped strings
     ("[t][h][e]") — a merge is then a plain string replace of
     "[l][r]" with "[lr]", which both engines apply left-to-right
@@ -666,7 +656,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("wc"))
     )
-    seqs = wc.select(F.regexp_replace("w", "(.)", "[$1]").alias("seq"), "wc").localCheckpoint()
+    seqs = pin(wc.select(F.regexp_replace("w", "(.)", "[$1]").alias("seq"), "wc"))
     toks = F.regexp_extract_all(F.col("seq"), F.lit(r"\[([^\]]*)\]"), 1)
     merges: list[tuple[int, str, str, str, int]] = []
     for step in range(1, _BPE_STEPS + 1):
@@ -691,9 +681,9 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
             break
         l, r = best["l"], best["r"]
         merges.append((step, l, r, l + r, best["cnt"]))
-        seqs = seqs.select(
+        seqs = pin(seqs.select(
             F.replace(F.col("seq"), F.lit(f"[{l}][{r}]"), F.lit(f"[{l}{r}]")).alias("seq"), "wc"
-        ).localCheckpoint()
+        ))
     return spark.createDataFrame(
         merges, schema="step long, lhs string, rhs string, merged string, pair_count long"
     )
@@ -788,7 +778,7 @@ def _bpe_word_symbol_map(docs: DataFrame) -> DataFrame:
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("wc"))
     )
-    seqs = wc.select("w", F.regexp_replace("w", "(.)", "[$1]").alias("seq"), "wc").localCheckpoint()
+    seqs = pin(wc.select("w", F.regexp_replace("w", "(.)", "[$1]").alias("seq"), "wc"))
     toks = F.regexp_extract_all(F.col("seq"), F.lit(r"\[([^\]]*)\]"), 1)
     for _ in range(_BPE_STEPS):
         pairs = seqs.select(
@@ -811,9 +801,9 @@ def _bpe_word_symbol_map(docs: DataFrame) -> DataFrame:
         if best is None:
             break
         l, r = best["l"], best["r"]
-        seqs = seqs.select(
+        seqs = pin(seqs.select(
             "w", F.replace(F.col("seq"), F.lit(f"[{l}][{r}]"), F.lit(f"[{l}{r}]")).alias("seq"), "wc"
-        ).localCheckpoint()
+        ))
     return seqs.select("w", F.size(toks).cast("long").alias("n_syms"))
 
 
@@ -1044,7 +1034,7 @@ def domain_signature_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB width guard, same reasoning as simhash's 60-bit cap).
 
     Plan: ONE token explode feeds the (source, term) grain, which is
-    localCheckpoint-pinned and re-aggregated for the per-source and
+    pinned and re-aggregated for the per-source and
     per-term totals (three consumers of one lazy frame would otherwise
     re-run the explode three times — the lazy-reuse trap). The source
     totals and the global total are parameter-sized and broadcast; the
@@ -1052,11 +1042,10 @@ def domain_signature_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     join. Ranking is a per-source group-limit window (Spark pushes the
     rk <= 5 limit below the sort)."""
     docs = load_table(spark, sf_dir, "documents")
-    st = (
+    st = pin(
         docs.select("source", F.explode(X.tokens("text")).alias("term"))
         .groupBy("source", "term")
         .agg(F.count(F.lit(1)).alias("n_source"))
-        .localCheckpoint()
     )
     src_tot = st.groupBy("source").agg(F.sum("n_source").alias("tot_s"))
     term_tot = st.groupBy("term").agg(F.sum("n_source").alias("cnt_all"))
@@ -1173,14 +1162,12 @@ def containment_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh_arr = F.array_distinct(
         F.expr("transform(sequence(0, size(toks)-3), i -> concat_ws('_', toks[i], toks[i+1], toks[i+2]))")
     )
-    sets = base.select("doc_id", sh_arr.alias("sh")).localCheckpoint()
+    sets = pin(base.select("doc_id", sh_arr.alias("sh")))
 
     ds = sets.select("doc_id", F.explode("sh").alias("s"))
     dfc = ds.groupBy("s").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    # Pinned (r14 opt): dsd feeds BOTH the prefix derivation and the
-    # inverted index — unpinned, the df join (and the explode under it)
-    # ran once per consumer.
-    dsd = ds.join(dfc, "s").localCheckpoint()
+    # dsd feeds both the prefix derivation and the inverted index.
+    dsd = pin(ds.join(dfc, "s"))
     sz = sets.select("doc_id", F.size("sh").cast("long").alias("n"))
     w = Window.partitionBy("doc_id").orderBy("df", "s")
     t_of_n = F.expr(f"(n * {_CONT_TAU_NUM} + {_CONT_TAU_DEN} - 1) div {_CONT_TAU_DEN}")
@@ -1294,7 +1281,7 @@ def trigram_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(tri).alias("gram"),
         )
     )
-    g = base.distinct().localCheckpoint()  # one (batch, gram) universe; probed twice
+    g = pin(base.distinct())  # one (batch, gram) universe; probed twice
     firstb = g.groupBy("gram").agg(F.min("batch").alias("fb"))
     return (
         g.join(firstb, "gram")
@@ -1316,6 +1303,7 @@ def trigram_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # EXACTLY the candidates the dedup pipeline emits.
 from flinkstreametl_spark.operators import dedup as _D  # noqa: E402
 from flinkstreametl_spark.plans.llm import _MINHASH_ORACLE as _CONT_PAIRS  # noqa: E402
+from flinkstreametl_spark.session import pin
 
 _CONT_FP = 1_000_000
 
@@ -1361,16 +1349,16 @@ def neardup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-split guard before the per-token hash chain (measured
     # 3.4s -> 2.4s at sf0.1), see passage_dedup_stats.
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    pairs = _D.minhash_lsh_pairs(docs, threshold=0.6).select("doc_a", "doc_b").localCheckpoint()
+    pairs = pin(_D.minhash_lsh_pairs(docs, threshold=0.6).select("doc_a", "doc_b"))
     involved = (
         pairs.select(F.col("doc_a").alias("doc_id"))
         .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    toksets = (
+    # Sizes AND the exploded intersection probe.
+    toksets = pin(
         docs.join(involved, "doc_id", "left_semi")
         .select("doc_id", F.array_distinct(X.tokens("text")).alias("tset"))
-        .localCheckpoint()  # sizes AND the exploded intersection probe
     )
     sizes = toksets.select("doc_id", F.size("tset").cast("long").alias("sz"))
     tok = toksets.select("doc_id", F.explode("tset").alias("term"))

@@ -686,11 +686,11 @@ def fuzzy_dup_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lower("p_name").alias("nm"),
     ).withColumn("blk", F.substring_index("nm", " ", -1))
     wb = Window.partitionBy("p_brand", "blk")
-    kept = (
+    # Both self-join sides read it.
+    kept = pin(
         s.withColumn("_bn", F.count(F.lit(1)).over(wb))
         .filter(F.col("_bn") <= 256)
         .drop("_bn")
-        .localCheckpoint()  # r14 opt: both self-join sides re-ran the scan + cap window
     )
     a = kept.select(
         F.col("k").alias("part_a"), F.col("p_brand").alias("brand_a"),
@@ -892,6 +892,7 @@ def salted_hot_key_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # no PII matches, so the source flag is what exercises the law here.
 from flinkstreametl_spark.operators import dedup as _D  # noqa: E402
 from flinkstreametl_spark.plans.llm import _MINHASH_ORACLE as _PAIR_ORACLE  # noqa: E402
+from flinkstreametl_spark.session import pin
 
 _RESTRICTED_SQL = "source = 'src0'"
 
@@ -956,7 +957,7 @@ def dedup_flag_propagation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _D.minhash_lsh_pairs(docs, threshold=0.6).select("doc_a", "doc_b")
     labels = _D.neardup_clusters(pairs)
     flag = (F.col("source") == "src0").cast("long")
-    fl = docs.select("doc_id", flag.alias("flag")).localCheckpoint()  # audit + total
+    fl = pin(docs.select("doc_id", flag.alias("flag")))  # audit + total
     per = (
         fl.join(labels, "doc_id")
         .groupBy("cluster_id")

@@ -126,8 +126,8 @@ def lsh_precision_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     small pair sets and a single aggregate emits the row — each pair
     set is consumed exactly once, so nothing needs pinning."""
     docs = load_table(spark, sf_dir, "documents")
-    # Pinned (r14 opt): both truth-join sides tokenize otherwise.
-    sets = D.token_sets(docs).localCheckpoint()
+    # Both truth-join sides read the token sets.
+    sets = pin(D.token_sets(docs))
     bucket = F.floor(F.col("doc_id") / _AUD_BAND)
     a = sets.select(
         F.col("doc_id").alias("doc_a"),
@@ -150,11 +150,11 @@ def lsh_precision_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     wb = Window.partitionBy("band", "band_key")
-    kept = (
+    # Both self-join sides read it.
+    kept = pin(
         bands.withColumn("_bn", F.count(F.lit(1)).over(wb))
         .filter(F.col("_bn") <= D.MAX_BUCKET_SIZE)
         .drop("_bn")
-        .localCheckpoint()  # r14 opt: both self-join sides re-ran the signature chain
     )
     b1 = kept.select(F.col("doc_id").alias("doc_a"), "band", "band_key")
     b2 = kept.select(F.col("doc_id").alias("doc_b"), "band", "band_key")
@@ -384,10 +384,10 @@ def cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.neardup_clusters, adjacency pinned inside) ->
     broadcast-join labels back onto documents. The pair set feeds BOTH
     the clustering and the cross-split check, so it is pinned once
-    (localCheckpoint) instead of re-running the banded join twice."""
+    instead of re-running the banded join twice."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = (
-        D.minhash_lsh_pairs(docs, threshold=0.6).select("doc_a", "doc_b").localCheckpoint()
+    pairs = pin(
+        D.minhash_lsh_pairs(docs, threshold=0.6).select("doc_a", "doc_b")
     )
     labels = D.neardup_clusters(pairs)
     cluster = F.coalesce(F.col("cluster_id"), F.col("doc_id"))
@@ -517,7 +517,7 @@ def lsh_band_sweep_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     sets = D.token_sets(docs).filter(F.size("toks") > 0)
-    sig = sets.select("doc_id", D._sig_array(D.NUM_HASHES).alias("sig")).localCheckpoint()
+    sig = pin(sets.select("doc_id", D._sig_array(D.NUM_HASHES).alias("sig")))
 
     bucket = F.floor(F.col("doc_id") / _AUD_BAND)
     a = sets.select(
@@ -530,12 +530,12 @@ def lsh_band_sweep_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     inter = F.size(F.array_intersect("toks_a", "toks_b"))
     jac = inter.cast("double") / (F.size("toks_a") + F.size("toks_b") - inter).cast("double")
-    truth = (
+    # One truth set; probed by all four configs.
+    truth = pin(
         a.join(b, "id_bucket")
         .filter((F.col("doc_a") < F.col("doc_b")) & (F.col("doc_b") - F.col("doc_a") <= _AUD_BAND))
         .filter(jac >= 0.6)
         .select("doc_a", "doc_b")
-        .localCheckpoint()  # one truth set; probed by all four configs
     )
     n_truth = truth.count()
 
@@ -555,11 +555,11 @@ def lsh_band_sweep_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
         )
         wb = Window.partitionBy("band", "band_key")
-        kept = (
+        # Both self-join sides read it.
+        kept = pin(
             bands.withColumn("_bn", F.count(F.lit(1)).over(wb))
             .filter(F.col("_bn") <= D.MAX_BUCKET_SIZE)
             .drop("_bn")
-            .localCheckpoint()  # r14 opt: both self-join sides re-ran the band explode
         )
         b1 = kept.select(F.col("doc_id").alias("doc_a"), "band", "band_key")
         b2 = kept.select(F.col("doc_id").alias("doc_b"), "band", "band_key")
@@ -602,6 +602,7 @@ def lsh_band_sweep_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pair oracle and the shared classifier fragment so the audit measures
 # exactly what the pipeline clusters and scores.
 from flinkstreametl_spark.plans.llm import _QSCORE_SQL  # noqa: E402
+from flinkstreametl_spark.session import pin
 
 _SPREAD_ORACLE = f"""
 WITH RECURSIVE pairs AS MATERIALIZED (

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from flinkstreametl_spark.operators import text as X
 from flinkstreametl_spark.operators.windows import epoch_micros
 from flinkstreametl_spark.plans.registry import register
+from flinkstreametl_spark.session import pin
 from flinkstreametl_spark.sources.parquet import load_table
 
 #: Integer epoch-week: microseconds since epoch div one week. Epoch day
@@ -80,11 +81,11 @@ def cohort_retention_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver loop; at 100 TB the matrix stays ~weeks² rows regardless of
     event volume."""
     events = load_table(spark, sf_dir, "events")
-    uw = (
+    # Three consumers (cohort, sizes via cohort, active).
+    uw = pin(
         events.select("user_id", epoch_micros(events, "ts").alias("us"))
         .select("user_id", F.expr(f"us div {_WEEK_US}").alias("week"))
         .distinct()
-        .localCheckpoint()  # three consumers (cohort, sizes via cohort, active)
     )
     cohort = uw.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
     sizes = cohort.groupBy("cohort_week").agg(F.count(F.lit(1)).alias("n_cohort"))
@@ -142,31 +143,25 @@ def funnel_conversion_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     key, and each stage's frame is no larger than the user count. The
     final row assembles six 1-row aggregates via broadcast joins."""
     events = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
-    # Each stage is pinned: it feeds BOTH the next stage's join and its
-    # own count, and unpinned lineage replayed the whole upstream chain
-    # per consumer (measured: 7 events scans; pinned: one per stage
-    # filter plus the distinct-user count).
-    s1 = (
+    # Each stage feeds both the next stage's join and its own count.
+    s1 = pin(
         events.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"))
-        .localCheckpoint()
     )
-    s2 = (
+    s2 = pin(
         events.filter(F.col("event_type") == "click")
         .join(s1, "user_id")
         .filter(F.col("ts") >= F.col("t1"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t2"))
-        .localCheckpoint()
     )
-    s3 = (
+    s3 = pin(
         events.filter(F.col("event_type") == "purchase")
         .join(s2, "user_id")
         .filter(F.col("ts") >= F.col("t2"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t3"))
-        .localCheckpoint()
     )
     n_users = events.agg(F.count_distinct("user_id").alias("n_users"))
     c1 = s1.agg(F.count(F.lit(1)).alias("n_view"))
@@ -293,9 +288,9 @@ def mannwhitney_source_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     global-Window rule); the per-(source, length) aggregate joins the
     broadcast histogram and reduces to |sources| rows."""
     docs = load_table(spark, sf_dir, "documents")
-    v = docs.select(
+    v = pin(docs.select(
         "source", X.token_count("text").cast("long").alias("val")
-    ).localCheckpoint()  # two consumers: the global and per-source histograms
+    ))  # two consumers: the global and per-source histograms
     hv = v.groupBy("val").agg(F.count(F.lit(1)).alias("cnt_all"))
     w = Window.orderBy("val").rowsBetween(Window.unboundedPreceding, -1)
     r = hv.select(
@@ -446,7 +441,7 @@ def cramers_v_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     margins and totals are re-aggregations of the CELL table (KB-sized
     at any corpus size), never a second scan of documents."""
     docs = load_table(spark, sf_dir, "documents")
-    cells = docs.groupBy("lang", "source").agg(F.count(F.lit(1)).alias("o")).localCheckpoint()
+    cells = pin(docs.groupBy("lang", "source").agg(F.count(F.lit(1)).alias("o")))
     rm = cells.groupBy("lang").agg(F.sum("o").cast("long").alias("r"))
     cm = cells.groupBy("source").agg(F.sum("o").cast("long").alias("c"))
     tot = cells.agg(
@@ -619,19 +614,17 @@ def funnel_latency_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned by measure so no single-partition global sort."""
     ev = load_table(spark, sf_dir, "events")
     events = ev.select("user_id", "event_type", epoch_micros(ev, "ts").alias("eus"))
-    s1 = (
+    s1 = pin(
         events.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("eus").alias("t1"))
-        .localCheckpoint()
     )
-    s2 = (
+    s2 = pin(
         events.filter(F.col("event_type") == "click")
         .join(s1, "user_id")
         .filter(F.col("eus") >= F.col("t1"))
         .groupBy("user_id")
         .agg(F.min("eus").alias("t2"))
-        .localCheckpoint()
     )
     s3 = (
         events.filter(F.col("event_type") == "purchase")
@@ -640,7 +633,7 @@ def funnel_latency_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min("eus").alias("t3"))
     )
-    conv = s1.join(s2, "user_id").join(s3, "user_id").localCheckpoint()
+    conv = pin(s1.join(s2, "user_id").join(s3, "user_id"))
     m = (
         conv.select(F.lit("total").alias("measure"), F.expr("(t3 - t1) div 1000000").alias("lat_s"))
         .unionAll(

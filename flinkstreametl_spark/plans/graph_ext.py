@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from flinkstreametl_spark.operators import graph as G
 from flinkstreametl_spark.plans.registry import register
+from flinkstreametl_spark.session import pin
 from flinkstreametl_spark.sources.parquet import load_table
 
 # Linearizes the (degree, node) total order into one BIGINT so the
@@ -152,7 +153,7 @@ def copurchase_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     4. Closure: LEFT SEMI join of wedges against the oriented edge
        list — the edge list is the SMALL side and broadcasts, so the
        wedge stream (the big intermediate) is never exchanged.
-    ``localCheckpoint`` pins the oriented edge list so the three
+    ``pin`` materializes the oriented edge list so the three
     consumers (edge count, wedge enumeration, closure probe) reuse one
     materialization instead of replaying the self-join (same pattern
     as the connected-components loop, operators/dedup.py)."""
@@ -207,7 +208,7 @@ def basket_lift_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast onto the pair table, top-20 via TakeOrdered — no global
     sort materialization."""
     li = load_table(spark, sf_dir, "lineitem")
-    baskets = li.select("l_orderkey", "l_partkey").distinct().localCheckpoint()
+    baskets = pin(li.select("l_orderkey", "l_partkey").distinct())
     n_total_df = baskets.agg(F.count_distinct("l_orderkey").cast("long").alias("n_total"))
     item_n = baskets.groupBy(F.col("l_partkey").alias("item")).agg(
         F.count(F.lit(1)).alias("n_item")
@@ -424,12 +425,8 @@ def linkpred_copurchase_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     degrees join back by broadcast; existing edges leave by ANTI join
     on the canonical key; the global top-20 is TakeOrdered."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    pairs = (
-        _order_part_pairs(li)  # r14 opt: in-row pair generation, see helper
-        .select("u", "v")
-        .distinct()
-        .localCheckpoint()  # feeds sym/deg AND the final anti join
-    )
+    # The pairs feed sym/deg and the final anti join.
+    pairs = pin(_order_part_pairs(li).select("u", "v").distinct())
     sym = pairs.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
         pairs.select(F.col("v").alias("a"), F.col("u").alias("b"))
     )
@@ -532,12 +529,7 @@ def kcore_peeling_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization, never a replay of the whole chain — the pagerank
     loop discipline (operators/graph.py)."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    edges = (
-        _order_part_pairs(li)  # r14 opt: in-row pair generation, see helper
-        .select("u", "v")
-        .distinct()
-        .localCheckpoint()
-    )
+    edges = pin(_order_part_pairs(li).select("u", "v").distinct())
 
     def _stats(e: DataFrame, rnd: int) -> DataFrame:
         ends = e.select(F.col("u").alias("node")).unionByName(e.select(F.col("v").alias("node")))
@@ -559,11 +551,10 @@ def kcore_peeling_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         deg = ends.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.filter(F.col("deg") >= _KCORE_K).select("node")
-        cur = (
+        cur = pin(
             cur.join(F.broadcast(keep.withColumnRenamed("node", "u")), "u", "left_semi")
             .join(F.broadcast(keep.withColumnRenamed("node", "v")), "v", "left_semi")
             .select("u", "v")
-            .localCheckpoint()
         )
         out = out.unionByName(_stats(cur, i))
     return out.orderBy("round")
@@ -744,15 +735,13 @@ def hits_order_part_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the edge list is never shuffled — its only exchange per half-step
     is the map-side-combined node-keyed aggregate), the normalizing max
     is a 1-row broadcast, and the raw half-step frames stay
-    localCheckpoint-pinned (node-scale; a lazy persist() was measured
-    and lost — see the loop comment). Top-k per side is
+    pinned (node-scale). Top-k per side is
     orderBy().limit() (TakeOrdered — no global single-partition
     window)."""
     li = load_table(spark, sf_dir, "lineitem")
-    e = (
+    e = pin(
         li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
         .distinct()
-        .localCheckpoint()
     )
 
     # NOT the pagerank grouped-adjacency form (r14 opt, measured):
@@ -769,35 +758,23 @@ def hits_order_part_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     h = None
     for _ in range(_HITS_ITERS):
-        # Each half-step: BROADCAST the node-scale score frame into the
-        # edge join (r15 opt, guide §3.1/§2.4) — scores are |parts| or
-        # |orders| rows of two longs, far under the broadcast threshold,
-        # so the E-scale edge list is never shuffled; the only exchange
-        # per half-step is the node-keyed partial aggregate (map-side
-        # combined, node-scale bytes). r14 shuffled BOTH sides of each
-        # half-step join (2 E-scale exchanges x 6 half-steps).
-        # The raw frame feeds two consumers (the normalizing-max
-        # broadcast + the body) and carries the loop's lineage, so it
-        # stays an eager localCheckpoint pin: a lazy persist() was
-        # A/B'd in r15 and LOST ~1.7x (interleaved, noop sink — the
-        # un-truncated 6-half-step plan re-plans and re-executes nested
-        # broadcast builds), while the pinned frame is node-scale.
-        hraw = (
+        # Each half-step broadcasts the node-scale score frame, so the
+        # edge list is never shuffled (tests/test_plans.py pins this).
+        # The raw frame feeds the normalizing max and the next half-step.
+        hraw = pin(
             e.join(F.broadcast(a.withColumnRenamed("node", "p")), "p")
             .groupBy("o")
             .agg(F.sum("s").alias("raw"))
-            .localCheckpoint()
         )
         hmax = hraw.agg(F.max("raw").alias("mx"))
         h = (
             hraw.crossJoin(F.broadcast(hmax))
             .select(F.col("o").alias("node"), F.expr(f"raw * {_HITS_SCALE} div mx").alias("s"))
         )
-        araw = (
+        araw = pin(
             e.join(F.broadcast(h.withColumnRenamed("node", "o")), "o")
             .groupBy("p")
             .agg(F.sum("s").alias("raw"))
-            .localCheckpoint()
         )
         amax = araw.agg(F.max("raw").alias("mx"))
         a = (
@@ -896,22 +873,15 @@ def personalized_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFr
     is_seed marker; seeds rank high (they receive all restart mass)
     but non-seed neighbors earning walk mass is the signal."""
     li = load_table(spark, sf_dir, "lineitem")
-    # r14 opt: in-row pair generation (u < v by construction, so the
-    # old least/greatest canonicalization is already satisfied).
-    pairs = (
-        _order_part_pairs(li.select("l_orderkey", "l_partkey"))
-        .select("u", "v")
-        .distinct()
-        # Pinned: TWO consumers (the kernel's sym and the seed
-        # derivation) would each replay the per-order self-join.
-        .localCheckpoint()
-    )
+    # In-row pair generation gives u < v. The pairs feed both the
+    # kernel's sym and the seed derivation.
+    pairs = pin(_order_part_pairs(li.select("l_orderkey", "l_partkey")).select("u", "v").distinct())
     nodes = (
         pairs.select(F.col("u").alias("node"))
         .unionByName(pairs.select(F.col("v").alias("node")))
         .distinct()
     )
-    seeds = nodes.orderBy("node").limit(_PPR_NSEEDS).localCheckpoint()
+    seeds = pin(nodes.orderBy("node").limit(_PPR_NSEEDS))
     ranks = G.pagerank_personalized(pairs, seeds, iterations=G_PPR_ITER)
     w = Window.orderBy(F.col("rank_fp").desc(), "node")
     seed_mark = seeds.select("node", F.lit(True).alias("_s"))
@@ -985,12 +955,7 @@ def degree_assortativity_copurchase(spark: SparkSession, sf_dir: str) -> DataFra
     the same literal order in both engines (round 6). Zero-variance
     degenerate graphs yield NULL by explicit CASE."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    pairs = (
-        _order_part_pairs(li)  # r14 opt: in-row pair generation, see helper
-        .select("u", "v")
-        .distinct()
-        .localCheckpoint()
-    )
+    pairs = pin(_order_part_pairs(li).select("u", "v").distinct())
     deg = G.degrees(pairs)
     directed = pairs.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
         pairs.select(F.col("v").alias("a"), F.col("u").alias("b"))
@@ -1069,11 +1034,11 @@ def apriori_triple_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the broadcastable frequent-pair list is KBs), which is the whole
     point of a-priori. Counts and support_ppm are exact integers."""
     li = load_table(spark, sf_dir, "lineitem")
-    baskets = li.select("l_orderkey", "l_partkey").distinct().localCheckpoint()
+    baskets = pin(li.select("l_orderkey", "l_partkey").distinct())
     n_total_df = baskets.agg(F.count_distinct("l_orderkey").cast("long").alias("n_total"))
     a, b, c = baskets.alias("a"), baskets.alias("b"), baskets.alias("c")
     # (order, p1, p2) pair occurrences, counted once.
-    occ2 = a.join(
+    occ2 = pin(a.join(
         b,
         (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
         & (F.col("a.l_partkey") < F.col("b.l_partkey")),
@@ -1081,7 +1046,7 @@ def apriori_triple_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a.l_orderkey").alias("ok"),
         F.col("a.l_partkey").alias("p1"),
         F.col("b.l_partkey").alias("p2"),
-    ).localCheckpoint()
+    ))
     freq2 = (
         occ2.groupBy("p1", "p2")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -1171,35 +1136,29 @@ def bfs_hop_profile_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     CURRENT FRONTIER (shrinking) against the edge list, a distinct,
     and an anti-join against the visited set; both frontier and
     visited are node-sized (never edge-sized), and each round's
-    outputs are localCheckpoint-pinned so round k+1 does not replay
+    outputs are pinned so round k+1 does not replay
     rounds 1..k (the pagerank loop discipline). Hop count is fixed at
     6 — on a co-purchase projection the frontier saturates in 2-3 hops
     (small-world), so the loop is effectively bounded regardless of
     graph size; the oracle unrolls the same 6 rounds as chained CTEs.
     All counts exact integers."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    pairs = (
-        _order_part_pairs(li)  # r14 opt: in-row pair generation, see helper
-        .select("u", "v")
-        .distinct()
-        .localCheckpoint()
-    )
-    edges = pairs.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
+    pairs = pin(_order_part_pairs(li).select("u", "v").distinct())
+    edges = pin(pairs.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
         pairs.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    ).localCheckpoint()
-    frontier = pairs.agg(F.min("u").alias("node")).localCheckpoint()
+    ))
+    frontier = pin(pairs.agg(F.min("u").alias("node")))
     visited = frontier
     out = [frontier.select(F.lit(0).cast("long").alias("level"), "node")]
     for lvl in range(1, _BFS_HOPS + 1):
-        nxt = (
+        nxt = pin(
             frontier.join(edges, frontier["node"] == edges["src"])
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited, "node", "left_anti")
-            .localCheckpoint()
         )
         out.append(nxt.select(F.lit(lvl).cast("long").alias("level"), "node"))
-        visited = visited.unionAll(nxt).localCheckpoint()
+        visited = pin(visited.unionAll(nxt))
         frontier = nxt
     lv = out[0]
     for o in out[1:]:

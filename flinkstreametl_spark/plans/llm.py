@@ -18,6 +18,7 @@ from flinkstreametl_spark.operators import dedup as D
 from flinkstreametl_spark.operators import similarity as S
 from flinkstreametl_spark.operators import text as X
 from flinkstreametl_spark.plans.registry import register
+from flinkstreametl_spark.session import pin
 from flinkstreametl_spark.sources.parquet import ensure_parallelism, load_table
 
 _TOKS = X.sql_tokens("text")
@@ -932,19 +933,14 @@ def incremental_minhash_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalence statement needs order-free semantics (the production
     cap story is in operators/dedup.py and docs/SCALE.md)."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    # r15 opt: batch frames and the inter-batch index are shared with
-    # LAZY checkpoints (localCheckpoint(eager=False)) instead of eager
-    # pins — each still evaluates exactly once per action (checkpoint
-    # RDDs cache at first compute), but query construction schedules
-    # ZERO jobs (r14's eager per-batch pins stacked fixed job cost on
-    # a sub-second query; VERDICT r14 item 1), and being fresh RDDs
-    # per invocation nothing is reused across bench runs.
-    first = docs.filter(F.col("doc_id") % 2 == 0).localCheckpoint(eager=False)
-    second = docs.filter(F.col("doc_id") % 2 == 1).localCheckpoint(eager=False)
+    # Each batch frame and the index feed the pair join and the next
+    # batch; lazy, as eager per-batch pins cost a job each.
+    first = pin(docs.filter(F.col("doc_id") % 2 == 0), eager=False)
+    second = pin(docs.filter(F.col("doc_id") % 2 == 1), eager=False)
 
     bands = D.lsh_band_keys(docs.limit(0))
     p1, bands = D.incremental_lsh_pairs(bands, first, first, max_bucket_size=None)
-    bands = bands.localCheckpoint(eager=False)
+    bands = pin(bands, eager=False)
     p2, _ = D.incremental_lsh_pairs(bands, second, docs, max_bucket_size=None)
     return p1.unionByName(p2)
 
@@ -962,31 +958,28 @@ def incremental_minhash_multibatch(spark: SparkSession, sf_dir: str) -> DataFram
     duplicate pairs and no duplicate index entries. Cap disabled: the
     equivalence statement needs arrival-order-free semantics."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    # r15 opt: lazy checkpoints (localCheckpoint(eager=False)) replace
-    # the r14 eager pins throughout the replay (the 2-batch replay's
-    # rationale above): construction schedules zero jobs; VERDICT r14
-    # item 1 measured the eager pin stack at 2.70 -> 7.03 s driver-side.
-    b0 = docs.filter(F.col("doc_id") % 3 == 0).localCheckpoint(eager=False)
+    # Shared lazily, as in the 2-batch replay above.
+    b0 = pin(docs.filter(F.col("doc_id") % 3 == 0), eager=False)
     # late/duplicate arrivals: batch 1 re-delivers batch 0's even docs,
     # batch 2 re-delivers batch 1's %5 slice
-    b1 = (
+    b1 = pin(
         docs.filter(F.col("doc_id") % 3 == 1)
-        .unionByName(docs.filter((F.col("doc_id") % 3 == 0) & (F.col("doc_id") % 2 == 0)))
-        .localCheckpoint(eager=False)
+        .unionByName(docs.filter((F.col("doc_id") % 3 == 0) & (F.col("doc_id") % 2 == 0))),
+        eager=False,
     )
-    b2 = (
+    b2 = pin(
         docs.filter(F.col("doc_id") % 3 == 2)
-        .unionByName(docs.filter((F.col("doc_id") % 3 == 1) & (F.col("doc_id") % 5 == 0)))
-        .localCheckpoint(eager=False)
+        .unionByName(docs.filter((F.col("doc_id") % 3 == 1) & (F.col("doc_id") % 5 == 0))),
+        eager=False,
     )
 
     bands = D.lsh_band_keys(docs.limit(0))
     seen = b0
     p0, bands = D.incremental_lsh_pairs(bands, b0, seen, max_bucket_size=None)
-    bands = bands.localCheckpoint(eager=False)
+    bands = pin(bands, eager=False)
     seen = seen.unionByName(docs.filter(F.col("doc_id") % 3 == 1))
     p1, bands = D.incremental_lsh_pairs(bands, b1, seen, max_bucket_size=None)
-    bands = bands.localCheckpoint(eager=False)
+    bands = pin(bands, eager=False)
     p2, _ = D.incremental_lsh_pairs(bands, b2, docs, max_bucket_size=None)
     return p0.unionByName(p1).unionByName(p2)
 
@@ -1108,24 +1101,14 @@ def _capped_hamming_pairs(
         "band_bits", F.expr(f"({fp_col} >> (band * {width})) & {(1 << width) - 1}")
     )
     wb = Window.partitionBy("band", "band_bits")
-    banded = (
+    # Both self-join sides read the banded frame, whose upstream is the
+    # fingerprint chain (synth + decode for video/audio); lazy, as an
+    # eager pin's job cost more than the duplicate decode it saves.
+    banded = pin(
         banded.withColumn("_bn", F.count(F.lit(1)).over(wb))
         .filter(F.col("_bn") <= _MEDIA_BUCKET_CAP)
-        .drop("_bn")
-        # Share before the self-join fan-out: Spark plans the two join
-        # sides as two full subtrees, so an unshared banded frame
-        # re-ran the upstream fingerprint chain — for the video/audio
-        # paths that is the synth + decode mapInPandas pair, executed
-        # TWICE (r14 before-plan). r14 pinned with an eager
-        # localCheckpoint, whose fixed job cost outweighed the removed
-        # duplicate decode at bench scale (driver: video 1.38 -> 2.48 s,
-        # VERDICT r14 item 3). r15: localCheckpoint(eager=False) — the
-        # chain still runs exactly once (the checkpoint RDD is cached
-        # at first compute, both join sides scan it), but no job is
-        # scheduled at construction time, and being a fresh RDD per
-        # invocation it cannot leak materialized state across bench
-        # runs the way a persist()-cached plan would.
-        .localCheckpoint(eager=False)
+        .drop("_bn"),
+        eager=False,
     )
     a = banded.select(
         F.col("media_id").alias("media_a"), F.col(fp_col).alias("ha"), "band", "band_bits"
@@ -1506,11 +1489,11 @@ def dedup_funnel_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     score = X.quality_score_expr("text")
     gated = docs.filter(score >= 6).select("doc_id", "source", "text")
     w = Window.partitionBy(X.fingerprint("text")).orderBy("doc_id")
-    exact_kept = (
+    # Feeds the pair chain AND three stage counts.
+    exact_kept = pin(
         gated.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("doc_id", "source", "text")
-        .localCheckpoint()  # feeds the pair chain AND three stage counts
     )
     pairs = D.minhash_lsh_pairs(exact_kept, threshold=0.6)
     final_kept = exact_kept.join(
@@ -1582,10 +1565,10 @@ def langid_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang").alias("labeled_lang"),
         X.predicted_lang(hits).alias("predicted_lang"),
     )
-    cell = (
+    # |langs|² cells; row totals re-aggregate it.
+    cell = pin(
         pred.groupBy("labeled_lang", "predicted_lang")
         .agg(F.count(F.lit(1)).alias("n_docs"))
-        .localCheckpoint()  # |langs|² cells; row totals re-aggregate it
     )
     rowt = cell.groupBy("labeled_lang").agg(F.sum("n_docs").alias("row_total"))
     return (
@@ -1646,7 +1629,7 @@ def simhash_hamming_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the ngram_jaccard blocking — the distance bound lives in the join
     key) and a 17-bucket aggregate; integer xor/bit_count end to end."""
     docs = load_table(spark, sf_dir, "documents")
-    sig = D.simhash(docs).localCheckpoint()  # both join sides reuse one signature pass
+    sig = pin(D.simhash(docs))  # both join sides reuse one signature pass
     bucket = F.floor(F.col("doc_id") / _HAM_BAND)
     a = sig.select(
         F.col("doc_id").alias("doc_a"),
@@ -1762,10 +1745,10 @@ def source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources rows, pinned); the pair join, set sizes, and Jaccard all
     run on that bounded relation."""
     docs = load_table(spark, sf_dir, "documents")
-    st = (
+    # Vocab x sources rows; sizes + pair join reuse it.
+    st = pin(
         docs.select("source", F.explode(X.tokens("text")).alias("tok"))
         .distinct()
-        .localCheckpoint()  # vocab x sources rows; sizes + pair join reuse it
     )
     sizes = st.groupBy("source").agg(F.count(F.lit(1)).alias("n_toks"))
     a = st.select(F.col("source").alias("source_a"), "tok")
@@ -1845,9 +1828,9 @@ def token_pair_lift_top50(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc), vocabulary-sized df broadcast back onto the pair aggregate,
     TakeOrdered 50."""
     docs = load_table(spark, sf_dir, "documents")
-    ts = docs.select(
+    ts = pin(docs.select(
         "doc_id", F.explode(F.array_distinct(X.tokens("text"))).alias("term")
-    ).localCheckpoint()  # df AND both self-join sides
+    ))  # df AND both self-join sides
     n = docs.agg(F.count_distinct("doc_id").alias("n_docs"))
     df = ts.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     b = ts.select(F.col("doc_id").alias("bd"), F.col("term").alias("term_b"))

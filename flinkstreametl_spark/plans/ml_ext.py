@@ -109,6 +109,7 @@ from flinkstreametl_spark.operators.clustering import (  # noqa: E402
     KM_FP as _KM_FP,
     kmeans_fit,
 )
+from flinkstreametl_spark.session import pin
 
 
 def _kmeans_ctes(
@@ -339,10 +340,8 @@ def semantic_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     |pairs|×dim)."""
     emb = ensure_parallelism(load_table(spark, sf_dir, "embeddings"))
     _cents, assign_df = kmeans_fit(emb)
-    # Pinned (r14 opt): the assignment pandas_udf otherwise re-ran in
-    # BOTH self-join subtrees (audit: 4 ArrowEvalPython nodes for one
-    # logical assignment pass).
-    assigned = assign_df(emb).select("vec_id", "embedding", "cluster").localCheckpoint()
+    # Both self-join sides read the pandas_udf assignment.
+    assigned = pin(assign_df(emb).select("vec_id", "embedding", "cluster"))
     # r14 opt: per-vector self-norms precomputed once per side; the
     # pair stage folds only the dot (operators/similarity — same
     # integers, bit-identical cosine).
@@ -460,12 +459,10 @@ def int8_knn_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     rankings and their overlap join are window + hash joins over
     25-row frames."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # Pinned (r14 opt): ex feeds the scale aggregate, the quantize join
-    # AND both sides of the exact-score join — unpinned, the explode
-    # re-ran per consumer (audit: duplicated Generate subtrees).
-    ex = emb.select("vec_id", F.posexplode("embedding").alias("pos", "val")).localCheckpoint()
+    # ex feeds the scale aggregate, the quantize join and both exact-score sides.
+    ex = pin(emb.select("vec_id", F.posexplode("embedding").alias("pos", "val")))
     scales = ex.groupBy("vec_id").agg(F.max(F.abs(F.col("val").cast("double"))).alias("s"))
-    qz = (
+    qz = pin(
         ex.join(scales, "vec_id")
         .select(
             "vec_id",
@@ -474,7 +471,6 @@ def int8_knn_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.floor((F.col("val").cast("double") / F.col("s")) * F.lit(127.0)).cast("long"))
             .alias("qv"),
         )
-        .localCheckpoint()
     )
 
     def topk(pairs, score, k):
@@ -709,7 +705,7 @@ def ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     serving path."""
     # Pinned once for the fan-out (probe ranks, candidate side, exact
     # truth) — Spark does not dedupe common subplans.
-    emb = ensure_parallelism(load_table(spark, sf_dir, "embeddings")).localCheckpoint()
+    emb = pin(ensure_parallelism(load_table(spark, sf_dir, "embeddings")))
     # r14 opt: per-vector self-norms precomputed once per side, and the
     # exact top-K DERIVED from the pinned scored set instead of a
     # second knn_fast pass — cscore holds every (query, neighbor)
@@ -733,7 +729,8 @@ def ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
     )
     # panel is queries×labels rows; must be the build side; Catalyst misestimates the windowed crossJoin
-    cscore = (
+    # Scored once; every nprobe slice reuses it.
+    cscore = pin(
         F.broadcast(ranks).join(c, "label")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
@@ -744,7 +741,6 @@ def ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 S.dot_fp_col(F.col("q_emb"), F.col("c_emb")), F.col("qq"), F.col("cc")
             ).alias("cosine"),
         )
-        .localCheckpoint()  # scored once; every nprobe slice reuses it
     )
     we = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
     exact = (
@@ -899,7 +895,7 @@ def ivf_kmeans_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Pinned once for the fan-out (fit input, query rows, membership
     # side, exact truth) — Spark does not dedupe common subplans; the
     # unpinned frame re-scanned the embedding parquet per consumer.
-    emb = ensure_parallelism(load_table(spark, sf_dir, "embeddings")).localCheckpoint()
+    emb = pin(ensure_parallelism(load_table(spark, sf_dir, "embeddings")))
     cents_mat, assign_df = kmeans_fit(emb)
     cents = spark.createDataFrame(
         [(i, [float(x) for x in cents_mat[i]]) for i in range(len(cents_mat))],
@@ -932,7 +928,8 @@ def ivf_kmeans_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q_norm = ranks.withColumn("qq", S.self_norm_fp_col(F.col("q_emb")))
     # panel is queries×clusters rows; must be the build side; Catalyst misestimates the windowed crossJoin
-    cscore = (
+    # Scored once; every nprobe slice reuses it.
+    cscore = pin(
         F.broadcast(q_norm).join(members, "cluster")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
@@ -943,7 +940,6 @@ def ivf_kmeans_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 S.dot_fp_col(F.col("q_emb"), F.col("c_emb")), F.col("qq"), F.col("cc")
             ).alias("cosine"),
         )
-        .localCheckpoint()  # scored once; every nprobe slice reuses it
     )
     # r14 opt: the exact top-K is DERIVED from the pinned scored set
     # instead of a second full knn_fast pass — cscore already holds
@@ -1019,7 +1015,7 @@ def pq_fit(emb: DataFrame, n_sub: int = _PQ_SUB, sd: int = _PQ_SD, k: int = _PQ_
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    emb = emb.localCheckpoint()
+    emb = pin(emb)
     init_rows = sorted(
         emb.orderBy("vec_id").limit(k).select("vec_id", "embedding").collect(),
         key=lambda r: r.vec_id,
@@ -1237,18 +1233,11 @@ def pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     by."""
     import numpy as np
 
-    # Pinned ONCE for the query's four consumers (fit input, encode
-    # side, query-row collect, exact-L2 corpus side) — Spark does not
-    # dedupe common subplans, so the unpinned frame would re-scan the
-    # embedding parquet per consumer. pq_fit's internal pin then reads
-    # these blocks instead of the scan (a cheap second pin of a small
-    # table, not a second scan).
-    emb = ensure_parallelism(load_table(spark, sf_dir, "embeddings")).localCheckpoint()
-    # Pinned (r14 opt): the encode pandas_udf otherwise evaluated twice
-    # (audit: 2 ArrowEvalPython nodes — the posexplode consumer
-    # duplicates the generator input projection).
+    # Four consumers: fit input, encode side, query-row collect, exact-L2 side.
+    emb = pin(ensure_parallelism(load_table(spark, sf_dir, "embeddings")))
     cents, codes_fn = pq_fit(emb)
-    codes = codes_fn(emb).select("vec_id", "codes").localCheckpoint()
+    # The posexplode consumer would duplicate the encode pandas_udf.
+    codes = pin(codes_fn(emb).select("vec_id", "codes"))
 
     qrows = sorted(
         emb.filter(F.col("vec_id") < _PQ_NQ).select("vec_id", "embedding").collect(),
@@ -1443,12 +1432,12 @@ def pca_power_topcomp(spark: SparkSession, sf_dir: str) -> DataFrame:
     cen = xf.join(F.broadcast(mean), "pos").select(
         "vec_id", "pos", (F.col("x") - F.col("m")).alias("c")
     )
-    gram = (
+    # Feeds the driver pull AND the final in-plan step.
+    gram = pin(
         cen.alias("a")
         .join(cen.alias("b"), "vec_id")
         .groupBy(F.col("a.pos").alias("i"), F.col("b.pos").alias("j"))
         .agg(F.sum((F.col("a.c") * F.col("b.c")).cast("decimal(38,0)")).alias("g"))
-        .localCheckpoint()  # pinned: feeds the driver pull AND the final in-plan step
     )
 
     g_rows = gram.collect()  # d^2 = 4096 rows — parameter-sized, never data
@@ -1618,9 +1607,12 @@ def sq8_reconstruction_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums — at 100 TB both are map-side-partial hash aggregates keyed
     by the vector id, no joins wider than the scale lookup."""
     emb = ensure_parallelism(load_table(spark, sf_dir, "embeddings"))
-    ex = emb.select("vec_id", F.posexplode("embedding").alias("pos0", "val")).select(
-        "vec_id", (F.col("pos0") + 1).alias("pos"), F.col("val").cast("double").alias("val")
-    ).localCheckpoint()  # r14 opt: feeds the scale aggregate AND the quantize join
+    # ex feeds the scale aggregate and the quantize join.
+    ex = pin(
+        emb.select("vec_id", F.posexplode("embedding").alias("pos0", "val")).select(
+            "vec_id", (F.col("pos0") + 1).alias("pos"), F.col("val").cast("double").alias("val")
+        )
+    )
     scales = ex.groupBy("vec_id").agg(F.max(F.abs("val")).alias("s"))
     qz = ex.join(scales, "vec_id").select(
         "vec_id",
@@ -1737,7 +1729,8 @@ def knn_label_disagreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         S.self_norm_fp_col(F.col("embedding")).alias("cc"),
     )
     w = Window.partitionBy("anchor_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    knn = (
+    # Bounded panel x k; votes + disagreement reuse it.
+    knn = pin(
         c.crossJoin(F.broadcast(q.withColumn("qq", S.self_norm_fp_col(F.col("q_emb")))))
         .filter(F.col("neighbor_id") != F.col("anchor_id"))
         .select(
@@ -1748,7 +1741,6 @@ def knn_label_disagreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= _LND_K)
-        .localCheckpoint()  # bounded panel x k; votes + disagreement reuse it
     )
     votes = knn.groupBy("anchor_id", "nlabel").agg(F.count(F.lit(1)).alias("votes"))
     mw = Window.partitionBy("anchor_id").orderBy(F.col("votes").desc(), "nlabel")
@@ -1873,7 +1865,7 @@ def label_separation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("c") * F.col("c")).alias("cc"),
         )
     )
-    cosr = mc.select(
+    cosr = pin(mc.select(
         "vec_id",
         "mlabel",
         "clabel",
@@ -1881,7 +1873,7 @@ def label_separation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("dot").cast("double")
             / F.sqrt(F.col("vv").cast("double") * F.col("cc").cast("double") * F.lit(_SEP_C2))
         ).alias("cosine"),
-    ).localCheckpoint()  # per-vector x k rows; own/other both reuse it
+    ))  # per-vector x k rows; own/other both reuse it
     own = cosr.filter(F.col("clabel") == F.col("mlabel")).select(
         "vec_id", "mlabel", F.col("cosine").alias("own_cos")
     )
@@ -1956,10 +1948,8 @@ def semantic_cosine_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair set, the in-row fold never explodes to |pairs| × dim."""
     emb = ensure_parallelism(load_table(spark, sf_dir, "embeddings"))
     _cents, assign_df = kmeans_fit(emb)
-    # Pinned (r14 opt): the assignment pandas_udf otherwise re-ran in
-    # BOTH self-join subtrees (audit: 4 ArrowEvalPython nodes for one
-    # logical assignment pass).
-    assigned = assign_df(emb).select("vec_id", "embedding", "cluster").localCheckpoint()
+    # Both self-join sides read the pandas_udf assignment.
+    assigned = pin(assign_df(emb).select("vec_id", "embedding", "cluster"))
     # r14 opt: per-vector self-norms precomputed once per side; the
     # pair stage folds only the dot (operators/similarity — same
     # integers, bit-identical cosine).
@@ -2138,7 +2128,8 @@ def jl_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus map-side (one broadcast sign join, one (vec, j) aggregate)
     while the AUDIT stays panel-bounded."""
     emb = load_table(spark, sf_dir, "embeddings")
-    eq = (
+    # Two consumers: d_orig and the projection.
+    eq = pin(
         emb.filter(F.col("vec_id") < _JL_NP)
         .select("vec_id", F.posexplode("embedding").alias("pos", "val"))
         .select(
@@ -2146,7 +2137,6 @@ def jl_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pos",
             F.floor(F.col("val").cast("double") * _JL_Q).cast("long").alias("xq"),
         )
-        .localCheckpoint()  # two consumers: d_orig and the projection
     )
     sign = (
         F.conv(
@@ -2168,11 +2158,11 @@ def jl_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(spark.range(64).select(F.col("id").alias("pos")))
         .select("j", "pos", sign.alias("sgn"))
     )
-    proj = (
+    # Self-joined below.
+    proj = pin(
         eq.join(F.broadcast(sgn), "pos")
         .groupBy("vec_id", "j")
         .agg(F.sum(F.col("sgn") * F.col("xq")).alias("pv"))
-        .localCheckpoint()  # self-joined below
     )
     a, b = eq.alias("a"), eq.alias("b")
     dorig = (

@@ -378,7 +378,7 @@ def token_balanced_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     machine had summed the stream in (bucket, hkey, doc_id) order —
     which is precisely what the DuckDB oracle does, so the
     decomposition itself is what the hash check verifies. The windowed
-    doc-scale frame is localCheckpoint-pinned: it feeds both the
+    doc-scale frame is pinned: it feeds both the
     offset table and the final join (pin shared fan-out, not chains).
 
     Integer exactness: positions and totals are BIGINT token counts;
@@ -403,12 +403,12 @@ def token_balanced_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     wtot = Window.partitionBy("bucket")
-    placed = keyed.select(
+    placed = pin(keyed.select(
         "bucket",
         "n",
         (F.sum("n").over(wloc) - F.col("n")).alias("loc_before"),
         F.sum("n").over(wtot).alias("bucket_tokens"),
-    ).localCheckpoint()
+    ))
     woff = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
     wall = Window.orderBy("bucket").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
@@ -1105,7 +1105,7 @@ def stratified_kfold_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # folds x langs rows — pinned so its four consumers (cell itself,
     # ftot, ltot, gtot) replay one materialization, not four corpus
     # scans (tools/audit_dup_subtrees.py flagged 4x documents unpinned).
-    cell = f.groupBy("fold", "lang").agg(F.count(F.lit(1)).alias("n_docs")).localCheckpoint()
+    cell = pin(f.groupBy("fold", "lang").agg(F.count(F.lit(1)).alias("n_docs")))
     ftot = cell.groupBy("fold").agg(F.sum("n_docs").alias("fold_docs"))
     ltot = cell.groupBy("lang").agg(F.sum("n_docs").alias("lang_docs"))
     gtot = cell.agg(F.sum("n_docs").alias("total"))
@@ -1265,6 +1265,7 @@ def nucleus_sample_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The quality CTE is the shared classifier fragment (plans/llm.py), so
 # the card's mean quality can never drift from the gate (ADVICE r8).
 from flinkstreametl_spark.plans.llm import _QSCORE_SQL as _CARD_QSCORE_SQL  # noqa: E402
+from flinkstreametl_spark.session import pin
 
 _CARD_ORACLE = f"""
 WITH toks AS (
@@ -1310,7 +1311,7 @@ def dataset_card_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     projections, and 1-row broadcast assembly; every aggregate is
     partial-aggregated before its exchange."""
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(F.explode(_X.tokens("text")).alias("term")).localCheckpoint()
+    tok = pin(docs.select(F.explode(_X.tokens("text")).alias("term")))
     n_tok = tok.agg(F.count(F.lit(1)).alias("n_tokens"))
     vocab = tok.agg(F.count_distinct("term").alias("vocab_size"))
     # One combined pass for every doc-grain statistic (the scan-audit

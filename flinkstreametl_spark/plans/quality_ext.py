@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from flinkstreametl_spark.operators import text as X
 from flinkstreametl_spark.operators.ranks import with_global_rank, with_running_sum
 from flinkstreametl_spark.plans.registry import register
+from flinkstreametl_spark.session import pin
 from flinkstreametl_spark.sources.parquet import ensure_parallelism, load_table
 
 _TOKS = X.sql_tokens("text")
@@ -246,11 +247,11 @@ def ngram_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary; nothing is quadratic in document length."""
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", X.tokens("text").alias("c"))
-    c2 = (
+    # Feeds the char-total aggregate AND the top-gram window.
+    c2 = pin(
         base.select("doc_id", F.explode(_ngrams(F.col("c"), 2)).alias("g"))
         .groupBy("doc_id", "g")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()  # r14 opt: feeds the char-total aggregate AND the top-gram window
     )
     s2 = c2.groupBy("doc_id").agg(F.sum(F.col("cnt") * F.length("g")).alias("tot2"))
     w = Window.partitionBy("doc_id").orderBy(F.col("cnt").desc(), "g")
@@ -390,13 +391,13 @@ def dsir_importance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda i: F.concat_ws(" ", F.element_at(toks, i), F.element_at(toks, i + 1)),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    grams = docs.select(
+    grams = pin(docs.select(
         "doc_id", "source", F.explode(bigram).alias("g")
     ).select(
         "doc_id",
         "source",
         (F.conv(F.substring(F.md5("g"), 1, 8), 16, 10).cast("long") % _DSIR_B).alias("b"),
-    ).localCheckpoint()  # one corpus pass feeds tgt/raw/tot AND the scoring join
+    ))  # one corpus pass feeds tgt/raw/tot AND the scoring join
     is_tgt = F.col("source") == _DSIR_TGT
     # ONE conditional aggregation replaces the former tgt/raw twin
     # scans AND their full-outer join (r14 opt): per-bucket target/raw
@@ -635,7 +636,8 @@ def quality_score_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     score = X.quality_score_expr("text")
-    h = (
+    # <= 20 cells; totals and shares reuse it.
+    h = pin(
         docs.crossJoin(F.broadcast(n))
         .select(
             F.when(F.col("doc_id") * 2 < F.col("n_docs"), F.lit(0)).otherwise(F.lit(1)).alias("half"),
@@ -643,7 +645,6 @@ def quality_score_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("half", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()  # <= 20 cells; totals and shares reuse it
     )
     t = h.groupBy("half").agg(F.sum("cnt").alias("tot"))
     a = h.filter(F.col("half") == 0).select("bucket", F.col("cnt").alias("ca"))
@@ -802,7 +803,7 @@ def unigram_surprisal_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source mean token surprisal vs the corpus unigram model —
     the perplexity-proxy quality gate (spec + why integer bits in the
     block comment above). Plan: ONE corpus scan into the (source, token)
-    hash aggregate (map-side partial), localCheckpoint-pinned because it
+    hash aggregate (map-side partial), pinned because it
     feeds BOTH the corpus term-frequency re-aggregate and the scoring
     join; the corpus total is a broadcast 1-row frame (scalar-subquery
     idiom). The scoring join shuffles on token — the wordcount exchange,
@@ -810,11 +811,10 @@ def unigram_surprisal_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     dictionary-sized artifact broadcast to the scorers; nothing here is
     driver-side."""
     docs = load_table(spark, sf_dir, "documents")
-    st = (
+    st = pin(
         docs.select("source", F.explode(X.tokens("text")).alias("tok"))
         .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()
     )
     tf = st.groupBy("tok").agg(F.sum("cnt").alias("n"))
     tot = tf.agg(F.sum("n").alias("nn"))

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from flinkstreametl_spark.operators import similarity as S
 from flinkstreametl_spark.operators import text as X
 from flinkstreametl_spark.plans.registry import register
+from flinkstreametl_spark.session import pin
 from flinkstreametl_spark.sources.parquet import load_table
 
 _FP = 1_000_000
@@ -71,10 +72,9 @@ def bm25_topk(corpus: DataFrame, qterms: DataFrame, k: int) -> DataFrame:
     sized = base.select(
         "doc_id", F.size("toks").cast("long").alias("dl"), F.explode("toks").alias("term")
     )
-    tf = (
+    tf = pin(
         sized.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
-        .localCheckpoint()
     )
     dfq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     tot = (
@@ -243,7 +243,7 @@ def decontaminate_by_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: the BM25 stage is bm25_topk (probe terms broadcast — the
     probe corpus is tiny by nature); the confirm stage touches only the
-    bounded retrieved set (#probes x 5 pairs, localCheckpoint-pinned so
+    bounded retrieved set (#probes x 5 pairs, pinned so
     the BM25 ranking runs once), semi-joins the training scan down to
     the retrieved doc_ids before computing any trigram, and broadcasts
     the pair and probe-gram tables."""
@@ -253,17 +253,16 @@ def decontaminate_by_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # see the module constant: benchmarks don't grow with the corpus):
     # tokenize it once, pin, and derive both the query terms and the
     # confirm-stage grams from the pin.
-    probes = (
+    probes = pin(
         docs.filter(F.col("source") == _PROBE_SOURCE)
         .orderBy("doc_id")
         .limit(_RET_PANEL)
         .select(F.col("doc_id").alias("query_id"), X.tokens("text").alias("toks"))
-        .localCheckpoint()
     )
     qterms = probes.select(
         "query_id", F.explode(F.array_distinct("toks")).alias("term")
     )
-    topk = bm25_topk(train.select("doc_id", "text"), qterms, _RET_K).localCheckpoint()
+    topk = pin(bm25_topk(train.select("doc_id", "text"), qterms, _RET_K))
 
     # Token arrays are materialized columns before the gram HOF — an
     # inline split re-runs the regexp per element (the inlining trap).
@@ -393,10 +392,9 @@ def bm25_index_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized = base.select(
         "doc_id", F.size("toks").cast("long").alias("dl"), F.explode("toks").alias("term")
     )
-    tf = (
+    tf = pin(
         sized.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
-        .localCheckpoint()
     )
     is_base = ~F.expr(_STALE_ARRIVALS)
     st_df = (
@@ -437,11 +435,11 @@ def bm25_index_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(term_fp).cast("long").alias("score_fp"))
     )
     w = Window.partitionBy("st", "query_id").orderBy(F.col("score_fp").desc(), "doc_id")
-    topk = (
+    # Bounded (2 x queries x k); overlap + top1 reuse it.
+    topk = pin(
         sc.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= _BM25_K)
         .select("st", "query_id", "doc_id", "rk")
-        .localCheckpoint()  # bounded (2 x queries x k); overlap + top1 reuse it
     )
     stale = topk.filter(F.col("st") == "stale")
     refit = topk.filter(F.col("st") == "refit")
@@ -701,12 +699,12 @@ def decontaminate_by_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables — the decontaminate_by_retrieval confirm, verbatim."""
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
-    panel = (
+    # Parameter-sized; feeds queries AND the confirm stage.
+    panel = pin(
         docs.filter(F.col("source") == _PROBE_SOURCE)
         .orderBy("doc_id")
         .limit(_DEMB_PANEL)
         .select("doc_id")
-        .localCheckpoint()  # parameter-sized; feeds queries AND the confirm stage
     )
     q = emb.join(panel, emb["vec_id"] == panel["doc_id"], "left_semi").select(
         F.col("vec_id").alias("query_id"),
@@ -722,7 +720,8 @@ def decontaminate_by_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         S.self_norm_fp_col(F.col("embedding")).alias("cc"),
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "doc_id")
-    topk = (
+    # Bounded panel x k; ranking runs once.
+    topk = pin(
         c.crossJoin(F.broadcast(q))
         .select(
             "query_id",
@@ -733,7 +732,6 @@ def decontaminate_by_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("rk", F.row_number().over(w).cast("long"))
         .filter(F.col("rk") <= _DEMB_K)
-        .localCheckpoint()  # bounded panel x k; ranking runs once
     )
 
     probes = docs.join(panel, "doc_id", "left_semi").select(
@@ -860,10 +858,10 @@ def prf_expanded_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized = base.select(
         "doc_id", F.size("toks").cast("long").alias("dl"), F.explode("toks").alias("term")
     )
-    tf = (
+    # The index: both rounds + term mining reuse it.
+    tf = pin(
         sized.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
-        .localCheckpoint()  # the index: both rounds + term mining reuse it
     )
     dfq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     tot = (
@@ -892,13 +890,13 @@ def prf_expanded_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("query_id", "doc_id", "score_fp", F.col("rk").cast("long").alias("rk"))
         )
 
-    q1 = (
+    # Parameter-sized; both rounds + the anti-join reuse it.
+    q1 = pin(
         base.filter(F.col("doc_id") < _BM25_NQ)
         .select(
             F.col("doc_id").alias("query_id"),
             F.explode(F.array_distinct("toks")).alias("term"),
         )
-        .localCheckpoint()  # parameter-sized; both rounds + the anti-join reuse it
     )
     fb = _score(q1, _PRF_FB).select("query_id", "doc_id")
     ew = Window.partitionBy("query_id").orderBy(F.col("fb_tf").desc(), "term")

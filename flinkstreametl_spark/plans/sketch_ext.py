@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from flinkstreametl_spark.operators.text import tokens
 from flinkstreametl_spark.plans.registry import register
+from flinkstreametl_spark.session import pin
 from flinkstreametl_spark.sources.parquet import load_table
 
 #: HLL precision: 2^10 registers.
@@ -278,11 +279,10 @@ def cms_heavy_hitters_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Pinned: tf feeds BOTH the sketch build and the top-20 candidate
     # pick; without the pin the physical plan scans + wordcounts the
     # corpus twice (ADVICE r9).
-    tf = (
+    tf = pin(
         docs.select(F.explode(tokens("text")).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()
     )
 
     def col_i(i_col):
@@ -383,9 +383,9 @@ def quantile_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-truth side (global rank selection) is the audit anchor, not
     the production path — at 100 TB you ship the sketch and this query
     is how you certify its error before you do."""
-    v = load_table(spark, sf_dir, "events").select(
+    v = pin(load_table(spark, sf_dir, "events").select(
         F.expr(f"CAST(floor(value * {_QSK_FP}) AS BIGINT)").alias("vf")
-    ).localCheckpoint()
+    ))
     st = v.agg(
         F.min("vf").alias("mn"), F.max("vf").alias("mx"), F.count(F.lit(1)).alias("n")
     )

@@ -27,7 +27,7 @@ helpers it calls, which guarantee:
 * an AvailableNow drain: the query stops once the staged files are
   consumed;
 * an eager pin before cleanup: the result is read from the scratch
-  directory, so it is materialised (``localCheckpoint``) before that
+  directory, so it is materialised (``session.pin``) before that
   directory is removed, which happens on every exit path.
 
 Why the interval-join parity is exact and not luck:
@@ -74,6 +74,7 @@ from flinkstreametl_spark.functions.exact import dsum, sql_dsum
 from flinkstreametl_spark.operators import text as X
 from flinkstreametl_spark.operators.ranks import with_ntile
 from flinkstreametl_spark.plans.registry import register
+from flinkstreametl_spark.session import job_tag, pin
 from flinkstreametl_spark.sources.parquet import load_table
 from flinkstreametl_spark.streaming.bloom_ingest import BLOOM_M
 from flinkstreametl_spark.streaming.bloom_ingest import _h as bloom_h
@@ -186,7 +187,7 @@ def _write_chunks(
     n = _SSJ_CHUNKS
     tiles = _ntile_chunks(df, n, order_cols)
     if redeliver is not None:
-        tiles = tiles.localCheckpoint()  # read by both union sides and the tile bounds
+        tiles = pin(tiles)  # read by both union sides and the tile bounds
         prev = tiles.filter(F.col("_b") < n)
         if redeliver != "all":
             mx = tiles.groupBy("_b").agg(F.max("ts").alias("_mx"))
@@ -296,11 +297,13 @@ def _drain(spark: SparkSession, tmp: str, job, provider: str | None = None):
     a streaming DataFrame, drained into a parquet file sink under
     ``tmp`` whose files are the returned output; a foreachBatch
     ``DataStreamWriter``; or a function that starts its own AvailableNow
-    query (the production ingest loops). Returns ``(output or None,
-    progress entries sorted by batchId)``."""
+    query (the production ingest loops). The stream's jobs carry the
+    job tag ``drain``, which its thread inherits. Returns ``(output or
+    None, progress entries sorted by batchId)``."""
     out = os.path.join(tmp, "out")
     file_sink = isinstance(job, DataFrame)
     with contextlib.ExitStack() as stack:
+        stack.enter_context(job_tag(spark.sparkContext, "drain"))
         stack.enter_context(_state_partitions(spark, _STATE_PARTITIONS))
         if provider is not None:
             stack.enter_context(_state_store_provider(spark, provider))
@@ -324,7 +327,7 @@ def _replay(body) -> DataFrame:
     holds; the directory is removed on every exit path."""
     tmp = tempfile.mkdtemp(prefix="replay_")
     try:
-        return body(tmp).localCheckpoint()
+        return pin(body(tmp))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

@@ -47,6 +47,7 @@ from flinkstreametl_spark.plans.registry import register
 from flinkstreametl_spark.plans.shared import DAILY_SQL as _DAILY_SQL
 from flinkstreametl_spark.plans.shared import EVENT_FP as _FP
 from flinkstreametl_spark.plans.shared import US_PER_DAY as _US_PER_DAY
+from flinkstreametl_spark.session import pin
 from flinkstreametl_spark.sources.parquet import load_table
 
 
@@ -717,7 +718,7 @@ def dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     contributes to its own window)."""
     events = load_table(spark, sf_dir, "events")
     day = (epoch_micros(events, "ts") / F.lit(_US_PER_DAY)).cast("long")
-    active = events.select("user_id", day.alias("day")).distinct().localCheckpoint()
+    active = pin(events.select("user_id", day.alias("day")).distinct())
     max_day = active.agg(F.max("day").alias("max_day"))
     dau = active.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
     contrib = (
@@ -1205,7 +1206,7 @@ def value_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(_KS_BINS - 1),
         ).alias("bin"),
     )
-    h = halves.groupBy("half", "bin").agg(F.count(F.lit(1)).alias("cnt")).localCheckpoint()
+    h = pin(halves.groupBy("half", "bin").agg(F.count(F.lit(1)).alias("cnt")))
     t = h.groupBy("half").agg(F.sum("cnt").alias("tot"))
     ta = t.filter(F.col("half") == 0).select(F.col("tot").alias("ta"))
     tb = t.filter(F.col("half") == 1).select(F.col("tot").alias("tb"))
@@ -1226,7 +1227,7 @@ def value_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("bin", F.expr("pa div ta").alias("cdf_a"), F.expr("pb div tb").alias("cdf_b"))
     )
-    gap = cdf.select("bin", F.abs(F.col("cdf_a") - F.col("cdf_b")).alias("g")).localCheckpoint()
+    gap = pin(cdf.select("bin", F.abs(F.col("cdf_a") - F.col("cdf_b")).alias("g")))
     mx = gap.agg(F.max("g").alias("ks_bp"))
     arg = (
         gap.crossJoin(F.broadcast(mx))
@@ -1325,7 +1326,7 @@ def mad_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
     )
     dw = Window.partitionBy("event_type").orderBy("d", "day")
-    dev2 = dev.withColumn("drn", F.row_number().over(dw)).localCheckpoint()
+    dev2 = pin(dev.withColumn("drn", F.row_number().over(dw)))
     mad = dev2.groupBy("event_type").agg(
         F.max(
             F.when(F.col("drn") == F.ceil(0.5 * F.col("n")).cast("long"), F.col("d"))
@@ -1570,7 +1571,7 @@ def acf_daily_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     y = _daily(spark, sf_dir).select(
         "event_type", "day", F.expr(f"s_fp div {_FP}").alias("yv")
     )
-    y = y.localCheckpoint()  # three consumers: tot, both join sides
+    y = pin(y)  # three consumers: tot, both join sides
     tot = y.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_days"),
         F.sum("yv").alias("s1"),
@@ -2090,7 +2091,7 @@ def mann_kendall_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     is pinned: THREE consumers (both pair-join sides + the tie pass)
     would otherwise each replay the events aggregation (caught by
     tools/audit_dup_subtrees.py's repeated-scan count)."""
-    daily = _daily(spark, sf_dir).select("event_type", "day", "s_fp").localCheckpoint()
+    daily = pin(_daily(spark, sf_dir).select("event_type", "day", "s_fp"))
     a, b = daily.alias("a"), daily.alias("b")
     sign = (
         F.when(F.col("b.s_fp") > F.col("a.s_fp"), 1)

@@ -187,6 +187,7 @@ def trend_fit_by_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from flinkstreametl_spark.operators.zorder import interleave_bits_sql, zorder_key  # noqa: E402
+from flinkstreametl_spark.session import pin
 
 # The interleave SQL is engine-portable (pure shifts/masks); day index
 # from epoch-µs integer division — NTZ-safe and identical in DuckDB.
@@ -774,9 +775,9 @@ def bloom_prune_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders, no shuffle except the final 1-row aggregate."""
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
-    build = (
+    build = pin(
         cust.filter(F.col("c_mktsegment") == _BLOOM_SEG).select("c_custkey").distinct()
-    ).localCheckpoint()  # feeds both hash projections AND the membership join
+    )  # feeds both hash projections AND the membership join
 
     def _h(salt: str, key) -> F.Column:
         return (
@@ -1031,10 +1032,10 @@ def revenue_topk_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     all share arithmetic is integer div over unscaled cents·100."""
     li = load_table(spark, sf_dir, "lineitem")
     charge = dec("l_extendedprice", 12, 2) * (F.lit(1) - dec("l_discount", 6, 4))
-    rev = (
+    # Feeds the total AND the top-k.
+    rev = pin(
         li.groupBy("l_partkey")
         .agg((F.sum(charge) * 10_000).cast("long").alias("rev_u"))
-        .localCheckpoint()  # feeds the total AND the top-k
     )
     tot = rev.agg(F.sum("rev_u").alias("total_u"))
     top = rev.orderBy(F.col("rev_u").desc(), "l_partkey").limit(_RCONC_TOPK)

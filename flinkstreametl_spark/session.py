@@ -12,9 +12,11 @@ scaled to ~2-3x total cores and AQE coalescing handling the rest.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
-from pyspark.sql import SparkSession
+from pyspark import SparkContext
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_parallelism() -> int:
@@ -71,3 +73,44 @@ def get_spark(app_name: str = "flinkstreametl_spark", *, shuffle_partitions: int
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextlib.contextmanager
+def job_tag(sc: SparkContext, tag: str):
+    """Tag every Spark job this thread starts inside the block with
+    ``tag``, so the status store can attribute it. A thread started
+    inside, such as a streaming query's, inherits the tag."""
+    sc.addJobTag(tag)
+    try:
+        yield
+    finally:
+        sc.removeJobTag(tag)
+
+
+def pin(df: DataFrame, *, eager: bool = True) -> DataFrame:
+    """Materialize ``df`` once and cut its lineage: the one way the
+    engine pins a frame that several consumers share, or that must
+    outlive the files it reads.
+
+    A pin is a ``localCheckpoint()``. Its RDD is persisted
+    MEMORY_AND_DISK in executor storage, so the frame is computed once
+    however many consumers read it; lazy pins rely on exactly that. The
+    blocks are lost with their executor, which is fine in one local JVM
+    but not on a cluster. A reliable ``checkpoint()`` is not the same
+    thing: it does not persist its RDD, so each consumer of a lazy pin
+    would recompute the frame, and its files are never removed by
+    default.
+
+    ``persist()`` is not a pin. Its cached plan is registered with the
+    CacheManager, so a later build of the same plan, in the next run of
+    a query, would reuse the materialization instead of recomputing.
+
+    An eager pin runs its job now, tagged ``pin``. A lazy one
+    (``eager=False``) materializes in the first action that reads it,
+    under that action's tags. Under adaptive execution the shuffle
+    stages below it still run now, untagged by ``pin``.
+    """
+    if not eager:
+        return df.localCheckpoint(eager=False)
+    with job_tag(df.sparkSession.sparkContext, "pin"):
+        return df.localCheckpoint()

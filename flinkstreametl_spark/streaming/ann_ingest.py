@@ -50,6 +50,7 @@ from flinkstreametl_spark.operators.clustering import (
     assign_to_centroids,
     kmeans_fit,
 )
+from flinkstreametl_spark.session import pin
 from flinkstreametl_spark.streaming.versioned import (
     commit_version,
     current_version,
@@ -154,7 +155,7 @@ def process_batch(
     redelivery dedup — the content-blind-batch-key hazard the shard
     writer had does not exist here."""
     recover(index_dir)
-    batch_df = batch_df.dropDuplicates(["vec_id"]).localCheckpoint()
+    batch_df = pin(batch_df.dropDuplicates(["vec_id"]))
     postings_path = live_path(index_dir, POSTINGS_SUBDIR)
     indexed = spark.read.schema(POSTINGS_SCHEMA).parquet(postings_path).select("vec_id")
     fresh = batch_df.select("vec_id", "embedding").join(indexed, "vec_id", "left_anti")
@@ -173,7 +174,7 @@ def refit_index(spark: SparkSession, index_dir: str) -> None:
     over from the live meta."""
     live = live_version(index_dir)
     meta = load_meta(index_dir)
-    emb = load_postings(spark, index_dir).select("vec_id", "embedding").localCheckpoint()
+    emb = pin(load_postings(spark, index_dir).select("vec_id", "embedding"))
     commit_version(
         index_dir, live, lambda vdir: _write_version(spark, emb, vdir, meta["k"], meta["n_iters"])
     )

@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkstreametl_spark.operators import text as X
+from flinkstreametl_spark.session import pin
 from flinkstreametl_spark.streaming.versioned import (
     compact_parquet,
     read_or_empty,
@@ -128,10 +129,9 @@ def process_batch(
     at-least-once source can duplicate WITHIN a batch), two broadcast
     lookups against the ≤ BLOOM_M-row bit table, and an exact history
     anti-join probed ONLY by the bloom-pass rows."""
-    batch = (
+    batch = pin(
         batch_df.withColumn("fp", X.fingerprint("text"))
         .dropDuplicates(["fp"])
-        .localCheckpoint()
     )
     bits_path = os.path.join(state_dir, BITS_SUBDIR)
     history_path = os.path.join(state_dir, HISTORY_SUBDIR)
@@ -140,25 +140,24 @@ def process_batch(
     bits = read_or_empty(spark, bits_path, "b LONG")
     history = read_or_empty(spark, history_path, "fp STRING")
 
-    flagged = (
+    flagged = pin(
         batch.withColumn("h1", _h("a", F.col("fp")))
         .withColumn("h2", _h("b", F.col("fp")))
         .join(F.broadcast(bits.withColumnRenamed("b", "b1")), F.col("b1") == F.col("h1"), "left")
         .join(F.broadcast(bits.withColumnRenamed("b", "b2")), F.col("b2") == F.col("h2"), "left")
         .withColumn("bloom_pass", F.col("b1").isNotNull() & F.col("b2").isNotNull())
-        .localCheckpoint()
     )
     fast_new = flagged.filter(~F.col("bloom_pass"))
     probed = flagged.filter(F.col("bloom_pass"))
     # Only the bloom-pass rows pay the exact membership probe.
     confirmed_new = probed.join(history, "fp", "left_anti")
-    new = fast_new.unionByName(confirmed_new).select(batch.columns).localCheckpoint()
+    new = pin(fast_new.unionByName(confirmed_new).select(batch.columns))
 
     # accepted (at-least-once, pre-commit) -> bits (keeps bits ⊇
     # hashes(history) through any crash) -> history (the commit point).
     new.write.mode("append").parquet(accepted_path)
-    new_bits = (
-        bloom_positions(new.select("fp")).join(bits, "b", "left_anti").localCheckpoint()
+    new_bits = pin(
+        bloom_positions(new.select("fp")).join(bits, "b", "left_anti")
     )
     new_bits.write.mode("append").parquet(bits_path)
     new.select("fp").write.mode("append").parquet(history_path)

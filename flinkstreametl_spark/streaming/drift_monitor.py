@@ -33,6 +33,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flinkstreametl_spark.session import pin
 from flinkstreametl_spark.streaming.versioned import recover, replace_dir, start_state_loop
 
 BASELINE_SUBDIR = "baseline"
@@ -93,7 +94,7 @@ def process_batch(
     row. Returns the row for direct callers/tests."""
     base_path = os.path.join(state_dir, BASELINE_SUBDIR)
     log_path = os.path.join(state_dir, LOG_SUBDIR)
-    hist = score_histogram(batch_df).localCheckpoint()
+    hist = pin(score_histogram(batch_df))
     # A seeded baseline is one whose write JOB committed — Spark's
     # _SUCCESS marker, written atomically after all part-files. The
     # seed and every rebaseline are swapped in whole by ``replace_dir``;

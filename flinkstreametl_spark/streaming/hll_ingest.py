@@ -48,6 +48,7 @@ from flinkstreametl_spark.plans.sketch_ext import (
     hll_registers,
     hll_summarize,
 )
+from flinkstreametl_spark.session import pin
 from flinkstreametl_spark.streaming.versioned import (
     commit_version,
     current_version,
@@ -91,11 +92,10 @@ def process_batch(
     else:
         state = spark.read.schema(_REG_SCHEMA).parquet(version_dir(reg_root, ver))
     batch_regs = hll_registers(batch_df, key=key, group=group)
-    merged = (
+    merged = pin(
         state.unionByName(batch_regs.select("grp", "bucket", F.col("rho").cast("int")))
         .groupBy("grp", "bucket")
         .agg(F.max("rho").alias("rho"))
-        .localCheckpoint()
     )
 
     next_ver = commit_version(reg_root, ver, merged.write.parquet)

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkstreametl_spark.operators import text as X
+from flinkstreametl_spark.session import pin
 from flinkstreametl_spark.streaming.versioned import (
     commit_version,
     current_version,
@@ -148,7 +149,7 @@ def process_batch(
     threshold. Called from ``foreachBatch`` (or directly, for batch
     replay tests)."""
     recover(index_dir)
-    batch_df = batch_df.dropDuplicates(["doc_id"]).localCheckpoint()
+    batch_df = pin(batch_df.dropDuplicates(["doc_id"]))
     postings_path = live_path(index_dir, POSTINGS_SUBDIR)
     indexed = (
         spark.read.schema(POSTINGS_SCHEMA)
@@ -167,7 +168,7 @@ def refit_stats(spark: SparkSession, index_dir: str) -> None:
     """Recompute df/totals over everything indexed so far and commit
     postings + fresh stats as the next version by ``commit_version``."""
     live = live_version(index_dir)
-    postings = load_postings(spark, index_dir).localCheckpoint()
+    postings = pin(load_postings(spark, index_dir))
     commit_version(index_dir, live, lambda vdir: _write_version(spark, postings, vdir))
 
 

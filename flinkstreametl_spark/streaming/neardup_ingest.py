@@ -34,6 +34,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from flinkstreametl_spark.operators.dedup import incremental_lsh_pairs, lsh_band_keys
+from flinkstreametl_spark.session import pin
 from flinkstreametl_spark.streaming.versioned import (
     compact_parquet,
     read_or_empty,
@@ -108,7 +109,7 @@ def process_batch(
     # In-batch self-dedup first: an at-least-once source can duplicate
     # a doc WITHIN one micro-batch (two files of the same retry drained
     # together), where the index anti-join cannot see it. ∝ batch cost.
-    batch_df = batch_df.dropDuplicates(["doc_id"]).localCheckpoint()
+    batch_df = pin(batch_df.dropDuplicates(["doc_id"]))
     index_path = os.path.join(state_dir, INDEX_SUBDIR)
     docs_path = os.path.join(state_dir, DOCS_SUBDIR)
     pairs_path = os.path.join(state_dir, PAIRS_SUBDIR)

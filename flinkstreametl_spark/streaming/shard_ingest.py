@@ -65,6 +65,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flinkstreametl_spark.session import pin
 from flinkstreametl_spark.streaming.versioned import read_or_empty, start_state_loop
 
 ASSIGN_SUBDIR = "assignments"
@@ -122,13 +123,13 @@ def _placed(batch_docs: DataFrame, start_offset: int, capacity: int) -> DataFram
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     wtot = Window.partitionBy("bucket")
-    placed = keyed.select(
+    placed = pin(keyed.select(
         "doc_id",
         "bucket",
         "n",
         (F.sum("n").over(wloc) - F.col("n")).alias("loc_before"),
         F.sum("n").over(wtot).alias("bucket_tokens"),
-    ).localCheckpoint()
+    ))
     woff = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
     offsets = (
         placed.groupBy("bucket")
@@ -157,7 +158,7 @@ def process_batch(
     """One micro-batch of continuous shard assignment against on-disk
     state. Called from ``foreachBatch`` (or directly for replay tests).
     """
-    batch_df = batch_df.dropDuplicates(["doc_id"]).localCheckpoint()
+    batch_df = pin(batch_df.dropDuplicates(["doc_id"]))
     assign_path = os.path.join(state_dir, ASSIGN_SUBDIR)
     totals_path = os.path.join(state_dir, TOTALS_SUBDIR)
 
@@ -183,9 +184,9 @@ def process_batch(
         assigned.filter(F.col("batch_key") != key).select("doc_id"), "doc_id", "left_anti"
     )
     placed = _placed(fresh, int(start), capacity).withColumn("batch_key", F.lit(key))
-    to_write = placed.join(
+    to_write = pin(placed.join(
         assigned.filter(F.col("batch_key") == key).select("doc_id"), "doc_id", "left_anti"
-    ).localCheckpoint()
+    ))
     to_write.write.mode("append").parquet(assign_path)
 
     # The totals row sums the assignment rows carrying THIS batch's key

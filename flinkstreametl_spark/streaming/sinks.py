@@ -24,6 +24,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from flinkstreametl_spark.operators.cdc import latest_by_key
 from flinkstreametl_spark.streaming.versioned import recover, replace_dir
@@ -32,19 +33,27 @@ from flinkstreametl_spark.streaming.versioned import recover, replace_dir
 class _SwappedParquetTable:
     """A parquet table directory that each commit replaces whole
     (``versioned.replace_dir``), so readers see the old table or the
-    new one, never a mix."""
+    new one, never a mix.
+
+    ``read`` reuses the schema of the last frame this object committed,
+    so a micro-batch does not run a footer-inference job. A table it
+    has not written yet (written by another process, or before a
+    restart) is inferred once."""
 
     path: str
     # Name of a file recording the committed batch id, for sinks that
     # keep one; it is written into the new version before the rename,
     # so data and batch id commit together.
     _MARKER: str | None = None
+    _schema: StructType | None = None
 
     def read(self, spark: SparkSession) -> DataFrame | None:
         recover(self.path)
         if not os.path.exists(self.path):
             return None
-        return spark.read.parquet(self.path)
+        if self._schema is None:
+            return spark.read.parquet(self.path)
+        return spark.read.schema(self._schema).parquet(self.path)
 
     def _commit(self, merged: DataFrame, batch_id: int) -> None:
         def write(tmp: str) -> None:
@@ -53,7 +62,11 @@ class _SwappedParquetTable:
                 with open(os.path.join(tmp, self._MARKER), "w") as fh:
                     fh.write(str(batch_id))
 
+        # A commit that raises may still have swapped the table in, so
+        # the old schema is dropped first and a retry infers once.
+        self._schema = None
         replace_dir(self.path, write)
+        self._schema = merged.schema
 
 
 class KeyedParquetUpsertSink(_SwappedParquetTable):

@@ -500,3 +500,32 @@ def test_upsert_merge_reads_each_input_once(spark, tmp_path):
     assert plan.count("Scan ExistingRDD") == 1, plan
     assert plan.count("FileScan parquet") == 1, plan
     assert plan.count("Exchange") == 1, plan
+
+
+def test_hits_half_steps_broadcast_the_scores(spark, sf_dir, monkeypatch):
+    """hits_order_part_scores: every pinned half-step broadcasts the
+    node-scale score frame into the edge join, so the edge list is never
+    shuffled. Auto-broadcast is off, so the plan shows the hint and not
+    the small sf0.001 statistics."""
+    from flinkstreametl_spark.plans import graph_ext
+
+    pinned, real_pin = [], graph_ext.pin
+
+    def recording_pin(df, **kw):
+        out = real_pin(df, **kw)
+        pinned.append(df._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(graph_ext, "pin", recording_pin)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        REGISTRY["hits_order_part_scores"].fn(spark, sf_dir)
+    finally:
+        spark.conf.set(key, before)
+    half_steps = pinned[1:]  # the first pin is the distinct edge list
+    assert len(half_steps) == 2 * graph_ext._HITS_ITERS, pinned
+    for plan in half_steps:
+        assert "SortMergeJoin" not in plan, plan
+        assert "BroadcastHashJoin" in plan, plan

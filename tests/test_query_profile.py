@@ -43,3 +43,14 @@ def test_status_store_is_read_in_perfbench_only(call):
                         if call in fh.read():
                             found.append(os.path.relpath(path, ROOT))
     assert found == []
+
+
+def test_eager_pins_are_counted(spark, sf_dir):
+    rec = query_profile.profile(spark, "hits_order_part_scores", sf_dir)
+    assert rec["pin_jobs"] >= 1
+    assert rec["stage_totals"]["pin"]["tasks"] >= 1
+
+
+def test_replay_drain_jobs_are_counted(spark, sf_dir):
+    rec = query_profile.profile(spark, "stream_dedup_replay", sf_dir)
+    assert 1 <= rec["drain_jobs"] <= rec["construct_jobs"]

@@ -7,7 +7,13 @@ DELETE tombstone removes the key.
 
 from __future__ import annotations
 
-from flinkstreametl_spark.streaming.sinks import KeyedParquetUpsertSink
+import os
+
+import pytest
+from pyspark.errors import AnalysisException
+
+from flinkstreametl_spark.streaming import versioned
+from flinkstreametl_spark.streaming.sinks import IncrementalAggSink, KeyedParquetUpsertSink
 
 SCHEMA = "k INT, v STRING, _es LONG, _ts LONG, _op STRING"
 KEY, ORDER = ["k"], ["_es", "_ts"]
@@ -95,3 +101,63 @@ def test_replay_after_torn_swap_matches_replace_into_model(spark, tmp_path, torn
         sink.process_batch(spark.createDataFrame(batch, SCHEMA), 1)
     model = _apply(spark, sink, model, batch, 1)
     assert set(model) == {1, 2, 3}
+
+
+def test_read_after_commit_runs_no_spark_job(spark, tmp_path):
+    """After a commit the sink knows its table's schema, so a read is
+    planned without a parquet-footer inference job."""
+    sink = KeyedParquetUpsertSink(str(tmp_path / "t"), KEY, ORDER)
+    _apply(spark, sink, {}, [(1, "a0", 1, 1, "INSERT")], 0)
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    before = sc.statusTracker().getJobIdsForGroup(None)
+    stored = sink.read(spark)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup(None) == before
+    assert stored.schema.simpleString() == spark.createDataFrame([], SCHEMA).schema.simpleString()
+
+
+def test_table_written_elsewhere_is_inferred(spark, tmp_path):
+    """A table this sink has not written (another writer, or a
+    restart) is read with its footer schema."""
+    path = str(tmp_path / "t")
+    spark.createDataFrame([(1, "a0", 1, 1, "INSERT")], SCHEMA).write.parquet(path)
+    sink = KeyedParquetUpsertSink(path, KEY, ORDER)
+    model = {1: (1, "a0", 1, 1, "INSERT")}
+    model = _apply(spark, sink, model, [(2, "b0", 1, 1, "INSERT")], 0)
+    assert set(model) == {1, 2}
+
+
+def test_batch_with_an_extra_column_still_fails(spark, tmp_path):
+    sink = KeyedParquetUpsertSink(str(tmp_path / "t"), KEY, ORDER)
+    _apply(spark, sink, {}, [(1, "a0", 1, 1, "INSERT")], 0)
+    wide = spark.createDataFrame([(2, "b0", 1, 1, "INSERT", 7)], SCHEMA + ", extra INT")
+    with pytest.raises(AnalysisException):
+        sink.process_batch(wide, 1)
+
+
+def test_commit_that_raises_after_the_swap_forgets_the_schema(spark, tmp_path, monkeypatch):
+    """A commit can raise after its new table is live (here, removing
+    the parked original fails). The aggregate's ``total`` is bigint in
+    the first commit and double after, so a sink that kept the first
+    schema could not read the table the failed commit left."""
+    sink = IncrementalAggSink(str(tmp_path / "mv"), ["k"], "v")
+
+    def batch(rows):
+        return spark.createDataFrame(rows, "k STRING, v BIGINT")
+
+    sink.process_batch(batch([("a", 1)]), 0)
+    real = versioned.shutil.rmtree
+
+    def rmtree(path, *args, **kwargs):
+        if os.fspath(path).endswith("._old"):
+            raise RuntimeError("crash after the swap")
+        real(path, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(versioned.shutil, "rmtree", rmtree)
+        with pytest.raises(RuntimeError, match="crash after the swap"):
+            sink.process_batch(batch([("a", 2)]), 1)
+    sink.process_batch(batch([("b", 5)]), 2)
+    got = sorted((r.k, r.n, r.total) for r in sink.read(spark).collect())
+    assert got == [("a", 2, 3.0), ("b", 1, 5.0)]

@@ -9,8 +9,13 @@ carry the job tags ``construct:<q>`` and ``action:<q>``, so the status
 store attributes them. Each query prints one JSON line:
 
 - ``construct_s``, ``action_s`` and the job count of each phase;
+- ``pin_jobs`` and ``drain_jobs``: the construction jobs that also
+  carry the tag ``pin`` (an eager ``session.pin``) or ``drain`` (a
+  replay's stream). A pin inside a drain counts in both. A lazy pin
+  materializes inside the action, under the action's tag, so it is not
+  counted;
 - ``stage_totals``: tasks, executor run vs CPU time, shuffle and spill
-  of each phase's stages;
+  of the stages of each phase, and of the pin and drain jobs;
 - ``python``: the summed metrics of the Python-boundary plan nodes;
 - ``streaming``: the micro-batch progress of any stream the query
   drained (batches, trigger p50, state commit ms, no-data batches).
@@ -48,9 +53,12 @@ from tracing import StateProgressRecorder, StatusStore  # noqa: E402
 
 from flinkstreametl_spark.plans import REGISTRY  # noqa: E402
 from flinkstreametl_spark.schemas import FIXTURE_TABLES  # noqa: E402
+from flinkstreametl_spark.session import get_spark, job_tag  # noqa: E402
 from flinkstreametl_spark.sources.parquet import load_table  # noqa: E402
 
 PHASES = ("construct", "action")
+# Construction jobs that also carry one of these tags.
+PARTS = ("pin", "drain")
 
 
 def warm_up(spark, sf_dir: str) -> None:
@@ -85,15 +93,12 @@ def profile_once(spark, store: StatusStore, name: str, sf_dir: str) -> dict:
     seconds = {}
     try:
         for phase in PHASES:
-            sc.addJobTag(f"{phase}:{name}")
             t0 = time.perf_counter()
-            try:
+            with job_tag(sc, f"{phase}:{name}"):
                 if phase == "construct":
                     df = REGISTRY[name].fn(spark, sf_dir)
                 else:
                     noop(df)
-            finally:
-                sc.removeJobTag(f"{phase}:{name}")
             seconds[phase] = time.perf_counter() - t0
         store.wait_for_events()  # the last job end and progress event
     finally:
@@ -102,11 +107,15 @@ def profile_once(spark, store: StatusStore, name: str, sf_dir: str) -> dict:
         p: {j: st for j, st in store.tagged_jobs(f"{p}:{name}").items() if j not in earlier[p]}
         for p in PHASES
     }
+    for part in PARTS:
+        tagged = store.tagged_jobs(part)
+        jobs[part] = {j: st for j, st in jobs["construct"].items() if j in tagged}
     rec: dict = {"query": name}
     for p in PHASES:
         rec[f"{p}_s"] = seconds[p]
+    for p in (*PHASES, *PARTS):
         rec[f"{p}_jobs"] = len(jobs[p])
-    rec["stage_totals"] = {p: store.stage_totals(jobs[p]) for p in PHASES}
+    rec["stage_totals"] = {p: store.stage_totals(jobs[p]) for p in (*PHASES, *PARTS)}
     # No executions are skipped by offset: past spark.sql.ui.retainedExecutions
     # the store drops its oldest ones, which shifts every offset. The
     # job ids alone pick out this run's executions.
@@ -141,8 +150,6 @@ def main(argv: list[str] | None = None) -> int:
     unknown = [n for n in names if n not in REGISTRY]
     if unknown:
         ap.error(f"unknown queries: {unknown}")
-
-    from flinkstreametl_spark.session import get_spark
 
     spark = get_spark("query-profile")
     failed = 0
