@@ -15,8 +15,9 @@ Scale design
   = hamming distance <= d via xor/bit_count, candidates from the
   multi-index pigeonhole equi-join (d+1 bit bands; any pair within d
   agrees on some band) — exact recall, never a cross join.
-- Hot-key guard: band buckets above MAX_BUCKET_SIZE are dropped before
-  any self-join (both LSH and SimHash) — one boilerplate bucket
+- Hot-key guard: every candidate self-join in the engine (LSH, SimHash,
+  media fingerprints, blocking keys) is ``bucket_pairs``, which drops
+  buckets above MAX_BUCKET_SIZE first — one boilerplate bucket
   otherwise turns the candidate join quadratic on a single key.
 """
 
@@ -122,6 +123,51 @@ def lsh_band_keys(
     )
 
 
+def cap_buckets(
+    rows: DataFrame, bucket_cols: list[str], cap: int | None = MAX_BUCKET_SIZE
+) -> DataFrame:
+    """``rows`` without the buckets (rows sharing ``bucket_cols``) that
+    have more than ``cap`` members; ``None`` keeps every bucket. The
+    count is a window over the bucket columns, so it reuses the
+    partitioning a join on them needs anyway, and a hot bucket costs
+    one linear scan. Dropping by size is arrival-order-independent, so
+    the oracles mirror it with ``QUALIFY COUNT(*) OVER (...) <= cap``."""
+    if cap is None:
+        return rows
+    n = F.count(F.lit(1)).over(Window.partitionBy(*bucket_cols))
+    return rows.withColumn("_bn", n).filter(F.col("_bn") <= cap).drop("_bn")
+
+
+def _side(col: str, side: str) -> str:
+    return f"{col.removesuffix('_id')}_{side}"
+
+
+def bucket_pairs(
+    rows: DataFrame, id_col: str, bucket_cols: list[str], cap: int | None = MAX_BUCKET_SIZE
+) -> DataFrame:
+    """Every pair of rows in the same bucket: the candidate step of
+    every near-dup and blocking query.
+
+    Buckets above ``cap`` are dropped first (``cap_buckets``), so a
+    single hot key cannot generate size² candidates in one task. The
+    capped frame is pinned eagerly, because both join sides read it.
+    The self-join on ``bucket_cols`` keeps ``id_a < id_b``.
+
+    Output: the bucket columns, then every other column ``c`` twice, as
+    ``<c>_a`` and ``<c>_b``, where a trailing ``_id`` is dropped from
+    ``c`` (``doc_id`` -> ``doc_a``/``doc_b``). A pair that shares
+    several buckets appears once per bucket."""
+    kept = pin(cap_buckets(rows, bucket_cols, cap))
+    others = [c for c in kept.columns if c not in bucket_cols]
+
+    def side(s: str) -> DataFrame:
+        return kept.select(*(F.col(c).alias(_side(c, s)) for c in others), *bucket_cols)
+
+    return side("a").join(side("b"), bucket_cols).filter(
+        F.col(_side(id_col, "a")) < F.col(_side(id_col, "b"))
+    )
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -133,31 +179,16 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs: LSH candidate generation + exact Jaccard
     verification. Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
-
-    Band buckets with more than ``max_bucket_size`` members are dropped
-    before the self-join (``None`` disables): a single hot key would
-    otherwise generate size² candidates in one task. The count-filter is
-    a window count over the same (band, band_key) partitioning the
-    self-join shuffles on anyway — linear in bucket size, so the hot
-    bucket costs one sequential scan, not a quadratic join."""
+    Candidates come from ``bucket_pairs`` on (band, band_key), capped at
+    ``max_bucket_size`` (``None`` disables)."""
     bands = lsh_band_keys(docs, id_col, rows_per_band, text_col, num_hashes)
-    if max_bucket_size is not None:
-        wb = Window.partitionBy("band", "band_key")
-        bands = (
-            bands.withColumn("_bn", F.count(F.lit(1)).over(wb))
-            .filter(F.col("_bn") <= max_bucket_size)
-            .drop("_bn")
-        )
-    # Both self-join sides read the bands and the token sets (doc-scale).
-    bands = pin(bands)
-    b1 = bands.select(F.col(id_col).alias("doc_a"), "band", "band_key")
-    b2 = bands.select(F.col(id_col).alias("doc_b"), "band", "band_key")
+    bands = bands.withColumnRenamed(id_col, "doc_id")
     cand = (
-        b1.join(b2, ["band", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        bucket_pairs(bands, "doc_id", ["band", "band_key"], max_bucket_size)
         .select("doc_a", "doc_b")
         .distinct()
     )
+    # Both pair sides read the token sets (doc-scale).
     sets = pin(token_sets(docs, id_col, text_col))
     sa = sets.select(F.col(id_col).alias("doc_a"), F.col("toks").alias("toks_a"))
     sb = sets.select(F.col(id_col).alias("doc_b"), F.col("toks").alias("toks_b"))
@@ -274,6 +305,39 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", bit
     return with_sums.select(F.col(id_col), sig.alias("simhash"))
 
 
+def hamming_pairs(
+    sig: DataFrame,
+    id_col: str,
+    fp_col: str,
+    n_bands: int,
+    width: int,
+    max_hamming: int = 3,
+    cap: int | None = MAX_BUCKET_SIZE,
+) -> DataFrame:
+    """Pairs of ``sig`` rows whose integer fingerprints ``fp_col`` are
+    within ``max_hamming`` bits: ``(<id>_a, <id>_b, hamming)`` named as
+    in ``bucket_pairs``, with ``<id>_a < <id>_b``.
+
+    The multi-index (pigeonhole) search: the fingerprint is cut into
+    ``n_bands`` bands of ``width`` bits, and ``bucket_pairs`` joins on
+    (band, band_bits). With ``n_bands > max_hamming`` any pair within
+    the budget agrees exactly on at least one band, so recall is exact
+    up to the bucket cap; the hamming filter and the pair-distinct run
+    on candidates only, never on a cross join."""
+    band_idx = F.explode(F.array([F.lit(i) for i in range(n_bands)])).alias("band")
+    banded = sig.select(id_col, fp_col, band_idx).withColumn(
+        "band_bits", F.expr(f"({fp_col} >> (band * {width})) & {(1 << width) - 1}")
+    )
+    a, b = _side(id_col, "a"), _side(id_col, "b")
+    ham = F.expr(f"bit_count({_side(fp_col, 'a')} ^ {_side(fp_col, 'b')})")
+    return (
+        bucket_pairs(banded, id_col, ["band", "band_bits"], cap)
+        .select(a, b, ham.alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming)
+        .distinct()
+    )
+
+
 def simhash_near_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -283,46 +347,12 @@ def simhash_near_pairs(
     max_bucket_size: int | None = MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """Pairs of documents whose SimHash signatures are within
-    ``max_hamming`` bits (xor + bit_count).
-
-    Candidate generation is the multi-index (pigeonhole) equi-join, not
-    a cross join: the signature is cut into ``max_hamming + 1`` bit
-    bands, so any pair within the hamming budget agrees exactly on at
-    least one band — a self-join on (band index, band bits) finds every
-    such pair with zero recall loss, then the exact hamming filter and a
-    pair-distinct run on candidates only. Same hot-key guard as LSH:
-    band buckets above ``max_bucket_size`` are dropped."""
-    sh = simhash(docs, id_col, text_col, bits)
+    ``max_hamming`` bits: ``hamming_pairs`` over ``max_hamming + 1``
+    bands, capped at ``max_bucket_size`` (``None`` disables)."""
+    sh = simhash(docs, id_col, text_col, bits).withColumnRenamed(id_col, "doc_id")
     n_bands = max_hamming + 1
     width = -(-bits // n_bands)  # ceil: last band may be narrower
-    band_idx = F.explode(F.array([F.lit(i) for i in range(n_bands)])).alias("band")
-    banded = sh.select(F.col(id_col), F.col("simhash"), band_idx).withColumn(
-        "band_bits",
-        F.expr(f"(simhash >> (band * {width})) & {(1 << width) - 1}"),
-    )
-    if max_bucket_size is not None:
-        wb = Window.partitionBy("band", "band_bits")
-        banded = (
-            banded.withColumn("_bn", F.count(F.lit(1)).over(wb))
-            .filter(F.col("_bn") <= max_bucket_size)
-            .drop("_bn")
-        )
-    # Both self-join sides read the banded SimHash (n_bands rows/doc).
-    banded = pin(banded)
-    a = banded.select(
-        F.col(id_col).alias("doc_a"), F.col("simhash").alias("sh_a"), "band", "band_bits"
-    )
-    b = banded.select(
-        F.col(id_col).alias("doc_b"), F.col("simhash").alias("sh_b"), "band", "band_bits"
-    )
-    ham = F.expr("bit_count(sh_a ^ sh_b)")
-    return (
-        a.join(b, ["band", "band_bits"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", ham.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    return hamming_pairs(sh, "doc_id", "simhash", n_bands, width, max_hamming, max_bucket_size)
 
 
 def incremental_lsh_pairs(
@@ -374,14 +404,7 @@ def incremental_lsh_pairs(
     # lazy, as an eager pin costs one job per replay batch.
     new_bands = pin(lsh_band_keys(new_docs, id_col, rows_per_band, text_col, num_hashes), eager=False)
     updated = old_bands.unionByName(new_bands)
-    capped = updated
-    if max_bucket_size is not None:
-        wb = Window.partitionBy("band", "band_key")
-        capped = (
-            updated.withColumn("_bn", F.count(F.lit(1)).over(wb))
-            .filter(F.col("_bn") <= max_bucket_size)
-            .drop("_bn")
-        )
+    capped = cap_buckets(updated, ["band", "band_key"], max_bucket_size)
     nb = new_bands.select(F.col(id_col).alias("doc_new"), "band", "band_key")
     ab = capped.select(F.col(id_col).alias("doc_any"), "band", "band_key")
     cand = (

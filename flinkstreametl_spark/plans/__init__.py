@@ -61,6 +61,13 @@ _RECHECK: dict[str, int] = {
     "stream_state_metrics_replay": 16,
     "stream_state_memory_replay": 16,
     "stream_state_rocksdb_replay": 16,
+    # candidates from dedup.bucket_pairs: renamed join columns, eager media pins
+    "simhash_near_pairs": 16,
+    "dedup_method_agreement": 16,
+    "image_phash_neardup": 16,
+    "audio_fingerprint_neardup": 16,
+    "video_fingerprint_neardup": 16,
+    "fuzzy_dup_parts": 16,
 }
 
 

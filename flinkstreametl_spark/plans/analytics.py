@@ -23,15 +23,8 @@ from pyspark.sql import functions as F
 from flinkstreametl_spark.functions.exact import dbl, dec, dsum, sql_dbl, sql_dsum
 from flinkstreametl_spark.operators.joins import anti_join, dim_3way, semi_join
 from flinkstreametl_spark.plans.registry import register
+from flinkstreametl_spark.plans.shared import REV_SQL, rev_col
 from flinkstreametl_spark.sources.parquet import load_table, register_views
-
-# Exact revenue expression: decimal(12,2) * decimal(*,4) products stay
-# exact (< 38 digits), identical in Spark and DuckDB.
-_REV_SQL = "CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(6,4)))"
-
-
-def _rev() -> F.Column:
-    return dec("l_extendedprice", 12, 2) * (F.lit(1) - dec("l_discount", 6, 4))
 
 
 @register(
@@ -42,8 +35,8 @@ SELECT l_returnflag,
        l_linestatus,
        {sql_dsum('l_quantity')} AS sum_qty,
        {sql_dsum('l_extendedprice')} AS sum_base_price,
-       {sql_dbl(f'SUM({_REV_SQL})', 6)} AS sum_disc_price,
-       {sql_dbl(f'SUM({_REV_SQL} * (1 + CAST(l_tax AS DECIMAL(6,4))))', 6)} AS sum_charge,
+       {sql_dbl(f'SUM({REV_SQL})', 6)} AS sum_disc_price,
+       {sql_dbl(f'SUM({REV_SQL} * (1 + CAST(l_tax AS DECIMAL(6,4))))', 6)} AS sum_charge,
        {sql_dsum('l_quantity')} / COUNT(*) AS avg_qty,
        {sql_dsum('l_extendedprice')} / COUNT(*) AS avg_price,
        {sql_dsum('l_discount', 6, 4)} / COUNT(*) AS avg_disc,
@@ -65,8 +58,8 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.groupBy("l_returnflag", "l_linestatus").agg(
         dsum("l_quantity").alias("sum_qty"),
         dsum("l_extendedprice").alias("sum_base_price"),
-        dbl(F.sum(_rev()), 6).alias("sum_disc_price"),
-        dbl(F.sum(_rev() * (F.lit(1) + dec("l_tax", 6, 4))), 6).alias("sum_charge"),
+        dbl(F.sum(rev_col()), 6).alias("sum_disc_price"),
+        dbl(F.sum(rev_col() * (F.lit(1) + dec("l_tax", 6, 4))), 6).alias("sum_charge"),
         (dbl(F.sum(dec("l_quantity")), 2) / n).alias("avg_qty"),
         (dbl(F.sum(dec("l_extendedprice")), 2) / n).alias("avg_price"),
         (dbl(F.sum(dec("l_discount", 6, 4)), 4) / n).alias("avg_disc"),
@@ -79,7 +72,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ext", "aggregate", "join", "topk", "bench"),
     oracle=f"""
 SELECT o_orderkey,
-       {sql_dbl(f'SUM({_REV_SQL})', 6)} AS revenue,
+       {sql_dbl(f'SUM({REV_SQL})', 6)} AS revenue,
        o_orderdate,
        o_orderpriority
 FROM lineitem
@@ -104,7 +97,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(dbl(F.sum(_rev()), 6).alias("revenue"))
+        .agg(dbl(F.sum(rev_col()), 6).alias("revenue"))
         .select("o_orderkey", "revenue", "o_orderdate", "o_orderpriority")
         .orderBy(F.col("revenue").desc(), "o_orderkey")
         .limit(10)
@@ -117,7 +110,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT r.r_name AS region_name,
        n.n_name AS nation_name,
-       {sql_dbl(f'SUM({_REV_SQL})', 6)} AS revenue
+       {sql_dbl(f'SUM({REV_SQL})', 6)} AS revenue
 FROM lineitem l
 JOIN orders o   ON l.l_orderkey = o.o_orderkey
 JOIN customer c ON o.o_custkey = c.c_custkey
@@ -158,7 +151,7 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), F.col("c.c_nationkey") == F.col("n.n_nationkey"))
         .join(F.broadcast(region), F.col("n.n_regionkey") == F.col("r.r_regionkey"))
         .groupBy(F.col("r.r_name").alias("region_name"), F.col("n.n_name").alias("nation_name"))
-        .agg(dbl(F.sum(_rev()), 6).alias("revenue"))
+        .agg(dbl(F.sum(rev_col()), 6).alias("revenue"))
     )
 
 

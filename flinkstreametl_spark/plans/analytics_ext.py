@@ -13,14 +13,9 @@ from flinkstreametl_spark.functions.exact import dbl, dec, dsum, sql_dbl, sql_ds
 from flinkstreametl_spark.operators.text import tokens
 from flinkstreametl_spark.operators.windows import asof_join, asof_join_forward, epoch_micros, sessionize
 from flinkstreametl_spark.plans.registry import register
+from flinkstreametl_spark.plans.shared import REV_SQL, rev_col
 from flinkstreametl_spark.session import pin
 from flinkstreametl_spark.sources.parquet import load_table
-
-_REV_SQL = "CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(6,4)))"
-
-
-def _rev() -> F.Column:
-    return dec("l_extendedprice", 12, 2) * (F.lit(1) - dec("l_discount", 6, 4))
 
 
 @register(
@@ -85,8 +80,8 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q14_promo_revenue_share",
     tags=("ext", "aggregate", "join"),
     oracle=f"""
-SELECT {sql_dbl(f"SUM(CASE WHEN p_type = 'PROMO' THEN {_REV_SQL} ELSE CAST(0 AS DECIMAL(12,2)) END)", 6)}
-         / {sql_dbl(f"SUM({_REV_SQL})", 6)} * 100.0 AS promo_share_pct,
+SELECT {sql_dbl(f"SUM(CASE WHEN p_type = 'PROMO' THEN {REV_SQL} ELSE CAST(0 AS DECIMAL(12,2)) END)", 6)}
+         / {sql_dbl(f"SUM({REV_SQL})", 6)} * 100.0 AS promo_share_pct,
        COUNT(*) AS n_items
 FROM lineitem
 JOIN part ON l_partkey = p_partkey
@@ -103,9 +98,9 @@ def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     part = load_table(spark, sf_dir, "part")
     joined = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-    promo = F.when(F.col("p_type") == "PROMO", _rev()).otherwise(F.lit(0).cast("decimal(12,2)"))
+    promo = F.when(F.col("p_type") == "PROMO", rev_col()).otherwise(F.lit(0).cast("decimal(12,2)"))
     return joined.agg(
-        (dbl(F.sum(promo), 6) / dbl(F.sum(_rev()), 6) * F.lit(100.0)).alias("promo_share_pct"),
+        (dbl(F.sum(promo), 6) / dbl(F.sum(rev_col()), 6) * F.lit(100.0)).alias("promo_share_pct"),
         F.count(F.lit(1)).alias("n_items"),
     )
 

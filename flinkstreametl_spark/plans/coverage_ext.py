@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flinkstreametl_spark.functions.exact import dbl, dbl_wide, dec, sql_dbl, sql_dbl_wide
+from flinkstreametl_spark.operators import dedup as _D
 from flinkstreametl_spark.plans.registry import register
 from flinkstreametl_spark.plans.shared import EVENT_FP as _EVENT_FP
 from flinkstreametl_spark.plans.shared import EVENT_VALUE_FP_SQL as _EVENT_FP_SQL
@@ -644,7 +645,7 @@ def rollup_with_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "fuzzy_dup_parts",
     tags=("ext", "dedup", "entity-resolution", "bench"),
-    oracle="""
+    oracle=f"""
 WITH s AS (
     SELECT p_partkey AS k, p_brand, lower(p_name) AS nm,
            split_part(lower(p_name), ' ', -1) AS blk
@@ -652,7 +653,7 @@ WITH s AS (
 ), kept AS (
     SELECT k, p_brand, nm, blk,
            COUNT(*) OVER (PARTITION BY p_brand, blk) AS bn
-    FROM s QUALIFY bn <= 256
+    FROM s QUALIFY bn <= {_D.MAX_BUCKET_SIZE}
 )
 SELECT part_a, part_b, name_a, name_b, CAST(dist AS BIGINT) AS dist FROM (
     SELECT a.k AS part_a, b.k AS part_b, a.nm AS name_a, b.nm AS name_b,
@@ -674,36 +675,19 @@ def fuzzy_dup_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholded form bails out of the DP as soon as the distance exceeds
     the bound (O(d·n) instead of O(n²) per pair, returning -1 above the
     bound), which the post-filter excludes together with the band. The
-    same hot-bucket guard as the dedup ops (operators/dedup.py) caps any
-    degenerate blocking bucket at 256 members — mirrored in the oracle's
-    QUALIFY — so one boilerplate name can never turn the candidate join
-    quadratic on a single key. At 100 TB: one shuffle on the blocking
-    key, bucket-bounded pair fan-out, no global state."""
+    candidates are ``bucket_pairs`` on the blocking keys, so one
+    boilerplate name can never turn the join quadratic on a single key
+    (the oracle mirrors the cap with QUALIFY). At 100 TB: one shuffle on
+    the blocking key, bucket-bounded pair fan-out, no global state."""
     part = load_table(spark, sf_dir, "part")
     s = part.select(
-        F.col("p_partkey").alias("k"),
+        F.col("p_partkey").alias("part"),
         "p_brand",
-        F.lower("p_name").alias("nm"),
-    ).withColumn("blk", F.substring_index("nm", " ", -1))
-    wb = Window.partitionBy("p_brand", "blk")
-    # Both self-join sides read it.
-    kept = pin(
-        s.withColumn("_bn", F.count(F.lit(1)).over(wb))
-        .filter(F.col("_bn") <= 256)
-        .drop("_bn")
-    )
-    a = kept.select(
-        F.col("k").alias("part_a"), F.col("p_brand").alias("brand_a"),
-        F.col("nm").alias("name_a"), F.col("blk").alias("blk_a"),
-    )
-    b = kept.select(
-        F.col("k").alias("part_b"), F.col("p_brand").alias("brand_b"),
-        F.col("nm").alias("name_b"), F.col("blk").alias("blk_b"),
-    )
+        F.lower("p_name").alias("name"),
+    ).withColumn("blk", F.substring_index("name", " ", -1))
     dist = F.levenshtein(F.col("name_a"), F.col("name_b"), 3)
     return (
-        a.join(b, (F.col("brand_a") == F.col("brand_b")) & (F.col("blk_a") == F.col("blk_b")))
-        .filter(F.col("part_a") < F.col("part_b"))
+        _D.bucket_pairs(s, "part", ["p_brand", "blk"])
         .withColumn("dist", dist)
         .filter((F.col("dist") >= 0) & (F.col("dist") <= 3))
         .select("part_a", "part_b", "name_a", "name_b", F.col("dist").cast("long").alias("dist"))
@@ -890,7 +874,6 @@ def salted_hot_key_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # license-restricted source); a PII flag is the same audit with the
 # redact_documents regexes substituted — the fixture's text contains
 # no PII matches, so the source flag is what exercises the law here.
-from flinkstreametl_spark.operators import dedup as _D  # noqa: E402
 from flinkstreametl_spark.plans.llm import _MINHASH_ORACLE as _PAIR_ORACLE  # noqa: E402
 from flinkstreametl_spark.session import pin
 

@@ -146,21 +146,9 @@ def lsh_precision_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
     )
 
-    bands = D.lsh_band_keys(docs)
-    from pyspark.sql import Window
-
-    wb = Window.partitionBy("band", "band_key")
-    # Both self-join sides read it.
-    kept = pin(
-        bands.withColumn("_bn", F.count(F.lit(1)).over(wb))
-        .filter(F.col("_bn") <= D.MAX_BUCKET_SIZE)
-        .drop("_bn")
-    )
-    b1 = kept.select(F.col("doc_id").alias("doc_a"), "band", "band_key")
-    b2 = kept.select(F.col("doc_id").alias("doc_b"), "band", "band_key")
     cand = (
-        b1.join(b2, ["band", "band_key"])
-        .filter((F.col("doc_a") < F.col("doc_b")) & (F.col("doc_b") - F.col("doc_a") <= _AUD_BAND))
+        D.bucket_pairs(D.lsh_band_keys(docs), "doc_id", ["band", "band_key"])
+        .filter(F.col("doc_b") - F.col("doc_a") <= _AUD_BAND)
         .select("doc_a", "doc_b")
         .distinct()
     )
@@ -513,8 +501,6 @@ def lsh_band_sweep_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot-bucket-capped); truth is the one bucketed all-pairs join the
     single-config audit already bounds. Four configs = four bounded
     joins over one materialization."""
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
     sets = D.token_sets(docs).filter(F.size("toks") > 0)
     sig = pin(sets.select("doc_id", D._sig_array(D.NUM_HASHES).alias("sig")))
@@ -554,21 +540,9 @@ def lsh_band_sweep_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands = sig.select("doc_id", F.explode(band_structs).alias("bk")).select(
             "doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
         )
-        wb = Window.partitionBy("band", "band_key")
-        # Both self-join sides read it.
-        kept = pin(
-            bands.withColumn("_bn", F.count(F.lit(1)).over(wb))
-            .filter(F.col("_bn") <= D.MAX_BUCKET_SIZE)
-            .drop("_bn")
-        )
-        b1 = kept.select(F.col("doc_id").alias("doc_a"), "band", "band_key")
-        b2 = kept.select(F.col("doc_id").alias("doc_b"), "band", "band_key")
         cand = (
-            b1.join(b2, ["band", "band_key"])
-            .filter(
-                (F.col("doc_a") < F.col("doc_b"))
-                & (F.col("doc_b") - F.col("doc_a") <= _AUD_BAND)
-            )
+            D.bucket_pairs(bands, "doc_id", ["band", "band_key"])
+            .filter(F.col("doc_b") - F.col("doc_a") <= _AUD_BAND)
             .select("doc_a", "doc_b")
             .distinct()
         )

@@ -1074,67 +1074,16 @@ _PH_FAM = 240  # base patterns per era
 _PH_FLIPS = 4  # flip positions per (era, pattern): pixels 0/15/30/45
 _PH_ERA = _PH_FAM * _PH_FLIPS
 
-# Hot-bucket cap for the media-fingerprint banded self-joins (VERDICT
-# r10 item 2): same role as operators/dedup.py MAX_BUCKET_SIZE. A
-# degenerate fingerprint class (black frames, silence, solid-color
-# stills) otherwise lands every such payload in ONE (band, band_bits)
-# bucket and the self-join squares it — the 100 TB failure mode the
-# text LSH operators already guard against. Buckets above the cap are
-# dropped by SIZE (arrival-order-independent, so deterministic) on
-# BOTH engines: the oracles mirror the cap with the same QUALIFY
-# pattern _minhash_ctes uses, so parity is cap-inclusive.
-_MEDIA_BUCKET_CAP = 256
-
-
-def _capped_hamming_pairs(
-    hashes: DataFrame, fp_col: str, n_bands: int, width: int, max_hamming: int = 3
-) -> DataFrame:
-    """Pigeonhole banded self-join with the hot-bucket cap — the shared
-    tail of image/audio/video fingerprint near-dup. Explodes ``fp_col``
-    into ``n_bands`` ``width``-bit band keys, drops (band, band_bits)
-    buckets larger than ``_MEDIA_BUCKET_CAP``, equi-joins on the band
-    key, and keeps ordered pairs within ``max_hamming``. The bucket
-    count reuses the (band, band_bits) hash partitioning the join needs
-    anyway, so the cap adds no extra exchange."""
-    band_idx = F.explode(F.array([F.lit(i) for i in range(n_bands)])).alias("band")
-    banded = hashes.select("media_id", fp_col, band_idx).withColumn(
-        "band_bits", F.expr(f"({fp_col} >> (band * {width})) & {(1 << width) - 1}")
-    )
-    wb = Window.partitionBy("band", "band_bits")
-    # Both self-join sides read the banded frame, whose upstream is the
-    # fingerprint chain (synth + decode for video/audio); lazy, as an
-    # eager pin's job cost more than the duplicate decode it saves.
-    banded = pin(
-        banded.withColumn("_bn", F.count(F.lit(1)).over(wb))
-        .filter(F.col("_bn") <= _MEDIA_BUCKET_CAP)
-        .drop("_bn"),
-        eager=False,
-    )
-    a = banded.select(
-        F.col("media_id").alias("media_a"), F.col(fp_col).alias("ha"), "band", "band_bits"
-    )
-    b = banded.select(
-        F.col("media_id").alias("media_b"), F.col(fp_col).alias("hb"), "band", "band_bits"
-    )
-    ham = F.expr("bit_count(ha ^ hb)")
-    return (
-        a.join(b, ["band", "band_bits"])
-        .filter(F.col("media_a") < F.col("media_b"))
-        .select("media_a", "media_b", ham.cast("long").alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-
 
 def _capped_hamming_oracle_tail(fp: str) -> str:
-    """DuckDB twin of _capped_hamming_pairs from a ``banded`` CTE with
+    """DuckDB twin of ``dedup.hamming_pairs`` from a ``banded`` CTE with
     columns (doc_id, ``fp``, band, band_bits) — QUALIFY bucket cap then
     the banded self-join, mirroring the Spark plan cap-inclusively."""
     return f"""kept AS (
     SELECT doc_id, {fp}, band, band_bits,
            COUNT(*) OVER (PARTITION BY band, band_bits) AS bn
     FROM banded
-    QUALIFY bn <= {_MEDIA_BUCKET_CAP}
+    QUALIFY bn <= {D.MAX_BUCKET_SIZE}
 )
 SELECT DISTINCT a.doc_id AS media_a, b.doc_id AS media_b,
        CAST(bit_count(xor(a.{fp}, b.{fp})) AS BIGINT) AS hamming
@@ -1225,7 +1174,8 @@ def image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield _pd.DataFrame(out, columns=["media_id", "ahash"])
 
     hashes = media.mapInPandas(ahash, schema="media_id LONG, ahash LONG")
-    return _capped_hamming_pairs(hashes, "ahash", _PH_BANDS, _PH_WIDTH)
+    pairs = D.hamming_pairs(hashes, "media_id", "ahash", _PH_BANDS, _PH_WIDTH)
+    return pairs.withColumn("hamming", F.col("hamming").cast("long"))
 
 
 # --- audio fingerprint near-dup ----------------------------------------------
@@ -1353,7 +1303,8 @@ def audio_fingerprint_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield _pd.DataFrame(out, columns=["media_id", "afp"])
 
     hashes = media.mapInPandas(afp, schema="media_id LONG, afp LONG")
-    return _capped_hamming_pairs(hashes, "afp", _AF_BANDS, _AF_WIDTH)
+    pairs = D.hamming_pairs(hashes, "media_id", "afp", _AF_BANDS, _AF_WIDTH)
+    return pairs.withColumn("hamming", F.col("hamming").cast("long"))
 
 
 # --- near-dup source matrix --------------------------------------------------
@@ -1962,4 +1913,5 @@ def video_fingerprint_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield _pd.DataFrame(out, columns=["media_id", "vfp"])
 
     hashes = media.mapInPandas(vfp, schema="media_id LONG, vfp LONG")
-    return _capped_hamming_pairs(hashes, "vfp", _VF_BANDS, _VF_WIDTH)
+    pairs = D.hamming_pairs(hashes, "media_id", "vfp", _VF_BANDS, _VF_WIDTH)
+    return pairs.withColumn("hamming", F.col("hamming").cast("long"))

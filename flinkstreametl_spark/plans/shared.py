@@ -12,6 +12,21 @@ module level without disturbing registration order.
 
 from __future__ import annotations
 
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+
+from flinkstreametl_spark.functions.exact import dec
+
+REV_SQL = "CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(6,4)))"
+"""Exact TPC-H revenue: decimal(12,2) * decimal(*,4) products stay
+exact (< 38 digits), identical in Spark and DuckDB."""
+
+
+def rev_col() -> Column:
+    """The Spark twin of ``REV_SQL``."""
+    return dec("l_extendedprice", 12, 2) * (F.lit(1) - dec("l_discount", 6, 4))
+
+
 US_PER_DAY = 86_400_000_000
 """Microseconds per day — the integer day index is epoch_us // this."""
 

@@ -29,13 +29,8 @@ from pyspark.sql import functions as F
 
 from flinkstreametl_spark.functions.exact import dbl, dec, dsum, sql_dbl, sql_dsum
 from flinkstreametl_spark.plans.registry import register
+from flinkstreametl_spark.plans.shared import REV_SQL, rev_col
 from flinkstreametl_spark.sources.parquet import load_table
-
-_REV_SQL = "CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(6,4)))"
-
-
-def _rev() -> F.Column:
-    return dec("l_extendedprice", 12, 2) * (F.lit(1) - dec("l_discount", 6, 4))
 
 
 @register(
@@ -45,7 +40,7 @@ def _rev() -> F.Column:
 SELECT n1.n_name AS supp_nation,
        n2.n_name AS cust_nation,
        CAST(EXTRACT(YEAR FROM o_orderdate) AS BIGINT) AS order_year,
-       {sql_dbl(f'SUM({_REV_SQL})', 6)} AS revenue
+       {sql_dbl(f'SUM({REV_SQL})', 6)} AS revenue
 FROM lineitem
 JOIN orders   ON l_orderkey = o_orderkey
 JOIN supplier ON l_suppkey  = s_suppkey
@@ -76,7 +71,7 @@ def q7_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(n2, F.col("c_nationkey") == F.col("c_nk"))
         .filter(F.col("s_nk") != F.col("c_nk"))
         .groupBy("supp_nation", "cust_nation", F.year("o_orderdate").cast("long").alias("order_year"))
-        .agg(dbl(F.sum(_rev()), 6).alias("revenue"))
+        .agg(dbl(F.sum(rev_col()), 6).alias("revenue"))
     )
 
 
@@ -85,8 +80,8 @@ def q7_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ext", "join", "aggregate", "bench"),
     oracle=f"""
 SELECT CAST(EXTRACT(YEAR FROM o_orderdate) AS BIGINT) AS order_year,
-       {sql_dbl(f"SUM(CASE WHEN n2.n_name = 'NATION_1' THEN {_REV_SQL} ELSE CAST(0 AS DECIMAL(12,2)) END)", 6)}
-         / {sql_dbl(f'SUM({_REV_SQL})', 6)} AS mkt_share
+       {sql_dbl(f"SUM(CASE WHEN n2.n_name = 'NATION_1' THEN {REV_SQL} ELSE CAST(0 AS DECIMAL(12,2)) END)", 6)}
+         / {sql_dbl(f'SUM({REV_SQL})', 6)} AS mkt_share
 FROM lineitem
 JOIN orders   ON l_orderkey = o_orderkey
 JOIN customer ON o_custkey  = c_custkey
@@ -112,7 +107,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = F.broadcast(load_table(spark, sf_dir, "region"))
     n1 = F.broadcast(nation.select(F.col("n_nationkey").alias("c_nk"), F.col("n_regionkey").alias("c_rk")))
     n2 = F.broadcast(nation.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")))
-    num = F.when(F.col("supp_nation") == "NATION_1", _rev()).otherwise(F.lit(0).cast("decimal(12,2)"))
+    num = F.when(F.col("supp_nation") == "NATION_1", rev_col()).otherwise(F.lit(0).cast("decimal(12,2)"))
     return (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(cust, F.col("o_custkey") == F.col("c_custkey"))
@@ -122,7 +117,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(n2, F.col("s_nationkey") == F.col("s_nk"))
         .groupBy(F.year("o_orderdate").cast("long").alias("order_year"))
-        .agg((dbl(F.sum(num), 6) / dbl(F.sum(_rev()), 6)).alias("mkt_share"))
+        .agg((dbl(F.sum(num), 6) / dbl(F.sum(rev_col()), 6)).alias("mkt_share"))
     )
 
 
@@ -132,7 +127,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT n_name AS nation,
        CAST(EXTRACT(YEAR FROM o_orderdate) AS BIGINT) AS order_year,
-       {sql_dbl(f'SUM({_REV_SQL} - CAST(p_retailprice AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2)))', 6)}
+       {sql_dbl(f'SUM({REV_SQL} - CAST(p_retailprice AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2)))', 6)}
          AS profit
 FROM lineitem
 JOIN orders   ON l_orderkey = o_orderkey
@@ -153,7 +148,7 @@ def q9_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = F.broadcast(load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%e%")))
     supp = F.broadcast(load_table(spark, sf_dir, "supplier"))
     nation = F.broadcast(load_table(spark, sf_dir, "nation"))
-    profit = _rev() - dec("p_retailprice", 12, 2) * dec("l_quantity", 12, 2)
+    profit = rev_col() - dec("p_retailprice", 12, 2) * dec("l_quantity", 12, 2)
     return (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(part, F.col("l_partkey") == F.col("p_partkey"))
@@ -169,7 +164,7 @@ def q9_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ext", "join", "aggregate", "topk"),
     oracle=f"""
 SELECT c_custkey, c_name,
-       {sql_dbl(f'SUM({_REV_SQL})', 6)} AS revenue,
+       {sql_dbl(f'SUM({REV_SQL})', 6)} AS revenue,
        c_acctbal, n_name, c_mktsegment
 FROM lineitem
 JOIN orders   ON l_orderkey = o_orderkey
@@ -200,7 +195,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name", "c_mktsegment")
-        .agg(dbl(F.sum(_rev()), 6).alias("revenue"))
+        .agg(dbl(F.sum(rev_col()), 6).alias("revenue"))
         .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name", "c_mktsegment")
         .orderBy(F.col("revenue").desc(), "c_custkey")
         .limit(20)
@@ -244,7 +239,7 @@ def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH revenue AS (
     SELECT l_suppkey AS supplier_no,
-           SUM({_REV_SQL}) AS total_rev
+           SUM({REV_SQL}) AS total_rev
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
       AND l_shipdate <  TIMESTAMP '1997-04-01 00:00:00'
@@ -268,7 +263,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-04-01 00:00:00").cast("timestamp"))
     )
-    rev = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(F.sum(_rev()).alias("total_rev"))
+    rev = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(F.sum(rev_col()).alias("total_rev"))
     # Global-max via an unpartitioned window: the aggregate result is
     # tiny (|suppliers| rows), so the single-partition exchange is cheap
     # and avoids a second scan of lineitem for the scalar subquery.
@@ -366,7 +361,7 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q19_disjunctive_predicate",
     tags=("ext", "join", "aggregate"),
     oracle=f"""
-SELECT {sql_dbl(f'SUM({_REV_SQL})', 6)} AS revenue
+SELECT {sql_dbl(f'SUM({REV_SQL})', 6)} AS revenue
 FROM lineitem
 JOIN part ON p_partkey = l_partkey
 WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5  AND l_quantity BETWEEN 1  AND 11)
@@ -391,7 +386,7 @@ def q19_disjunctive_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(part, F.col("p_partkey") == F.col("l_partkey"))
         .filter(cond)
-        .agg(dbl(F.sum(_rev()), 6).alias("revenue"))
+        .agg(dbl(F.sum(rev_col()), 6).alias("revenue"))
     )
 
 

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from flinkstreametl_spark.functions.exact import dbl, dec, dsum, sql_dbl
 from flinkstreametl_spark.operators.windows import epoch_micros
-from flinkstreametl_spark.plans.analytics import _REV_SQL
+from flinkstreametl_spark.plans.shared import REV_SQL
 from flinkstreametl_spark.plans.registry import register
 from flinkstreametl_spark.sources.parquet import load_table
 
@@ -83,7 +83,7 @@ WITH so AS (
 SELECT so.o_orderkey,
        so.o_custkey,
        CAST(COUNT(sl.l_orderkey) AS BIGINT) AS n_items,
-       {sql_dbl(f"COALESCE(SUM({_REV_SQL}), 0)", 6)} AS sampled_revenue
+       {sql_dbl(f"COALESCE(SUM({REV_SQL}), 0)", 6)} AS sampled_revenue
 FROM so LEFT JOIN sl ON so.o_orderkey = sl.l_orderkey
 GROUP BY so.o_orderkey, so.o_custkey
 """

@@ -105,12 +105,11 @@ def pin(df: DataFrame, *, eager: bool = True) -> DataFrame:
     CacheManager, so a later build of the same plan, in the next run of
     a query, would reuse the materialization instead of recomputing.
 
-    An eager pin runs its job now, tagged ``pin``. A lazy one
-    (``eager=False``) materializes in the first action that reads it,
-    under that action's tags. Under adaptive execution the shuffle
-    stages below it still run now, untagged by ``pin``.
+    Every job the pin call starts is tagged ``pin``. An eager pin runs
+    its whole frame now. A lazy one (``eager=False``) materializes in
+    the first action that reads it, under that action's tags; under
+    adaptive execution the shuffle stages below it still run now, in
+    the pin call, so they carry ``pin`` too.
     """
-    if not eager:
-        return df.localCheckpoint(eager=False)
     with job_tag(df.sparkSession.sparkContext, "pin"):
-        return df.localCheckpoint()
+        return df.localCheckpoint(eager=eager)

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from flinkstreametl_spark.plans.llm import _MEDIA_BUCKET_CAP, _capped_hamming_pairs
+from flinkstreametl_spark.operators.dedup import MAX_BUCKET_SIZE, hamming_pairs
 
 
 def _const_hashes(spark, n: int, fp: int, start: int = 0):
@@ -23,13 +23,13 @@ def _const_hashes(spark, n: int, fp: int, start: int = 0):
 def test_degenerate_bucket_is_dropped(spark):
     # 1000 identical fingerprints -> every (band, band_bits) bucket
     # holds 1000 > cap members -> zero pairs, not 1000*999/2.
-    out = _capped_hamming_pairs(_const_hashes(spark, 1000, 12345), "fp", 4, 12)
+    out = hamming_pairs(_const_hashes(spark, 1000, 12345), "media_id", "fp", 4, 12)
     assert out.count() == 0
 
 
 def test_bucket_exactly_at_cap_survives(spark):
-    n = _MEDIA_BUCKET_CAP
-    out = _capped_hamming_pairs(_const_hashes(spark, n, 12345), "fp", 4, 12)
+    n = MAX_BUCKET_SIZE
+    out = hamming_pairs(_const_hashes(spark, n, 12345), "media_id", "fp", 4, 12)
     assert out.count() == n * (n - 1) // 2
 
 
@@ -43,5 +43,5 @@ def test_cap_is_per_bucket_not_global(spark):
     healthy = degen.sparkSession.createDataFrame(
         [(2000, b), (2001, b ^ 1)], "media_id LONG, fp LONG"
     )
-    out = _capped_hamming_pairs(degen.unionByName(healthy), "fp", 4, 12).collect()
+    out = hamming_pairs(degen.unionByName(healthy), "media_id", "fp", 4, 12).collect()
     assert [(r.media_a, r.media_b, r.hamming) for r in out] == [(2000, 2001, 1)]

@@ -1,6 +1,6 @@
 """``session.pin``, the one way the engine pins a frame: a local
-checkpoint, eager pins run under the job tag ``pin``, and no other
-module checkpoints."""
+checkpoint whose jobs, eager or lazy, run under the job tag ``pin``,
+and no other module checkpoints."""
 
 from __future__ import annotations
 
@@ -42,6 +42,16 @@ def test_lazy_pin_runs_no_pin_job(spark):
     assert pinned.count() == 10
     assert _checkpoint_rdd(pinned).isLocallyCheckpointed()
     assert _tagged(spark, "pin") == before
+
+
+def test_lazy_pin_tags_its_construction_jobs(spark):
+    """Under adaptive execution a lazy pin runs the shuffle stages below
+    it during the pin call; those jobs carry ``pin``."""
+    before = _tagged(spark, "pin")
+    pinned = pin(_frame(spark), eager=False)
+    assert _tagged(spark, "pin") - before, "the lazy pin's construction jobs are not tagged pin"
+    assert "pin" not in spark.sparkContext.getJobTags()
+    assert sorted(pinned.collect()) == sorted(_frame(spark).collect())
 
 
 def test_only_session_checkpoints():

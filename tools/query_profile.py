@@ -10,10 +10,11 @@ store attributes them. Each query prints one JSON line:
 
 - ``construct_s``, ``action_s`` and the job count of each phase;
 - ``pin_jobs`` and ``drain_jobs``: the construction jobs that also
-  carry the tag ``pin`` (an eager ``session.pin``) or ``drain`` (a
-  replay's stream). A pin inside a drain counts in both. A lazy pin
-  materializes inside the action, under the action's tag, so it is not
-  counted;
+  carry the tag ``pin`` (a ``session.pin`` call) or ``drain`` (a
+  replay's stream). A pin inside a drain counts in both. An eager pin
+  counts its whole frame; a lazy pin counts the shuffle stages that
+  adaptive execution runs during the call, while its last stage runs
+  inside the action, under the action's tag;
 - ``stage_totals``: tasks, executor run vs CPU time, shuffle and spill
   of the stages of each phase, and of the pin and drain jobs;
 - ``python``: the summed metrics of the Python-boundary plan nodes;
