@@ -1,5 +1,5 @@
-"""[EXT] Reusable graph kernels: degree orientation and triangle
-counting over an arbitrary undirected edge list.
+"""[EXT] Reusable graph kernels: degree orientation, triangle
+counting and PageRank over an arbitrary undirected edge list.
 
 plans/graph_ext.py applies these to the part co-purchase graph; the
 operators themselves take any ``(u, v)`` DataFrame (near-dup pair
@@ -31,6 +31,10 @@ so the damped in-sum stays far inside BIGINT at any plausible node
 count (total mass = |V| * PR_SCALE; 85 * 2e14 at an sf1-sized graph,
 ceiling ~10^8 nodes before the 9.2e18 BIGINT limit — widen to a
 smaller scale or decimal past that)."""
+
+PR_ITERS = 6
+"""Power-iteration rounds of ``pagerank``; the oracles unroll the same
+count as a CTE chain."""
 
 PR_DAMP_NUM, PR_DAMP_DEN = 85, 100
 """Damping factor 0.85 as an exact integer ratio — the float constant
@@ -140,25 +144,41 @@ def triangle_stats(edges: DataFrame, *, ord_base: int = DEFAULT_ORD_BASE) -> Dat
     )
 
 
-def pagerank(
-    edges: DataFrame, *, iterations: int = 6, scale: int = PR_SCALE, max_seg_width: int = 8192
-) -> DataFrame:
+def pagerank(edges: DataFrame, seeds: DataFrame | None = None, *, max_seg_width: int = 8192) -> DataFrame:
     """Power-iteration PageRank over a canonical undirected edge list:
     returns (node, rank_fp) with rank_fp an exact BIGINT fixed-point
-    mass (1.0 == ``scale``).
+    mass (1.0 == PR_SCALE), after PR_ITERS rounds of
+
+        r'(d) = base·[d ∈ seeds] + 85·Σ_s (r(s)·w(s,d) div sw(s)) div 100
+
+    over the neighbors s of d, with ``base = (15 · PR_SCALE) div 100``
+    and sw(s) the total weight at s. The inputs pick the variant; no
+    option does:
+
+    - Weighted exactly when ``edges`` has a ``w`` column (w > 0): each
+      node distributes rank in proportion to edge weight. Without it,
+      w = 1 and sw = deg, so the share is ``r div deg``. The identity
+      is exact: with all weights equal to c, floor(r·c / (deg·c)) =
+      floor(r / deg), so equal weights give the unweighted ranks node
+      for node.
+    - ``seeds`` (a (node) frame, parameter-sized, broadcast) restricts
+      the teleport term to the seed set: personalized PageRank, where
+      walks restart only at the seeds and non-seeds receive no
+      teleport mass, so rank measures proximity TO the seeds instead
+      of global centrality. Without it every node is a seed.
 
     The classic GraphX/Pregel kernel re-expressed as DataFrame joins,
     with the adjacency GROUPED into per-node neighbor arrays so each
     iteration's join touches |V|-scale ROWS, not |E|: iteration i joins
     the grouped adjacency with the current ranks on src, explodes each
-    node's neighbor array into (dst, rank div deg) contributions
-    WITHOUT any exchange (explode is a per-partition generator), and
-    aggregates by dst — partial aggregation compacts the E-sized
-    contribution stream back to at most partitions x |V| rows before
-    the one real exchange. vs the flat (src, dst, deg) formulation
-    this removes the per-iteration sort of E rows inside the
-    sort-merge join (measured 25-30% faster at sf0.1, bit-identical
-    output — the arithmetic never changes, only the physical grouping).
+    node's neighbor array into (dst, share) contributions WITHOUT any
+    exchange (explode is a per-partition generator), and aggregates by
+    dst — partial aggregation compacts the E-sized contribution stream
+    back to at most partitions x |V| rows before the one real exchange.
+    vs the flat (src, dst, deg) formulation this removes the
+    per-iteration sort of E rows inside the sort-merge join (measured
+    25-30% faster at sf0.1, bit-identical output — the arithmetic never
+    changes, only the physical grouping).
 
     Row width is BOUNDED, not best-effort: a node's neighbors are
     split into ``ceil(deg / max_seg_width)`` hash-assigned segments,
@@ -185,167 +205,67 @@ def pagerank(
     pinning.
 
     Exactness, the reason this is driver-verifiable cross-engine: all
-    arithmetic is integer. Each node's outgoing contribution is
-    ``rank_fp div deg`` (floor; operands positive so Spark's
-    truncating ``div`` == DuckDB's flooring ``//``), the damped update
-    is ``base + (85 * sum) div 100`` with ``base = (15 * scale) div
-    100``, and integer sums are order-independent — no float
-    accumulation anywhere, so N iterations stay bit-identical on both
-    engines. Undirected edges are symmetrized, so every graph node has
+    arithmetic is integer. Shares are floor divisions of positive
+    operands (Spark's truncating ``div`` == DuckDB's flooring ``//``)
+    and integer sums are order-independent — no float accumulation
+    anywhere, so N iterations stay bit-identical on both engines.
+    Undirected edges are symmetrized, so every graph node has
     out-degree >= 1: no dangling-mass redistribution term is needed
-    and the node set is closed under the update.
+    and the node set is closed under the update. int64 headroom: the
+    widest product is r·w ~ |V|·PR_SCALE·w_max, which holds to
+    |V|·w_max ~ 9×10^9 (e.g. 10^8 nodes with weights to ~90); past that
+    lower PR_SCALE or widen to DECIMAL(38,0), shape unchanged.
     """
+    weighted = "w" in edges.columns
+    w = ["w"] if weighted else []
     # Every consumer reads the caller's edge derivation through the
     # symmetrizing union; pinning the half-size side holds half the bytes.
-    edges = pin(edges.select("u", "v"))
-    sym = edges.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-        edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
+    edges = pin(edges.select("u", "v", *w))
+    sym = edges.select(F.col("u").alias("src"), F.col("v").alias("dst"), *w).unionAll(
+        edges.select(F.col("v").alias("src"), F.col("u").alias("dst"), *w)
     )
     # Grouped adjacency: hash-segmented neighbor arrays, <= max_seg_width
-    # entries per row. Degrees come from a window count over the SAME
-    # src-hash exchange the grouping needs anyway (r14 opt — the
-    # former separate deg aggregate + src-keyed join cost one extra
-    # pinned frame and one extra exchange+sort per build); groupBy
-    # (src, seg) after the window needs no further exchange and
-    # `first(deg)` is constant within a group.
-    wdeg = Window.partitionBy("src")
+    # entries per row. Degrees (and weight sums) come from window
+    # aggregates over the SAME src-hash exchange the grouping needs
+    # anyway (r14 opt — a separate deg aggregate + src-keyed join cost
+    # one extra pinned frame and one extra exchange+sort per build);
+    # groupBy (src, seg) after the window needs no further exchange and
+    # `first(deg)`/`first(sw)` is constant within a group. The weighted
+    # path differs only in the neighbor entry and the divisor.
+    wsrc = Window.partitionBy("src")
+    sym = sym.withColumn("deg", F.count(F.lit(1)).over(wsrc))
+    if weighted:
+        sym = sym.withColumn("sw", F.sum("w").over(wsrc))
+        nbr, norm, explode, share = F.struct("dst", "w"), "sw", F.inline("nbrs"), "(r * w) div sw"
+    else:
+        nbr, norm, explode, share = F.col("dst"), "deg", F.explode("nbrs").alias("dst"), "r div deg"
     n_seg = F.greatest(F.lit(1), F.ceil(F.col("deg") / F.lit(max_seg_width)))
     adj = pin(
-        sym.withColumn("deg", F.count(F.lit(1)).over(wdeg))
-        .withColumn("seg", F.pmod(F.hash("dst"), n_seg))
+        sym.withColumn("seg", F.pmod(F.hash("dst"), n_seg))
         .groupBy("src", "seg")
-        .agg(F.collect_list("dst").alias("nbrs"), F.first("deg").alias("deg"))
-        .select("src", "nbrs", "deg")
+        .agg(F.collect_list(nbr).alias("nbrs"), F.first(norm).alias(norm))
+        .select("src", "nbrs", norm)
     )
-    base = scale * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN
+    teleport = f"CAST({PR_SCALE * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN} AS BIGINT)"
+    if seeds is not None:
+        seed_marks = F.broadcast(seeds.select(F.col("node").alias("dst"), F.lit(1).alias("is_seed")))
+        teleport += " * coalesce(is_seed, 0)"
     # Initial ranks: every node once (each src holds >= 1 adjacency
-    # segment, so distinct src over the pinned adj is the node set the
-    # former deg frame supplied).
+    # segment, so distinct src over the pinned adj is the node set).
     ranks = adj.select("src").distinct().select(
-        F.col("src").alias("node"), F.lit(scale).cast("long").alias("r")
+        F.col("src").alias("node"), F.lit(PR_SCALE).cast("long").alias("r")
     )
-    for _ in range(iterations):
-        contrib = adj.join(ranks, adj["src"] == ranks["node"]).select(
-            F.explode("nbrs").alias("dst"), F.expr("r div deg").alias("c")
+    for _ in range(PR_ITERS):
+        contrib = (
+            adj.join(ranks, adj["src"] == ranks["node"])
+            .select(explode, "r", norm)
+            .select("dst", F.expr(share).alias("c"))
         )
-        ranks = (
-            contrib.groupBy("dst")
-            .agg(
-                F.expr(
-                    f"CAST({base} AS BIGINT) + ({PR_DAMP_NUM} * sum(c)) div {PR_DAMP_DEN}"
-                ).alias("r")
-            )
-            .select(F.col("dst").alias("node"), "r")
-        )
-    return ranks.select("node", F.col("r").alias("rank_fp"))
-
-
-def pagerank_weighted(
-    edges_w: DataFrame, *, iterations: int = 6, scale: int = PR_SCALE, max_seg_width: int = 8192
-) -> DataFrame:
-    """Weighted power-iteration PageRank over a canonical undirected
-    WEIGHTED edge list (u, v, w > 0): returns (node, rank_fp). Each
-    node distributes rank in proportion to edge weight — contribution
-    to neighbor d is ``(rank * w(s,d)) div sw(s)`` with sw(s) the
-    node's total incident weight; the damped update and every other
-    property (integer-exact, grouped/segmented adjacency, pinned loop
-    inputs) mirror the unweighted kernel above, and with all weights
-    equal the two kernels agree except for per-edge division rounding.
-
-    int64 headroom: the widest product is rank·w ~ |V|·scale·w_max —
-    at PR_SCALE 10^9 that holds to |V|·w_max ~ 9×10^9 (e.g. 10^8 nodes
-    with weights to ~90); past that drop ``scale`` a decade or widen to
-    DECIMAL(38,0), shape unchanged."""
-    sym = pin(
-        edges_w.select(F.col("u").alias("src"), F.col("v").alias("dst"), "w")
-        .unionAll(edges_w.select(F.col("v").alias("src"), F.col("u").alias("dst"), "w"))
-    )
-    stats = pin(
-        sym.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("ndeg"), F.sum("w").alias("sw"))
-    )
-    n_seg = F.greatest(F.lit(1), F.ceil(F.col("ndeg") / F.lit(max_seg_width)))
-    adj = pin(
-        sym.join(stats, "src")
-        .withColumn("seg", F.pmod(F.hash("dst"), n_seg))
-        .groupBy("src", "seg")
-        .agg(
-            F.collect_list(F.struct("dst", "w")).alias("nbrs"),
-            F.first("sw").alias("sw"),
-        )
-        .select("src", "nbrs", "sw")
-    )
-    base = scale * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN
-    ranks = stats.select(F.col("src").alias("node"), F.lit(scale).cast("long").alias("r"))
-    for _ in range(iterations):
-        contrib = adj.join(ranks, adj["src"] == ranks["node"]).select(
-            F.explode("nbrs").alias("nb"), F.col("r"), F.col("sw")
-        ).select(
-            F.col("nb.dst").alias("dst"), F.expr("(r * nb.w) div sw").alias("c")
-        )
-        ranks = (
-            contrib.groupBy("dst")
-            .agg(
-                F.expr(
-                    f"CAST({base} AS BIGINT) + ({PR_DAMP_NUM} * sum(c)) div {PR_DAMP_DEN}"
-                ).alias("r")
-            )
-            .select(F.col("dst").alias("node"), "r")
-        )
-    return ranks.select("node", F.col("r").alias("rank_fp"))
-
-
-def pagerank_personalized(
-    edges: DataFrame,
-    seeds: DataFrame,
-    *,
-    iterations: int = 6,
-    scale: int = PR_SCALE,
-    max_seg_width: int = 8192,
-) -> DataFrame:
-    """Personalized PageRank: the ``pagerank`` kernel with the teleport
-    term restricted to ``seeds`` (a (node) frame) — random walks
-    restart only at the seed set, so rank measures proximity TO the
-    seeds instead of global centrality (the recommendation/expansion
-    primitive: "parts co-purchased near these parts").
-
-    Arithmetic is the same all-integer update; the only change is
-    ``base`` becoming ``base * is_seed``: non-seeds receive no teleport
-    mass and decay unless the walk reaches them. Seeds are broadcast
-    (a parameter-sized frame by contract). Same grouped, width-bounded,
-    pinned adjacency as ``pagerank`` — see that docstring for the
-    scale analysis; per-iteration cost is identical.
-    """
-    sym = pin(
-        edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-    )
-    deg = pin(sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
-    n_seg = F.greatest(F.lit(1), F.ceil(F.col("deg") / F.lit(max_seg_width)))
-    adj = pin(
-        sym.join(deg, "src")
-        .withColumn("seg", F.pmod(F.hash("dst"), n_seg))
-        .groupBy("src", "seg")
-        .agg(F.collect_list("dst").alias("nbrs"), F.first("deg").alias("deg"))
-        .select("src", "nbrs", "deg")
-    )
-    base = scale * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN
-    seed_marks = seeds.select(F.col("node").alias("dst"), F.lit(1).alias("is_seed"))
-    ranks = deg.select(F.col("src").alias("node"), F.lit(scale).cast("long").alias("r"))
-    for _ in range(iterations):
-        contrib = adj.join(ranks, adj["src"] == ranks["node"]).select(
-            F.explode("nbrs").alias("dst"), F.expr("r div deg").alias("c")
-        )
-        ranks = (
-            contrib.groupBy("dst")
-            .agg(F.sum("c").alias("s"))
-            .join(F.broadcast(seed_marks), "dst", "left")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr(
-                    f"CAST({base} AS BIGINT) * coalesce(is_seed, 0)"
-                    f" + ({PR_DAMP_NUM} * s) div {PR_DAMP_DEN}"
-                ).alias("r"),
-            )
+        sums = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
+        if seeds is not None:
+            sums = sums.join(seed_marks, "dst", "left")
+        ranks = sums.select(
+            F.col("dst").alias("node"),
+            F.expr(f"{teleport} + ({PR_DAMP_NUM} * s) div {PR_DAMP_DEN}").alias("r"),
         )
     return ranks.select("node", F.col("r").alias("rank_fp"))

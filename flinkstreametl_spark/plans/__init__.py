@@ -68,6 +68,9 @@ _RECHECK: dict[str, int] = {
     "audio_fingerprint_neardup": 16,
     "video_fingerprint_neardup": 16,
     "fuzzy_dup_parts": 16,
+    # one PageRank kernel: the weighted and seeded paths share the plain build
+    "pagerank_weighted_copurchase": 16,
+    "personalized_pagerank_copurchase": 16,
 }
 
 

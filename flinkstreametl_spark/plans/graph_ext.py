@@ -248,9 +248,22 @@ def basket_lift_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PR_ITER = 6
 _PR_TOPK = 20
 _PR_BASE = G.PR_SCALE * (G.PR_DAMP_DEN - G.PR_DAMP_NUM) // G.PR_DAMP_DEN
+
+
+def _pr_steps(rank: str) -> str:
+    """The unrolled power iteration r1..r{PR_ITERS} as a CTE chain;
+    ``rank`` is the update over ``adj a`` and the previous step ``r``."""
+    return ",\n".join(
+        f"r{i} AS (\n"
+        f"    SELECT a.dst AS node,\n"
+        f"           {rank} AS r\n"
+        f"    FROM adj a JOIN r{i - 1} r ON r.node = a.src\n"
+        f"    GROUP BY a.dst\n"
+        f")"
+        for i in range(1, G.PR_ITERS + 1)
+    )
 
 
 def _pagerank_oracle() -> str:
@@ -259,17 +272,7 @@ def _pagerank_oracle() -> str:
     step, so the fixed iteration count is spelled out). `pairs`/`adj`
     are MATERIALIZED — each rank step scans adj, and without the hint
     DuckDB may inline the per-order self-join into all N steps."""
-    steps = []
-    for i in range(1, _PR_ITER + 1):
-        steps.append(
-            f"r{i} AS (\n"
-            f"    SELECT a.dst AS node,\n"
-            f"           {_PR_BASE} + ({G.PR_DAMP_NUM} * SUM(r.r // a.deg)) // {G.PR_DAMP_DEN} AS r\n"
-            f"    FROM adj a JOIN r{i - 1} r ON r.node = a.src\n"
-            f"    GROUP BY a.dst\n"
-            f")"
-        )
-    chain = ",\n".join(steps)
+    chain = _pr_steps(f"{_PR_BASE} + ({G.PR_DAMP_NUM} * SUM(r.r // a.deg)) // {G.PR_DAMP_DEN}")
     return f"""
 WITH pairs AS MATERIALIZED (
     SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS u,
@@ -294,7 +297,7 @@ r0 AS (
 {chain}
 SELECT node AS part, CAST(r AS BIGINT) AS rank_fp, rk FROM (
     SELECT node, r, row_number() OVER (ORDER BY r DESC, node) AS rk
-    FROM r{_PR_ITER}
+    FROM r{G.PR_ITERS}
 ) t
 WHERE rk <= {_PR_TOPK}
 """
@@ -312,16 +315,20 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUPED adjacency (per-node neighbor arrays, hash-segmented past
     8192 entries), so each round's join moves |V|-scale rows and the
     contribution stream compacts via partial aggregation before its
-    one exchange; the symmetrized edge list and grouped adjacency are
+    one exchange; the edge list and the grouped adjacency are
     pinned once. The DuckDB oracle replays the SAME six integer
     updates as an unrolled CTE chain, so every intermediate mass —
     not just the ranking — is hash-verified cross-engine.
 
-    Top-k shape: TakeOrdered on (rank DESC, node) pulls 20 rows; the
-    row_number window then runs on the 20-row frame, never on |V|."""
+    Top-k shape: ``_top_parts``."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    pairs = _order_part_pairs(li).select("u", "v").distinct()
-    ranks = G.pagerank(pairs, iterations=_PR_ITER)
+    return _top_parts(G.pagerank(_order_part_pairs(li).select("u", "v").distinct()))
+
+
+def _top_parts(ranks: DataFrame) -> DataFrame:
+    """The top _PR_TOPK ranks as (part, rank_fp, rk): TakeOrdered on
+    (rank DESC, node) pulls 20 rows; the row_number window then runs on
+    the 20-row frame, never on |V|."""
     top = ranks.orderBy(F.col("rank_fp").desc(), "node").limit(_PR_TOPK)
     w = Window.orderBy(F.col("rank_fp").desc(), "node")
     return top.select(
@@ -563,27 +570,15 @@ def kcore_peeling_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- weighted PageRank --------------------------------------------------------
 # The co-purchase graph is genuinely WEIGHTED — two parts that share
 # fifty orders are more related than two that share one — and the
-# unweighted kernel throws that signal away. pagerank_weighted
-# distributes each node's rank in proportion to edge weight
+# unweighted kernel throws that signal away. Given a weight column,
+# G.pagerank distributes each node's rank in proportion to edge weight
 # (contribution = (rank·w) div Σw — still pure integers), so the
 # ranking rewards strength of association, not just breadth. Same
 # unrolled-CTE verification: all six weighted updates hash-checked.
-_PRW_ITER = 6
-_PRW_TOPK = 20
 
 
 def _pagerank_weighted_oracle() -> str:
-    steps = []
-    for i in range(1, _PRW_ITER + 1):
-        steps.append(
-            f"r{i} AS (\n"
-            f"    SELECT a.dst AS node,\n"
-            f"           {_PR_BASE} + ({G.PR_DAMP_NUM} * SUM((r.r * a.w) // a.sw)) // {G.PR_DAMP_DEN} AS r\n"
-            f"    FROM adj a JOIN r{i - 1} r ON r.node = a.src\n"
-            f"    GROUP BY a.dst\n"
-            f")"
-        )
-    chain = ",\n".join(steps)
+    chain = _pr_steps(f"{_PR_BASE} + ({G.PR_DAMP_NUM} * SUM((r.r * a.w) // a.sw)) // {G.PR_DAMP_DEN}")
     return f"""
 WITH pairs AS MATERIALIZED (
     SELECT least(a.l_partkey, b.l_partkey) AS u,
@@ -610,9 +605,9 @@ r0 AS (
 {chain}
 SELECT node AS part, CAST(r AS BIGINT) AS rank_fp, rk FROM (
     SELECT node, r, row_number() OVER (ORDER BY r DESC, node) AS rk
-    FROM r{_PRW_ITER}
+    FROM r{G.PR_ITERS}
 ) t
-WHERE rk <= {_PRW_TOPK}
+WHERE rk <= {_PR_TOPK}
 """
 
 
@@ -637,14 +632,7 @@ def pagerank_weighted_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("u", "v")
         .agg(F.count_distinct(F.col("l_orderkey")).alias("w"))
     )
-    ranks = G.pagerank_weighted(pairs, iterations=_PRW_ITER)
-    top = ranks.orderBy(F.col("rank_fp").desc(), "node").limit(_PRW_TOPK)
-    w = Window.orderBy(F.col("rank_fp").desc(), "node")
-    return top.select(
-        F.col("node").alias("part"),
-        "rank_fp",
-        F.row_number().over(w).cast("long").alias("rk"),
-    )
+    return _top_parts(G.pagerank(pairs))
 
 
 # --- HITS hubs/authorities on the order-part bipartite graph ---------------
@@ -796,27 +784,17 @@ def hits_order_part_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Personalized PageRank from a seed part set -----------------------------
 
 _PPR_NSEEDS = 10
-_PPR_TOPK = 20
 
 
 def _ppr_oracle() -> str:
     """Unrolled personalized power iteration (the _pagerank_oracle
     rationale); the teleport term is CASE-gated to the seed set — the
     _PPR_NSEEDS lowest part keys present in the co-purchase graph."""
-    base = G.PR_SCALE * (G.PR_DAMP_DEN - G.PR_DAMP_NUM) // G.PR_DAMP_DEN
-    steps = []
-    for i in range(1, G_PPR_ITER + 1):
-        steps.append(
-            f"r{i} AS (\n"
-            f"    SELECT a.dst AS node,\n"
-            f"           CAST({base} AS BIGINT)\n"
-            f"             * CASE WHEN a.dst IN (SELECT node FROM seeds) THEN 1 ELSE 0 END\n"
-            f"           + ({G.PR_DAMP_NUM} * SUM(r.r // a.deg)) // {G.PR_DAMP_DEN} AS r\n"
-            f"    FROM adj a JOIN r{i - 1} r ON r.node = a.src\n"
-            f"    GROUP BY a.dst\n"
-            f")"
-        )
-    chain = ",\n".join(steps)
+    chain = _pr_steps(
+        f"CAST({_PR_BASE} AS BIGINT)\n"
+        f"             * CASE WHEN a.dst IN (SELECT node FROM seeds) THEN 1 ELSE 0 END\n"
+        f"           + ({G.PR_DAMP_NUM} * SUM(r.r // a.deg)) // {G.PR_DAMP_DEN}"
+    )
     return f"""
 WITH pairs AS MATERIALIZED (
     SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS u,
@@ -846,13 +824,10 @@ SELECT node AS part, CAST(r AS BIGINT) AS rank_fp,
        CAST(node IN (SELECT node FROM seeds) AS BOOLEAN) AS is_seed, rk
 FROM (
     SELECT node, r, row_number() OVER (ORDER BY r DESC, node) AS rk
-    FROM r{G_PPR_ITER}
+    FROM r{G.PR_ITERS}
 ) t
-WHERE rk <= {_PPR_TOPK}
+WHERE rk <= {_PR_TOPK}
 """
-
-
-G_PPR_ITER = 6
 
 
 @register(
@@ -867,10 +842,10 @@ def personalized_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFr
     ``pagerank_copurchase`` can't give (its walk restarts everywhere,
     so it measures popularity, not proximity).
 
-    Kernel: operators/graph.pagerank_personalized — the same grouped,
-    width-bounded, pinned-adjacency integer power iteration with the
-    teleport term CASE-gated to the broadcast seed set. Top-20 with an
-    is_seed marker; seeds rank high (they receive all restart mass)
+    Kernel: operators/graph.py ``pagerank`` with ``seeds`` — the same
+    grouped, width-bounded, pinned-adjacency integer power iteration
+    with the teleport term gated to the broadcast seed set. Top-20 with
+    an is_seed marker; seeds rank high (they receive all restart mass)
     but non-seed neighbors earning walk mass is the signal."""
     li = load_table(spark, sf_dir, "lineitem")
     # In-row pair generation gives u < v. The pairs feed both the
@@ -882,19 +857,11 @@ def personalized_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFr
         .distinct()
     )
     seeds = pin(nodes.orderBy("node").limit(_PPR_NSEEDS))
-    ranks = G.pagerank_personalized(pairs, seeds, iterations=G_PPR_ITER)
-    w = Window.orderBy(F.col("rank_fp").desc(), "node")
-    seed_mark = seeds.select("node", F.lit(True).alias("_s"))
+    seed_mark = seeds.select(F.col("node").alias("part"), F.lit(True).alias("_s"))
     return (
-        ranks.orderBy(F.col("rank_fp").desc(), "node")
-        .limit(_PPR_TOPK)
-        .join(F.broadcast(seed_mark), "node", "left")
-        .select(
-            F.col("node").alias("part"),
-            "rank_fp",
-            F.coalesce("_s", F.lit(False)).alias("is_seed"),
-            F.row_number().over(Window.orderBy(F.col("rank_fp").desc(), F.col("node"))).cast("long").alias("rk"),
-        )
+        _top_parts(G.pagerank(pairs, seeds))
+        .join(F.broadcast(seed_mark), "part", "left")
+        .select("part", "rank_fp", F.coalesce("_s", F.lit(False)).alias("is_seed"), "rk")
     )
 
 

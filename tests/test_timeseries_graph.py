@@ -342,23 +342,35 @@ def test_degree_orient_rejects_out_of_range_ids(spark):
     assert out.n_edges == 2 and out.n_triangles == 0
 
 
-def _pagerank_reference(edges, iterations=6, scale=10**9):
+def _pagerank_reference(edges, iterations=6, scale=10**9, weights=None, seeds=None):
     """Row-at-a-time integer PageRank — independently written from the
-    textbook update so a shared misreading of the kernel can't pass."""
+    textbook update so a shared misreading of the kernel can't pass.
+    ``weights`` (one per edge) splits each node's rank in proportion to
+    its edge weights; ``seeds`` limits the teleport term to those nodes."""
     adj = defaultdict(list)
-    for u, v in edges:
-        adj[u].append(v)
-        adj[v].append(u)
+    for i, (u, v) in enumerate(edges):
+        w = 1 if weights is None else weights[i]
+        adj[u].append((v, w))
+        adj[v].append((u, w))
     base = scale * 15 // 100
     r = {n: scale for n in adj}
     for _ in range(iterations):
         incoming: dict[int, int] = defaultdict(int)
         for n, nbrs in adj.items():
-            c = r[n] // len(nbrs)
-            for m in nbrs:
-                incoming[m] += c
-        r = {n: base + (85 * s) // 100 for n, s in incoming.items()}
+            total = sum(w for _, w in nbrs)
+            for m, w in nbrs:
+                incoming[m] += r[n] * w // total
+        r = {
+            n: (base if seeds is None or n in seeds else 0) + (85 * s) // 100
+            for n, s in incoming.items()
+        }
     return r
+
+
+def _random_graph(rng, n_max=30):
+    n = rng.randint(5, n_max)
+    all_pairs = [(u, v) for u in range(n) for v in range(u + 1, n)]
+    return rng.sample(all_pairs, k=max(1, int(len(all_pairs) * rng.uniform(0.05, 0.4))))
 
 
 def test_pagerank_kernel_matches_python_reference(spark):
@@ -425,6 +437,105 @@ def test_pagerank_segmentation_is_invisible(spark):
     seg = {r.node: r.rank_fp for r in pagerank(df, max_seg_width=2).collect()}
     assert wide == expect
     assert seg == expect
+    # weighted: the segments carry (dst, w) and the divisor sw(s) stays whole
+    weights = [1 + (u * 7 + v) % 5 for u, v in hub]
+    dfw = spark.createDataFrame([(*e, w) for e, w in zip(hub, weights)], "u: long, v: long, w: long")
+    seg_w = {r.node: r.rank_fp for r in pagerank(dfw, max_seg_width=2).collect()}
+    assert seg_w == _pagerank_reference(hub, weights=weights)
+
+
+def test_pagerank_weights_and_seeds_match_reference(spark):
+    """Seeded random weighted graphs and random seed sets: the weighted,
+    the seeded and the weighted seeded paths of the one kernel equal the
+    Python integer loop EXACTLY on every node."""
+    import random
+
+    from flinkstreametl_spark.operators.graph import pagerank
+
+    rng = random.Random(0x5EED)
+    for trial in range(2):
+        edges = _random_graph(rng)
+        weights = [rng.randint(1, 9) for _ in edges]
+        nodes = sorted({x for e in edges for x in e})
+        seeds = set(rng.sample(nodes, k=rng.randint(1, len(nodes))))
+        plain = spark.createDataFrame(edges, "u: long, v: long").repartition(rng.choice([1, 3]))
+        weighted = spark.createDataFrame(
+            [(*e, w) for e, w in zip(edges, weights)], "u: long, v: long, w: long"
+        ).repartition(rng.choice([1, 3]))
+        seed_df = spark.createDataFrame([(n,) for n in sorted(seeds)], "node: long")
+        for name, df, sd, expect in (
+            ("weighted", weighted, None, _pagerank_reference(edges, weights=weights)),
+            ("seeded", plain, seed_df, _pagerank_reference(edges, seeds=seeds)),
+            ("both", weighted, seed_df, _pagerank_reference(edges, weights=weights, seeds=seeds)),
+        ):
+            got = {r.node: r.rank_fp for r in pagerank(df, sd).collect()}
+            assert got == expect, f"trial {trial} {name} (e={len(edges)}, seeds={len(seeds)})"
+
+
+def test_pagerank_equal_weights_and_all_seeds_are_plain(spark):
+    """The two laws that make one kernel of three: all weights equal
+    (floor(r·c / (deg·c)) = floor(r / deg)) and ``seeds`` = every node
+    each give the unweighted ranks node for node."""
+    import random
+
+    from flinkstreametl_spark.operators.graph import pagerank
+
+    edges = _random_graph(random.Random(0xE0A1), n_max=40)
+    plain = spark.createDataFrame(edges, "u: long, v: long")
+    expect = {r.node: r.rank_fp for r in pagerank(plain).collect()}
+    assert expect == _pagerank_reference(edges)
+    threes = plain.withColumn("w", F.lit(3).cast("long"))
+    everyone = spark.createDataFrame([(n,) for n in expect], "node: long")
+    assert {r.node: r.rank_fp for r in pagerank(threes).collect()} == expect
+    assert {r.node: r.rank_fp for r in pagerank(plain, everyone).collect()} == expect
+
+
+def test_pagerank_has_one_home():
+    """``operators/graph.py`` defines the one PageRank function, the
+    removed variants are named nowhere in the package, and the damping
+    numerator is read only by that kernel and by the oracle builders of
+    ``plans/graph_ext.py``."""
+    import ast
+    import os
+
+    import flinkstreametl_spark
+
+    pkg = os.path.dirname(flinkstreametl_spark.__file__)
+    graph = os.path.join("operators", "graph.py")
+    with open(os.path.join(pkg, graph)) as fh:
+        defs = [n.name for n in ast.parse(fh.read()).body if isinstance(n, ast.FunctionDef)]
+    assert [d for d in defs if d.startswith("pagerank")] == ["pagerank"]
+
+    gone = {"pagerank_weighted", "pagerank_personalized"}
+    named, damp = [], set()
+    for root, _dirs, names in os.walk(pkg):
+        for f in names:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            rel = os.path.relpath(path, pkg)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for top in tree.body:
+                if isinstance(top, (ast.FunctionDef, ast.ClassDef)):
+                    scope = top.name
+                elif isinstance(top, ast.Assign) and isinstance(top.targets[0], ast.Name):
+                    scope = top.targets[0].id
+                else:
+                    scope = "<module>"
+                for n in ast.walk(top):
+                    ident = (
+                        getattr(n, "id", None) or getattr(n, "attr", None)
+                        or getattr(n, "name", None) or getattr(n, "asname", None)
+                    )
+                    if ident in gone:
+                        named.append((rel, n.lineno))
+                    if ident == "PR_DAMP_NUM" and isinstance(getattr(n, "ctx", None), ast.Load):
+                        damp.add((rel, scope))
+    assert named == []
+    ext = os.path.join("plans", "graph_ext.py")
+    oracle_side = {(rel, s) for rel, s in damp if rel == ext and (s.endswith("_oracle") or s == "_PR_BASE")}
+    assert damp - oracle_side == {(graph, "pagerank")}
 
 
 def test_cluster_hash_split_never_separates_components(spark):
