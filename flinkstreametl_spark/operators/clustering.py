@@ -1,24 +1,36 @@
-"""[EXT] Deterministic fixed-point K-Means primitives, shared by the
-batch analytics plans (``plans/ml_ext.py`` — ``kmeans_cluster_sizes``,
-``ivf_kmeans_recall_curve``, ``semantic_dedup_pairs``) and the streaming
-ANN index maintenance (``streaming/ann_ingest.py``).
+"""[EXT] One deterministic fixed-point Lloyd kernel, shared by k-means
+and product quantization (PQ). K-means is PQ with one subspace:
+``lloyd_fit`` splits every embedding into ``n_sub`` equal-width
+subvectors and runs Lloyd in each subspace in the same jobs, and
+``n_sub = 1`` is plain k-means over the whole vector (``kmeans_fit`` is
+that view, with a ``[k, dim]`` centroid matrix and a long ``cluster``
+column).
+
+Users: the batch analytics plans (``plans/ml_ext.py`` —
+``kmeans_cluster_sizes``, ``semantic_dedup_pairs``,
+``ivf_kmeans_recall_curve``, ``semantic_cosine_histogram``,
+``simplified_silhouette_by_cluster`` and, with 8 subspaces,
+``pq_adc_recall``; ``plans/ann_ext.py`` — ``ann_index_staleness_audit``)
+and the streaming ANN index maintenance (``streaming/ann_ingest.py``).
 
 The reference engine has no ML kernels (its whole core is Flink wiring,
 ``Main.java``); this module exists for the LLM-pipeline tier the brief
-demands: a coarse quantizer for IVF ANN indexes and semantic clustering
-for corpus curation. The design constraint that shapes everything here
-is DRIVER-ORACLE EXACTNESS: every accumulation is 2^-40 fixed point in
-int64, so the full Lloyd trajectory is partition-order independent and
-replayable CTE-by-CTE in DuckDB (``plans/ml_ext._kmeans_ctes``).
+demands: coarse and product quantizers for ANN indexes and semantic
+clustering for corpus curation. The design constraint that shapes
+everything here is DRIVER-ORACLE EXACTNESS: every accumulation is
+2^-40 fixed point in int64, so the full Lloyd trajectory is
+partition-order independent and replayable CTE-by-CTE in DuckDB
+(``plans/ml_ext._kmeans_ctes`` and ``_pq_ctes``).
 
-Scale shape: assignment is an Arrow-batched Pandas UDF against a
-broadcast (k x dim) centroid matrix — never a shuffle of (vector,
-centroid) pairs; centroid updates are one groupBy per iteration; only
-k rows reach the driver per iteration.
+Scale shape: assignment is an Arrow-batched numpy kernel against the
+centroids in the closure (n_sub x k x width floats) — never a shuffle
+of (vector, centroid) pairs; centroid updates are one groupBy per
+iteration; only n_sub x k x width means reach the driver per iteration.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -32,135 +44,130 @@ DEFAULT_K = 8
 DEFAULT_ITERS = 5
 
 
-def kmeans_assign_udf(c_mat):
-    """Arrow-batched assignment kernel: nearest centroid in ``c_mat``
-    under the fixed-point squared distance (per-element
-    ``floor((x-c)^2 * 2^40)`` summed as int64), ties broken by lowest
-    cluster id (``np.argmin`` takes the first minimum, matching the
-    oracle's ``ORDER BY dist, cluster``). The centroid matrix rides in
-    the closure — k x dim floats broadcast to every executor."""
-    import numpy as np
+def fp_dists(M: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """Fixed-point squared distances, int64 ``[rows, n_sub, k]``, from
+    the rows of ``M`` (``rows x dim``) to every centroid of every
+    subspace in ``cents`` (``n_sub x k x width``): per element
+    ``floor((x-c)^2 * 2^40)``, summed as int64."""
+    n_sub, _, width = cents.shape
+    diff = M.reshape(-1, n_sub, 1, width) - cents[None, :, :, :]
+    return np.floor(diff * diff * KM_FP).astype(np.int64).sum(axis=3)
+
+
+def _nearest(M: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    # np.argmin takes the first minimum: ties go to the lowest code,
+    # matching the oracle's ORDER BY dist, cluster.
+    return np.argmin(fp_dists(M, cents), axis=2)
+
+
+def _codes_udf(cents: np.ndarray):
+    """The assignment kernel: an Arrow-batched pandas_udf giving every
+    row its nearest code per subspace (``array<long>``, length n_sub)."""
     from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("long")
-    def assign(emb_s):
+    @pandas_udf("array<long>")
+    def codes(emb_s):
         import pandas as pd
 
         M = np.array(emb_s.tolist(), dtype=np.float64)
-        diff = M[:, None, :] - c_mat[None, :, :]
-        d = np.floor(diff * diff * KM_FP).astype(np.int64).sum(axis=2)
-        return pd.Series(np.argmin(d, axis=1).astype(np.int64))
+        return pd.Series(list(_nearest(M, cents).astype(np.int64)))
 
-    return assign
+    return codes
 
 
-def assign_to_centroids(
-    df: DataFrame, c_mat, *, col: str = "embedding", out: str = "cluster"
-) -> DataFrame:
-    """Attach the nearest-centroid id to every row — the streaming
-    ingest path's whole per-batch compute (no refit, no shuffle)."""
-    return df.withColumn(out, kmeans_assign_udf(c_mat)(F.col(col)))
+def _partials(cents: np.ndarray):
+    """One Lloyd pass over a partition: assign every row, then emit one
+    ``(sub, code, n, sums)`` row per non-empty cell, ``sums`` being the
+    cell's Σ floor(val·2^40) per dimension as int64. The exchange
+    carries partitions x n_sub x k parameter-sized rows, never the
+    (vector, code) stream."""
+    n_sub = cents.shape[0]
+    subs = np.arange(n_sub)
+
+    def partials(batches):
+        import pandas as pd
+
+        sums = np.zeros(cents.shape, dtype=np.int64)
+        counts = np.zeros(cents.shape[:2], dtype=np.int64)
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            M = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+            cell = (subs, _nearest(M, cents))
+            np.add.at(sums, cell, np.floor(M * KM_FP).astype(np.int64).reshape(len(M), n_sub, -1))
+            np.add.at(counts, cell, 1)
+        s, c = np.nonzero(counts)
+        yield pd.DataFrame(
+            {"sub": s, "code": c, "n": counts[s, c], "sums": [v.tolist() for v in sums[s, c]]}
+        )
+
+    return partials
 
 
-def kmeans_fit(emb: DataFrame, k: int = DEFAULT_K, n_iters: int = DEFAULT_ITERS):
-    """Lloyd's algorithm over the embedding table, fully deterministic
-    AND engine-exact (round 2): init = the k lowest vec_ids (no RNG),
-    fixed iteration count, and EVERY accumulation in 2^-40 fixed point —
-    assignment distances are per-element floor((x-c)²·2^40) summed as
-    int64 (ties broken by lowest cluster id), centroid updates are the
-    fixed-point mean (double(Σ floor(v·2^40)) / 2^40 / n, the
-    label_centroids scheme). Integer sums are associative, so the whole
-    trajectory is partition-order independent and reproducible in
-    DuckDB CTE-by-CTE (``plans/ml_ext._kmeans_ctes``).
+def lloyd_fit(emb: DataFrame, k: int = DEFAULT_K, n_iters: int = DEFAULT_ITERS, n_sub: int = 1):
+    """Lloyd's algorithm over the embedding table, per subspace,
+    fully deterministic AND engine-exact: init = the k lowest vec_ids
+    split into ``n_sub`` subvectors (no RNG), a fixed iteration count,
+    assignment by ``fp_dists`` (ties to the lowest code), and centroid
+    updates by the fixed-point mean double(Σ floor(v·2^40)) / 2^40 / n
+    (the label_centroids scheme). An empty cell keeps its previous
+    centroid. Integer sums are associative, so the whole trajectory is
+    partition-order independent.
 
-    Assignment is an Arrow-batched mapInPandas pass (a (batch x k x
-    dim) numpy kernel against the broadcast centroid matrix — k x dim
-    floats in the closure, never a shuffle of pairs) that ALSO emits
-    the per-partition fixed-point partial sums, so the per-iteration
-    exchange carries partitions×k parameter-sized rows; one global
-    groupBy finishes the mean and only k×dim values reach the driver
-    per iteration. Returns (centroids ndarray, assign_fn).
+    Each iteration is one ``_partials`` pass and one global
+    groupBy(sub, code, pos) over its exploded partial sums.
 
-    Empty clusters keep their previous centroid (standard Lloyd
-    fallback), preserving determinism.
+    Returns ``(cents, codes_fn)``: the ``[n_sub, k, dim // n_sub]``
+    centroids and a function adding a ``codes`` ``array<long>`` column
+    (length n_sub) to a frame with an ``embedding`` column. Raises
+    ``ValueError`` when ``n_sub`` does not divide the embedding dim.
     """
-    import numpy as np
-
     # Every Lloyd iteration reads the input (Spark's KMeans caches it too).
     emb = pin(emb)
     init_rows = sorted(
         emb.orderBy("vec_id").limit(k).select("vec_id", "embedding").collect(),
         key=lambda r: r.vec_id,
     )
-    cents = np.array([r.embedding for r in init_rows], dtype=np.float64)
+    full = np.array([r.embedding for r in init_rows], dtype=np.float64)
+    dim = full.shape[1]
+    if dim % n_sub:
+        raise ValueError(f"n_sub={n_sub} does not divide the embedding dim {dim}")
+    cents = full.reshape(len(full), n_sub, dim // n_sub).transpose(1, 0, 2).copy()
 
-    # Iteration shape (r14 opt, guide §2.3 "aggregate before you
-    # shuffle"): assignment AND the per-cluster fixed-point sums are
-    # fused into ONE Arrow-batched pass that emits k partial rows per
-    # partition — (cluster, n, Σ floor(val·2^40) per dim as int64) —
-    # instead of the former pandas_udf + posexplode(dim·N rows) + two
-    # hash aggregates. The exchange then carries partitions×k tiny rows
-    # rather than the partially-aggregated (cluster, pos) stream of the
-    # exploded formulation, and one global groupBy(cluster, pos) over
-    # the exploded partials (k·dim·partitions rows) finishes the mean.
-    # Integer partial sums are associative, so totals — and therefore
-    # the fixed-point mean double(Σ)/2^40/n — are bit-identical to the
-    # old posexplode path under any partitioning.
     emb_only = emb.select("embedding")
-
-    def _make_partials(c_mat):
-        def partials(batches):
-            import pandas as pd
-
-            sums = np.zeros((k, c_mat.shape[1]), dtype=np.int64)
-            counts = np.zeros(k, dtype=np.int64)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                M = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-                diff = M[:, None, :] - c_mat[None, :, :]
-                d = np.floor(diff * diff * KM_FP).astype(np.int64).sum(axis=2)
-                idx = np.argmin(d, axis=1)
-                Mfp = np.floor(M * KM_FP).astype(np.int64)
-                for c in range(k):
-                    mask = idx == c
-                    n = int(mask.sum())
-                    if n:
-                        sums[c] += Mfp[mask].sum(axis=0)
-                        counts[c] += n
-            live = [c for c in range(k) if counts[c]]
-            yield pd.DataFrame(
-                {
-                    "cluster": [c for c in live],
-                    "n": [int(counts[c]) for c in live],
-                    "sums": [sums[c].tolist() for c in live],
-                }
-            )
-
-        return partials
-
     for _ in range(n_iters):
-        part = emb_only.mapInPandas(
-            _make_partials(cents), schema="cluster LONG, n LONG, sums ARRAY<LONG>"
-        )
         means = (
-            part.select("cluster", "n", F.posexplode("sums").alias("pos", "s"))
-            .groupBy("cluster", "pos")
-            .agg(
-                (
-                    F.sum("s").cast("double") / F.lit(KM_FP) / F.sum("n")
-                ).alias("m")
-            )
+            emb_only.mapInPandas(_partials(cents), schema="sub LONG, code LONG, n LONG, sums ARRAY<LONG>")
+            .select("sub", "code", "n", F.posexplode("sums").alias("pos", "s"))
+            .groupBy("sub", "code", "pos")
+            .agg((F.sum("s").cast("double") / F.lit(KM_FP) / F.sum("n")).alias("m"))
             .collect()
         )
-        new = cents.copy()
+        cents = cents.copy()
         for r in means:
-            new[r.cluster][r.pos] = r.m
-        cents = new
+            cents[r.sub, r.code, r.pos] = r.m
 
-    final_assign = kmeans_assign_udf(cents)
+    codes = _codes_udf(cents)
 
-    def assign_df(df: DataFrame) -> DataFrame:
-        return df.withColumn("cluster", final_assign(F.col("embedding")))
+    def codes_fn(df: DataFrame) -> DataFrame:
+        return df.withColumn("codes", codes(F.col("embedding")))
 
-    return cents, assign_df
+    return cents, codes_fn
+
+
+def assign_to_centroids(
+    df: DataFrame, c_mat: np.ndarray, *, col: str = "embedding", out: str = "cluster"
+) -> DataFrame:
+    """Attach the nearest row of the ``[k, dim]`` centroid matrix to
+    every row as a long — the k-means view of the assignment kernel,
+    and the streaming ingest path's whole per-batch compute (no refit,
+    no shuffle)."""
+    return df.withColumn(out, _codes_udf(c_mat[None])(F.col(col))[0])
+
+
+def kmeans_fit(emb: DataFrame, k: int = DEFAULT_K, n_iters: int = DEFAULT_ITERS):
+    """K-means: ``lloyd_fit`` with one subspace. Returns the ``[k, dim]``
+    centroid matrix and a function adding the long ``cluster`` column."""
+    cents, _ = lloyd_fit(emb, k, n_iters)
+    c_mat = cents[0]
+    return c_mat, lambda df: assign_to_centroids(df, c_mat)

@@ -71,6 +71,8 @@ _RECHECK: dict[str, int] = {
     # one PageRank kernel: the weighted and seeded paths share the plain build
     "pagerank_weighted_copurchase": 16,
     "personalized_pagerank_copurchase": 16,
+    # one Lloyd kernel: the cluster column is element 0 of the codes array
+    "kmeans_cluster_sizes": 16,
 }
 
 

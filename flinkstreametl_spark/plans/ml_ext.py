@@ -16,9 +16,18 @@ from pyspark.sql import functions as F
 
 from flinkstreametl_spark.operators import similarity as S
 from flinkstreametl_spark.operators import text as X
+from flinkstreametl_spark.operators.clustering import (
+    DEFAULT_ITERS,
+    DEFAULT_K,
+    KM_FP as _KM_FP,
+    fp_dists,
+    kmeans_fit,
+    lloyd_fit,
+)
 from flinkstreametl_spark.plans.llm import _KNN_ORACLE
 from flinkstreametl_spark.plans.registry import register
 from flinkstreametl_spark.plans.shared import DAILY_SQL as _SHARED_DAILY_SQL
+from flinkstreametl_spark.session import pin
 from flinkstreametl_spark.sources.parquet import ensure_parallelism, load_table
 
 _TOKS = X.sql_tokens("text")
@@ -97,23 +106,8 @@ def knn_pandas_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KM_K = 8
-_KM_ITERS = 5
-
-
-# Shared with streaming/ann_ingest.py since round 8 — the primitive
-# moved to operators/clustering.py (streaming modules import operators,
-# never plans); these aliases keep every existing call site and test
-# import stable.
-from flinkstreametl_spark.operators.clustering import (  # noqa: E402
-    KM_FP as _KM_FP,
-    kmeans_fit,
-)
-from flinkstreametl_spark.session import pin
-
-
 def _kmeans_ctes(
-    k: int = _KM_K, iters: int = _KM_ITERS, *, prefix: str = "", where: str = ""
+    k: int = DEFAULT_K, iters: int = DEFAULT_ITERS, *, prefix: str = "", where: str = ""
 ) -> str:
     """Chained-CTE Lloyd mirror (the WITH prefix shared by every
     kmeans-derived oracle): c0 = k lowest-id embeddings; per iteration,
@@ -167,7 +161,7 @@ def _kmeans_ctes(
     return ("WITH " if not p else "") + ",\n".join(ctes)
 
 
-def _kmeans_oracle(k: int = _KM_K, iters: int = _KM_ITERS) -> str:
+def _kmeans_oracle(k: int = DEFAULT_K, iters: int = DEFAULT_ITERS) -> str:
     return (
         _kmeans_ctes(k, iters) + f"\nSELECT cluster, CAST(COUNT(*) AS BIGINT) AS n_members"
         f" FROM a{iters + 1} GROUP BY cluster ORDER BY cluster"
@@ -275,7 +269,7 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _semantic_dedup_oracle(k: int = _KM_K, iters: int = _KM_ITERS, threshold: float = 0.3) -> str:
+def _semantic_dedup_oracle(k: int = DEFAULT_K, iters: int = DEFAULT_ITERS, threshold: float = 0.3) -> str:
     """SemDeDup oracle: the shared Lloyd CTE chain, then fixed-point
     cosine over pairs CO-ASSIGNED by the final a{iters+1} labels.
 
@@ -777,7 +771,7 @@ def ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KM_NPROBES = [1, 2, 3, 5, 8]  # k=8 learned clusters -> nprobe=8 is the full scan
 
 
-def _kmeans_curve_oracle(k: int = _KM_K, iters: int = _KM_ITERS) -> str:
+def _kmeans_curve_oracle(k: int = DEFAULT_K, iters: int = DEFAULT_ITERS) -> str:
     """The recall-curve CTE suite on top of the shared Lloyd chain:
     probes rank the LEARNED centroids (c{iters}), membership comes from
     the final assignment (a{iters+1}); everything downstream mirrors
@@ -990,117 +984,16 @@ def ivf_kmeans_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ids (here 8 x 4 bits of information = ~4 bytes vs 256 bytes of float32) —
 # the compression that makes billion-vector ANN indexes fit in memory.
 _PQ_SUB = 8  # subspaces (embedding dim 64 -> 8 dims each)
-_PQ_SD = 8  # dims per subspace
+_PQ_SD = 8  # dims per subspace, spelled out for the oracle
 _PQ_K = 16  # codebook size per subspace
 _PQ_ITERS = 3
 _PQ_NQ = 5  # audit queries (the suite's standing vec_id < 5 convention)
 
 
-def pq_fit(emb: DataFrame, n_sub: int = _PQ_SUB, sd: int = _PQ_SD, k: int = _PQ_K, n_iters: int = _PQ_ITERS):
-    """Per-subspace Lloyd codebooks with the kmeans_fit discipline
-    (same init, tie-break, fixed-point accumulation — see kmeans_fit's
-    docstring for why each choice makes the trajectory engine-exact):
-    init = the k lowest vec_ids' subvectors, assignment distances are
-    per-element floor((x-c)^2 * 2^40) int64 sums per subspace (ties ->
-    lowest code), centroid updates the fixed-point mean with
-    empty-cell carry-forward. All n_sub codebooks train in the SAME
-    jobs: one Arrow-batched assignment UDF emits the full code array
-    per row, one groupBy((sub, code, pos)) per iteration updates every
-    codebook, and only n_sub*k*sd fixed-point means (a parameter
-    table, 1024 values here) reach the driver per iteration.
-
-    Returns (centroids ndarray [n_sub, k, sd], codes_fn) where
-    codes_fn adds a `codes` array<long> column (length n_sub).
-    """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    emb = pin(emb)
-    init_rows = sorted(
-        emb.orderBy("vec_id").limit(k).select("vec_id", "embedding").collect(),
-        key=lambda r: r.vec_id,
-    )
-    full = np.array([r.embedding for r in init_rows], dtype=np.float64)
-    cents = np.stack([full[:, s * sd : (s + 1) * sd] for s in range(n_sub)])
-
-    def make_assign(c_mat: "np.ndarray"):
-        @pandas_udf("array<long>")
-        def assign(emb_s):
-            import pandas as pd
-
-            M = np.array(emb_s.tolist(), dtype=np.float64).reshape(-1, n_sub, sd)
-            diff = M[:, :, None, :] - c_mat[None, :, :, :]
-            d = np.floor(diff * diff * _KM_FP).astype(np.int64).sum(axis=3)
-            # first minimum -> lowest code on ties (oracle: ORDER BY dist, cluster)
-            return pd.Series(list(np.argmin(d, axis=2).astype(np.int64)))
-
-        return assign
-
-    # Iteration shape (r14 opt — the kmeans_fit rationale verbatim):
-    # assignment and the per-(sub, code) fixed-point partial sums fuse
-    # into one Arrow-batched pass emitting <= n_sub*k tiny rows per
-    # partition, replacing the former pandas_udf + posexplode(dim*N) +
-    # corpus-scale hash aggregate. Integer partial sums are
-    # associative -> the same totals, the same fixed-point means.
-    emb_only = emb.select("embedding")
-
-    def make_partials(c_mat: "np.ndarray"):
-        def partials(batches):
-            import pandas as pd
-
-            sums = np.zeros((n_sub, k, sd), dtype=np.int64)
-            counts = np.zeros((n_sub, k), dtype=np.int64)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                M = np.array(pdf["embedding"].tolist(), dtype=np.float64).reshape(-1, n_sub, sd)
-                diff = M[:, :, None, :] - c_mat[None, :, :, :]
-                d = np.floor(diff * diff * _KM_FP).astype(np.int64).sum(axis=3)
-                idx = np.argmin(d, axis=2)  # first min -> lowest code on ties
-                Mfp = np.floor(M * _KM_FP).astype(np.int64)
-                for s in range(n_sub):
-                    for c in range(k):
-                        mask = idx[:, s] == c
-                        n_rows = int(mask.sum())
-                        if n_rows:
-                            sums[s, c] += Mfp[mask, s].sum(axis=0)
-                            counts[s, c] += n_rows
-            rows = [
-                (s, c, int(counts[s, c]), sums[s, c].tolist())
-                for s in range(n_sub)
-                for c in range(k)
-                if counts[s, c]
-            ]
-            yield pd.DataFrame(rows, columns=["sub", "code", "n", "sums"])
-
-        return partials
-
-    for _ in range(n_iters):
-        part = emb_only.mapInPandas(
-            make_partials(cents), schema="sub LONG, code LONG, n LONG, sums ARRAY<LONG>"
-        )
-        means = (
-            part.select("sub", "code", "n", F.posexplode("sums").alias("p", "s"))
-            .groupBy("sub", "code", "p")
-            .agg((F.sum("s").cast("double") / F.lit(_KM_FP) / F.sum("n")).alias("m"))
-            .collect()
-        )
-        new = cents.copy()
-        for r in means:
-            new[r.sub, r.code, r.p] = r.m
-        cents = new
-
-    final_assign = make_assign(cents)
-
-    def codes_fn(df: DataFrame) -> DataFrame:
-        return df.withColumn("codes", final_assign(F.col("embedding")))
-
-    return cents, codes_fn
-
-
 def _pq_ctes(n_sub: int = _PQ_SUB, sd: int = _PQ_SD, k: int = _PQ_K, iters: int = _PQ_ITERS) -> str:
-    """Chained-CTE mirror of pq_fit (the _kmeans_ctes pattern with a
-    (sub, cluster) key): per iteration, per-subspace fixed-point
+    """Chained-CTE mirror of ``lloyd_fit`` with n_sub subspaces (the
+    _kmeans_ctes pattern with a (sub, cluster) key; the kernel derives
+    ``sd`` from the dim): per iteration, per-subspace fixed-point
     distances -> argmin code per (vec_id, sub) -> fixed-point means
     with empty-cell carry-forward. Codes land in a{iters+1}; the final
     codebook is c{iters}."""
@@ -1208,8 +1101,8 @@ def pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivf_kmeans_recall_curve prunes the scan and keeps the vectors, PQ
     shrinks ~64x (8 ids vs 64 floats); production billion-vector
     indexes (IVF-PQ) compose this encoding inside the IVF partition,
-    which in this engine is exactly pq_fit's codes nested under
-    kmeans_fit's coarse partition.
+    which in this engine is exactly the Lloyd kernel's 8-subspace codes
+    nested under its one-subspace coarse partition.
 
     Plan shape: the ADC table is PARAMETER-sized (5 queries x 8 subs x
     16 codes = 640 rows, computed driver-side from the learned
@@ -1235,7 +1128,7 @@ def pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Four consumers: fit input, encode side, query-row collect, exact-L2 side.
     emb = pin(ensure_parallelism(load_table(spark, sf_dir, "embeddings")))
-    cents, codes_fn = pq_fit(emb)
+    cents, codes_fn = lloyd_fit(emb, _PQ_K, _PQ_ITERS, n_sub=_PQ_SUB)
     # The posexplode consumer would duplicate the encode pandas_udf.
     codes = pin(codes_fn(emb).select("vec_id", "codes"))
 
@@ -1243,14 +1136,13 @@ def pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") < _PQ_NQ).select("vec_id", "embedding").collect(),
         key=lambda r: r.vec_id,
     )
-    tab = []
-    for r in qrows:
-        qv = np.array(r.embedding, dtype=np.float64).reshape(_PQ_SUB, _PQ_SD)
-        for s in range(_PQ_SUB):
-            diff = qv[s][None, :] - cents[s]
-            d = np.floor(diff * diff * _KM_FP).astype(np.int64).sum(axis=1)
-            for j in range(_PQ_K):
-                tab.append((r.vec_id, s, j, int(d[j])))
+    d = fp_dists(np.array([r.embedding for r in qrows], dtype=np.float64), cents)
+    tab = [
+        (r.vec_id, s, j, int(d[i, s, j]))
+        for i, r in enumerate(qrows)
+        for s in range(_PQ_SUB)
+        for j in range(_PQ_K)
+    ]
     adc = spark.createDataFrame(tab, "query_id LONG, sub INT, code LONG, d LONG")
 
     exc = codes.select("vec_id", F.posexplode("codes").alias("sub", "code"))
@@ -1912,7 +1804,7 @@ def label_separation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # learned blocks, same in-row fixed-point cosine, NO threshold filter
 # — the aggregate replaces it.
 _SCH_ORACLE = (
-    _kmeans_ctes(_KM_K, _KM_ITERS)
+    _kmeans_ctes(DEFAULT_K, DEFAULT_ITERS)
     + f""",
 p AS (
     SELECT CAST(least(greatest(CAST(floor(
@@ -1923,8 +1815,8 @@ p AS (
                      * CAST(list_sum(list_transform(b.embedding,
                       v -> CAST(floor(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) * 1099511627776.0) AS BIGINT))) AS DOUBLE)))
                * 20) AS BIGINT), -20), 19) AS BIGINT) AS bucket
-    FROM a{_KM_ITERS + 1} aa
-    JOIN a{_KM_ITERS + 1} bb ON bb.cluster = aa.cluster AND aa.vec_id < bb.vec_id
+    FROM a{DEFAULT_ITERS + 1} aa
+    JOIN a{DEFAULT_ITERS + 1} bb ON bb.cluster = aa.cluster AND aa.vec_id < bb.vec_id
     JOIN embeddings a ON a.vec_id = aa.vec_id
     JOIN embeddings b ON b.vec_id = bb.vec_id
 )
@@ -2194,7 +2086,7 @@ def jl_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sil_oracle() -> str:
-    i = _KM_ITERS + 1
+    i = DEFAULT_ITERS + 1
     return (
         _kmeans_ctes()
         + f""",
@@ -2251,17 +2143,13 @@ def simplified_silhouette_by_cluster(spark: SparkSession, sf_dir: str) -> DataFr
     from pyspark.sql.functions import pandas_udf
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents, _ = kmeans_fit(emb)
-    c_mat = np.array(cents, dtype=np.float64)
+    cents, _ = lloyd_fit(emb)
 
     @pandas_udf("array<long>")
     def dists(emb_s):
         import pandas as pd
 
-        M = np.array(emb_s.tolist(), dtype=np.float64)
-        diff = M[:, None, :] - c_mat[None, :, :]
-        d = np.floor(diff * diff * _KM_FP).astype(np.int64).sum(axis=2)
-        return pd.Series(list(d))
+        return pd.Series(list(fp_dists(np.array(emb_s.tolist(), dtype=np.float64), cents)[:, 0]))
 
     per_vec = (
         emb.select("vec_id", dists(F.col("embedding")).alias("ds"))

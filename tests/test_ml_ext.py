@@ -6,8 +6,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from flinkstreametl_spark.operators.clustering import DEFAULT_ITERS as _KM_ITERS, DEFAULT_K as _KM_K, kmeans_fit
 from flinkstreametl_spark.plans import REGISTRY
-from flinkstreametl_spark.plans.ml_ext import _KM_ITERS, _KM_K, kmeans_fit
 from flinkstreametl_spark.sources.parquet import load_table
 
 
@@ -96,9 +96,9 @@ def test_ivf_recall_curve_monotone_with_full_scan_anchor(spark, sf_dir):
 
 
 def _numpy_pq(M: np.ndarray, ids: np.ndarray, n_sub: int, sd: int, k: int, iters: int) -> np.ndarray:
-    """Reference per-subspace Lloyd mirroring pq_fit's fixed-point
+    """Reference per-subspace Lloyd mirroring lloyd_fit's fixed-point
     scheme exactly (same init, distances, means, empty-cell
-    carry-forward) — written against the PQ definition, not pq_fit's
+    carry-forward) — written against the PQ definition, not lloyd_fit's
     code, so a shared misreading can't pass. Returns (n, n_sub) codes."""
     FP = 1099511627776.0
     S = M.reshape(len(M), n_sub, sd)
@@ -127,7 +127,8 @@ def _numpy_pq(M: np.ndarray, ids: np.ndarray, n_sub: int, sd: int, k: int, iters
 
 
 def test_pq_codes_match_numpy_reference(spark, sf_dir):
-    from flinkstreametl_spark.plans.ml_ext import _PQ_ITERS, _PQ_K, _PQ_SD, _PQ_SUB, pq_fit
+    from flinkstreametl_spark.operators.clustering import lloyd_fit
+    from flinkstreametl_spark.plans.ml_ext import _PQ_ITERS, _PQ_K, _PQ_SD, _PQ_SUB
 
     emb = load_table(spark, sf_dir, "embeddings")
     rows = emb.select("vec_id", "embedding").collect()
@@ -136,7 +137,7 @@ def test_pq_codes_match_numpy_reference(spark, sf_dir):
     ref = _numpy_pq(M, ids, _PQ_SUB, _PQ_SD, _PQ_K, _PQ_ITERS)
     ref_by_id = {int(i): ref[j].tolist() for j, i in enumerate(ids)}
 
-    _, codes_fn = pq_fit(emb)
+    _, codes_fn = lloyd_fit(emb, _PQ_K, _PQ_ITERS, n_sub=_PQ_SUB)
     got = {r.vec_id: list(r.codes) for r in codes_fn(emb).select("vec_id", "codes").collect()}
     diffs = [i for i in ref_by_id if ref_by_id[i] != got[i]]
     assert not diffs, f"codes diverged for {len(diffs)} vectors"
@@ -153,7 +154,7 @@ def test_pq_recall_bounds_and_determinism(spark, sf_dir):
 
 def test_ivf_pq_composition_full_probe_equals_adc(spark, sf_dir):
     """docs/ANN.md's composition claim as executed code: IVF-PQ =
-    pq_fit's codes nested under kmeans_fit's coarse partition. The
+    lloyd_fit's PQ codes nested under kmeans_fit's coarse partition. The
     anchor law: with nprobe = ALL coarse clusters the probed candidate
     set is the whole corpus, so the composed pipeline's top-10 must
     equal the plain full-scan ADC top-10 EXACTLY (same integer ADC
@@ -167,16 +168,17 @@ def test_ivf_pq_composition_full_probe_equals_adc(spark, sf_dir):
     from flinkstreametl_spark.operators import similarity as S
     from flinkstreametl_spark.plans.ml_ext import (
         _KM_FP,
+        _PQ_ITERS,
         _PQ_K,
         _PQ_SD,
         _PQ_SUB,
         kmeans_fit,
-        pq_fit,
+        lloyd_fit,
     )
 
     emb = load_table(spark, sf_dir, "embeddings").localCheckpoint()
     _coarse_cents, assign_df = kmeans_fit(emb)
-    pq_cents, codes_fn = pq_fit(emb)
+    pq_cents, codes_fn = lloyd_fit(emb, _PQ_K, _PQ_ITERS, n_sub=_PQ_SUB)
     docs = assign_df(codes_fn(emb)).select("vec_id", "codes", "cluster")
 
     qrows = sorted(
@@ -250,3 +252,86 @@ def test_ivf_pq_composition_full_probe_equals_adc(spark, sf_dir):
         )
     )
     assert composed == full
+
+
+def test_kmeans_is_pq_with_one_subspace():
+    """The identity the one Lloyd kernel rests on, between the two
+    independent references: per-subspace Lloyd with one subspace of
+    width dim is k-means, code for code. Seven of the twenty matrices
+    are built for ties: few distinct values and duplicated rows."""
+    rng = np.random.default_rng(15)
+    for case in range(20):
+        n, dim, k, iters = 30 + case, 2 + case % 5, 2 + case % 4, 1 + case % 4
+        if case < 7:
+            M = rng.integers(0, 3, size=(n, dim)).astype(np.float64) / 2
+            M[rng.integers(0, n, size=n // 3)] = M[0]
+        else:
+            M = rng.normal(size=(n, dim))
+        ids = rng.permutation(n).astype(np.int64) * 3
+        pq = _numpy_pq(M, ids, 1, dim, k, iters)[:, 0]
+        assert np.array_equal(pq, _numpy_lloyd(M, ids, k, iters)), case
+
+
+def test_lloyd_rejects_subspaces_that_do_not_divide_dim(spark):
+    import pytest
+
+    from flinkstreametl_spark.operators.clustering import lloyd_fit
+
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0, 2.0]) for i in range(4)], "vec_id LONG, embedding ARRAY<DOUBLE>"
+    )
+    with pytest.raises(ValueError, match="n_sub=2"):
+        lloyd_fit(emb, k=2, n_iters=1, n_sub=2)
+
+
+def test_lloyd_has_one_home():
+    """``operators/clustering.py`` is the only module that floors a
+    ``KM_FP``-scaled numpy value, the package has one Lloyd
+    ``mapInPandas`` site (a ``mapInPandas`` call inside a top-level
+    function that reads the fixed-point scale), and the removed names
+    are defined or read nowhere."""
+    import ast
+    import os
+
+    import flinkstreametl_spark
+
+    pkg = os.path.dirname(flinkstreametl_spark.__file__)
+    fp_names = {"KM_FP", "_KM_FP"}
+    gone = {"pq_fit", "kmeans_assign_udf", "_KM_K", "_KM_ITERS"}
+
+    def idents(node):
+        for n in ast.walk(node):
+            yield n, getattr(n, "id", None) or getattr(n, "attr", None) or getattr(n, "name", None)
+
+    floors, lloyd_maps, named = set(), [], []
+    for root, _dirs, names in os.walk(pkg):
+        for f in names:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            rel = os.path.relpath(path, pkg)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for n, ident in idents(tree):
+                if ident in gone or getattr(n, "asname", None) in gone:
+                    named.append((rel, getattr(n, "lineno", None)))
+                is_np_floor = (
+                    isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "floor"
+                    and getattr(n.func.value, "id", None) == "np"
+                )
+                if is_np_floor and any(i in fp_names for _, i in idents(n)):
+                    floors.add(rel)
+            for top in tree.body:
+                if isinstance(top, ast.FunctionDef) and any(i in fp_names for _, i in idents(top)):
+                    lloyd_maps += [
+                        (rel, top.name)
+                        for n, i in idents(top)
+                        if isinstance(n, ast.Attribute) and i == "mapInPandas"
+                    ]
+    home = os.path.join("operators", "clustering.py")
+    assert floors == {home}
+    assert lloyd_maps == [(home, "lloyd_fit")]
+    assert named == []
+

@@ -141,14 +141,16 @@ def test_shuffle_partition_sweep_float_queries(spark, sf_dir):
 
 
 def test_pq_codes_partition_independent(spark, sf_dir):
-    """Per-subspace fixed-point Lloyd (pq_fit): the full trajectory and
-    the emitted code arrays must not depend on input partitioning."""
-    from flinkstreametl_spark.plans.ml_ext import pq_fit
+    """Per-subspace fixed-point Lloyd (lloyd_fit, n_sub=8): the full
+    trajectory and the emitted code arrays must not depend on input
+    partitioning."""
+    from flinkstreametl_spark.operators.clustering import lloyd_fit
+    from flinkstreametl_spark.plans.ml_ext import _PQ_ITERS, _PQ_K, _PQ_SUB
 
     emb = load_table(spark, sf_dir, "embeddings")
     outs = []
     for n in (1, 13):
-        _, codes_fn = pq_fit(emb.repartition(n))
+        _, codes_fn = lloyd_fit(emb.repartition(n), _PQ_K, _PQ_ITERS, n_sub=_PQ_SUB)
         outs.append(sorted((r.vec_id, tuple(r.codes)) for r in codes_fn(emb).collect()))
     assert outs[0] == outs[1]
 

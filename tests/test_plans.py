@@ -529,3 +529,30 @@ def test_hits_half_steps_broadcast_the_scores(spark, sf_dir, monkeypatch):
     for plan in half_steps:
         assert "SortMergeJoin" not in plan, plan
         assert "BroadcastHashJoin" in plan, plan
+
+
+def test_dump_plans_masks_run_to_run_ids():
+    """``tools/dump_plans.py`` masks every id that differs between two
+    builds of one tree, and nothing else, so a plan diff between two
+    trees shows only real plan changes."""
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools", "dump_plans.py")
+    spec = importlib.util.spec_from_file_location("_dump_plans", path)
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+
+    a = (
+        "Output [2]: [vec_id#12L, pythonUDF0#47[0] AS cluster#48L], [plan_id=128]\n"
+        "Arguments: [doc_id#33L], MapPartitionsRDD[20] at localCheckpoint at <unknown>:0, ExistingRDD\n"
+        "lambdafunction(FLOOR(((lambda x_7#91 * lambda y_8#92) * 2^40)), lambda x_7#91, lambda y_8#92)"
+    )
+    b = (
+        "Output [2]: [vec_id#3L, pythonUDF0#9[0] AS cluster#10L], [plan_id=5]\n"
+        "Arguments: [doc_id#1L], MapPartitionsRDD[2] at localCheckpoint at NativeMethodAccessorImpl.java:0, ExistingRDD\n"
+        "lambdafunction(FLOOR(((lambda x_1#2 * lambda y_2#3) * 2^40)), lambda x_1#2, lambda y_2#3)"
+    )
+    assert tool.mask(a) == tool.mask(b)
+    assert "AS cluster#NL" in tool.mask(a) and "MapPartitionsRDD[N]" in tool.mask(a)
+    assert tool.mask(a.replace("cluster", "code")) != tool.mask(b)
