@@ -8,8 +8,16 @@ Compressed formats (JPEG/PNG/...) need a codec library absent from this
 container — those payloads raise ValueError, and the decoder seam
 (`extract_features(decoder=...)`, `resize_images(resizer=...)`) is where
 a PIL/opencv-backed callable plugs in unchanged. Everything Spark-side —
-schemas, partitioning, Arrow batch shape, mapInPandas signatures — is
-identical either way.
+schemas, partitioning, Arrow batch shape — is identical either way.
+
+One crossing: ``map_media(df, fn, schema)`` is the media code's only
+Arrow crossing. It runs ``mapInPandas`` over ``df``'s rows and calls
+``fn(*row)`` on each; ``fn`` yields zero or more output rows as tuples
+in ``schema``'s column order. Each operator below is a named per-row
+function plus one ``map_media`` call over ``(media_id, payload)``. A
+query that synthesizes its payloads composes synth -> encode -> these
+same per-row functions inside ONE ``map_media`` call, so a payload
+never crosses the JVM between two Python stages.
 
 Design for 100 TB of media:
 - blobs stay in executor space end-to-end (mapInPandas iterator of Arrow
@@ -23,7 +31,9 @@ Design for 100 TB of media:
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+import hashlib
+from collections.abc import Callable, Iterable, Iterator
+from functools import partial
 
 import pandas as pd
 
@@ -31,15 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("payload", T.BinaryType(), True),      # opaque encoded bytes
-    T.StructField("media_type", T.StringType(), True),   # image | audio | video
-    T.StructField("format", T.StringType(), True),       # png/jpeg/wav/mp4/...
-    T.StructField("width", T.IntegerType(), True),
-    T.StructField("height", T.IntegerType(), True),
-    T.StructField("duration_ms", T.LongType(), True),
-])
+_MEDIA_COLS = ("media_id", "payload")
 
 FEATURE_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
@@ -49,13 +51,36 @@ FEATURE_SCHEMA = T.StructType([
 ])
 
 
-def media_metadata(df: DataFrame, id_col: str = "media_id", payload_col: str = "payload") -> DataFrame:
+def map_media(df: DataFrame, fn: Callable[..., Iterable[tuple]], schema: T.StructType) -> DataFrame:
+    """The one Arrow crossing: ``fn(*row)`` over every row of ``df``
+    (columns in ``df``'s order, as Python values), each call yielding
+    zero or more rows of ``schema`` as tuples. Executor-side, one
+    pandas frame out per Arrow batch in, partitioning preserved."""
+    names = schema.fieldNames()
+
+    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [out for row in zip(*(pdf[c] for c in pdf.columns)) for out in fn(*row)]
+            yield pd.DataFrame.from_records(rows, columns=names)
+
+    return df.mapInPandas(op, schema=schema)
+
+
+def mean_fold(levels: list[int]) -> int:
+    """Fold integer levels to a fingerprint: bit i is set iff level i
+    is strictly above the mean, cross-multiplied (``v·n > Σv``) so it
+    stays integer-exact."""
+    n, total = len(levels), sum(levels)
+    return sum(1 << i for i, v in enumerate(levels) if v * n > total)
+
+
+def media_metadata(df: DataFrame) -> DataFrame:
     """Cheap metadata over the blob without decoding: byte length + md5
     digest — all JVM builtins, no Python."""
     return df.select(
-        F.col(id_col),
-        F.octet_length(F.col(payload_col)).cast("long").alias("n_bytes"),
-        F.md5(F.col(payload_col)).alias("digest"),
+        F.col("media_id"),
+        F.octet_length(F.col("payload")).cast("long").alias("n_bytes"),
+        F.md5(F.col("payload")).alias("digest"),
     )
 
 
@@ -199,37 +224,29 @@ def fake_decoder(payload: bytes) -> tuple[int, int, list[float]]:
     return (n % 64, n // 64, [float(n), float(s % 251), float(payload[0] if n else 0), float(payload[-1] if n else 0)])
 
 
+def image_feature_rows(
+    mid: int, payload: bytes | None, decoder: Callable[[bytes], tuple[int, int, list[float]]] | None = None
+) -> Iterator[tuple]:
+    """``extract_features``' per-row function: one FEATURE_SCHEMA row."""
+    raw = bytes(payload) if payload is not None else None
+    _w, _h, feat = (decoder or default_decoder)(raw)
+    if raw is None:
+        yield mid, 0, None, feat
+    else:
+        yield mid, len(raw), hashlib.md5(raw).hexdigest(), feat
+
+
 def extract_features(
     df: DataFrame,
     decoder: Callable[[bytes], tuple[int, int, list[float]]] | None = None,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
 ) -> DataFrame:
-    """Decode + feature-extract via mapInPandas: Arrow-batched, executor-
-    side, preserves partitioning. decoder=None uses the real pure-Python
-    PPM/BMP default (compressed formats raise ValueError there); inject
-    a codec-backed or fake callable through the same seam."""
-    import hashlib
-
-    dec = decoder if decoder is not None else default_decoder
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(payload) if payload is not None else None
-                _w, _h, feat = dec(raw)
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "n_bytes": len(raw) if raw is not None else 0,
-                        "digest": hashlib.md5(raw).hexdigest() if raw is not None else None,
-                        "feature": feat,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in FEATURE_SCHEMA.fields])
-
-    return df.select(id_col, payload_col).mapInPandas(op, schema=FEATURE_SCHEMA)
+    """Decode + feature-extract through ``map_media``: Arrow-batched,
+    executor-side, preserves partitioning. decoder=None uses the real
+    pure-Python PPM/BMP default (compressed formats raise ValueError
+    there); inject a codec-backed or fake callable through the same
+    seam."""
+    row = partial(image_feature_rows, decoder=decoder)
+    return map_media(df.select(*_MEDIA_COLS), row, FEATURE_SCHEMA)
 
 
 RESIZED_SCHEMA = T.StructType([
@@ -264,38 +281,34 @@ def fake_resizer(payload: bytes, w: int, h: int) -> bytes:
     return (payload * reps)[:need]
 
 
+def resized_rows(
+    mid: int,
+    payload: bytes | None,
+    width: int,
+    height: int,
+    resizer: Callable[[bytes, int, int], bytes] | None = None,
+) -> Iterator[tuple]:
+    """``resize_images``' per-row function: one RESIZED_SCHEMA row."""
+    raw = bytes(payload) if payload is not None else None
+    yield mid, width, height, (resizer or default_resizer)(raw, width, height)
+
+
 def resize_images(
     df: DataFrame,
     width: int,
     height: int,
     resizer: Callable[[bytes, int, int], bytes] | None = None,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
 ) -> DataFrame:
-    """Resize plumbing via mapInPandas: Arrow-batched blob-in/blob-out,
-    never touching the driver. resizer=None uses the real nearest-
-    neighbor PPM/BMP default (compressed formats raise ValueError);
-    tests also exercise the injected fake_resizer seam. At 100 TB the
-    things that matter are preserved either way: iterator-of-batches
-    (bounded memory), metadata columns updated relationally, and the
-    payload staying a single binary cell per row."""
-    res = resizer if resizer is not None else default_resizer
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "width": width,
-                    "height": height,
-                    "payload": [
-                        res(bytes(p) if p is not None else None, width, height) for p in pdf[payload_col]
-                    ],
-                }
-            )
-            yield out[[f.name for f in RESIZED_SCHEMA.fields]]
-
-    return df.select(id_col, payload_col).mapInPandas(op, schema=RESIZED_SCHEMA)
+    """Resize plumbing through ``map_media``: Arrow-batched
+    blob-in/blob-out, never touching the driver. resizer=None uses the
+    real nearest-neighbor PPM/BMP default (compressed formats raise
+    ValueError); tests also exercise the injected fake_resizer seam. At
+    100 TB the things that matter are preserved either way:
+    iterator-of-batches (bounded memory), metadata columns updated
+    relationally, and the payload staying a single binary cell per
+    row."""
+    row = partial(resized_rows, width=width, height=height, resizer=resizer)
+    return map_media(df.select(*_MEDIA_COLS), row, RESIZED_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -314,11 +327,9 @@ AUDIO_FEATURE_SCHEMA = T.StructType([
 ])
 
 
-def synth_square_wav(sample_rate: int, n_frames: int, amplitude: int, period: int = 16) -> bytes:
-    """Deterministic 16-bit mono PCM square wave, RIFF/WAVE-encoded via
-    the stdlib wave writer — the test/fixture payload generator (the
-    container ships no audio files; the DECODE side is the real code
-    under test)."""
+def encode_wav(sample_rate: int, samples: list[int]) -> bytes:
+    """16-bit mono PCM samples -> RIFF/WAVE bytes via the stdlib wave
+    writer (the inverse of decode_wav)."""
     import io
     import struct
     import wave
@@ -328,14 +339,17 @@ def synth_square_wav(sample_rate: int, n_frames: int, amplitude: int, period: in
         w.setnchannels(1)
         w.setsampwidth(2)
         w.setframerate(sample_rate)
-        half = period // 2
-        w.writeframes(
-            b"".join(
-                struct.pack("<h", amplitude if (i // half) % 2 == 0 else -amplitude)
-                for i in range(n_frames)
-            )
-        )
+        w.writeframes(struct.pack(f"<{len(samples)}h", *samples))
     return buf.getvalue()
+
+
+def synth_square_wav(sample_rate: int, n_frames: int, amplitude: int, period: int = 16) -> bytes:
+    """Deterministic 16-bit mono PCM square wave, RIFF/WAVE-encoded via
+    the stdlib wave writer — the test/fixture payload generator (the
+    container ships no audio files; the DECODE side is the real code
+    under test)."""
+    half = period // 2
+    return encode_wav(sample_rate, [amplitude if (i // half) % 2 == 0 else -amplitude for i in range(n_frames)])
 
 
 def decode_wav(payload: bytes) -> tuple[int, int, list[int]]:
@@ -358,50 +372,48 @@ def decode_wav(payload: bytes) -> tuple[int, int, list[int]]:
         return w.getframerate(), w.getnchannels(), samples
 
 
+def audio_feature_rows(
+    mid: int, payload: bytes, decoder: Callable[[bytes], tuple[int, int, list[int]]] | None = None
+) -> Iterator[tuple]:
+    """``audio_features``' per-row function: one AUDIO_FEATURE_SCHEMA
+    row of integer frame stats."""
+    import math
+
+    sr, nch, s = (decoder or decode_wav)(bytes(payload))
+    n = len(s)
+    n_frames = n // max(1, nch)
+    yield (
+        mid,
+        sr,
+        nch,
+        n_frames,
+        n_frames * 1000 // sr if sr else 0,
+        math.isqrt(sum(v * v for v in s) // n) if n else 0,
+        max((abs(v) for v in s), default=0),
+        sum(1 for a, b in zip(s, s[1:]) if (a < 0) != (b < 0)),
+    )
+
+
 def audio_features(
     df: DataFrame,
     decoder: Callable[[bytes], tuple[int, int, list[int]]] | None = None,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
 ) -> DataFrame:
-    """Decode + audio feature extraction via mapInPandas: integer frame
-    stats (count, duration, floor-RMS, peak, zero crossings) — all
-    integer arithmetic, so the output is bit-exact and oracle-checkable.
-    Same 100 TB shape as extract_features: Arrow-batched, executor-side,
-    blobs never reach the driver, metadata filters prune before decode."""
-    import math
-
-    dec = decoder if decoder is not None else decode_wav
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                sr, nch, s = dec(bytes(payload))
-                n = len(s)
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "sample_rate": sr,
-                        "n_channels": nch,
-                        "n_frames": n // max(1, nch),
-                        "duration_ms": (n // max(1, nch)) * 1000 // sr if sr else 0,
-                        "rms": math.isqrt(sum(v * v for v in s) // n) if n else 0,
-                        "peak": max((abs(v) for v in s), default=0),
-                        "n_sign_flips": sum(1 for a, b in zip(s, s[1:]) if (a < 0) != (b < 0)),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_FEATURE_SCHEMA.fields])
-
-    return df.select(id_col, payload_col).mapInPandas(op, schema=AUDIO_FEATURE_SCHEMA)
+    """Decode + audio feature extraction through ``map_media``: integer
+    frame stats (count, duration, floor-RMS, peak, zero crossings) —
+    all integer arithmetic, so the output is bit-exact and
+    oracle-checkable. Same 100 TB shape as extract_features:
+    Arrow-batched, executor-side, blobs never reach the driver, metadata
+    filters prune before decode."""
+    row = partial(audio_feature_rows, decoder=decoder)
+    return map_media(df.select(*_MEDIA_COLS), row, AUDIO_FEATURE_SCHEMA)
 
 
-def frame_sample(df: DataFrame, every_ms: int = 1000, id_col: str = "media_id") -> DataFrame:
+def frame_sample(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Frame-sampling plumbing for video rows: emit (media_id, frame_ts_ms)
     per sampled frame from duration metadata — a pure-relational explode;
     the frame *decode* would plug into extract_features."""
     return df.filter(F.col("media_type") == "video").select(
-        F.col(id_col),
+        F.col("media_id"),
         F.explode(F.sequence(F.lit(0), F.col("duration_ms"), F.lit(every_ms))).alias("frame_ts_ms"),
     )
 
@@ -447,45 +459,32 @@ def decode_video_ppm(payload: bytes) -> list[tuple[int, int, list[float]]]:
     return frames
 
 
+def video_frame_rows(
+    mid: int,
+    payload: bytes,
+    every_n: int = 1,
+    decoder: Callable[[bytes], list[tuple[int, int, list[float]]]] | None = None,
+) -> Iterator[tuple]:
+    """``video_frame_features``' per-row function: one
+    VIDEO_FRAME_SCHEMA row per sampled frame, integer channel means
+    (floor)."""
+    for idx, (w, h, px) in enumerate((decoder or decode_video_ppm)(bytes(payload))):
+        if idx % every_n:
+            continue
+        n = max(1, w * h)
+        yield (mid, idx, w, h, *(sum(map(int, px[c::3])) // n for c in range(3)))
+
+
 def video_frame_features(
     df: DataFrame,
     every_n: int = 1,
     decoder: Callable[[bytes], list[tuple[int, int, list[float]]]] | None = None,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
 ) -> DataFrame:
-    """Decode + per-frame feature extraction for container payloads via
-    mapInPandas: sample every `every_n`-th frame, emit integer per-frame
-    channel means (floor). Same 100 TB contract as the image/audio
-    paths: Arrow batches, executor-side blobs, one output row per
-    SAMPLED frame — the frame explosion happens after decode, inside
-    the executor, never as a payload copy per frame."""
-    dec = decoder if decoder is not None else decode_video_ppm
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                for idx, (w, h, px) in enumerate(dec(bytes(payload))):
-                    if idx % every_n:
-                        continue
-                    n = max(1, w * h)
-                    sums = [0, 0, 0]
-                    for i in range(0, len(px), 3):
-                        sums[0] += int(px[i])
-                        sums[1] += int(px[i + 1])
-                        sums[2] += int(px[i + 2])
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "frame_idx": idx,
-                            "width": w,
-                            "height": h,
-                            "mean_r": sums[0] // n,
-                            "mean_g": sums[1] // n,
-                            "mean_b": sums[2] // n,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in VIDEO_FRAME_SCHEMA.fields])
-
-    return df.select(id_col, payload_col).mapInPandas(op, schema=VIDEO_FRAME_SCHEMA)
+    """Decode + per-frame feature extraction for container payloads
+    through ``map_media``: sample every `every_n`-th frame, emit integer
+    per-frame channel means (floor). Same 100 TB contract as the
+    image/audio paths: Arrow batches, executor-side blobs, one output
+    row per SAMPLED frame — the frame explosion happens after decode,
+    inside the executor, never as a payload copy per frame."""
+    row = partial(video_frame_rows, every_n=every_n, decoder=decoder)
+    return map_media(df.select(*_MEDIA_COLS), row, VIDEO_FRAME_SCHEMA)

@@ -73,6 +73,9 @@ _RECHECK: dict[str, int] = {
     "personalized_pagerank_copurchase": 16,
     # one Lloyd kernel: the cluster column is element 0 of the codes array
     "kmeans_cluster_sizes": 16,
+    # one media crossing: synth, decode and features in one MapInPandas
+    "audio_features_wav": 16,
+    "video_frame_sample": 16,
 }
 
 

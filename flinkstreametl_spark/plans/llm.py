@@ -11,10 +11,15 @@ registered rows-only and cross-checked in tests instead.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from flinkstreametl_spark.operators import dedup as D
+from flinkstreametl_spark.operators import multimodal as M
 from flinkstreametl_spark.operators import similarity as S
 from flinkstreametl_spark.operators import text as X
 from flinkstreametl_spark.plans.registry import register
@@ -529,9 +534,7 @@ def media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("media_id"), F.encode("text", "UTF-8").alias("payload")
     )
-    from flinkstreametl_spark.operators.multimodal import media_metadata
-
-    return media_metadata(docs)
+    return M.media_metadata(docs)
 
 
 @register(
@@ -558,28 +561,16 @@ def audio_features_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     states the CLOSED-FORM expected features — a square wave of
     amplitude A has floor-RMS exactly A, peak A, and one sign flip per
     half-period — so any decode/ordering/feature bug breaks parity.
-    Both mapInPandas stages are Arrow-batched and executor-side; blobs
-    never exist driver-side, exactly the 100 TB media shape."""
-    from collections.abc import Iterator as _Iterator
+    Synth, encode, decode and features run in one map_media crossing;
+    at 100 TB the same per-row function (audio_feature_rows) runs
+    through audio_features over the stored payload column."""
+    docs = ensure_parallelism(load_table(spark, sf_dir, "documents").select("doc_id", "n_chars"))
 
-    import pandas as _pd
+    def row(did, nch):
+        wav = M.synth_square_wav(8000, 160 + nch % 100 * 16, 1000 + did % 25 * 100)
+        return M.audio_feature_rows(did, wav)
 
-    from flinkstreametl_spark.operators.multimodal import audio_features, synth_square_wav
-
-    docs = ensure_parallelism(
-        load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    )  # single-split guard for the per-doc synth+decode chain
-
-    def synth(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                synth_square_wav(8000, 160 + int(nch) % 100 * 16, 1000 + int(did) % 25 * 100)
-                for did, nch in zip(pdf["doc_id"], pdf["n_chars"])
-            ]
-            yield _pd.DataFrame({"media_id": pdf["doc_id"].astype("int64"), "payload": payloads})
-
-    media = docs.mapInPandas(synth, schema="media_id LONG, payload BINARY")
-    return audio_features(media)
+    return M.map_media(docs, row, M.AUDIO_FEATURE_SCHEMA)
 
 
 @register(
@@ -609,37 +600,24 @@ def video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     states the closed-form colors, so frame ORDER, sampling stride, and
     raster decode are all hash-verified. The frame explosion happens
     executor-side after decode — one output row per sampled frame, the
-    payload is never copied per frame."""
-    from collections.abc import Iterator as _Iterator
-
-    import pandas as _pd
-
-    from flinkstreametl_spark.operators.multimodal import (
-        encode_video_ppm,
-        video_frame_features,
-    )
-
+    payload is never copied per frame. Synth, encode, decode and
+    features run in one map_media crossing; at 100 TB the same per-row
+    function (video_frame_rows) runs through video_frame_features over
+    the stored payload column."""
     # ensure_parallelism: the 5000-row single-row-group documents file
-    # is ONE split, which would serialize the per-doc synth+decode
-    # mapInPandas chain onto one core while 31 idle (measured: 5.3s
-    # -> sub-second at sf0.1). At cluster scale inputs arrive
-    # well-split and this is a no-op.
+    # is ONE split, which would serialize the per-doc crossing onto one
+    # core while 31 idle (measured: 5.3s -> sub-second at sf0.1). At
+    # cluster scale inputs arrive well-split and this is a no-op.
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents").select("doc_id"))
 
-    def synth(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                frames = [
-                    (4, 4, [(did * 7 + f * 13) % 256, (did * 11 + f * 17) % 256, (did * 13 + f * 19) % 256] * 16)
-                    for f in range(2 + did % 5)
-                ]
-                payloads.append(encode_video_ppm(frames))
-            yield _pd.DataFrame({"media_id": pdf["doc_id"].astype("int64"), "payload": payloads})
+    def row(did):
+        frames = [
+            (4, 4, [(did * 7 + f * 13) % 256, (did * 11 + f * 17) % 256, (did * 13 + f * 19) % 256] * 16)
+            for f in range(2 + did % 5)
+        ]
+        return M.video_frame_rows(did, M.encode_video_ppm(frames), every_n=2)
 
-    media = docs.mapInPandas(synth, schema="media_id LONG, payload BINARY")
-    return video_frame_features(media, every_n=2)
+    return M.map_media(docs, row, M.VIDEO_FRAME_SCHEMA)
 
 
 @register(
@@ -1054,128 +1032,139 @@ def cluster_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# 60 pixel samples per synthetic image -> a 60-bit aHash (shifts stay
-# clear of the signed-64 boundary, same budget rule as simhash).
+# The multimodal near-dup triad (image_phash_neardup,
+# audio_fingerprint_neardup, video_fingerprint_neardup) shares one
+# synthetic level law, one hash and one pair search; a _Neardup spec
+# holds what differs per medium.
 #
-# The synthetic image SPACE scales with the corpus (round 6): each
+# The synthetic media SPACE scales with the corpus (round 6): each
 # 960-doc "era" carries 240 base patterns x 4 flip positions, and an
-# era-dependent per-pixel texture term ((doc_id//960) * (i*i % 251))
-# decorrelates images across eras. Every doc is near-identical to
-# exactly its 3 same-(era, pattern) partners (images differ in the 2
-# inverted pixels), so near-dup pair count grows LINEARLY with corpus
+# era-dependent per-sample texture term ((doc_id//960) * (i*i % k3))
+# decorrelates items across eras. Every doc is near-identical to
+# exactly its 3 same-(era, pattern) partners (items differ in the 2
+# inverted samples), so near-dup pair count grows LINEARLY with corpus
 # size. The round-5 formula drew from a FIXED pool of <=960 distinct
 # images — at a 10x-replicated sf1 fixture every image class had ~50
 # members and pair counts grew quadratically (docs/ROUND5.md). The
 # texture term repeats only at era deltas of 256 (~246k doc_ids apart),
 # far past the sweep scales; widen the modulus before going there.
-_PH_N = 60
-_PH_BANDS, _PH_WIDTH = 4, 15
-_PH_FAM = 240  # base patterns per era
-_PH_FLIPS = 4  # flip positions per (era, pattern): pixels 0/15/30/45
-_PH_ERA = _PH_FAM * _PH_FLIPS
+_FAM = 240  # base patterns per era
+_FLIPS = 4  # flip positions per (era, pattern)
+_ERA = _FAM * _FLIPS
+_PH_N, _AF_N, _VF_N = 60, 48, 48  # samples per item -> n-bit fingerprint
 
 
-def _capped_hamming_oracle_tail(fp: str) -> str:
-    """DuckDB twin of ``dedup.hamming_pairs`` from a ``banded`` CTE with
-    columns (doc_id, ``fp``, band, band_bits) — QUALIFY bucket cap then
+class _Neardup(NamedTuple):
+    """One medium of the near-dup triad. Level i of doc d is
+    ((d % 240)·(i+k1) + i·k2 + (d // 960)·((i·i) % k3)) % 256, with the
+    level at ((d // 240) % 4)·stride inverted; ``encode`` turns the
+    levels into a payload and ``levels`` decodes them back."""
+
+    fp: str  # fingerprint column
+    cte: str  # oracle names: the levels CTE and the sample index
+    var: str
+    n: int
+    k1: int
+    k2: int
+    k3: int
+    stride: int
+    bands: int  # pigeonhole bands of ``width`` bits
+    width: int
+    encode: Callable[[list[int]], bytes]
+    levels: Callable[[bytes], list[int]]
+
+
+def _level_law(m: _Neardup, did: int) -> list[int]:
+    vals = [((did % _FAM) * (i + m.k1) + i * m.k2 + (did // _ERA) * ((i * i) % m.k3)) % 256 for i in range(m.n)]
+    flip = ((did // _FAM) % _FLIPS) * m.stride
+    vals[flip] = 255 - vals[flip]
+    return vals
+
+
+def _neardup_oracle(m: _Neardup) -> str:
+    """DuckDB twin of ``_media_neardup``: the level law, the mean fold,
+    the bands, then ``dedup.hamming_pairs`` — QUALIFY bucket cap and
     the banded self-join, mirroring the Spark plan cap-inclusively."""
-    return f"""kept AS (
-    SELECT doc_id, {fp}, band, band_bits,
+    i, t = m.var, m.cte
+    law = f"((doc_id % {_FAM}) * ({i} + {m.k1}) + {i} * {m.k2} + (doc_id // {_ERA}) * (({i} * {i}) % {m.k3})) % 256"
+    return f"""
+WITH {t} AS (
+    SELECT doc_id, {i},
+           CASE WHEN {i} = ((doc_id // {_FAM}) % {_FLIPS}) * {m.stride}
+                THEN 255 - {law}
+                ELSE {law} END AS v
+    FROM documents, (SELECT unnest(range({m.n})) AS {i}) r
+), s AS (
+    SELECT doc_id, CAST(SUM(v) AS BIGINT) AS total FROM {t} GROUP BY doc_id
+), h AS (
+    SELECT {t}.doc_id,
+           SUM(CASE WHEN {t}.v * {m.n} > s.total THEN (CAST(1 AS BIGINT) << {t}.{i}) ELSE 0 END) AS {m.fp}
+    FROM {t} JOIN s ON {t}.doc_id = s.doc_id
+    GROUP BY {t}.doc_id
+), banded AS (
+    SELECT doc_id, {m.fp}, band, ({m.fp} >> (band * {m.width})) & {(1 << m.width) - 1} AS band_bits
+    FROM h, (SELECT unnest(range({m.bands})) AS band) b
+), kept AS (
+    SELECT doc_id, {m.fp}, band, band_bits,
            COUNT(*) OVER (PARTITION BY band, band_bits) AS bn
     FROM banded
     QUALIFY bn <= {D.MAX_BUCKET_SIZE}
 )
 SELECT DISTINCT a.doc_id AS media_a, b.doc_id AS media_b,
-       CAST(bit_count(xor(a.{fp}, b.{fp})) AS BIGINT) AS hamming
+       CAST(bit_count(xor(a.{m.fp}, b.{m.fp})) AS BIGINT) AS hamming
 FROM kept a
 JOIN kept b ON a.band = b.band AND a.band_bits = b.band_bits AND a.doc_id < b.doc_id
-WHERE bit_count(xor(a.{fp}, b.{fp})) <= 3"""
-
-
-_PHASH_ORACLE = f"""
-WITH px AS (
-    SELECT doc_id, i,
-           CASE WHEN i = ((doc_id // {_PH_FAM}) % {_PH_FLIPS}) * 15
-                THEN 255 - ((doc_id % {_PH_FAM}) * (i + 3) + i * 13 + (doc_id // {_PH_ERA}) * ((i * i) % 251)) % 256
-                ELSE ((doc_id % {_PH_FAM}) * (i + 3) + i * 13 + (doc_id // {_PH_ERA}) * ((i * i) % 251)) % 256 END AS v
-    FROM documents, (SELECT unnest(range({_PH_N})) AS i) r
-), s AS (
-    SELECT doc_id, CAST(SUM(v) AS BIGINT) AS total FROM px GROUP BY doc_id
-), h AS (
-    SELECT px.doc_id,
-           SUM(CASE WHEN px.v * {_PH_N} > s.total THEN (CAST(1 AS BIGINT) << px.i) ELSE 0 END) AS ahash
-    FROM px JOIN s ON px.doc_id = s.doc_id
-    GROUP BY px.doc_id
-), banded AS (
-    SELECT doc_id, ahash, band, (ahash >> (band * {_PH_WIDTH})) & {(1 << _PH_WIDTH) - 1} AS band_bits
-    FROM h, (SELECT unnest(range({_PH_BANDS})) AS band) b
-), {_capped_hamming_oracle_tail("ahash")}
+WHERE bit_count(xor(a.{m.fp}, b.{m.fp})) <= 3
 """
 
 
-@register("image_phash_neardup", tags=("llm", "multimodal", "dedup"), oracle=_PHASH_ORACLE)
+def _media_neardup(spark: SparkSession, sf_dir: str, m: _Neardup) -> DataFrame:
+    """One crossing per doc — level law -> encode -> REAL decode ->
+    mean fold — then the pigeonhole banded equi-join with the exact
+    hamming filter on candidates (``dedup.hamming_pairs``). The
+    documents file is one split, so ``ensure_parallelism`` spreads the
+    crossing over the cores first (a no-op on well-split input)."""
+    docs = ensure_parallelism(load_table(spark, sf_dir, "documents").select("doc_id"))
+    schema = T.StructType([T.StructField("media_id", T.LongType()), T.StructField(m.fp, T.LongType())])
+
+    def row(did):
+        yield did, M.mean_fold(m.levels(m.encode(_level_law(m, did))))
+
+    hashes = M.map_media(docs, row, schema)
+    pairs = D.hamming_pairs(hashes, "media_id", m.fp, m.bands, m.width)
+    return pairs.withColumn("hamming", F.col("hamming").cast("long"))
+
+
+# Image: 60 pixel samples of a 10x2 P6 PPM -> a 60-bit aHash (shifts
+# stay clear of the signed-64 boundary, same budget rule as simhash);
+# flip pixels 0/15/30/45.
+_PHASH = _Neardup(
+    "ahash", "px", "i", _PH_N, k1=3, k2=13, k3=251, stride=15, bands=4, width=15,
+    encode=lambda vals: M.encode_ppm(10, 2, vals),
+    levels=lambda payload: [int(v) for v in M.decode_image(payload)[2]],
+)
+
+
+@register("image_phash_neardup", tags=("llm", "multimodal", "dedup"), oracle=_neardup_oracle(_PHASH))
 def image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-dup detection through the REAL decode path: each doc
     synthesizes a deterministic 10x2 P6 PPM (240 base patterns x 4
     flip positions per 960-doc era, era-textured so the image space
     grows with the corpus — see the constants block), the pure-Python
-    PPM codec decodes the
-    bytes back executor-side, an average-hash (aHash: bit i set iff
-    sample i is strictly above the image mean, integer
-    cross-multiplied) folds each image to 60 bits, and candidate pairs
-    come from the pigeonhole banded equi-join with the exact hamming
-    filter on candidates — the simhash machinery applied to pixels.
+    PPM codec decodes the bytes back executor-side, an average-hash
+    (aHash: bit i set iff sample i is strictly above the image mean,
+    integer cross-multiplied) folds each image to 60 bits, and
+    candidate pairs come from the pigeonhole banded equi-join with the
+    exact hamming filter on candidates — the simhash machinery applied
+    to pixels.
 
     The oracle states the closed form of the whole chain (synth
     arithmetic -> mean -> bits -> bands -> pairs), so a decode bug, a
-    raster-order bug, or a banding bug all break parity. Both
-    mapInPandas stages are Arrow-batched; payloads never leave
-    executors — at 100 TB swap the synth stage for the object-store
-    read and the codec seam for a real JPEG decoder; every downstream
-    operator is unchanged."""
-    from collections.abc import Iterator as _Iterator
-
-    import pandas as _pd
-
-    from flinkstreametl_spark.operators.multimodal import decode_image, encode_ppm
-
-    docs = ensure_parallelism(  # single-split guard, see video_frame_sample
-        load_table(spark, sf_dir, "documents").select("doc_id")
-    )
-
-    def synth(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                vals = [
-                    ((did % _PH_FAM) * (i + 3) + i * 13 + (did // _PH_ERA) * ((i * i) % 251)) % 256
-                    for i in range(_PH_N)
-                ]
-                flip = ((did // _PH_FAM) % _PH_FLIPS) * 15
-                vals[flip] = 255 - vals[flip]
-                payloads.append(encode_ppm(10, 2, [float(v) for v in vals]))
-            yield _pd.DataFrame({"media_id": pdf["doc_id"].astype("int64"), "payload": payloads})
-
-    media = docs.mapInPandas(synth, schema="media_id LONG, payload BINARY")
-
-    def ahash(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                _w, _h, samples = decode_image(bytes(payload))
-                iv = [int(v) for v in samples[:_PH_N]]
-                total = sum(iv)
-                h = 0
-                for i, v in enumerate(iv):
-                    if v * _PH_N > total:
-                        h |= 1 << i
-                out.append({"media_id": int(mid), "ahash": h})
-            yield _pd.DataFrame(out, columns=["media_id", "ahash"])
-
-    hashes = media.mapInPandas(ahash, schema="media_id LONG, ahash LONG")
-    pairs = D.hamming_pairs(hashes, "media_id", "ahash", _PH_BANDS, _PH_WIDTH)
-    return pairs.withColumn("hamming", F.col("hamming").cast("long"))
+    raster-order bug, or a banding bug all break parity. Synth, encode,
+    decode and hash run in one map_media crossing; at 100 TB its decode
+    and fold run through map_media over the stored payload column, with
+    a real JPEG decoder in place of decode_image."""
+    return _media_neardup(spark, sf_dir, _PHASH)
 
 
 # --- audio fingerprint near-dup ----------------------------------------------
@@ -1184,40 +1173,26 @@ def image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-window peak energy folded to bits against the track mean — the
 # windowed-energy-signature core of audio fingerprinting (Shazam-style
 # constellation maps replace windows with spectral peaks; the banding
-# + pigeonhole join downstream is identical). 48 windows of 4 frames;
-# the synthetic audio SPACE scales with the corpus exactly like the
-# image fixture: 240 base amplitude patterns x 4 flip positions per
-# 960-doc era, era-dependent texture term decorrelating eras, so
-# near-dup pair count grows LINEARLY with corpus size.
-_AF_N = 48  # analysis windows per track -> 48-bit fingerprint
-_AF_FPW = 4  # PCM frames per window (+A,-A,+A,-A -> window peak == A)
-_AF_BANDS, _AF_WIDTH = 4, 12
-_AF_FAM = 240
-_AF_FLIPS = 4  # flip windows 0/12/24/36
-_AF_ERA = _AF_FAM * _AF_FLIPS
-
-_AFP_ORACLE = f"""
-WITH wv AS (
-    SELECT doc_id, w,
-           CASE WHEN w = ((doc_id // {_AF_FAM}) % {_AF_FLIPS}) * 12
-                THEN 255 - ((doc_id % {_AF_FAM}) * (w + 5) + w * 17 + (doc_id // {_AF_ERA}) * ((w * w) % 241)) % 256
-                ELSE ((doc_id % {_AF_FAM}) * (w + 5) + w * 17 + (doc_id // {_AF_ERA}) * ((w * w) % 241)) % 256 END AS v
-    FROM documents, (SELECT unnest(range({_AF_N})) AS w) r
-), s AS (
-    SELECT doc_id, CAST(SUM(v) AS BIGINT) AS total FROM wv GROUP BY doc_id
-), h AS (
-    SELECT wv.doc_id,
-           SUM(CASE WHEN wv.v * {_AF_N} > s.total THEN (CAST(1 AS BIGINT) << wv.w) ELSE 0 END) AS afp
-    FROM wv JOIN s ON wv.doc_id = s.doc_id
-    GROUP BY wv.doc_id
-), banded AS (
-    SELECT doc_id, afp, band, (afp >> (band * {_AF_WIDTH})) & {(1 << _AF_WIDTH) - 1} AS band_bits
-    FROM h, (SELECT unnest(range({_AF_BANDS})) AS band) b
-), {_capped_hamming_oracle_tail("afp")}
-"""
+# + pigeonhole join downstream is identical). 48 windows of 4 PCM
+# frames (+A,-A,+A,-A -> window peak == A, A = 100 + 120·level; the
+# affine map is strictly increasing, so peak-vs-mean and level-vs-mean
+# bits agree); flip windows 0/12/24/36.
+_AF_FPW = 4  # PCM frames per window
 
 
-@register("audio_fingerprint_neardup", tags=("llm", "multimodal", "audio", "dedup"), oracle=_AFP_ORACLE)
+def _afp_levels(payload: bytes) -> list[int]:
+    _sr, _nch, s = M.decode_wav(payload)
+    return [(max(abs(x) for x in s[w : w + _AF_FPW]) - 100) // 120 for w in range(0, len(s), _AF_FPW)]
+
+
+_AFP = _Neardup(
+    "afp", "wv", "w", _AF_N, k1=5, k2=17, k3=241, stride=12, bands=4, width=12,
+    encode=lambda vals: M.encode_wav(8000, [a * (100 + 120 * v) for v in vals for a in (1, -1, 1, -1)]),
+    levels=_afp_levels,
+)
+
+
+@register("audio_fingerprint_neardup", tags=("llm", "multimodal", "audio", "dedup"), oracle=_neardup_oracle(_AFP))
 def audio_fingerprint_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio near-dup detection through the REAL decode path: each doc
     synthesizes a deterministic 16-bit PCM RIFF/WAVE track whose 48
@@ -1226,85 +1201,21 @@ def audio_fingerprint_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern is inverted, era-textured so the audio space grows with
     the corpus), the stdlib-wave parser in
     ``operators/multimodal.decode_wav`` decodes the bytes back
-    executor-side, per-window PEAKS recover v exactly (the affine map
-    is strictly increasing, so peak-vs-mean and v-vs-mean bits agree),
-    an energy-hash folds each track to 48 bits (bit w set iff window
-    w's level is strictly above the track mean), and candidate pairs
-    come from the pigeonhole banded equi-join with the exact hamming
-    filter — image_phash_neardup's machinery applied to audio, closing
-    the text/image/audio near-dup triad (VERDICT r9 item 3b).
+    executor-side, per-window PEAKS recover v exactly, an energy-hash
+    folds each track to 48 bits (bit w set iff window w's level is
+    strictly above the track mean), and candidate pairs come from the
+    pigeonhole banded equi-join with the exact hamming filter —
+    image_phash_neardup's machinery applied to audio, closing the
+    text/image/audio near-dup triad (VERDICT r9 item 3b).
 
     The oracle states the closed form of the whole chain (synth ->
     RIFF round-trip -> window peaks -> bits -> bands -> pairs), so an
     encode bug, a sample-order bug, a window-boundary bug, or a
-    banding bug all break parity. Both mapInPandas stages are
-    Arrow-batched; payloads never leave executors — at 100 TB swap the
-    synth stage for the object-store read and decode_wav for a codec
-    library; every downstream operator is unchanged."""
-    from collections.abc import Iterator as _Iterator
-
-    import pandas as _pd
-
-    from flinkstreametl_spark.operators.multimodal import decode_wav
-
-    docs = ensure_parallelism(  # single-split guard, see video_frame_sample
-        load_table(spark, sf_dir, "documents").select("doc_id")
-    )
-
-    def synth(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        import io as _io
-        import struct as _struct
-        import wave as _wave
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                vals = [
-                    ((did % _AF_FAM) * (w + 5) + w * 17 + (did // _AF_ERA) * ((w * w) % 241)) % 256
-                    for w in range(_AF_N)
-                ]
-                flip = ((did // _AF_FAM) % _AF_FLIPS) * 12
-                vals[flip] = 255 - vals[flip]
-                buf = _io.BytesIO()
-                with _wave.open(buf, "wb") as wav:
-                    wav.setnchannels(1)
-                    wav.setsampwidth(2)
-                    wav.setframerate(8000)
-                    wav.writeframes(
-                        b"".join(
-                            _struct.pack(
-                                "<h", (100 + 120 * v) if i % 2 == 0 else -(100 + 120 * v)
-                            )
-                            for v in vals
-                            for i in range(_AF_FPW)
-                        )
-                    )
-                payloads.append(buf.getvalue())
-            yield _pd.DataFrame({"media_id": pdf["doc_id"].astype("int64"), "payload": payloads})
-
-    media = docs.mapInPandas(synth, schema="media_id LONG, payload BINARY")
-
-    def afp(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                _sr, _nch, samples = decode_wav(bytes(payload))
-                vs = [
-                    (max(abs(s) for s in samples[w * _AF_FPW : (w + 1) * _AF_FPW]) - 100) // 120
-                    for w in range(_AF_N)
-                ]
-                total = sum(vs)
-                h = 0
-                for w, v in enumerate(vs):
-                    if v * _AF_N > total:
-                        h |= 1 << w
-                out.append({"media_id": int(mid), "afp": h})
-            yield _pd.DataFrame(out, columns=["media_id", "afp"])
-
-    hashes = media.mapInPandas(afp, schema="media_id LONG, afp LONG")
-    pairs = D.hamming_pairs(hashes, "media_id", "afp", _AF_BANDS, _AF_WIDTH)
-    return pairs.withColumn("hamming", F.col("hamming").cast("long"))
+    banding bug all break parity. Synth, encode, decode and hash run
+    in one map_media crossing; at 100 TB its decode and fold run through
+    map_media over the stored payload column, with a codec library in
+    place of decode_wav."""
+    return _media_neardup(spark, sf_dir, _AFP)
 
 
 # --- near-dup source matrix --------------------------------------------------
@@ -1815,39 +1726,20 @@ def token_pair_lift_top50(spark: SparkSession, sf_dir: str) -> DataFrame:
 # against the track mean — the temporal-luminance-signature core of
 # video copy detection (production systems swap the solid-color frames
 # for downsampled real frames; the bit fold, banding, and pigeonhole
-# join downstream are identical). 48 frames of 4x4 gray pixels; the
-# synthetic video SPACE scales with the corpus exactly like the
-# image/audio fixtures: 240 base luminance patterns x 4 flip positions
-# per 960-doc era, era-dependent texture term decorrelating eras, so
-# near-dup pair count grows LINEARLY with corpus size.
-_VF_N = 48  # frames per video -> 48-bit fingerprint
-_VF_BANDS, _VF_WIDTH = 4, 12
-_VF_FAM = 240
-_VF_FLIPS = 4  # flip frames 0/12/24/36
-_VF_ERA = _VF_FAM * _VF_FLIPS
-
-_VFP_ORACLE = f"""
-WITH fv AS (
-    SELECT doc_id, f,
-           CASE WHEN f = ((doc_id // {_VF_FAM}) % {_VF_FLIPS}) * 12
-                THEN 255 - ((doc_id % {_VF_FAM}) * (f + 9) + f * 23 + (doc_id // {_VF_ERA}) * ((f * f) % 233)) % 256
-                ELSE ((doc_id % {_VF_FAM}) * (f + 9) + f * 23 + (doc_id // {_VF_ERA}) * ((f * f) % 233)) % 256 END AS v
-    FROM documents, (SELECT unnest(range({_VF_N})) AS f) r
-), s AS (
-    SELECT doc_id, CAST(SUM(v) AS BIGINT) AS total FROM fv GROUP BY doc_id
-), h AS (
-    SELECT fv.doc_id,
-           SUM(CASE WHEN fv.v * {_VF_N} > s.total THEN (CAST(1 AS BIGINT) << fv.f) ELSE 0 END) AS vfp
-    FROM fv JOIN s ON fv.doc_id = s.doc_id
-    GROUP BY fv.doc_id
-), banded AS (
-    SELECT doc_id, vfp, band, (vfp >> (band * {_VF_WIDTH})) & {(1 << _VF_WIDTH) - 1} AS band_bits
-    FROM h, (SELECT unnest(range({_VF_BANDS})) AS band) b
-), {_capped_hamming_oracle_tail("vfp")}
-"""
+# join downstream are identical). 48 frames of 4x4 gray pixels; flip
+# frames 0/12/24/36.
+_VFP = _Neardup(
+    "vfp", "fv", "f", _VF_N, k1=9, k2=23, k3=233, stride=12, bands=4, width=12,
+    encode=lambda vals: M.encode_video_ppm([(4, 4, [v] * 48) for v in vals]),
+    levels=lambda payload: [sum(map(int, px)) // (w * h * 3) for w, h, px in M.decode_video_ppm(payload)],
+)
 
 
-@register("video_fingerprint_neardup", tags=("llm", "multimodal", "video", "dedup", "bench"), oracle=_VFP_ORACLE)
+@register(
+    "video_fingerprint_neardup",
+    tags=("llm", "multimodal", "video", "dedup", "bench"),
+    oracle=_neardup_oracle(_VFP),
+)
 def video_fingerprint_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video near-dup detection through the REAL container decode path:
     each doc synthesizes a deterministic 48-frame concatenated-P6 video
@@ -1867,51 +1759,8 @@ def video_fingerprint_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle states the closed form of the whole chain (synth -> P6
     container round-trip -> frame means -> bits -> bands -> pairs), so
     a container-offset bug, a frame-order bug, a raster-mean bug, or a
-    banding bug all break parity. Both mapInPandas stages are
-    Arrow-batched; payloads never leave executors — at 100 TB swap the
-    synth stage for the object-store read and decode_video_ppm for a
-    codec library; every downstream operator is unchanged."""
-    from collections.abc import Iterator as _Iterator
-
-    import pandas as _pd
-
-    from flinkstreametl_spark.operators.multimodal import decode_video_ppm, encode_video_ppm
-
-    docs = ensure_parallelism(  # single-split guard, see video_frame_sample
-        load_table(spark, sf_dir, "documents").select("doc_id")
-    )
-
-    def synth(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                vals = [
-                    ((did % _VF_FAM) * (f + 9) + f * 23 + (did // _VF_ERA) * ((f * f) % 233)) % 256
-                    for f in range(_VF_N)
-                ]
-                flip = ((did // _VF_FAM) % _VF_FLIPS) * 12
-                vals[flip] = 255 - vals[flip]
-                frames = [(4, 4, [float(v)] * 48) for v in vals]
-                payloads.append(encode_video_ppm(frames))
-            yield _pd.DataFrame({"media_id": pdf["doc_id"].astype("int64"), "payload": payloads})
-
-    media = docs.mapInPandas(synth, schema="media_id LONG, payload BINARY")
-
-    def vfp(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                frames = decode_video_ppm(bytes(payload))
-                vs = [sum(int(s) for s in px) // (w * h * 3) for w, h, px in frames]
-                total = sum(vs)
-                h = 0
-                for f, v in enumerate(vs):
-                    if v * _VF_N > total:
-                        h |= 1 << f
-                out.append({"media_id": int(mid), "vfp": h})
-            yield _pd.DataFrame(out, columns=["media_id", "vfp"])
-
-    hashes = media.mapInPandas(vfp, schema="media_id LONG, vfp LONG")
-    pairs = D.hamming_pairs(hashes, "media_id", "vfp", _VF_BANDS, _VF_WIDTH)
-    return pairs.withColumn("hamming", F.col("hamming").cast("long"))
+    banding bug all break parity. Synth, encode, decode and hash run in
+    one map_media crossing; at 100 TB its decode and fold run through
+    map_media over the stored payload column, with a codec library in
+    place of decode_video_ppm."""
+    return _media_neardup(spark, sf_dir, _VFP)

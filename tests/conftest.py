@@ -13,6 +13,54 @@ from flinkstreametl_spark.streaming import versioned
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
+# The status store keeps the last `spark.ui.retainedJobs` jobs (1,000 by
+# default) and evicts the oldest 100 each time a new job passes that
+# count, so a test that reads a job tag's ids before and after a call
+# (tests/test_pin.py) would see old ids vanish in between. The test
+# session keeps every job: such a read sees only what the call did.
+os.environ["PYSPARK_SUBMIT_ARGS"] = "--conf spark.ui.retainedJobs=100000 " + os.environ.get(
+    "PYSPARK_SUBMIT_ARGS", "pyspark-shell"
+)
+
+
+def py4j_root_cause(text: str) -> str:
+    """From a Java stack trace: the failed task's error, the root
+    ``Caused by:`` message and, when that carries a Python worker
+    traceback, its last frame and final line — at most 1,000
+    characters."""
+    lines = text.splitlines()
+    task = [line.split("most recent failure: ", 1)[1] for line in lines if "most recent failure: " in line]
+    causes = [i for i, line in enumerate(lines) if line.startswith("Caused by:")]
+    msg = []
+    for line in lines[causes[-1] if causes else 0 :]:
+        if line.startswith(("\tat ", "\t... ")):
+            break
+        msg.append(line)
+    frames = [i for i, line in enumerate(msg) if line.lstrip().startswith('File "')]
+    root = msg[:1] + [line for line in msg[frames[-1] :] if line.strip()] if frames else msg
+    return "\n".join(task[:1] + root)[:1000]
+
+
+@pytest.hookimpl(hookwrapper=True)
+def pytest_runtest_makereport(item, call):
+    """A test that fails with a ``Py4JJavaError`` prints mostly JVM
+    frames, and Spark's teardown warnings repeat them after it; the
+    Python worker's own error sits deep in the ``Caused by:`` chain.
+    Print that root cause as the test's last report section (it rides
+    on the teardown report, which pytest prints after the failure), so
+    a truncated log tail still shows it."""
+    report = (yield).get_result()
+    if call.when == "call" and report.failed and call.excinfo is not None:
+        from py4j.protocol import Py4JError, Py4JJavaError
+
+        if isinstance(call.excinfo.value, Py4JJavaError):
+            try:
+                item.py4j_root_cause = py4j_root_cause(str(call.excinfo.value))
+            except Py4JError as e:  # the JVM that held the trace is gone
+                item.py4j_root_cause = f"(stack trace unavailable: {e!r})"
+    elif call.when == "teardown" and hasattr(item, "py4j_root_cause"):
+        report.sections.append(("Py4J root cause (after teardown)", item.py4j_root_cause))
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -25,7 +25,7 @@ from flinkstreametl_spark.operators.multimodal import (  # noqa: E402
     default_decoder,
     encode_ppm,
 )
-from flinkstreametl_spark.plans.llm import _PH_ERA, _PH_FAM, _PH_FLIPS, _PH_N  # noqa: E402
+from flinkstreametl_spark.plans.llm import _PH_N, _ERA as _PH_ERA, _FAM as _PH_FAM, _FLIPS as _PH_FLIPS  # noqa: E402
 
 
 def _synth_pixels(did: int) -> list[float]:

@@ -273,6 +273,33 @@ def test_multimodal_fake_decoder_roundtrip(spark):
         assert len(out[i].feature) == 4
 
 
+def test_media_has_one_crossing():
+    """``multimodal.map_media`` is the media code's one Arrow crossing:
+    ``plans/llm.py`` calls no ``mapInPandas``, ``operators/multimodal.py``
+    calls it once, inside ``map_media``, and the media operators take no
+    column-name options."""
+    import ast
+    import inspect
+
+    from flinkstreametl_spark.plans import llm
+
+    def crossings(module):
+        tree = ast.parse(inspect.getsource(module))
+        return [
+            getattr(top, "name", None)
+            for top in tree.body
+            for n in ast.walk(top)
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and n.func.attr == "mapInPandas"
+        ]
+
+    assert crossings(llm) == []
+    assert crossings(M) == ["map_media"]
+    ops = "media_metadata extract_features resize_images audio_features video_frame_features frame_sample"
+    for name in ops.split():
+        assert not {"id_col", "payload_col"} & set(inspect.signature(getattr(M, name)).parameters), name
+    assert not hasattr(M, "MEDIA_SCHEMA")
+
+
 def test_frame_sample(spark):
     media = spark.createDataFrame(
         [(1, "video", 3500), (2, "image", None), (3, "video", 0)],

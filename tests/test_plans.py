@@ -531,10 +531,16 @@ def test_hits_half_steps_broadcast_the_scores(spark, sf_dir, monkeypatch):
         assert "BroadcastHashJoin" in plan, plan
 
 
-def test_dump_plans_masks_run_to_run_ids():
-    """``tools/dump_plans.py`` masks every id that differs between two
-    builds of one tree, and nothing else, so a plan diff between two
-    trees shows only real plan changes."""
+def test_media_queries_cross_once(spark, sf_dir):
+    """audio_features_wav and video_frame_sample synthesize, decode and
+    extract in one ``map_media`` crossing: one MapInPandas node each,
+    so no payload crosses the JVM between two Python stages."""
+    for name in ("audio_features_wav", "video_frame_sample"):
+        plan = _physical(spark, name, sf_dir)
+        assert plan.count("MapInPandas") == 1, plan
+
+
+def _dump_plans_tool():
     import importlib.util
     import os
 
@@ -542,7 +548,14 @@ def test_dump_plans_masks_run_to_run_ids():
     spec = importlib.util.spec_from_file_location("_dump_plans", path)
     tool = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(tool)
+    return tool
 
+
+def test_dump_plans_masks_run_to_run_ids():
+    """``tools/dump_plans.py`` masks every id that differs between two
+    builds of one tree, and nothing else, so a plan diff between two
+    trees shows only real plan changes."""
+    tool = _dump_plans_tool()
     a = (
         "Output [2]: [vec_id#12L, pythonUDF0#47[0] AS cluster#48L], [plan_id=128]\n"
         "Arguments: [doc_id#33L], MapPartitionsRDD[20] at localCheckpoint at <unknown>:0, ExistingRDD\n"
@@ -556,3 +569,35 @@ def test_dump_plans_masks_run_to_run_ids():
     assert tool.mask(a) == tool.mask(b)
     assert "AS cluster#NL" in tool.mask(a) and "MapPartitionsRDD[N]" in tool.mask(a)
     assert tool.mask(a.replace("cluster", "code")) != tool.mask(b)
+
+
+def test_dump_plans_masks_distinct_group_order():
+    """The Expand of a multi-column count_distinct lists its columns and
+    numbers its groups in an order that follows expression ids;
+    ``tools/dump_plans.py`` writes those lines in a canonical order, so
+    two builds of one tree match, while a column that goes or two
+    aggregates that swap their operands still show."""
+    tool = _dump_plans_tool()
+    a = (
+        "Arguments: [[null, null, 0, score#7L], [lang#3, null, 1, null], [null, source#4, 2, null]], "
+        "[lang#3, source#4, gid#9, score#7L]\n"
+        "Keys [3]: [lang#3, source#4, gid#9]\n"
+        "Arguments: hashpartitioning(lang#3, source#4, gid#9, 4), ENSURE_REQUIREMENTS, [plan_id=5]\n"
+        "Functions [2]: [partial_count(lang#3) FILTER (WHERE (gid#9 = 1)), "
+        "partial_count(source#4) FILTER (WHERE (gid#9 = 2))]"
+    )
+    b = (
+        "Arguments: [[null, null, 0, score#17L], [source#14, null, 1, null], [null, lang#13, 2, null]], "
+        "[source#14, lang#13, gid#19, score#17L]\n"
+        "Keys [3]: [source#14, lang#13, gid#19]\n"
+        "Arguments: hashpartitioning(source#14, lang#13, gid#19, 4), ENSURE_REQUIREMENTS, [plan_id=15]\n"
+        "Functions [2]: [partial_count(source#14) FILTER (WHERE (gid#19 = 1)), "
+        "partial_count(lang#13) FILTER (WHERE (gid#19 = 2))]"
+    )
+    assert tool.mask(a) == tool.mask(b)
+    assert tool.mask(a).startswith("Arguments: [[G, lang#N, null, null], [G, null, null, source#N], ")
+    assert tool.mask(a.replace("lang#3, source#4, gid#9]", "lang#3, gid#9]")) != tool.mask(b)
+    a_agg = "Results [3]: [lang#3, gid#9, count(lang#3) AS a#5L, count(source#4) AS b#6L]"
+    b_agg = "Results [3]: [lang#3, gid#9, count(source#4) AS a#5L, count(lang#3) AS b#6L]"
+    assert tool.mask(a_agg) != tool.mask(b_agg)
+    assert tool.mask("Keys [1]: [lang#3, source#4]") == "Keys [1]: [lang#N, source#N]"

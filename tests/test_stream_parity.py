@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from flinkstreametl_spark.plans import REGISTRY
-from flinkstreametl_spark.plans.llm import _AF_ERA, _AF_FAM, _AF_FLIPS, _AF_N
+from flinkstreametl_spark.plans.llm import _AF_N, _ERA as _AF_ERA, _FAM as _AF_FAM, _FLIPS as _AF_FLIPS
 from flinkstreametl_spark.plans.stream_parity_ext import _SAT_M, _SAT_STAGES
 
 
@@ -148,7 +148,7 @@ def test_stream_cdc_upsert_replay_tombstones_and_latest(spark, sf_dir):
 
 
 def test_video_fingerprint_pairs_recompute_from_closed_form(spark, sf_dir):
-    from flinkstreametl_spark.plans.llm import _VF_ERA, _VF_FAM, _VF_FLIPS, _VF_N
+    from flinkstreametl_spark.plans.llm import _VF_N, _ERA as _VF_ERA, _FAM as _VF_FAM, _FLIPS as _VF_FLIPS
 
     def closed_form(did: int) -> int:
         vals = [

@@ -1,6 +1,8 @@
 """Write the formatted physical plans of registered queries at sf0.001,
-with every id that changes between two builds of the same tree masked,
-so a plan diff between two trees is one ``diff`` of two dumps.
+with every id that changes between two builds of the same tree masked
+(and the column and group order of a multi-column count_distinct, which
+follow those ids), so a plan diff between two trees is one ``diff`` of
+two dumps.
 
 With no arguments it regenerates docs/PLANS.md: the bench set, the
 evidence trail for the plan-shape claims in docs/SCALE.md (broadcasts,
@@ -37,10 +39,59 @@ _MASKS = [
 ]
 
 
+# A multi-column count_distinct is rewritten into an Expand with one
+# projection per distinct column and a group id column `gid`; the
+# columns and their group ids come in an order that follows expression
+# ids, so every line naming `gid` (the Expand and the aggregates,
+# exchange and sort above it) lists them in a build-dependent order. On
+# those lines the group id values read `G`, the items of each bracket
+# list and of `hashpartitioning(...)` are sorted, each item kept whole,
+# and the Expand's projections are permuted along with its sorted output
+# columns: a column, operand or aggregate that comes, goes or changes
+# still shows, a reordering does not.
+_GID = re.compile(r"\bgid#N\b")
+_GID_VALUE = re.compile(r"\(gid#N = \d+\)")
+_LIST = re.compile(r"\[|hashpartitioning\(")
+_EXPAND = "Arguments: [["
+
+
+def _items(text: str, i: int) -> tuple[list[str], int]:
+    """The top-level comma-separated items of the list that opens just
+    before ``text[i]``, and the index just past its closing bracket."""
+    items, depth, start = [], 0, i
+    for j in range(i, len(text)):
+        if text[j] in "([":
+            depth += 1
+        elif text[j] in ")]" and depth:
+            depth -= 1
+        elif text[j] in ")]" or (text[j] == "," and not depth):
+            items.append(text[start:j].strip())
+            start = j + 1
+            if text[j] != ",":
+                return items, j + 1
+    raise ValueError(f"unbalanced plan line: {text!r}")
+
+
+def _order_blind(line: str) -> str:
+    line = _GID_VALUE.sub("(gid#N = G)", line)
+    if line.startswith(_EXPAND):  # [[projection, ...], ...], [output, ...]
+        projections, end = _items(line, len(_EXPAND) - 1)
+        outputs, _ = _items(line, line.index("[", end) + 1)
+        order, gid = sorted(range(len(outputs)), key=outputs.__getitem__), outputs.index("gid#N")
+        rows = sorted(", ".join("G" if j == gid else _items(p, 1)[0][j] for j in order) for p in projections)
+        return f"Arguments: [{', '.join(f'[{r}]' for r in rows)}], [{', '.join(sorted(outputs))}]"
+    out, i = [], 0
+    while m := _LIST.search(line, i):
+        items, end = _items(line, m.end())
+        out.append(line[i : m.end()] + ", ".join(sorted(items)) + line[end - 1])
+        i = end
+    return "".join(out) + line[i:]
+
+
 def mask(plan: str) -> str:
     for pat, rep in _MASKS:
         plan = pat.sub(rep, plan)
-    return plan
+    return "\n".join(_order_blind(line) if _GID.search(line) else line for line in plan.split("\n"))
 
 
 def main() -> None:
