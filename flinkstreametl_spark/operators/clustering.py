@@ -31,7 +31,7 @@ iteration; only n_sub x k x width means reach the driver per iteration.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkstreametl_spark.session import pin
@@ -42,6 +42,9 @@ KM_FP = 1099511627776.0
 
 DEFAULT_K = 8
 DEFAULT_ITERS = 5
+
+#: A ``[k, dim]`` centroid matrix as a frame: one row per cluster id.
+CENTROIDS_SCHEMA = "cluster LONG, centroid ARRAY<DOUBLE>"
 
 
 def fp_dists(M: np.ndarray, cents: np.ndarray) -> np.ndarray:
@@ -171,3 +174,9 @@ def kmeans_fit(emb: DataFrame, k: int = DEFAULT_K, n_iters: int = DEFAULT_ITERS)
     cents, _ = lloyd_fit(emb, k, n_iters)
     c_mat = cents[0]
     return c_mat, lambda df: assign_to_centroids(df, c_mat)
+
+
+def centroid_frame(spark: SparkSession, mat: np.ndarray) -> DataFrame:
+    """The ``[k, dim]`` centroid matrix ``mat`` as a k-row
+    ``CENTROIDS_SCHEMA`` frame, row i holding cluster i."""
+    return spark.createDataFrame([(i, [float(x) for x in row]) for i, row in enumerate(mat)], CENTROIDS_SCHEMA)

@@ -19,15 +19,19 @@ Two cosine implementations:
    quantizes per element exactly like knn_exact, so the fast path and
    the IVF path are oracle-checkable too.
 
-At cluster scale, brute-force k-NN is O(Q x N); `ivf_topk` prunes
-candidates by coarse quantization (centroid assignment) — only the
-nprobe nearest clusters are scanned, and the centroid table broadcasts.
+At cluster scale, brute-force k-NN is O(Q x N); IVF prunes candidates
+by coarse quantization (centroid assignment) — only the nprobe nearest
+clusters are scanned, and the centroid table broadcasts. One IVF kernel
+(``ivf_probe_ranks``, ``ivf_scored``, ``ivf_recall_curve``) serves the
+label-index serving path ``ivf_topk`` and every nprobe recall audit.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from flinkstreametl_spark.session import pin
 
 # 2^40: fixed-point scale for exact cross-engine accumulation.
 FP_SCALE = 1099511627776.0
@@ -96,6 +100,13 @@ def _exploded(emb: DataFrame, id_alias: str) -> DataFrame:
     )
 
 
+def top_k(scored: DataFrame, k: int, *keys: str) -> DataFrame:
+    """The rows of ``scored`` ranked ``rk`` 1..k within each ``keys``
+    group, by cosine descending and ties to the lower neighbor_id."""
+    w = Window.partitionBy(*keys).orderBy(F.col("cosine").desc(), "neighbor_id")
+    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
+
+
 def knn_exact(emb: DataFrame, n_queries: int = 5, k: int = 5) -> DataFrame:
     """Brute-force cosine top-k for query vectors vec_id < n_queries,
     excluding self. Fixed-point-exact accumulation -> deterministic ranking.
@@ -117,12 +128,7 @@ def knn_exact(emb: DataFrame, n_queries: int = 5, k: int = 5) -> DataFrame:
         .agg(F.sum(prod).alias("dot"), F.sum(qq).alias("qq"), F.sum(cc).alias("cc"))
     )
     cosine = F.col("dot").cast("double") / F.sqrt(F.col("qq").cast("double") * F.col("cc").cast("double"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        pairs.select("query_id", "neighbor_id", cosine.alias("cosine"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-    )
+    return top_k(pairs.select("query_id", "neighbor_id", cosine.alias("cosine")), k, "query_id")
 
 
 def knn_fast(emb: DataFrame, n_queries: int = 5, k: int = 5) -> DataFrame:
@@ -148,8 +154,7 @@ def knn_fast(emb: DataFrame, n_queries: int = 5, k: int = 5) -> DataFrame:
             dot_fp_col(F.col("q_emb"), F.col("c_emb")), F.col("qq"), F.col("cc")
         ).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
+    return top_k(scored, k, "query_id")
 
 
 def label_centroids(emb: DataFrame) -> DataFrame:
@@ -167,61 +172,134 @@ def label_centroids(emb: DataFrame) -> DataFrame:
     )
 
 
-def ivf_probe_ranks(emb: DataFrame, n_queries: int = 5) -> DataFrame:
-    """(query_id, q_emb, label, prb): every cluster ranked per query by
-    centroid cosine (prb = 1 is the nearest). The shared front half of
-    the IVF path — ``ivf_topk`` keeps ``prb <= nprobe``; the recall
-    curve keeps all ranks and slices them per nprobe value. Both the
-    centroid table and the query side broadcast (parameter-sized)."""
+def label_index(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The label IVF index over ``emb``: its centroid frame
+    ``(cluster, centroid)``, the ``label_centroids`` means collected
+    into one array per label, and its member frame ``(vec_id, embedding,
+    cluster)``, with the fixture ``label`` as the cluster id."""
     cents = (
         label_centroids(emb)
         .groupBy("label")
         .agg(F.array_sort(F.collect_list(F.struct("pos", "centroid_val"))).alias("cs"))
-        .select("label", F.transform("cs", lambda x: x["centroid_val"]).alias("centroid"))
+        .select(F.col("label").alias("cluster"), F.transform("cs", lambda x: x["centroid_val"]).alias("centroid"))
     )
+    return cents, emb.select("vec_id", "embedding", F.col("label").alias("cluster"))
+
+
+# The IVF kernel. An index is a centroid frame (*g, cluster, centroid)
+# and a member frame (*g, vec_id, embedding, cluster); the extra
+# columns *g, when there are any, hold several indexes side by side and
+# each value of them is probed, scored and counted on its own (the
+# staleness audit's index_state).
+
+
+def _index_keys(cents: DataFrame) -> list[str]:
+    return [c for c in cents.columns if c not in ("cluster", "centroid")]
+
+
+def ivf_probe_ranks(emb: DataFrame, cents: DataFrame, n_queries: int) -> DataFrame:
+    """(*g, query_id, q_emb, cluster, prb): every cluster ranked for
+    each query vector (vec_id < n_queries) by centroid cosine, prb = 1
+    the nearest, ties to the lower cluster id. The query side and the
+    centroid frame are parameter-sized and both broadcast."""
+    g = _index_keys(cents)
     q = emb.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
-    probe_w = Window.partitionBy("query_id").orderBy(F.col("c_score").desc(), "label")
+    probe_w = Window.partitionBy(*g, "query_id").orderBy(F.col("c_score").desc(), "cluster")
     return (
         F.broadcast(q)
         .crossJoin(F.broadcast(cents))
-        .select("query_id", "q_emb", "label", cosine_col_fp(F.col("q_emb"), F.col("centroid")).alias("c_score"))
+        .select(*g, "query_id", "q_emb", "cluster", cosine_col_fp(F.col("q_emb"), F.col("centroid")).alias("c_score"))
         .withColumn("prb", F.row_number().over(probe_w))
-        .select("query_id", "q_emb", "label", "prb")
+        .drop("c_score")
+    )
+
+
+def ivf_scored(emb: DataFrame, cents: DataFrame, members: DataFrame, n_queries: int) -> DataFrame:
+    """(*g, query_id, neighbor_id, prb, cosine): every member of every
+    cluster scored against each query, other than the query itself,
+    with the rank of its cluster attached; a filter on prb keeps the
+    probed clusters, and Catalyst pushes it into the probe panel, below
+    the candidate join. Per-vector self-norms are folded once per side,
+    so the candidate stage folds only the dot (bit-identical to
+    ``cosine_col_fp``)."""
+    g = _index_keys(cents)
+    ranks = ivf_probe_ranks(emb, cents, n_queries).withColumn("qq", self_norm_fp_col(F.col("q_emb")))
+    c = members.select(
+        *g,
+        "cluster",
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_emb"),
+        self_norm_fp_col(F.col("embedding")).alias("cc"),
+    )
+    # panel is |g|×queries×clusters rows; must be the build side; Catalyst misestimates the windowed crossJoin
+    return (
+        F.broadcast(ranks)
+        .join(c, [*g, "cluster"])
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select(
+            *g,
+            "query_id",
+            "neighbor_id",
+            "prb",
+            cosine_from_fp(dot_fp_col(F.col("q_emb"), F.col("c_emb")), F.col("qq"), F.col("cc")).alias("cosine"),
+        )
     )
 
 
 def ivf_topk(emb: DataFrame, n_queries: int = 5, k: int = 5, nprobe: int = 3) -> DataFrame:
-    """IVF-style ANN: score each query against the (broadcast) centroid
-    table, keep the nprobe nearest clusters, then run exact cosine only
-    against candidates in those clusters. Output schema matches
-    knn_exact; recall < 1 by construction (tests measure it). Both the
-    probe ranking and the candidate scores use the fixed-point fold
-    (cosine_col_fp), so the whole ANN decision path — which clusters
-    are probed AND how candidates rank — is bit-exact and
-    oracle-checkable (round 2)."""
-    probes = (
-        ivf_probe_ranks(emb, n_queries)
-        .filter(F.col("prb") <= nprobe)
-        .select("query_id", "q_emb", self_norm_fp_col(F.col("q_emb")).alias("qq"), "label")
+    """IVF-style ANN over the label index: probe the nprobe nearest
+    label centroids, then rank exact cosine among the members of those
+    clusters only. Output schema matches knn_exact; recall < 1 by
+    construction (tests measure it). Both the probe ranking and the
+    candidate scores use the fixed-point fold, so the whole ANN
+    decision path — which clusters are probed AND how candidates rank —
+    is bit-exact and oracle-checkable."""
+    cents, members = label_index(emb)
+    scored = ivf_scored(emb, cents, members, n_queries).filter(F.col("prb") <= nprobe)
+    return top_k(scored.drop("prb"), k, "query_id")
+
+
+def ivf_recall_curve(
+    emb: DataFrame, cents: DataFrame, members: DataFrame, nprobes: list[int], *, n_queries: int, k: int
+) -> DataFrame:
+    """(*g, nprobe, n_candidates, n_overlap, recall_at_{k}): for each
+    nprobe, how many candidates the probe-pruned scan touches and how
+    many of the exact cosine top-k of the n_queries query vectors its
+    own top-k recovers, counted over all queries.
+
+    The scored set is pinned once and every nprobe is a filter and
+    re-rank of it, so widening the curve adds window work, not another
+    scan. The exact top-k is derived from the same set: every cluster
+    is ranked for every query, so the set holds every (query, member)
+    cosine as long as membership is total, each vector in one cluster
+    of each index. A null cluster id would drop its vector from both
+    the candidates and the truth, and inflate recall. The ordering keys
+    and integer folds are knn_fast's, so the derived set is knn_fast's.
+    The nprobe that covers every cluster therefore reads recall 1.0."""
+    g = _index_keys(cents)
+    scored = pin(ivf_scored(emb, cents, members, n_queries))
+    exact = top_k(scored, k, *g, "query_id").select(*g, "query_id", "neighbor_id")
+    np_df = scored.sparkSession.range(1).select(F.explode(F.array(*[F.lit(n) for n in nprobes])).alias("nprobe"))
+    cand = scored.join(F.broadcast(np_df), F.col("prb") <= F.col("nprobe"))
+    # audit tail: both sides are bounded by panel×K×|nprobes| rows; broadcast, never SortMergeJoin
+    hits = (
+        top_k(cand, k, *g, "nprobe", "query_id")
+        .join(F.broadcast(exact), [*g, "query_id", "neighbor_id"], "left_semi")
+        .groupBy(*g, "nprobe")
+        .agg(F.count(F.lit(1)).alias("n_overlap"))
     )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        self_norm_fp_col(F.col("embedding")).alias("cc"),
-        F.col("label"),
+    overlap = F.coalesce("n_overlap", F.lit(0))
+    return (
+        cand.groupBy(*g, "nprobe")
+        .agg(F.count(F.lit(1)).alias("n_candidates"))
+        .join(F.broadcast(hits), [*g, "nprobe"], "left")
+        .select(
+            *g,
+            "nprobe",
+            "n_candidates",
+            overlap.cast("long").alias("n_overlap"),
+            (overlap.cast("double") / F.lit(float(n_queries * k))).alias(f"recall_at_{k}"),
+        )
     )
-    # panel is n_queries×nprobe rows; must be the build side; Catalyst misestimates the windowed crossJoin
-    cand = F.broadcast(probes).join(c, "label").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        cosine_from_fp(
-            dot_fp_col(F.col("q_emb"), F.col("c_emb")), F.col("qq"), F.col("cc")
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)

@@ -76,6 +76,12 @@ _RECHECK: dict[str, int] = {
     # one media crossing: synth, decode and features in one MapInPandas
     "audio_features_wav": 16,
     "video_frame_sample": 16,
+    # one IVF kernel: the label index names its cluster column cluster,
+    # and the staleness audit derives its truth from the scored set
+    "ann_ivf_topk": 17,
+    "ivf_recall_curve": 17,
+    "ivf_kmeans_recall_curve": 17,
+    "ann_index_staleness_audit": 17,
 }
 
 

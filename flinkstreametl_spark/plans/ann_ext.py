@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flinkstreametl_spark.operators import similarity as S
-from flinkstreametl_spark.operators.clustering import kmeans_fit
+from flinkstreametl_spark.operators.clustering import centroid_frame, kmeans_fit
 from flinkstreametl_spark.plans.ml_ext import _kmeans_ctes
 from flinkstreametl_spark.plans.registry import register
 from flinkstreametl_spark.session import pin
@@ -172,104 +172,31 @@ def ann_index_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment, probe ranking, candidate scoring, and the exact truth
     all use the repo's fixed-point folds, so the DuckDB oracle (two
     parameterized _kmeans_ctes chains) replays the audit bit-for-bit.
+    The truth is derived per index state from that state's scored set
+    (the IVF kernel, ``S.ivf_recall_curve``): both assignments are
+    total, so each state's set holds every (query, vector) cosine and
+    yields the same brute-force top-10 as the oracle's ``exact``.
 
     Plan shape: the embedding scan is pinned once and fanned out to
-    both fits, the membership union, and the exact truth; centroids are
-    two k-row parameter tables (broadcast); candidates are scored once
-    per index state with probe ranks attached, and every nprobe slice
-    re-ranks the same pinned scored set. Driver traffic
-    = k centroids per Lloyd iteration, twice."""
+    both fits and the membership union; centroids are two k-row
+    parameter tables (broadcast), told apart by ``index_state``;
+    candidates are scored once per index state with probe ranks
+    attached, and every nprobe slice re-ranks the same pinned scored
+    set. Driver traffic = k centroids per Lloyd iteration, twice."""
     emb = pin(ensure_parallelism(load_table(spark, sf_dir, "embeddings")))
-    base = emb.filter(~F.expr(_ARRIVALS))
-    stale_mat, assign_stale = kmeans_fit(base, k=_K, n_iters=_ITERS)
-    refit_mat, assign_refit = kmeans_fit(emb, k=_K, n_iters=_ITERS)
 
-    def cents_df(mat, state: str) -> DataFrame:
-        return spark.createDataFrame(
-            [(state, i, [float(x) for x in mat[i]]) for i in range(len(mat))],
-            "index_state STRING, cluster LONG, centroid ARRAY<DOUBLE>",
+    def index(state: str, cents_mat, assign_df) -> tuple[DataFrame, DataFrame]:
+        tag = F.lit(state).alias("index_state")
+        return (
+            centroid_frame(spark, cents_mat).select(tag, "*"),
+            assign_df(emb).select(tag, "vec_id", "embedding", "cluster"),
         )
 
-    cents = cents_df(stale_mat, "stale").unionByName(cents_df(refit_mat, "refit"))
-    members = (
-        assign_stale(emb).select(F.lit("stale").alias("index_state"), "vec_id", "embedding", "cluster")
-    ).unionByName(
-        assign_refit(emb).select(F.lit("refit").alias("index_state"), "vec_id", "embedding", "cluster")
-    )
-    q = emb.filter(F.col("vec_id") < _NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    probe_w = Window.partitionBy("index_state", "query_id").orderBy(
-        F.col("c_score").desc(), "cluster"
-    )
-    ranks = (
-        F.broadcast(q)
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "index_state",
-            "query_id",
-            "q_emb",
-            "cluster",
-            S.cosine_col_fp(F.col("q_emb"), F.col("centroid")).alias("c_score"),
-        )
-        .withColumn("prb", F.row_number().over(probe_w))
-        .select("index_state", "query_id", "q_emb", "cluster", "prb")
-    )
-    # Per-vector self-norms precomputed once per side (see
-    # embedding_neardup_pairs — same integers, bit-identical cosine).
-    # panel is states×queries×clusters rows; must be the build side; Catalyst misestimates the windowed crossJoin.
-    # Scored once; every nprobe slice reuses it.
-    cscore = pin(
-        F.broadcast(ranks.withColumn("qq", S.self_norm_fp_col(F.col("q_emb"))))
-        .join(
-            members.select(
-                "index_state", F.col("vec_id").alias("neighbor_id"),
-                F.col("embedding").alias("c_emb"),
-                S.self_norm_fp_col(F.col("embedding")).alias("cc"), "cluster",
-            ),
-            ["index_state", "cluster"],
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "index_state",
-            "query_id",
-            "neighbor_id",
-            "prb",
-            S.cosine_from_fp(
-                S.dot_fp_col(F.col("q_emb"), F.col("c_emb")), F.col("qq"), F.col("cc")
-            ).alias("cosine"),
-        )
-    )
-    exact = S.knn_fast(emb, n_queries=_NQ, k=_QK).select("query_id", "neighbor_id")
-    np_df = spark.range(1).select(
-        F.explode(F.array(*[F.lit(n) for n in _NPROBES])).alias("nprobe")
-    )
-    cand_np = cscore.join(F.broadcast(np_df), F.col("prb") <= F.col("nprobe"))
-    w = Window.partitionBy("index_state", "nprobe", "query_id").orderBy(
-        F.col("cosine").desc(), "neighbor_id"
-    )
-    ivf_top = cand_np.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= _QK)
-    # audit tail: both sides are bounded by panel×K×|nprobes| rows; broadcast, never SortMergeJoin
-    hits = (
-        ivf_top.join(F.broadcast(exact), ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("index_state", "nprobe")
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-    )
-    cands = cand_np.groupBy("index_state", "nprobe").agg(
-        F.count(F.lit(1)).alias("n_candidates")
-    )
-    return (
-        cands.join(F.broadcast(hits), ["index_state", "nprobe"], "left")
-        .select(
-            "index_state",
-            "nprobe",
-            "n_candidates",
-            F.coalesce("n_overlap", F.lit(0)).cast("long").alias("n_overlap"),
-            (F.coalesce("n_overlap", F.lit(0)).cast("double") / F.lit(float(_NQ * _QK))).alias(
-                f"recall_at_{_QK}"
-            ),
-        )
-        .orderBy("index_state", "nprobe")
+    stale_c, stale_m = index("stale", *kmeans_fit(emb.filter(~F.expr(_ARRIVALS)), k=_K, n_iters=_ITERS))
+    refit_c, refit_m = index("refit", *kmeans_fit(emb, k=_K, n_iters=_ITERS))
+    cents, members = stale_c.unionByName(refit_c), stale_m.unionByName(refit_m)
+    return S.ivf_recall_curve(emb, cents, members, _NPROBES, n_queries=_NQ, k=_QK).orderBy(
+        "index_state", "nprobe"
     )
 
 

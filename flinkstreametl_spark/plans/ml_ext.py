@@ -20,6 +20,7 @@ from flinkstreametl_spark.operators.clustering import (
     DEFAULT_ITERS,
     DEFAULT_K,
     KM_FP as _KM_FP,
+    centroid_frame,
     fp_dists,
     kmeans_fit,
     lloyd_fit,
@@ -688,84 +689,22 @@ def ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate counts are integers, and recall is ONE double division
     of exact operands — hash-identical to the oracle.
 
-    Plan shape (the part that survives 100 TB): candidates are scored
-    ONCE with their cluster's probe rank attached; each nprobe slice is
-    then a filter + re-rank over the already-scored rows, so widening
-    the curve adds window work only, not another scan. The probe side
-    (queries x centroids) stays broadcast; the one heavy join is
-    probes->vectors on label, identical to ``ann_ivf_topk``. At
-    nprobe = n_clusters this is brute force BY DESIGN — the curve is
-    the audit that justifies a production nprobe choice, not the
-    serving path."""
-    # Pinned once for the fan-out (probe ranks, candidate side, exact
-    # truth) — Spark does not dedupe common subplans.
+    Plan shape: the IVF kernel (``S.ivf_recall_curve``) over the label
+    index ``ann_ivf_topk`` serves from — candidates scored once with
+    their cluster's probe rank attached, every nprobe slice a re-rank
+    of that set, the probe side broadcast. At nprobe = n_clusters this
+    is brute force BY DESIGN — the curve is the audit that justifies a
+    production nprobe choice, not the serving path."""
+    # Pinned once for the fan-out (centroids, probe queries, members).
     emb = pin(ensure_parallelism(load_table(spark, sf_dir, "embeddings")))
-    # r14 opt: per-vector self-norms precomputed once per side, and the
-    # exact top-K DERIVED from the pinned scored set instead of a
-    # second knn_fast pass — cscore holds every (query, neighbor)
-    # fixed-point cosine because nprobe=10 covers all labels. Same
-    # ordering keys over the same integer folds -> identical exact set.
-    # INVARIANT (ADVICE r14): the derivation additionally requires
-    # label to be TOTAL on the embeddings fixture — the inner join on
-    # label would silently drop null-labeled vectors from the "exact"
-    # set and inflate recall. Verified on every shipped SF tier
-    # (count(label) == count(*), labels 0..9) and the oracle computes
-    # the same inner join, so any fixture drift breaks the hash rather
-    # than passing silently; the dependency is stated here so a future
-    # fixture change can't weaken the audit unnoticed.
-    ranks = S.ivf_probe_ranks(emb, n_queries=5).withColumn(
-        "qq", S.self_norm_fp_col(F.col("q_emb"))
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        S.self_norm_fp_col(F.col("embedding")).alias("cc"),
-        "label",
-    )
-    # panel is queries×labels rows; must be the build side; Catalyst misestimates the windowed crossJoin
-    # Scored once; every nprobe slice reuses it.
-    cscore = pin(
-        F.broadcast(ranks).join(c, "label")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "prb",
-            S.cosine_from_fp(
-                S.dot_fp_col(F.col("q_emb"), F.col("c_emb")), F.col("qq"), F.col("cc")
-            ).alias("cosine"),
-        )
-    )
-    we = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    exact = (
-        cscore.withColumn("erk", F.row_number().over(we))
-        .filter(F.col("erk") <= _QK)
-        .select("query_id", "neighbor_id")
-    )
-    np_df = spark.range(1).select(
-        F.explode(F.array(*[F.lit(n) for n in _NPROBES])).alias("nprobe")
-    )
-    cand_np = cscore.join(F.broadcast(np_df), F.col("prb") <= F.col("nprobe"))
-    w = Window.partitionBy("nprobe", "query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    ivf_top = cand_np.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= _QK)
-    # audit tail: both sides are bounded by panel×K×|nprobes| rows; broadcast, never SortMergeJoin
-    hits = (
-        ivf_top.join(F.broadcast(exact), ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("nprobe")
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-    )
-    cands = cand_np.groupBy("nprobe").agg(F.count(F.lit(1)).alias("n_candidates"))
-    return (
-        cands.join(F.broadcast(hits), "nprobe", "left")
-        .select(
-            "nprobe",
-            "n_candidates",
-            F.coalesce("n_overlap", F.lit(0)).cast("long").alias("n_overlap"),
-            (F.coalesce("n_overlap", F.lit(0)).cast("double") / F.lit(5.0 * _QK)).alias(
-                f"recall_at_{_QK}"
-            ),
-        )
-    )
+    # The kernel derives the exact top-K from the scored set, which
+    # needs label to be TOTAL on the embeddings fixture: a null label
+    # would drop its vector from the truth and inflate recall. Every
+    # shipped SF tier has count(label) == count(*), labels 0..9, and the
+    # oracle computes the same inner join, so a fixture drift breaks the
+    # hash rather than passing silently.
+    cents, members = S.label_index(emb)
+    return S.ivf_recall_curve(emb, cents, members, _NPROBES, n_queries=5, k=_QK)
 
 
 _KM_NPROBES = [1, 2, 3, 5, 8]  # k=8 learned clusters -> nprobe=8 is the full scan
@@ -881,99 +820,19 @@ def ivf_kmeans_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     every learned cluster and must read recall 1.0 — the same sanity
     anchor as the label curve.
 
-    Plan shape: unchanged from ivf_recall_curve — centroids are a
-    k-row parameter table (broadcast), candidates are scored once with
-    probe ranks attached, every nprobe slice is a re-rank of the same
-    scored set. The only addition is the Lloyd fit, whose driver
-    traffic is k centroids per iteration."""
+    Plan shape: the same kernel as ivf_recall_curve, over a k-row
+    centroid frame (broadcast). The only addition is the Lloyd fit,
+    whose driver traffic is k centroids per iteration."""
     # Pinned once for the fan-out (fit input, query rows, membership
-    # side, exact truth) — Spark does not dedupe common subplans; the
-    # unpinned frame re-scanned the embedding parquet per consumer.
+    # side) — Spark does not dedupe common subplans; the unpinned frame
+    # re-scanned the embedding parquet per consumer.
     emb = pin(ensure_parallelism(load_table(spark, sf_dir, "embeddings")))
     cents_mat, assign_df = kmeans_fit(emb)
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in cents_mat[i]]) for i in range(len(cents_mat))],
-        "cluster LONG, centroid ARRAY<DOUBLE>",
-    )
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(F.col("c_score").desc(), "cluster")
-    ranks = (
-        F.broadcast(q)
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "q_emb",
-            "cluster",
-            S.cosine_col_fp(F.col("q_emb"), F.col("centroid")).alias("c_score"),
-        )
-        .withColumn("prb", F.row_number().over(probe_w))
-        .select("query_id", "q_emb", "cluster", "prb")
-    )
-    # r14 opt: members carry their fixed-point self-norm computed once
-    # per vector; the candidate stage folds only the dot (see
-    # embedding_neardup_pairs — same integers, bit-identical cosine).
-    members = assign_df(emb).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        S.self_norm_fp_col(F.col("embedding")).alias("cc"),
-        "cluster",
-    )
-    q_norm = ranks.withColumn("qq", S.self_norm_fp_col(F.col("q_emb")))
-    # panel is queries×clusters rows; must be the build side; Catalyst misestimates the windowed crossJoin
-    # Scored once; every nprobe slice reuses it.
-    cscore = pin(
-        F.broadcast(q_norm).join(members, "cluster")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "prb",
-            S.cosine_from_fp(
-                S.dot_fp_col(F.col("q_emb"), F.col("c_emb")), F.col("qq"), F.col("cc")
-            ).alias("cosine"),
-        )
-    )
-    # r14 opt: the exact top-K is DERIVED from the pinned scored set
-    # instead of a second full knn_fast pass — cscore already holds
-    # every (query, neighbor) fixed-point cosine, because the probe
-    # ranking covers all k=8 learned clusters (the nprobe=8 full-scan
-    # anchor) and cluster assignment is total (ADVICE r14: argmin over
-    # the centroid matrix is defined for every vector, so the "cluster"
-    # join key — unlike a fixture-provided label — cannot be null by
-    # construction). Same ordering keys (cosine DESC, neighbor_id)
-    # over the same integer-fold values as knn_fast -> the identical
-    # exact set, one fewer corpus pass.
-    we = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    exact = (
-        cscore.withColumn("erk", F.row_number().over(we))
-        .filter(F.col("erk") <= _QK)
-        .select("query_id", "neighbor_id")
-    )
-    np_df = spark.range(1).select(
-        F.explode(F.array(*[F.lit(n) for n in _KM_NPROBES])).alias("nprobe")
-    )
-    cand_np = cscore.join(F.broadcast(np_df), F.col("prb") <= F.col("nprobe"))
-    w = Window.partitionBy("nprobe", "query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    ivf_top = cand_np.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= _QK)
-    # audit tail: both sides are bounded by panel×K×|nprobes| rows; broadcast, never SortMergeJoin
-    hits = (
-        ivf_top.join(F.broadcast(exact), ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("nprobe")
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-    )
-    cands = cand_np.groupBy("nprobe").agg(F.count(F.lit(1)).alias("n_candidates"))
-    return (
-        cands.join(F.broadcast(hits), "nprobe", "left")
-        .select(
-            "nprobe",
-            "n_candidates",
-            F.coalesce("n_overlap", F.lit(0)).cast("long").alias("n_overlap"),
-            (F.coalesce("n_overlap", F.lit(0)).cast("double") / F.lit(5.0 * _QK)).alias(
-                f"recall_at_{_QK}"
-            ),
-        )
+    # Assignment is an argmin over the centroid matrix, defined for
+    # every vector, so membership is total by construction and the
+    # kernel's derived exact top-K holds.
+    return S.ivf_recall_curve(
+        emb, centroid_frame(spark, cents_mat), assign_df(emb), _KM_NPROBES, n_queries=5, k=_QK
     )
 
 

@@ -110,6 +110,15 @@ def pin(df: DataFrame, *, eager: bool = True) -> DataFrame:
     the first action that reads it, under that action's tags; under
     adaptive execution the shuffle stages below it still run now, in
     the pin call, so they carry ``pin`` too.
+
+    Whoever needs a frame materialized pins it, and a pin of a pin is
+    the pin: a frame that optimizes to a locally checkpointed RDD, a
+    pinned frame or a select of all its columns, comes back unchanged,
+    with the eagerness it was pinned with. So a kernel pins its input
+    and a caller that pinned it already pays nothing more.
     """
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() == "LogicalRDD" and plan.rdd().isLocallyCheckpointed():
+        return df
     with job_tag(df.sparkSession.sparkContext, "pin"):
         return df.localCheckpoint(eager=eager)

@@ -45,9 +45,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from flinkstreametl_spark.operators.clustering import (
+    CENTROIDS_SCHEMA,
     DEFAULT_ITERS,
     DEFAULT_K,
     assign_to_centroids,
+    centroid_frame,
     kmeans_fit,
 )
 from flinkstreametl_spark.session import pin
@@ -65,7 +67,6 @@ POSTINGS_SUBDIR = "postings"
 META_FILE = "meta.json"
 
 POSTINGS_SCHEMA = "vec_id LONG, cluster LONG, embedding ARRAY<DOUBLE>"
-CENTROIDS_SCHEMA = "cluster LONG, centroid ARRAY<DOUBLE>"
 
 #: Re-fit when arrivals since the last fit exceed this fraction of the
 #: fit-time corpus. 0.5 = re-fit at 1.5x growth — each re-fit is O(index)
@@ -78,10 +79,7 @@ def _write_version(spark: SparkSession, emb: DataFrame, vdir: str, k: int, n_ite
     directory (centroids + postings + meta): the ``commit_version``
     callback."""
     cents_mat, assign_df = kmeans_fit(emb, k=k, n_iters=n_iters)
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in cents_mat[i]]) for i in range(len(cents_mat))],
-        CENTROIDS_SCHEMA,
-    )
+    cents = centroid_frame(spark, cents_mat)
     postings = assign_df(emb).select("vec_id", "cluster", "embedding")
     # Cluster-partitioned layout from birth so IVF probes prune files.
     postings.repartition(max(k, 1), "cluster").write.mode("overwrite").parquet(

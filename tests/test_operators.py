@@ -596,3 +596,79 @@ def test_text_operators_null_and_empty_robustness(spark):
         df.withColumn("lang", F.lit("en")).withColumn("source", F.lit("s")).withColumn("event_ts", F.current_timestamp())
     )
     assert [r.doc_id for r in gated.collect()] == [4]
+
+
+def test_ivf_serving_path_agrees_with_curve(spark, sf_dir):
+    """The serving path and the recall audit run on one IVF kernel: for
+    each nprobe of ``ivf_recall_curve``, the overlap of ``ivf_topk``'s
+    top-10 with knn_fast's top-10 is the curve's ``n_overlap``."""
+    from flinkstreametl_spark.plans import REGISTRY
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    exact = {(r.query_id, r.neighbor_id) for r in S.knn_fast(emb, 5, 10).collect()}
+    curve = REGISTRY["ivf_recall_curve"].fn(spark, sf_dir).collect()
+    assert sorted(r.nprobe for r in curve) == [1, 2, 3, 5, 10]
+    for row in curve:
+        ivf = {(r.query_id, r.neighbor_id) for r in S.ivf_topk(emb, 5, k=10, nprobe=row.nprobe).collect()}
+        assert len(ivf & exact) == row.n_overlap, row
+
+
+def test_ivf_has_one_home():
+    """``operators/similarity.py`` is the IVF kernel's one home: only it
+    names the probe rank ``"prb"`` and orders a window by the centroid
+    score. Only ``operators/clustering.py`` turns a centroid matrix into
+    a frame (``createDataFrame`` with a centroid schema). The three
+    nprobe recall audits each call the kernel's curve, and none of them
+    calls ``knn_fast``: the exact truth comes from the scored set."""
+    import ast
+    import os
+
+    import flinkstreametl_spark
+
+    pkg = os.path.dirname(flinkstreametl_spark.__file__)
+    prb, probe_windows, centroid_frames, curve_users, knn_users = set(), set(), set(), set(), set()
+    for root, _dirs, names in os.walk(pkg):
+        for f in names:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            rel = os.path.relpath(path, pkg)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for n in ast.walk(tree):
+                if isinstance(n, ast.Constant) and n.value == "prb":
+                    prb.add(rel)
+                if not (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)):
+                    continue
+                inner = list(ast.walk(n))
+                consts = [c.value for c in inner if isinstance(c, ast.Constant) and isinstance(c.value, str)]
+                idents = {getattr(c, "id", None) or getattr(c, "attr", None) for c in inner}
+                if n.func.attr == "orderBy" and "c_score" in consts:
+                    probe_windows.add(rel)
+                if n.func.attr == "createDataFrame" and (
+                    "CENTROIDS_SCHEMA" in idents or any("centroid" in c for c in consts)
+                ):
+                    centroid_frames.add(rel)
+            for top in tree.body:
+                if not isinstance(top, ast.FunctionDef):
+                    continue
+                calls = {
+                    getattr(n.func, "attr", None) or getattr(n.func, "id", None)
+                    for n in ast.walk(top)
+                    if isinstance(n, ast.Call)
+                }
+                if "ivf_recall_curve" in calls:
+                    curve_users.add((rel, top.name))
+                if "knn_fast" in calls:
+                    knn_users.add((rel, top.name))
+    home = os.path.join("operators", "similarity.py")
+    assert prb == {home}
+    assert probe_windows == {home}
+    assert centroid_frames == {os.path.join("operators", "clustering.py")}
+    ml, ann = os.path.join("plans", "ml_ext.py"), os.path.join("plans", "ann_ext.py")
+    assert curve_users == {
+        (ml, "ivf_recall_curve"),
+        (ml, "ivf_kmeans_recall_curve"),
+        (ann, "ann_index_staleness_audit"),
+    }
+    assert not curve_users & knn_users

@@ -54,6 +54,30 @@ def test_lazy_pin_tags_its_construction_jobs(spark):
     assert sorted(pinned.collect()) == sorted(_frame(spark).collect())
 
 
+def test_pin_of_a_pin_is_the_pin(spark):
+    """A frame that is already pinned, or a select of all its columns,
+    comes back unchanged: no job tagged pin, the same checkpointed RDD."""
+    pinned = pin(_frame(spark))
+    before = _tagged(spark, "pin")
+    again = pin(pinned)
+    same_cols = pin(pinned.select(*pinned.columns))
+    assert _tagged(spark, "pin") == before
+    assert again is pinned
+    assert same_cols.columns == pinned.columns
+    optimized = same_cols._jdf.queryExecution().optimizedPlan()
+    assert optimized.rdd().id() == _checkpoint_rdd(pinned).id()
+
+
+def test_pin_of_a_created_frame_still_pins(spark):
+    """``createDataFrame`` frames optimize to a ``LogicalRDD`` too, but
+    their RDD is not checkpointed, so pinning one runs a pin job."""
+    created = spark.createDataFrame([(1, "a"), (2, "b")], "id INT, v STRING")
+    before = _tagged(spark, "pin")
+    pinned = pin(created)
+    assert _tagged(spark, "pin") - before, "pinning a created frame ran no job tagged pin"
+    assert _checkpoint_rdd(pinned).isLocallyCheckpointed()
+
+
 def test_only_session_checkpoints():
     """Every ``.localCheckpoint(``/``.checkpoint(`` call of the package
     is in ``session.py``; the rest pin through ``session.pin``."""

@@ -65,11 +65,14 @@ PARTS = ("pin", "drain")
 def warm_up(spark, sf_dir: str) -> None:
     """As ``bench.py``: touch every fixture table once, then run the
     flagship enrich, so the first query does not pay JVM start-up,
-    codegen and cold parquet footers. The canary runs once too, so its
+    codegen and cold parquet footers. One ``mapInPandas`` query
+    crosses the Python boundary, so the first Python query does not
+    pay the worker start either. The canary runs once too, so its
     first timing is warm like its last."""
     for t in FIXTURE_TABLES:
         load_table(spark, sf_dir, t).count()
     REGISTRY["flagship_enrich"].fn(spark, sf_dir).count()
+    noop(REGISTRY["knn_pandas_topk"].fn(spark, sf_dir))
     noop(REGISTRY[CANARY].fn(spark, FIXTURES))
 
 
