@@ -22,8 +22,9 @@ Two cosine implementations:
 At cluster scale, brute-force k-NN is O(Q x N); IVF prunes candidates
 by coarse quantization (centroid assignment) — only the nprobe nearest
 clusters are scanned, and the centroid table broadcasts. One IVF kernel
-(``ivf_probe_ranks``, ``ivf_scored``, ``ivf_recall_curve``) serves the
-label-index serving path ``ivf_topk`` and every nprobe recall audit.
+(``ivf_scored``, the probe ranking and candidate scorer, and
+``ivf_recall_curve``) serves the label-index serving path ``ivf_topk``
+and every nprobe recall audit.
 """
 
 from __future__ import annotations
@@ -191,41 +192,38 @@ def label_index(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
 # columns *g, when there are any, hold several indexes side by side and
 # each value of them is probed, scored and counted on its own (the
 # staleness audit's index_state).
+AUDIT_QUERIES = 5  # recall audits query the vectors vec_id < 5
+RECALL_K = 10  # and compare top-10 lists
 
 
 def _index_keys(cents: DataFrame) -> list[str]:
     return [c for c in cents.columns if c not in ("cluster", "centroid")]
 
 
-def ivf_probe_ranks(emb: DataFrame, cents: DataFrame, n_queries: int) -> DataFrame:
-    """(*g, query_id, q_emb, cluster, prb): every cluster ranked for
-    each query vector (vec_id < n_queries) by centroid cosine, prb = 1
-    the nearest, ties to the lower cluster id. The query side and the
-    centroid frame are parameter-sized and both broadcast."""
-    g = _index_keys(cents)
-    q = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    probe_w = Window.partitionBy(*g, "query_id").orderBy(F.col("c_score").desc(), "cluster")
-    return (
-        F.broadcast(q)
-        .crossJoin(F.broadcast(cents))
-        .select(*g, "query_id", "q_emb", "cluster", cosine_col_fp(F.col("q_emb"), F.col("centroid")).alias("c_score"))
-        .withColumn("prb", F.row_number().over(probe_w))
-        .drop("c_score")
-    )
-
-
 def ivf_scored(emb: DataFrame, cents: DataFrame, members: DataFrame, n_queries: int) -> DataFrame:
     """(*g, query_id, neighbor_id, prb, cosine): every member of every
-    cluster scored against each query, other than the query itself,
-    with the rank of its cluster attached; a filter on prb keeps the
-    probed clusters, and Catalyst pushes it into the probe panel, below
-    the candidate join. Per-vector self-norms are folded once per side,
-    so the candidate stage folds only the dot (bit-identical to
-    ``cosine_col_fp``)."""
+    cluster scored against each query vector (vec_id < n_queries),
+    other than the query itself, with the probe rank of its cluster
+    attached. Every cluster is ranked for each query by centroid
+    cosine, prb = 1 the nearest, ties to the lower cluster id; a filter
+    on prb keeps the probed clusters, and Catalyst pushes it into the
+    probe panel, below the candidate join. The query side and the
+    centroid frame are parameter-sized and both broadcast. Per-vector
+    self-norms are folded once per side, so the candidate stage folds
+    only the dot (bit-identical to ``cosine_col_fp``)."""
     g = _index_keys(cents)
-    ranks = ivf_probe_ranks(emb, cents, n_queries).withColumn("qq", self_norm_fp_col(F.col("q_emb")))
+    q = emb.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        self_norm_fp_col(F.col("embedding")).alias("qq"),
+    )
+    probe_w = Window.partitionBy(*g, "query_id").orderBy(F.col("c_score").desc(), "cluster")
+    ranks = (
+        F.broadcast(q)
+        .crossJoin(F.broadcast(cents))
+        .select(*g, "query_id", "q_emb", "qq", "cluster", cosine_col_fp("q_emb", "centroid").alias("c_score"))
+        .withColumn("prb", F.row_number().over(probe_w))
+    )
     c = members.select(
         *g,
         "cluster",
@@ -261,13 +259,11 @@ def ivf_topk(emb: DataFrame, n_queries: int = 5, k: int = 5, nprobe: int = 3) ->
     return top_k(scored.drop("prb"), k, "query_id")
 
 
-def ivf_recall_curve(
-    emb: DataFrame, cents: DataFrame, members: DataFrame, nprobes: list[int], *, n_queries: int, k: int
-) -> DataFrame:
-    """(*g, nprobe, n_candidates, n_overlap, recall_at_{k}): for each
+def ivf_recall_curve(emb: DataFrame, cents: DataFrame, members: DataFrame, nprobes: list[int]) -> DataFrame:
+    """(*g, nprobe, n_candidates, n_overlap, recall_at_10): for each
     nprobe, how many candidates the probe-pruned scan touches and how
-    many of the exact cosine top-k of the n_queries query vectors its
-    own top-k recovers, counted over all queries.
+    many of the exact cosine top-RECALL_K of the AUDIT_QUERIES query
+    vectors its own top-RECALL_K recovers, counted over all queries.
 
     The scored set is pinned once and every nprobe is a filter and
     re-rank of it, so widening the curve adds window work, not another
@@ -279,13 +275,13 @@ def ivf_recall_curve(
     and integer folds are knn_fast's, so the derived set is knn_fast's.
     The nprobe that covers every cluster therefore reads recall 1.0."""
     g = _index_keys(cents)
-    scored = pin(ivf_scored(emb, cents, members, n_queries))
-    exact = top_k(scored, k, *g, "query_id").select(*g, "query_id", "neighbor_id")
+    scored = pin(ivf_scored(emb, cents, members, AUDIT_QUERIES))
+    exact = top_k(scored, RECALL_K, *g, "query_id").select(*g, "query_id", "neighbor_id")
     np_df = scored.sparkSession.range(1).select(F.explode(F.array(*[F.lit(n) for n in nprobes])).alias("nprobe"))
     cand = scored.join(F.broadcast(np_df), F.col("prb") <= F.col("nprobe"))
     # audit tail: both sides are bounded by panel×K×|nprobes| rows; broadcast, never SortMergeJoin
     hits = (
-        top_k(cand, k, *g, "nprobe", "query_id")
+        top_k(cand, RECALL_K, *g, "nprobe", "query_id")
         .join(F.broadcast(exact), [*g, "query_id", "neighbor_id"], "left_semi")
         .groupBy(*g, "nprobe")
         .agg(F.count(F.lit(1)).alias("n_overlap"))
@@ -300,6 +296,6 @@ def ivf_recall_curve(
             "nprobe",
             "n_candidates",
             overlap.cast("long").alias("n_overlap"),
-            (overlap.cast("double") / F.lit(float(n_queries * k))).alias(f"recall_at_{k}"),
+            (overlap.cast("double") / F.lit(float(AUDIT_QUERIES * RECALL_K))).alias(f"recall_at_{RECALL_K}"),
         )
     )

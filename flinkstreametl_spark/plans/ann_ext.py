@@ -26,8 +26,6 @@ from flinkstreametl_spark.sources.parquet import ensure_parallelism, load_table
 
 _K = 8  # coarse clusters (the suite's standing IVF shape)
 _ITERS = 3  # Lloyd iterations — two fits per query; 3 keeps the sf1 oracle bounded
-_QK = 10  # recall depth (matches the ivf_* audits)
-_NQ = 5  # audit queries: vec_id < 5, the suite convention
 _NPROBES = [1, 2, 4, 8]  # nprobe = 8 scans every cluster -> recall 1.0 anchor
 # The arrival stream: every 5th vector "arrived after the index was
 # fit". The stale fit sees only the base 80%; both indexes CONTAIN all
@@ -70,7 +68,7 @@ cent AS (
     UNION ALL
     SELECT 'stale' AS index_state, cluster, pos, cval FROM {sfin_c}
 ),
-q AS (SELECT vec_id, pos, val FROM e WHERE vec_id < {_NQ}),
+q AS (SELECT vec_id, pos, val FROM e WHERE vec_id < {S.AUDIT_QUERIES}),
 ps AS (
     SELECT c.index_state, q.vec_id AS query_id, c.cluster,
            SUM(CAST(floor(q.val * c.cval * {_FP}) AS BIGINT)) AS dot,
@@ -110,7 +108,7 @@ exact AS (
                ) AS rk
         FROM q JOIN e c ON q.pos = c.pos AND q.vec_id <> c.vec_id
         GROUP BY q.vec_id, c.vec_id
-    ) WHERE rk <= {_QK}
+    ) WHERE rk <= {S.RECALL_K}
 ),
 np AS (SELECT CAST(unnest([{nps}]) AS INTEGER) AS nprobe),
 cand_np AS (
@@ -124,7 +122,7 @@ ivf_top AS (
                    ORDER BY CAST(dot AS DOUBLE) / sqrt(CAST(qq AS DOUBLE) * CAST(cc AS DOUBLE)) DESC,
                             neighbor_id) AS rk
         FROM cand_np
-    ) WHERE rk <= {_QK}
+    ) WHERE rk <= {S.RECALL_K}
 ),
 hits AS (
     SELECT t.index_state, t.nprobe, CAST(COUNT(*) AS BIGINT) AS n_overlap
@@ -139,7 +137,7 @@ cands AS (
 )
 SELECT c.index_state, c.nprobe, c.n_candidates,
        COALESCE(h.n_overlap, 0) AS n_overlap,
-       CAST(COALESCE(h.n_overlap, 0) AS DOUBLE) / ({_NQ}.0 * {_QK}.0) AS recall_at_{_QK}
+       CAST(COALESCE(h.n_overlap, 0) AS DOUBLE) / ({S.AUDIT_QUERIES}.0 * {S.RECALL_K}.0) AS recall_at_{S.RECALL_K}
 FROM cands c LEFT JOIN hits h ON h.index_state = c.index_state AND h.nprobe = c.nprobe
 ORDER BY c.index_state, c.nprobe
 """
@@ -195,9 +193,7 @@ def ann_index_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     stale_c, stale_m = index("stale", *kmeans_fit(emb.filter(~F.expr(_ARRIVALS)), k=_K, n_iters=_ITERS))
     refit_c, refit_m = index("refit", *kmeans_fit(emb, k=_K, n_iters=_ITERS))
     cents, members = stale_c.unionByName(refit_c), stale_m.unionByName(refit_m)
-    return S.ivf_recall_curve(emb, cents, members, _NPROBES, n_queries=_NQ, k=_QK).orderBy(
-        "index_state", "nprobe"
-    )
+    return S.ivf_recall_curve(emb, cents, members, _NPROBES).orderBy("index_state", "nprobe")
 
 
 # Matryoshka truncation audit: production multi-resolution retrieval
@@ -212,7 +208,7 @@ def _mrl_oracle() -> str:
     return f"""
 WITH e AS (SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS pos,
                   CAST(unnest(embedding) AS DOUBLE) AS val FROM embeddings),
-q AS (SELECT vec_id, pos, val FROM e WHERE vec_id < {_NQ}),
+q AS (SELECT vec_id, pos, val FROM e WHERE vec_id < {S.AUDIT_QUERIES}),
 dims AS (SELECT CAST(unnest([{dims}]) AS BIGINT) AS dim),
 sc AS (
     SELECT d.dim, q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -230,7 +226,7 @@ topd AS (
                    ORDER BY CAST(dot AS DOUBLE) / sqrt(CAST(qq AS DOUBLE) * CAST(cc AS DOUBLE)) DESC,
                             neighbor_id) AS rk
         FROM sc
-    ) t WHERE rk <= {_QK}
+    ) t WHERE rk <= {S.RECALL_K}
 ),
 full_top AS (SELECT query_id, neighbor_id FROM topd WHERE dim = {_MRL_DIMS[-1]}),
 hits AS (
@@ -241,7 +237,7 @@ hits AS (
     GROUP BY t.dim
 )
 SELECT d.dim, COALESCE(h.n_overlap, 0) AS n_overlap,
-       CAST(COALESCE(h.n_overlap, 0) AS DOUBLE) / ({_NQ}.0 * {_QK}.0) AS recall_at_{_QK}
+       CAST(COALESCE(h.n_overlap, 0) AS DOUBLE) / ({S.AUDIT_QUERIES}.0 * {S.RECALL_K}.0) AS recall_at_{S.RECALL_K}
 FROM dims d LEFT JOIN hits h ON h.dim = d.dim
 ORDER BY d.dim
 """
@@ -274,7 +270,7 @@ def mrl_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 opt: per-vector PREFIX self-norms (one per audited width)
     # precomputed once per side; each (pair, width) folds only the
     # sliced dot — same integers, bit-identical cosine.
-    q = emb.filter(F.col("vec_id") < _NQ).select(
+    q = emb.filter(F.col("vec_id") < S.AUDIT_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         *[
@@ -316,7 +312,7 @@ def mrl_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Truth and every width slice reuse it.
     topd = pin(
         stacked.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _QK)
+        .filter(F.col("rk") <= S.RECALL_K)
         .select("dim", "query_id", "neighbor_id")
     )
     full_top = topd.filter(F.col("dim") == _MRL_DIMS[-1]).select("query_id", "neighbor_id")
@@ -334,9 +330,8 @@ def mrl_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "dim",
             F.coalesce("n_overlap", F.lit(0)).cast("long").alias("n_overlap"),
-            (F.coalesce("n_overlap", F.lit(0)).cast("double") / F.lit(float(_NQ * _QK))).alias(
-                f"recall_at_{_QK}"
-            ),
+            (F.coalesce("n_overlap", F.lit(0)).cast("double") / F.lit(float(S.AUDIT_QUERIES * S.RECALL_K)))
+            .alias(f"recall_at_{S.RECALL_K}"),
         )
         .orderBy("dim")
     )

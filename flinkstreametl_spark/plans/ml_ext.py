@@ -364,7 +364,7 @@ def semantic_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.filter(F.col("cosine") >= 0.3)
 
 
-_QK = 10  # recall depth
+_QK = S.RECALL_K  # the int8 and PQ audits' recall depth, the IVF curves' too
 
 _EMB_EXPLODE_SQL = "SELECT vec_id, generate_subscripts(embedding, 1) AS pos, unnest(embedding) AS val FROM embeddings"
 
@@ -598,7 +598,7 @@ cents AS (
           FROM embeddings e) t
     GROUP BY t.label, pos
 ),
-q AS (SELECT * FROM ex WHERE vec_id < 5),
+q AS (SELECT * FROM ex WHERE vec_id < {S.AUDIT_QUERIES}),
 ps AS (
     SELECT q.vec_id AS query_id, c.label,
            SUM(CAST(floor(CAST(q.val AS DOUBLE) * c.cval * 1099511627776.0) AS BIGINT)) AS dot,
@@ -640,7 +640,7 @@ exact AS (
                ) AS rk
         FROM q JOIN ex c ON q.pos = c.pos AND q.vec_id <> c.vec_id
         GROUP BY q.vec_id, c.vec_id
-    ) WHERE rk <= {_QK}
+    ) WHERE rk <= {S.RECALL_K}
 ),
 np AS (SELECT CAST(unnest([{", ".join(str(n) for n in _NPROBES)}]) AS INTEGER) AS nprobe),
 cand_np AS (
@@ -654,7 +654,7 @@ ivf_top AS (
                    ORDER BY CAST(dot AS DOUBLE) / sqrt(CAST(qq AS DOUBLE) * CAST(cc AS DOUBLE)) DESC,
                             neighbor_id) AS rk
         FROM cand_np
-    ) WHERE rk <= {_QK}
+    ) WHERE rk <= {S.RECALL_K}
 ),
 hits AS (
     SELECT t.nprobe, CAST(COUNT(*) AS BIGINT) AS n_overlap
@@ -668,7 +668,7 @@ cands AS (
 )
 SELECT c.nprobe, c.n_candidates,
        COALESCE(h.n_overlap, 0) AS n_overlap,
-       CAST(COALESCE(h.n_overlap, 0) AS DOUBLE) / (5.0 * {_QK}.0) AS recall_at_{_QK}
+       CAST(COALESCE(h.n_overlap, 0) AS DOUBLE) / ({S.AUDIT_QUERIES}.0 * {S.RECALL_K}.0) AS recall_at_{S.RECALL_K}
 FROM cands c LEFT JOIN hits h ON h.nprobe = c.nprobe
 """
 
@@ -704,7 +704,7 @@ def ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle computes the same inner join, so a fixture drift breaks the
     # hash rather than passing silently.
     cents, members = S.label_index(emb)
-    return S.ivf_recall_curve(emb, cents, members, _NPROBES, n_queries=5, k=_QK)
+    return S.ivf_recall_curve(emb, cents, members, _NPROBES)
 
 
 _KM_NPROBES = [1, 2, 3, 5, 8]  # k=8 learned clusters -> nprobe=8 is the full scan
@@ -721,7 +721,7 @@ def _kmeans_curve_oracle(k: int = DEFAULT_K, iters: int = DEFAULT_ITERS) -> str:
     return (
         _kmeans_ctes(k, iters)
         + f""",
-q AS (SELECT vec_id, pos, val FROM e WHERE vec_id < 5),
+q AS (SELECT vec_id, pos, val FROM e WHERE vec_id < {S.AUDIT_QUERIES}),
 ps AS (
     SELECT q.vec_id AS query_id, c.cluster,
            SUM(CAST(floor(q.val * c.cval * {fp}) AS BIGINT)) AS dot,
@@ -760,7 +760,7 @@ exact AS (
                ) AS rk
         FROM q JOIN e c ON q.pos = c.pos AND q.vec_id <> c.vec_id
         GROUP BY q.vec_id, c.vec_id
-    ) WHERE rk <= {_QK}
+    ) WHERE rk <= {S.RECALL_K}
 ),
 np AS (SELECT CAST(unnest([{nps}]) AS INTEGER) AS nprobe),
 cand_np AS (
@@ -774,7 +774,7 @@ ivf_top AS (
                    ORDER BY CAST(dot AS DOUBLE) / sqrt(CAST(qq AS DOUBLE) * CAST(cc AS DOUBLE)) DESC,
                             neighbor_id) AS rk
         FROM cand_np
-    ) WHERE rk <= {_QK}
+    ) WHERE rk <= {S.RECALL_K}
 ),
 hits AS (
     SELECT t.nprobe, CAST(COUNT(*) AS BIGINT) AS n_overlap
@@ -788,7 +788,7 @@ cands AS (
 )
 SELECT c.nprobe, c.n_candidates,
        COALESCE(h.n_overlap, 0) AS n_overlap,
-       CAST(COALESCE(h.n_overlap, 0) AS DOUBLE) / (5.0 * {_QK}.0) AS recall_at_{_QK}
+       CAST(COALESCE(h.n_overlap, 0) AS DOUBLE) / ({S.AUDIT_QUERIES}.0 * {S.RECALL_K}.0) AS recall_at_{S.RECALL_K}
 FROM cands c LEFT JOIN hits h ON h.nprobe = c.nprobe
 """
     )
@@ -831,9 +831,7 @@ def ivf_kmeans_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Assignment is an argmin over the centroid matrix, defined for
     # every vector, so membership is total by construction and the
     # kernel's derived exact top-K holds.
-    return S.ivf_recall_curve(
-        emb, centroid_frame(spark, cents_mat), assign_df(emb), _KM_NPROBES, n_queries=5, k=_QK
-    )
+    return S.ivf_recall_curve(emb, centroid_frame(spark, cents_mat), assign_df(emb), _KM_NPROBES)
 
 
 # ---------------------------------------------------------------------------
@@ -1271,7 +1269,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     (S.cosine_col_fp: per-element floor(x*y*2^40) BIGINT sums, no
     explode, bit-identical to the relational oracle), partial top-k
     under the per-anchor window. At 100 TB the candidate pass composes
-    with the IVF route (ivf_probe_ranks) exactly like ann queries do —
+    with the IVF route (S.ivf_scored) exactly like ann queries do —
     mine within the anchor's nprobe clusters, minus its label."""
     emb = ensure_parallelism(load_table(spark, sf_dir, "embeddings"))
     q = emb.filter(F.col("vec_id") < _HN_NQ).select(

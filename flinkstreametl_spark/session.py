@@ -113,12 +113,16 @@ def pin(df: DataFrame, *, eager: bool = True) -> DataFrame:
 
     Whoever needs a frame materialized pins it, and a pin of a pin is
     the pin: a frame that optimizes to a locally checkpointed RDD, a
-    pinned frame or a select of all its columns, comes back unchanged,
-    with the eagerness it was pinned with. So a kernel pins its input
-    and a caller that pinned it already pays nothing more.
+    pinned frame or a select of all its columns, comes back unchanged.
+    An eager pin of a lazy pin that no action has computed yet
+    computes it now, under ``pin``. So a kernel pins its input and a
+    caller that pinned it already pays nothing more.
     """
     plan = df._jdf.queryExecution().optimizedPlan()
     if plan.getClass().getSimpleName() == "LogicalRDD" and plan.rdd().isLocallyCheckpointed():
+        if eager and not plan.rdd().isCheckpointed():
+            with job_tag(df.sparkSession.sparkContext, "pin"):
+                plan.rdd().count()
         return df
     with job_tag(df.sparkSession.sparkContext, "pin"):
         return df.localCheckpoint(eager=eager)

@@ -68,6 +68,19 @@ def test_pin_of_a_pin_is_the_pin(spark):
     assert optimized.rdd().id() == _checkpoint_rdd(pinned).id()
 
 
+def test_eager_pin_of_a_lazy_pin_computes_it(spark):
+    """An eager pin of a lazy pin that nothing has computed yet runs
+    one ``pin`` job, the checkpoint's, and hands back the same frame."""
+    lazy = pin(_frame(spark), eager=False)
+    assert not _checkpoint_rdd(lazy).isCheckpointed()
+    before = _tagged(spark, "pin")
+    eager = pin(lazy)
+    assert len(_tagged(spark, "pin") - before) == 1
+    assert eager is lazy
+    assert _checkpoint_rdd(lazy).isCheckpointed()
+    assert sorted(eager.collect()) == sorted(_frame(spark).collect())
+
+
 def test_pin_of_a_created_frame_still_pins(spark):
     """``createDataFrame`` frames optimize to a ``LogicalRDD`` too, but
     their RDD is not checkpointed, so pinning one runs a pin job."""
