@@ -9,10 +9,10 @@ tests/test_cdc.py."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 from flinkstreametl_spark.operators.joins import dim_3way
+from flinkstreametl_spark.plans.oracle import connect
 from flinkstreametl_spark.sources.jdbc import (
     MEETING_DIM_PUSHDOWN_SQL,
     fixture_dim_query,
@@ -48,9 +48,7 @@ def test_pushdown_query_matches_spark_side_join(spark, sf_dir):
     """DuckDB executes the generated pushdown SQL; Spark executes the
     engine-side dim_3way plan. Same rows = the pushed and in-engine
     forms of J2 are interchangeable."""
-    con = duckdb.connect()
-    for t in ("customer", "nation", "region"):
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = connect(sf_dir)
     duck_rows = sorted(map(tuple, con.sql(fixture_dim_query()).fetchall()))
 
     dfs = {t: load_table(spark, sf_dir, t) for t in ("customer", "nation", "region")}

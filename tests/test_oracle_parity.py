@@ -1,6 +1,7 @@
 """Local replica of the driver's correctness gate: run every registered
 query in Spark AND its DuckDB oracle on the same parquet tables, compare
-row count, column names, and order-insensitive values — exactly.
+row count, column names, and order-insensitive values — exactly — and
+their output types under the driver's typed hash (``plans/oracle.py``).
 
 This is the primary harness (SURVEY.md §5.2 item 1). It runs at sf0.001
 for speed; the driver re-runs the same contract at sf0.01.
@@ -8,73 +9,31 @@ for speed; the driver re-runs the same contract at sf0.01.
 
 from __future__ import annotations
 
-import math
-
-import duckdb
 import pytest
 
 from flinkstreametl_spark.plans import REGISTRY
-from flinkstreametl_spark.schemas import FIXTURE_TABLES
-
-
-def _duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    return con
-
-
-def _norm_cell(v):
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return v
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return v
-    # decimals, timestamps, dates -> canonical string
-    import datetime
-    import decimal
-
-    if isinstance(v, decimal.Decimal):
-        return float(v)
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        return str(v)
-    return v
-
-
-def _normalize(rows, colnames):
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-    out = []
-    for row in rows:
-        out.append(tuple(_norm_cell(row[i]) for i in order))
-    out.sort(key=lambda r: tuple((x is None, str(type(x)), str(x)) for x in r))
-    return sorted(colnames), out
-
+from flinkstreametl_spark.plans.oracle import connect, type_problems, value_problems
 
 ORACLE_SPECS = [s for s in REGISTRY.values() if s.oracle is not None]
 ROWS_ONLY_SPECS = [s for s in REGISTRY.values() if s.oracle is None]
 
+# Spark output types of each frame ``test_oracle_parity`` built, by
+# query name, so the type audit does not build the query again.
+BUILT_DTYPES: dict[str, list[tuple[str, str]]] = {}
+
+
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    return connect(sf_dir)
+
 
 @pytest.mark.parametrize("spec", ORACLE_SPECS, ids=[s.name for s in ORACLE_SPECS])
-def test_oracle_parity(spark, sf_dir, spec):
+def test_oracle_parity(spark, sf_dir, duck, spec):
     sdf = spec.fn(spark, sf_dir)
-    scols = sdf.columns
+    BUILT_DTYPES[spec.name] = sdf.dtypes
     srows = [tuple(r) for r in sdf.collect()]
-
-    con = _duck(sf_dir)
-    res = con.sql(spec.oracle)
-    dcols = res.columns
-    drows = res.fetchall()
-    con.close()
-
-    assert sorted(scols) == sorted(dcols), f"column mismatch: spark={scols} duckdb={dcols}"
-    s_cols, s_norm = _normalize(srows, scols)
-    d_cols, d_norm = _normalize(drows, dcols)
-    assert len(s_norm) == len(d_norm), f"row count: spark={len(s_norm)} duckdb={len(d_norm)}"
-    mismatches = [(a, b) for a, b in zip(s_norm, d_norm) if a != b]
-    assert not mismatches, f"{len(mismatches)} mismatched rows; first 3: {mismatches[:3]}"
+    res = duck.sql(spec.oracle)
+    assert not value_problems(sdf.columns, srows, res.columns, res.fetchall())
 
 
 @pytest.mark.parametrize("spec", ROWS_ONLY_SPECS, ids=[s.name for s in ROWS_ONLY_SPECS])
@@ -84,35 +43,16 @@ def test_rows_only_queries_run(spark, sf_dir, spec):
     assert df.count() >= 0
 
 
-def test_oracle_output_types_are_hash_compatible(spark, sf_dir):
-    """Driver-calibrated type audit (tools/typecheck_oracles.py): the
+def test_oracle_output_types_are_hash_compatible(spark, sf_dir, duck):
+    """Driver-calibrated type audit (``plans.oracle.compatible``): the
     driver's value-hash normalizes through pandas, where DuckDB HUGEINT
     becomes float64 and fails against Spark's int64 even when values are
-    equal (both round-1 hash-FAILs). Both engines expose result types
-    lazily, so this covers every oracle without executing a single
-    query."""
-    import sys
-
-    sys.path.insert(0, "tools")
-    import duckdb
-
-    from typecheck_oracles import compatible
-
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    equal (both round-1 hash-FAILs). DuckDB types each oracle without
+    running it, and the Spark types are those of the frames
+    ``test_oracle_parity`` built; a query that test did not build (this
+    test run alone, or a query that raised there) is built here."""
     bad = []
     for spec in ORACLE_SPECS:
-        stypes = dict(spec.fn(spark, sf_dir).dtypes)
-        rel = con.sql(spec.oracle)
-        dtypes = dict(zip(rel.columns, [str(t) for t in rel.types]))
-        if sorted(stypes) != sorted(dtypes):
-            bad.append(f"{spec.name}: columns {sorted(stypes)} vs {sorted(dtypes)}")
-            continue
-        bad.extend(
-            f"{spec.name}.{c}: spark={st} duck={dtypes[c]}"
-            for c, st in stypes.items()
-            if not compatible(st, dtypes[c])
-        )
-    con.close()
+        dtypes = BUILT_DTYPES.get(spec.name) or spec.fn(spark, sf_dir).dtypes
+        bad.extend(f"{spec.name}: {p}" for p in type_problems(dtypes, duck.sql(spec.oracle)))
     assert not bad, "\n".join(bad)

@@ -16,6 +16,12 @@ sys.path.insert(0, os.path.join(ROOT, "tools"))
 import query_profile  # noqa: E402
 
 
+@pytest.fixture(scope="module")
+def replay_profile(spark, sf_dir):
+    """One profile of ``stream_dedup_replay``, read by both replay tests."""
+    return query_profile.profile(spark, "stream_dedup_replay", sf_dir)
+
+
 def test_batch_query_reports_action_jobs_and_python_nodes(spark, sf_dir):
     rec = query_profile.profile(spark, "knn_pandas_topk", sf_dir)
     assert rec["action_jobs"] >= 1
@@ -23,8 +29,8 @@ def test_batch_query_reports_action_jobs_and_python_nodes(spark, sf_dir):
     assert rec["stage_totals"]["action"]["tasks"] >= 1
 
 
-def test_replay_reports_its_micro_batches_as_construction(spark, sf_dir):
-    rec = query_profile.profile(spark, "stream_dedup_replay", sf_dir)
+def test_replay_reports_its_micro_batches_as_construction(replay_profile):
+    rec = replay_profile
     assert rec["streaming"]["batches"] >= 1
     assert rec["construct_jobs"] >= 1
 
@@ -51,6 +57,6 @@ def test_eager_pins_are_counted(spark, sf_dir):
     assert rec["stage_totals"]["pin"]["tasks"] >= 1
 
 
-def test_replay_drain_jobs_are_counted(spark, sf_dir):
-    rec = query_profile.profile(spark, "stream_dedup_replay", sf_dir)
+def test_replay_drain_jobs_are_counted(replay_profile):
+    rec = replay_profile
     assert 1 <= rec["drain_jobs"] <= rec["construct_jobs"]

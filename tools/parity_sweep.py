@@ -2,9 +2,9 @@
 timing — the harness behind the sfN robustness claims (SURVEY §5.2(6)).
 
 Runs every registered oracle-backed query in Spark AND DuckDB on the
-given fixtures, compares column names + order-insensitive exact values
-(the driver's contract), and appends one JSON line per query to the
-log as it goes, so a long sweep is monitorable and resumable.
+given fixtures, checks them with ``plans.oracle.value_problems`` (the
+driver's contract), and appends one JSON line per query to the log as
+it goes, so a long sweep is monitorable and resumable.
 
 Usage:
   python tools/parity_sweep.py --sf-dir .fixtures/sf1 \
@@ -21,8 +21,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from flinkstreametl_spark.schemas import FIXTURE_TABLES  # noqa: E402
-from verify_contract import normalise  # noqa: E402
+from flinkstreametl_spark.plans.oracle import connect, value_problems  # noqa: E402
 
 
 def main() -> int:
@@ -56,7 +55,6 @@ def main() -> int:
                 if rec.get("ok"):
                     done.add(rec["name"])
 
-    import duckdb
     from pyspark.sql import SparkSession
 
     from flinkstreametl_spark.plans import REGISTRY
@@ -67,14 +65,12 @@ def main() -> int:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
+    con = connect(args.sf_dir)
     con.sql(f"SET memory_limit='{args.duck_mem}'")
     # per-process spill dir: two DuckDB instances sharing one temp
     # directory delete each other's files (one cleanup aborts the
     # other's pending spill with a fatal IOException)
     con.sql(f"SET temp_directory='/tmp/duck_spill_{os.getpid()}'")
-    for t in FIXTURE_TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf_dir}/{t}.parquet'")
 
     only = set(args.only.split(",")) if args.only else None
     skip = set(args.skip.split(",")) if args.skip else set()
@@ -91,18 +87,13 @@ def main() -> int:
             rec["spark_s"] = round(time.perf_counter() - t0, 2)
             t1 = time.perf_counter()
             res = con.sql(spec.oracle)
-            dcols = res.columns
             drows = res.fetchall()
             rec["duck_s"] = round(time.perf_counter() - t1, 2)
             rec["rows"] = len(srows)
-            if sorted(sdf.columns) != sorted(dcols):
-                rec["ok"] = False
-                rec["err"] = f"columns {sorted(sdf.columns)} != {sorted(dcols)}"
-            elif normalise(srows, sdf.columns) != normalise(drows, dcols):
-                rec["ok"] = False
-                rec["err"] = "value mismatch"
-            else:
-                rec["ok"] = True
+            problems = value_problems(sdf.columns, srows, res.columns, drows)
+            rec["ok"] = not problems
+            if problems:
+                rec["err"] = "; ".join(problems)[:500]
         except Exception as exc:
             rec["ok"] = False
             rec["err"] = f"{type(exc).__name__}: {exc}"[:500]
